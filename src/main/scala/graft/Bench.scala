@@ -541,34 +541,46 @@ object Bench {
     // Three passes, min per query: first-run JIT of generated code and VM
     // noisy-neighbor spikes otherwise dominate single-shot numbers
     // (observed 4-10x swings on identical plans; with only two passes a
-    // spike in either still pollutes the min).
-    def onePass(): Seq[(String, Double)] =
-      benchQueries.toSeq.sortBy(_._1).map { case (name, fn) =>
+    // spike in either still pollutes the min). A query that throws is a
+    // FAILURE, not a fast number: its time is never recorded, later passes
+    // skip it, it is listed under "failed", and the process exits nonzero.
+    val failed = scala.collection.mutable.LinkedHashSet[String]()
+    def onePass(): Map[String, Double] =
+      benchQueries.toSeq.sortBy(_._1).filterNot(q => failed(q._1)).flatMap { case (name, fn) =>
         val t0 = System.nanoTime()
-        try materialize(fn(spark, sfDir))
-        catch { case e: Throwable => System.err.println(s"[bench] $name: ${e.getMessage}") }
-        name -> (System.nanoTime() - t0) / 1e9
-      }
-    val p1 = onePass().toMap
-    val p2 = onePass().toMap
-    val results = onePass().map { case (n, v) => n -> Seq(v, p1(n), p2(n)).min }
+        try {
+          materialize(fn(spark, sfDir))
+          Some(name -> (System.nanoTime() - t0) / 1e9)
+        } catch {
+          case e: Throwable =>
+            System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
+            failed += name
+            None
+        }
+      }.toMap
+    val passes = Seq(onePass(), onePass(), onePass())
     // 3-decimal rounding (ms resolution — far under the ±30% load band)
     // keeps the one-line JSON as small as ~145 entries allow; the full line
     // ALSO persists to BENCH_SELF.json in the working directory because a
     // tail-window capture of stdout truncates the head of a >2 KB line
     // (r13/r14: the driver's perf comparison came back empty for exactly
     // this reason). Same numbers, same format, no caching of anything.
-    def fmt(v: Double): String =
-      String.format(java.util.Locale.US, "%.3f", Double.box(v))
-    val qs = results.map { case (k, v) => "\"" + k + "\":" + fmt(v) }.mkString("{", ",", "}")
-    val total = results.map(_._2).sum
-    val line = s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":$qs,"sf":"$sfDir"}"""
+    // `value` is the sum of the ROUNDED entries, so it equals what a reader
+    // adds up from the line.
+    val results = benchQueries.keys.toSeq.sorted.filterNot(failed).map { n =>
+      n -> BigDecimal(passes.map(_(n)).min).setScale(3, BigDecimal.RoundingMode.HALF_UP)
+    }
+    val qs = results.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
+    val total = results.map(_._2).sum.setScale(3)
+    val failedJs = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
+    val line = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"failed":$failedJs,"sf":"$sfDir"}"""
     try java.nio.file.Files.write(java.nio.file.Paths.get("BENCH_SELF.json"),
       (line + "\n").getBytes("UTF-8"))
     catch { case e: Throwable => System.err.println(s"[bench] BENCH_SELF.json: ${e.getMessage}") }
     spark.stop()
     // the contract line, printed LAST so a small tail capture ends with it
     println(line)
+    if (failed.nonEmpty) System.exit(1)
   }
 }
 

@@ -155,6 +155,10 @@ object Dedup {
     * upper bound for [[dupClusters]]' `pairBound` — the composites
     * (curate, the dedup-apply pipelines) pass it so clustering can take
     * the one-job driver fast path without a counting job of its own.
+    * The bound assumes UNIQUE doc ids: verification joins each candidate
+    * back to the corpus by id, so an id shared by k docs turns one
+    * candidate into up to k² verified rows and the count no longer bounds
+    * them.
     */
   def minhashLshPairsCounted(
       df: DataFrame, idCol: String, textCol: String,
@@ -258,6 +262,13 @@ object Dedup {
     * DataFrame jobs at scale. (On a real cluster prefer reliable
     * `checkpoint` with a checkpoint dir — localCheckpoint blocks are not
     * replicated, so an executor loss mid-loop fails the job.)
+    *
+    * `pairBound`, when given, certifies an upper bound on the rows of
+    * `pairs`; at or below `driverThreshold` the pairs are collected and
+    * clustered on the driver in one job. The caller owns the
+    * certificate: [[minhashLshPairsCounted]]' candidate count bounds its
+    * pairs only when doc ids are unique — a bound computed over
+    * duplicated ids understates the collect.
     */
   def dupClusters(pairs: DataFrame, idA: String, idB: String,
       maxIters: Int = 20, driverThreshold: Long = 100000L,

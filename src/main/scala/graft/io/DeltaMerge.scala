@@ -197,10 +197,10 @@ object DeltaMerge {
           _.select(fieldCols :+ lit("insert").as("_change_type"): _*))
         Some((Seq(matchedPre) ++ matchedPost ++ inserts).reduce(_ unionByName _))
       }
-    commitRewrite(spark, path, readVersion, meta, proto, touched, newData,
-      operation = "MERGE",
-      opParams = s""""predicate":${jsString(keyCols.mkString(","))},"matchedAction":${jsString(whenMatched)}""",
-      cdcData = cdc, txn = txn, hwBumps = hwBumps)
+    commitDml(spark, path, readVersion, meta, proto, touched.map(DvPlan(_, None)),
+      deletionVectors = false, Some(newData), "MERGE",
+      Seq("predicate" -> keyCols.mkString(","), "matchedAction" -> whenMatched),
+      cdc, txn, hwBumps)
   }
 
   /** Gap-free identity assignment for MERGE's unmatched inserts — the
@@ -306,10 +306,9 @@ object DeltaMerge {
       if (cdfEnabled(meta))
         Some(base.filter(hit).select(fieldCols :+ lit("delete").as("_change_type"): _*))
       else None
-    commitRewrite(spark, path, readVersion, meta, proto, touched, survivors,
-      operation = "DELETE",
-      opParams = s""""predicate":${jsString(condition.toString)}""",
-      cdcData = cdc)
+    commitDml(spark, path, readVersion, meta, proto, touched.map(DvPlan(_, None)),
+      deletionVectors = false, Some(survivors), "DELETE",
+      Seq("predicate" -> condition.toString), cdc, None, Map.empty)
   }
 
   /** DELETE FROM the Delta table at `path` WHERE `condition` by DELETION
@@ -364,10 +363,9 @@ object DeltaMerge {
       if (!cdfEnabled(meta)) None
       else Some(hits.select(
         schema.fieldNames.map(col).toSeq :+ lit("delete").as("_change_type"): _*))
-    commitDvDml(spark, path, readVersion, meta, proto, planned,
-      newAdds = Nil, operation = "DELETE",
-      opParams = s""""predicate":${jsString(condition.toString)},"deletionVectors":true""",
-      cdcData = cdc)
+    commitDml(spark, path, readVersion, meta, proto, planned,
+      deletionVectors = true, None, "DELETE",
+      Seq("predicate" -> condition.toString), cdc, None, Map.empty)
   }
 
   /** UPDATE ... SET ... WHERE by DELETION VECTOR: the matched rows'
@@ -431,11 +429,9 @@ object DeltaMerge {
           .unionByName(newRows
             .select(fieldCols :+ lit("update_postimage").as("_change_type"): _*)))
       }
-    commitDvDml(spark, path, readVersion, meta, proto, planned,
-      newAdds = stageForTable(spark, meta, newRows, root),
-      operation = "UPDATE",
-      opParams = s""""predicate":${jsString(condition.toString)},"deletionVectors":true""",
-      cdcData = cdc)
+    commitDml(spark, path, readVersion, meta, proto, planned,
+      deletionVectors = true, Some(newRows), "UPDATE",
+      Seq("predicate" -> condition.toString), cdc, None, Map.empty)
   }
 
   /** [[merge]] with `useDeletionVectors = true`: matched positions are
@@ -525,22 +521,22 @@ object DeltaMerge {
           _.select(fieldCols :+ lit("insert").as("_change_type"): _*))
         Some((Seq(matchedPre) ++ matchedPost ++ insertRows).reduce(_ unionByName _))
       }
-    commitDvDml(spark, path, readVersion, meta, proto, planned,
-      newAdds = newRows.map(stageForTable(spark, meta, _, root)).getOrElse(Nil),
-      operation = "MERGE",
-      opParams = s""""predicate":${jsString(keyCols.mkString(","))},"matchedAction":${jsString(whenMatched)},"deletionVectors":true""",
-      cdcData = cdc, txn = txn, hwBumps = hwBumps)
+    commitDml(spark, path, readVersion, meta, proto, planned,
+      deletionVectors = true, newRows, "MERGE",
+      Seq("predicate" -> keyCols.mkString(","), "matchedAction" -> whenMatched),
+      cdc, txn, hwBumps)
   }
 
   // ------------------------------------------------------- DV DML internals
 
-  /** One touched file's planned vector, ALREADY WRITTEN to a vector file:
-    * the descriptor covers the union of its existing DV (if any) with the
-    * newly shadowed positions; `descriptor` is None when every remaining
-    * row is shadowed — the file is removed outright, no vector needed.
+  /** One touched file's fate in a DML commit: with a `descriptor` (a
+    * vector ALREADY WRITTEN to a vector file, covering the union of its
+    * existing DV with the newly shadowed positions) the file is re-added
+    * under it; with None it is removed outright — every remaining row
+    * shadowed, or rewritten by copy-on-write.
     */
   private final case class DvPlan(file: DeltaRead.LiveFile,
-      descriptor: Option[DeletionVectors.Descriptor], card: Long)
+      descriptor: Option[DeletionVectors.Descriptor])
 
   /** Attribute a scan's qualified URI to a live file (basename-keyed, as
     * in touchedFiles; the endsWith re-check only disambiguates the
@@ -588,7 +584,7 @@ object DeltaMerge {
     // a wide one still fans out to full parallelism
     val numParts = math.max(1, math.min(
       spark.sessionState.conf.numShufflePartitions, live.size))
-    val perFile: Array[(String, Option[DeletionVectors.Descriptor], Long)] = hits
+    val perFile: Array[(String, Option[DeletionVectors.Descriptor])] = hits
       .select(col("__file"), col("__row_idx"))
       .repartition(numParts, col("__file"))
       .sortWithinPartitions(col("__file"), col("__row_idx"))
@@ -600,9 +596,9 @@ object DeltaMerge {
           maxVectorFileBytes)
         val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
         val rows = it.buffered
-        val planned = new Iterator[(String, Option[DeletionVectors.Descriptor], Long)] {
+        val planned = new Iterator[(String, Option[DeletionVectors.Descriptor])] {
           def hasNext: Boolean = rows.hasNext
-          def next(): (String, Option[DeletionVectors.Descriptor], Long) = {
+          def next(): (String, Option[DeletionVectors.Descriptor]) = {
             val uri = rows.head._1
             var n = 0L
             val idxs: Iterator[Long] = new Iterator[Long] {
@@ -624,31 +620,29 @@ object DeltaMerge {
             val desc =
               if (numRecords.contains(card)) None
               else Some(writer.append(data, card))
-            (uri, desc, card)
+            (uri, desc)
           }
         }
         // close the task's vector file once its runs are drained
-        new Iterator[(String, Option[DeletionVectors.Descriptor], Long)] {
+        new Iterator[(String, Option[DeletionVectors.Descriptor])] {
           def hasNext: Boolean = {
             val h = planned.hasNext
             if (!h) writer.close()
             h
           }
-          def next(): (String, Option[DeletionVectors.Descriptor], Long) = planned.next()
+          def next(): (String, Option[DeletionVectors.Descriptor]) = planned.next()
         }
       }.collect()
-    perFile.toSeq.map { case (uri, desc, card) =>
-      DvPlan(liveByUri(byBase, uri), desc, card)
-    }
+    perFile.toSeq.map { case (uri, desc) => DvPlan(liveByUri(byBase, uri), desc) }
   }
 
-  /** The protocol-upgrade commit line when the replayed protocol lacks
-    * `deletionVectors` — MERGED into the replayed record (never
-    * overwritten), with the legacy versions' implied features made
-    * explicit, per the table-features upgrade rule.
+  /** The upgraded protocol when the replayed one lacks `deletionVectors`
+    * — MERGED into the replayed record (never overwritten), with the
+    * legacy versions' implied features made explicit, per the
+    * table-features upgrade rule.
     */
   private def dvProtocolUpgrade(proto: DeltaRead.Protocol,
-      where: String): Option[String] = {
+      where: String): Option[DeltaRead.Protocol] = {
     val hasFeature = proto.minReader >= 3 &&
       proto.readerFeatures.contains("deletionVectors") &&
       proto.writerFeatures.contains("deletionVectors")
@@ -666,25 +660,25 @@ object DeltaMerge {
         if (proto.readerFeatures.nonEmpty) Nil
         else if (proto.minReader >= 2) Seq("columnMapping")
         else Nil
-      Some(DeltaWrite.protocolJson(DeltaRead.Protocol(
+      Some(DeltaRead.Protocol(
         math.max(3, proto.minReader), math.max(7, proto.minWriter),
         (proto.readerFeatures ++ impliedR :+ "deletionVectors").distinct,
-        (proto.writerFeatures ++ impliedW :+ "deletionVectors").distinct)))
+        (proto.writerFeatures ++ impliedW :+ "deletionVectors").distinct))
     }
   }
 
   /** Stage `rows` as fresh table data files under the table's physical
-    * layout — the shared staging step of every DML verb that writes new
-    * rows; mapped tables (both modes — id staging embeds the footer field
-    * ids) rename before staging. Returns [[DeltaWrite.stageDataFiles]]'
-    * add tuples.
+    * layout — the staging step of every DML verb that writes new rows.
+    * CHECK constraints hold for post-DML rows too, and applyGenerated is
+    * pure validation here (DML rows carry every column; a stale generated
+    * value after an update refuses loudly). The DML logic runs on LOGICAL
+    * names (filesDf serves them); mapped tables (both modes — id staging
+    * embeds the footer field ids) rename back before staging.
     */
-  private def stageForTable(spark: SparkSession, meta: DeltaRead.Meta,
-      rows: DataFrame, root: Path): Seq[(String, Map[String, String], Long, Option[String])] = {
-    DeltaWrite.enforceConstraints(rows, meta, s"DML on $root")
-    // DML rows carry every column — applyGenerated is pure validation
-    // here (a stale generated value after an update refuses loudly)
-    DeltaWrite.applyGenerated(rows, meta, s"DML on $root")
+  private def stageForTable(rows: DataFrame, meta: DeltaRead.Meta, root: Path,
+      where: String): Seq[DeltaWrite.StagedFile] = {
+    DeltaWrite.enforceConstraints(rows, meta, where)
+    DeltaWrite.applyGenerated(rows, meta, where)
     val (stageDf, stageCols) =
       if (meta.mappingMode != "none") {
         val ms = DataType.fromJson(meta.schemaJson).asInstanceOf[StructType]
@@ -696,30 +690,37 @@ object DeltaMerge {
     DeltaWrite.stageDataFiles(stageDf, root, stageCols)
   }
 
-  /** Publish a DV-based DML commit: tombstone every planned file, re-add
-    * the partially-shadowed ones with their vector (fully-shadowed files
-    * stay removed), add any freshly staged files, stage cdc — atomically
-    * under the disjoint-rewrite OCC guard, upgrading the protocol on the
-    * table's first vector.
+  /** Publish a DML commit, atomically: stage `newRows` (partitioned like
+    * the table), tombstone every planned file, re-add the partially
+    * shadowed ones under their vector, add the staged files, and stage
+    * cdc. Copy-on-write plans every touched file as removed outright, so
+    * it re-adds nothing; with `deletionVectors` the vectors were already
+    * written (executor-side) by [[buildDvPlans]], the tombstones carry the
+    * vector each file had, and the protocol upgrades on the table's first
+    * vector.
     */
-  private def commitDvDml(spark: SparkSession, path: String, readVersion: Long,
+  private def commitDml(spark: SparkSession, path: String, readVersion: Long,
       meta: DeltaRead.Meta, proto: DeltaRead.Protocol, planned: Seq[DvPlan],
-      newAdds: Seq[(String, Map[String, String], Long, Option[String])],
-      operation: String, opParams: String, cdcData: Option[DataFrame],
-      txn: Option[(String, Long)] = None,
-      hwBumps: Map[String, Long] = Map.empty): Long = {
+      deletionVectors: Boolean, newRows: Option[DataFrame], operation: String,
+      params: Seq[(String, Any)], cdcData: Option[DataFrame],
+      txn: Option[(String, Long)], hwBumps: Map[String, Long]): Long = {
     val root = new Path(path)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // vectors were already written (executor-side) by buildDvPlans; a
-    // plan without a descriptor shadows every physical row — tombstoned
-    // outright (it stays in `planned` for the remove; no re-add)
-    val reAdded = planned.filter(_.descriptor.isDefined)
-    val protocolLine = dvProtocolUpgrade(proto, s"$operation on $path")
+    val where = s"$operation on $path"
+    val adds = newRows.toSeq.flatMap(stageForTable(_, meta, root, where))
+    val protocol =
+      if (deletionVectors) dvProtocolUpgrade(proto, where) else None
     val tracked = DeltaWrite.rowTrackingOf(meta).isDefined ||
       proto.writerFeatures.contains("rowTracking")
     lazy val snapWm = DeltaRead.rowIdHighWaterMark(
       DeltaRead.replayFull(spark, path, None).domains)
-
+    // change-data files: the changed rows (+ _change_type +
+    // _commit_version, so a file stream over _change_data/ needs no log
+    // lookup) staged under _change_data/, committed as cdc actions
+    // (dataChange=false — CDF readers use them INSTEAD of the add/remove
+    // pair for this commit). Staged inside mkLines because the rows embed
+    // the final commit version: an OCC retry at a new version restages
+    // them (cheap — only the changed rows) and drops the orphaned attempt.
     var cdcStaged: Seq[(String, Long)] = Seq.empty
     def mkLines(version: Long): Seq[String] = {
       cdcStaged.foreach { case (rel, _) => fs.delete(new Path(root, rel), false) }
@@ -728,50 +729,43 @@ object DeltaMerge {
           cdcPhysical(c, meta).withColumn("_commit_version", lit(version)), root)
       }
       val now = System.currentTimeMillis()
-      val lines = scala.collection.mutable.ArrayBuffer[String]()
-      lines += s"""{"commitInfo":{${DeltaWrite.ictField(spark, path, meta, now)}"timestamp":$now,"operation":${jsString(operation)},"operationParameters":{$opParams},"engineInfo":"graft"}}"""
-      protocolLine.foreach(lines += _)
+      val lines = scala.collection.mutable.ArrayBuffer(DeltaActions.commitInfo(
+        DeltaWrite.inCommitTimestamp(spark, path, meta, now), now, operation,
+        if (deletionVectors) params :+ ("deletionVectors" -> true) else params))
+      protocol.foreach(lines += DeltaActions.protocol(_))
       if (hwBumps.nonEmpty)
-        lines += DeltaWrite.identityMetaLine(meta, hwBumps, now)
+        lines += DeltaActions.identityMetaData(meta, hwBumps, now)
       txn.foreach { case (appId, txnVersion) =>
-        lines += s"""{"txn":{"appId":${jsString(appId)},"version":$txnVersion,"lastUpdated":$now}}"""
+        lines += DeltaActions.txn(appId, txnVersion, now)
       }
+      // only DV tombstones carry the file's vector; readers key a
+      // tombstone by path alone
       planned.foreach { p =>
-        val oldDvField = p.file.dv
-          .map(d => s""","deletionVector":${DeltaWrite.dvJson(d)}""").getOrElse("")
-        lines += s"""{"remove":{"path":${jsString(p.file.path)},"deletionTimestamp":$now,"dataChange":true$oldDvField}}"""
+        lines += DeltaActions.remove(p.file.path, now, dataChange = true,
+          if (deletionVectors) p.file.dv else None)
       }
-      reAdded.foreach { p =>
-        val f = p.file
-        val pvJson = f.partitionValues.toSeq.sortBy(_._1)
-          .map { case (k, v) => s"${jsString(k)}:${jsString(v)}" }.mkString("{", ",", "}")
-        val statsField = f.stats.map(s => s""","stats":${jsString(s)}""").getOrElse("")
-        val dvField = s""","deletionVector":${DeltaWrite.dvJson(p.descriptor.get)}"""
-        lines += s"""{"add":{"path":${jsString(f.path)},"partitionValues":$pvJson,"size":${f.size},"modificationTime":${f.modificationTime},"dataChange":true$statsField$dvField${DeltaWrite.ridFieldOf(f)}}}"""
+      planned.foreach {
+        case DvPlan(f, Some(d)) =>
+          lines += DeltaActions.add(f.path, f.partitionValues, f.size, f.modificationTime,
+            dataChange = true, f.stats, Some(d), f.baseRowId, f.defaultRowCommitVersion)
+        case _ =>
       }
-      val pending: Seq[(Long, String => String)] =
-        newAdds.map { case (rel, pv, size, stats) =>
-          val pvJson = pv.toSeq.sortBy(_._1)
-            .map { case (k, v) => s"${jsString(k)}:${jsString(v)}" }.mkString("{", ",", "}")
-          val statsField = stats.map(s => s""","stats":${jsString(s)}""").getOrElse("")
-          val n = if (tracked) DeltaWrite.numRecordsOf(stats, s"$path DML $rel") else 0L
-          (n, (rid: String) =>
-            s"""{"add":{"path":${jsString(rel)},"partitionValues":$pvJson,"size":$size,"modificationTime":$now,"dataChange":true$statsField$rid}}""")
-        }
-      lines ++= DeltaWrite.renderAdds(spark, path, tracked, snapWm,
-        readVersion + 1, pending)(version)
-      cdcStaged.foreach { case (rel, size) =>
-        lines += s"""{"cdc":{"path":${jsString(rel)},"partitionValues":{},"size":$size,"dataChange":false}}"""
-      }
+      lines ++= DeltaWrite.renderAdds(spark, path, tracked, snapWm, readVersion + 1,
+        adds, now, dataChange = true)(version)
+      cdcStaged.foreach { case (rel, size) => lines += DeltaActions.cdc(rel, size) }
       lines.toSeq
     }
-    val dvGuard =
-      if (hwBumps.nonEmpty)
-        ConflictGuard.exclusive(planned.map(_.file.path).toSet, txn.map(_._1))
-      else ConflictGuard.disjointRewrite(planned.map(_.file.path).toSet,
-        txn.map(_._1))
-    val committed = DeltaWrite.commitWithRetry(spark, path, readVersion,
-      dvGuard, mkLines)
+    // OCC: row-level DML tolerates concurrent appends and disjoint
+    // rewrites (WriteSerializable); a winner touching any of OUR files
+    // refuses — one of the two rewrites would otherwise be lost. An
+    // identity-minting merge (hwBumps non-empty) conflict-checks
+    // EXCLUSIVELY, like identity-advancing appends: a concurrent minting
+    // commit would issue the same values — the loser refuses.
+    val removed = planned.map(_.file.path).toSet
+    val guard =
+      if (hwBumps.nonEmpty) ConflictGuard.exclusive(removed, txn.map(_._1))
+      else ConflictGuard.disjointRewrite(removed, txn.map(_._1))
+    val committed = DeltaWrite.commitWithRetry(spark, path, readVersion, guard, mkLines)
     DeltaWrite.maybeAutoCheckpoint(spark, path, committed, meta.configuration)
     committed
   }
@@ -839,10 +833,9 @@ object DeltaMerge {
           .unionByName(base.filter(hit).select(updatedCols: _*)
             .withColumn("_change_type", lit("update_postimage"))))
       } else None
-    commitRewrite(spark, path, readVersion, meta, proto, touched, rewritten,
-      operation = "UPDATE",
-      opParams = s""""predicate":${jsString(condition.toString)}""",
-      cdcData = cdc)
+    commitDml(spark, path, readVersion, meta, proto, touched.map(DvPlan(_, None)),
+      deletionVectors = false, Some(rewritten), "UPDATE",
+      Seq("predicate" -> condition.toString), cdc, None, Map.empty)
   }
 
   /** The live files whose rows survive `hit` applied to a provenance scan
@@ -873,98 +866,4 @@ object DeltaMerge {
     }.toSet
     live.filter(f => hitPaths.contains(f.path))
   }
-
-  /** Publish a copy-on-write commit: stage `newData` (partitioned like the
-    * table), tombstone every `touched` file, add the staged files —
-    * atomically, via [[DeltaWrite.publishCommit]]'s single-writer rename.
-    */
-  private def commitRewrite(spark: SparkSession, path: String,
-      readVersion: Long, meta: DeltaRead.Meta, proto: DeltaRead.Protocol,
-      touched: Seq[DeltaRead.LiveFile],
-      newData: DataFrame, operation: String, opParams: String,
-      cdcData: Option[DataFrame] = None,
-      txn: Option[(String, Long)] = None,
-      hwBumps: Map[String, Long] = Map.empty): Long = {
-    val root = new Path(path)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tracked = DeltaWrite.rowTrackingOf(meta).isDefined ||
-      proto.writerFeatures.contains("rowTracking")
-    lazy val snapWm = DeltaRead.rowIdHighWaterMark(
-      DeltaRead.replayFull(spark, path, None).domains)
-    // CHECK constraints hold for the post-DML rows too
-    DeltaWrite.enforceConstraints(newData, meta, s"$operation on $path")
-    // DML rows carry every column — applyGenerated is pure validation
-    // here (a stale generated value after an update refuses loudly)
-    DeltaWrite.applyGenerated(newData, meta, s"$operation on $path")
-    // mapped tables: the DML logic above runs entirely on LOGICAL names
-    // (filesDf serves them); the rewrite stages back under the table's
-    // PHYSICAL layout (id mode: footer field ids too), like DeltaWrite
-    val (stageDf, stageCols) =
-      if (meta.mappingMode != "none") {
-        val ms = DataType.fromJson(meta.schemaJson).asInstanceOf[StructType]
-        val l2p = ms.fieldNames
-          .zip(DeltaRead.physicalSchema(ms).fieldNames).toMap
-        (DeltaWrite.stagePhysical(newData, ms, meta.mappingMode),
-          meta.partitionCols.map(c => l2p.getOrElse(c, c)))
-      } else (newData, meta.partitionCols)
-    val adds = DeltaWrite.stageDataFiles(stageDf, root, stageCols)
-    // change-data files: the changed rows (+ _change_type +
-    // _commit_version, so a file stream over _change_data/ needs no log
-    // lookup) staged under _change_data/, committed as cdc actions
-    // (dataChange=false — CDF readers use them INSTEAD of the add/remove
-    // pair for this commit). Staged inside mkLines because the rows embed
-    // the final commit version: an OCC retry at a new version restages
-    // them (cheap — only the changed rows) and drops the orphaned attempt.
-    var cdcStaged: Seq[(String, Long)] = Seq.empty
-    def mkLines(version: Long): Seq[String] = {
-      cdcStaged.foreach { case (rel, _) => fs.delete(new Path(root, rel), false) }
-      cdcStaged = cdcData.toSeq.flatMap { c =>
-        DeltaWrite.stageCdcFiles(
-          cdcPhysical(c, meta).withColumn("_commit_version", lit(version)), root)
-      }
-      val now = System.currentTimeMillis()
-      val lines = scala.collection.mutable.ArrayBuffer[String]()
-      lines += s"""{"commitInfo":{${DeltaWrite.ictField(spark, path, meta, now)}"timestamp":$now,"operation":${jsString(operation)},"operationParameters":{$opParams},"engineInfo":"graft"}}"""
-      if (hwBumps.nonEmpty)
-        lines += DeltaWrite.identityMetaLine(meta, hwBumps, now)
-      txn.foreach { case (appId, txnVersion) =>
-        lines += s"""{"txn":{"appId":${jsString(appId)},"version":$txnVersion,"lastUpdated":$now}}"""
-      }
-      touched.foreach { f =>
-        lines += s"""{"remove":{"path":${jsString(f.path)},"deletionTimestamp":$now,"dataChange":true}}"""
-      }
-      val pending: Seq[(Long, String => String)] =
-        adds.map { case (rel, pv, size, stats) =>
-          val pvJson = pv.toSeq.sortBy(_._1)
-            .map { case (k, v) => s"${jsString(k)}:${jsString(v)}" }.mkString("{", ",", "}")
-          val statsField = stats.map(s => s""","stats":${jsString(s)}""").getOrElse("")
-          val n = if (tracked) DeltaWrite.numRecordsOf(stats, s"$path DML $rel") else 0L
-          (n, (rid: String) =>
-            s"""{"add":{"path":${jsString(rel)},"partitionValues":$pvJson,"size":$size,"modificationTime":$now,"dataChange":true$statsField$rid}}""")
-        }
-      lines ++= DeltaWrite.renderAdds(spark, path, tracked, snapWm,
-        readVersion + 1, pending)(version)
-      cdcStaged.foreach { case (rel, size) =>
-        lines += s"""{"cdc":{"path":${jsString(rel)},"partitionValues":{},"size":$size,"dataChange":false}}"""
-      }
-      lines.toSeq
-    }
-    // OCC: row-level DML tolerates concurrent appends and disjoint
-    // rewrites (WriteSerializable); a winner touching any of OUR files
-    // refuses — one of the two rewrites would otherwise be lost. An
-    // identity-minting merge (hwBumps non-empty) conflict-checks
-    // EXCLUSIVELY, like identity-advancing appends: a concurrent minting
-    // commit would issue the same values — the loser refuses.
-    val guard =
-      if (hwBumps.nonEmpty)
-        ConflictGuard.exclusive(touched.map(_.path).toSet, txn.map(_._1))
-      else ConflictGuard.disjointRewrite(touched.map(_.path).toSet, txn.map(_._1))
-    val committed = DeltaWrite.commitWithRetry(spark, path, readVersion,
-      guard, mkLines)
-    DeltaWrite.maybeAutoCheckpoint(spark, path, committed, meta.configuration)
-    committed
-  }
-
-  private def jsString(s: String): String =
-    new com.fasterxml.jackson.databind.ObjectMapper().writeValueAsString(s)
 }

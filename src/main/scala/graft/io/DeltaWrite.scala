@@ -107,9 +107,6 @@ object DeltaWrite {
   private[io] def sameSchema(a: StructType, b: StructType): Boolean =
     comparableType(a) == comparableType(b)
 
-  /** Write `df` to the Delta table at `path`. `mode` ∈ {append, overwrite}
-    * (the reference's validated surface). Returns the committed version.
-    */
   /** Write `df` to the Delta table at `path` with an idempotence token:
     * the commit carries a `txn` action `{appId, version}` (the public
     * protocol's application-transaction marker), and [[lastTxnVersion]]
@@ -120,6 +117,9 @@ object DeltaWrite {
       partitionBy: Seq[String], txn: Option[(String, Long)]): Long =
     writeDeltaTableImpl(df, path, mode, partitionBy, txn, mergeSchema = false)
 
+  /** Write `df` to the Delta table at `path`. `mode` ∈ {append, overwrite}
+    * (the reference's validated surface). Returns the committed version.
+    */
   def writeDeltaTable(df: DataFrame, path: String, mode: String,
       partitionBy: Seq[String] = Nil): Long =
     writeDeltaTableImpl(df, path, mode, partitionBy, None, mergeSchema = false)
@@ -274,11 +274,8 @@ object DeltaWrite {
       s"creating an identity table at $path requires writeDeltaTableIdentity — " +
         "raw delta.identity metadata would publish without the " +
         "identityColumns protocol feature")
-    val identityFields: Seq[StructField] = existingFull.toSeq.flatMap { e =>
-      if (!e.meta.schemaJson.contains("delta.identity.")) Nil
-      else DataType.fromJson(e.meta.schemaJson).asInstanceOf[StructType]
-        .fields.filter(_.metadata.contains("delta.identity.start")).toSeq
-    }
+    val identityFields: Seq[StructField] =
+      existingFull.toSeq.flatMap(e => identityFieldsOf(e.meta))
     require(identityFields.isEmpty || !mergeSchema,
       s"mergeSchema on identity table $path is not supported — schema " +
         "evolution would republish the identity metadata from the batch side")
@@ -459,30 +456,23 @@ object DeltaWrite {
 
     // 2) the commit
     val now = System.currentTimeMillis()
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    def js(s: String): String = mapper.writeValueAsString(s)
     val lines = scala.collection.mutable.ArrayBuffer[String]()
-    // per-OCC-attempt: a retried commit's in-commit clock must pass the
-    // winner it lost to, so the commitInfo line rebuilds in mkLines
-    def commitInfoLine(): String = {
-      val ict = existing.map(e => ictField(spark, path, e._1, now)).getOrElse("")
-      s"""{"commitInfo":{$ict"timestamp":$now,"operation":"WRITE","operationParameters":{"mode":${js(mode)}},"engineInfo":"graft"}}"""
-    }
     if (version == 0L)
-      lines += (if (mappedSchema.isDefined)
-        // column mapping requires reader 2 / writer 5 per the protocol
-        """{"protocol":{"minReaderVersion":2,"minWriterVersion":5}}"""
-      else if (createRowTracked)
-        // rowTracking is a writer-only table feature (writer version 7);
-        // domainMetadata carries its high watermark
-        """{"protocol":{"minReaderVersion":1,"minWriterVersion":7,"writerFeatures":["domainMetadata","rowTracking"]}}"""
-      else if (createIdentity)
-        // identityColumns is a writer-only table feature: readers see
-        // plain bigint values; only writers owe the assignment contract
-        """{"protocol":{"minReaderVersion":1,"minWriterVersion":7,"writerFeatures":["identityColumns"]}}"""
-      else """{"protocol":{"minReaderVersion":1,"minWriterVersion":2}}""")
+      lines += DeltaActions.protocol(
+        if (mappedSchema.isDefined)
+          // column mapping requires reader 2 / writer 5 per the protocol
+          DeltaRead.Protocol(2, 5)
+        else if (createRowTracked)
+          // rowTracking is a writer-only table feature (writer version 7);
+          // domainMetadata carries its high watermark
+          DeltaRead.Protocol(1, 7, Nil, Seq("domainMetadata", "rowTracking"))
+        else if (createIdentity)
+          // identityColumns is a writer-only table feature: readers see
+          // plain bigint values; only writers owe the assignment contract
+          DeltaRead.Protocol(1, 7, Nil, Seq("identityColumns"))
+        else DeltaRead.Protocol(1, 2))
     txn.foreach { case (appId, txnVersion) =>
-      lines += s"""{"txn":{"appId":${js(appId)},"version":$txnVersion,"lastUpdated":$now}}"""
+      lines += DeltaActions.txn(appId, txnVersion, now)
     }
     val schemaChanged = existing.forall { case (meta, _) =>
       !sameSchema(tableSchema,
@@ -495,7 +485,6 @@ object DeltaWrite {
     if (schemaChanged) {
       require(mode == "overwrite" || existing.isEmpty || mergeSchema,
         "unreachable: append checked above")
-      val pcols = partitionBy.map(js).mkString("[", ",", "]")
       // generated date()/year() over TIMESTAMP: partition values depend on
       // the writer's session zone — record it so the reader can derive
       // pruning bounds (absent → derivation disabled, never wrong). Kept
@@ -506,33 +495,32 @@ object DeltaWrite {
           Map(GeneratedPruning.TimeZoneProp ->
             spark.sessionState.conf.sessionLocalTimeZone)
         else Map.empty
-      def renderConfig(m: Map[String, String]): String =
-        m.toSeq.sortBy(_._1)
-          .map { case (k, v) => s"${js(k)}:${js(v)}" }.mkString("{", ",", "}")
       val config = minted match {
         case Some((_, maxId)) =>
-          renderConfig(genTz ++ Map(
+          genTz ++ Map(
             "delta.columnMapping.mode" -> createMapped.getOrElse("name"),
-            "delta.columnMapping.maxColumnId" -> maxId.toString))
+            "delta.columnMapping.maxColumnId" -> maxId.toString)
         case None if createRowTracked && existing.isEmpty =>
           // fresh row-tracked table: enable the feature and MINT the
           // materialized-column names rewriting commits will preserve
           // stable ids under (spec: writer-chosen, stored in the table
           // configuration, outside the table schema)
           val suffix = UUID.randomUUID().toString.take(8)
-          renderConfig(genTz ++ Map(
+          genTz ++ Map(
             "delta.enableRowTracking" -> "true",
             "delta.rowTracking.materializedRowIdColumnName" ->
               s"_row_id_mat_$suffix",
             "delta.rowTracking.materializedRowCommitVersionColumnName" ->
-              s"_row_ver_mat_$suffix"))
+              s"_row_ver_mat_$suffix")
         case None =>
           // a schema-changing overwrite must CARRY the existing table
           // configuration — emitting {} would silently drop properties
           // like delta.enableChangeDataFeed
-          renderConfig(existing.map(_._1.configuration).getOrElse(Map.empty) ++ genTz)
+          existing.map(_._1.configuration).getOrElse(Map.empty) ++ genTz
       }
-      lines += s"""{"metaData":{"id":${js(existing.map(e => carriedId(e._1)).getOrElse(UUID.randomUUID().toString))},"format":{"provider":"parquet","options":{}},"schemaString":${js(tableSchema.json)},"partitionColumns":$pcols,"configuration":$config,"createdTime":$now}}"""
+      lines += DeltaActions.metaData(
+        existing.map(e => carriedId(e._1)).getOrElse(UUID.randomUUID().toString),
+        tableSchema.json, partitionBy, config, now)
     }
     // identity watermark advance: same schema, new highWaterMark — one
     // metaData action republishing the STORED schema with bumped marks in
@@ -541,29 +529,18 @@ object DeltaWrite {
     require(!(schemaChanged && hwBumps.nonEmpty),
       "unreachable: identity tables refuse schema-changing writes above")
     if (hwBumps.nonEmpty) existing.foreach { case (meta, _) =>
-      lines += identityMetaLine(meta, hwBumps, now)
+      lines += DeltaActions.identityMetaData(meta, hwBumps, now)
     }
     if (mode == "overwrite") existing.foreach { case (_, live) =>
-      live.foreach { f =>
-        lines += s"""{"remove":{"path":${js(f.path)},"deletionTimestamp":$now,"dataChange":true}}"""
-      }
+      live.foreach(f => lines += DeltaActions.remove(f.path, now, dataChange = true, None))
     }
     // add actions: on a row-tracked table they render PER OCC ATTEMPT —
     // each add claims a contiguous baseRowId range above the high
     // watermark, and a retry must re-read the watermark a concurrent
     // winner may have advanced (its own domainMetadata action carries the
-    // new mark). Non-tracked tables render once, outside the retry loop.
-    val pendingAdds: Seq[(Long, String => String)] =
-      adds.map { case (rel, pv, size, stats) =>
-        val pvJson = pv.toSeq.sortBy(_._1)
-          .map { case (k, v) => s"${js(k)}:${js(v)}" }.mkString("{", ",", "}")
-        val statsField = stats.map(s => s""","stats":${js(s)}""").getOrElse("")
-        val n = if (rowTracked) numRecordsOf(stats, s"$path add $rel") else 0L
-        (n, (rid: String) =>
-          s"""{"add":{"path":${js(rel)},"partitionValues":$pvJson,"size":$size,"modificationTime":$now,"dataChange":true$statsField$rid}}""")
-      }
+    // new mark)
     val addLines = renderAdds(spark, path, rowTracked, snapshotWm,
-      readVersion + 1, pendingAdds) _
+      readVersion + 1, adds, now, dataChange = true) _
 
     // OCC: a plain append is blind (retries past any concurrent data
     // change); overwrite, table creation, and schema-changing commits
@@ -576,8 +553,11 @@ object DeltaWrite {
         ConflictGuard.exclusive(
           existing.map(_._2.map(_.path).toSet).getOrElse(Set.empty), txn.map(_._1))
       else ConflictGuard.blindAppend(txn.map(_._1))
-    val committed = commitWithRetry(spark, path, readVersion, guard,
-      attempt => commitInfoLine() +: (lines.toSeq ++ addLines(attempt)))
+    // the commitInfo line rebuilds per OCC attempt: a retried commit's
+    // in-commit clock must pass the winner it lost to
+    val committed = commitWithRetry(spark, path, readVersion, guard, attempt =>
+      DeltaActions.commitInfo(existing.flatMap(e => inCommitTimestamp(spark, path, e._1, now)),
+        now, "WRITE", Seq("mode" -> mode)) +: (lines.toSeq ++ addLines(attempt)))
     maybeAutoCheckpoint(spark, path, committed,
       existing.map(_._1.configuration).getOrElse(Map.empty))
     committed
@@ -652,46 +632,36 @@ object DeltaWrite {
         else Seq("__fkey", "__file", "__row_idx", "__base_rid", "__dflt_ver")): _*)
   }
 
-  /** Per-OCC-attempt add-line rendering for row-tracked commits: each
-    * pending add (numRecords, line-builder) claims a contiguous baseRowId
-    * range above the high watermark — re-read on RETRY attempts, since a
-    * concurrent winner advances it — and the commit closes with the
-    * domain-metadata action carrying the new mark. Non-tracked commits
-    * render each line with no rid field, once.
+  /** A data file staged under the table root, ready for its `add`
+    * action: table-relative path, partition values, size, footer stats.
+    */
+  private[io] final case class StagedFile(path: String,
+      partitionValues: Map[String, String], size: Long, stats: Option[String])
+
+  /** Per-OCC-attempt `add` rendering of freshly staged files. On a
+    * row-tracked table each file claims a contiguous baseRowId range above
+    * the high watermark — re-read on RETRY attempts, since a concurrent
+    * winner advances it — and the commit closes with the domain-metadata
+    * action carrying the new mark. Untracked adds carry no row-id fields.
     */
   private[io] def renderAdds(spark: SparkSession, path: String,
       tracked: Boolean, snapshotWm: Long, firstAttempt: Long,
-      pending: Seq[(Long, String => String)])(attempt: Long): Seq[String] =
-    if (!tracked) pending.map(_._2(""))
+      files: Seq[StagedFile], now: Long, dataChange: Boolean)(attempt: Long): Seq[String] = {
+    def add(f: StagedFile, base: Option[Long]): String =
+      DeltaActions.add(f.path, f.partitionValues, f.size, now, dataChange,
+        f.stats, None, base, base.map(_ => attempt))
+    if (!tracked) files.map(add(_, None))
     else {
       var next = (if (attempt == firstAttempt) snapshotWm
         else DeltaRead.rowIdHighWaterMark(
           DeltaRead.replayFull(spark, path, None).domains)) + 1
-      val out = pending.map { case (n, f) =>
-        val base = next
-        next += n
-        f(s""","baseRowId":$base,"defaultRowCommitVersion":$attempt""")
+      val out = files.map { f =>
+        val line = add(f, Some(next))
+        next += numRecordsOf(f.stats, s"$path add ${f.path}")
+        line
       }
-      out :+ rowTrackingDomainLine(next - 1)
+      out :+ DeltaActions.rowTrackingDomain(next - 1)
     }
-
-  /** Render a [[DeltaRead.LiveFile]]'s row-tracking fields for a re-add
-    * action (restore, clone, DV re-add): the original `baseRowId` /
-    * `defaultRowCommitVersion` carry VERBATIM — the file's physical rows
-    * never moved, so its ids must not either.
-    */
-  private[io] def ridFieldOf(f: DeltaRead.LiveFile): String =
-    f.baseRowId.map(b => s""","baseRowId":$b""" +
-      f.defaultRowCommitVersion.map(v => s""","defaultRowCommitVersion":$v""")
-        .getOrElse("")).getOrElse("")
-
-  /** The `delta.rowTracking` domain-metadata action carrying the new
-    * row-id high watermark.
-    */
-  private[io] def rowTrackingDomainLine(highWaterMark: Long): String = {
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    val cfg = mapper.writeValueAsString(s"""{"rowIdHighWaterMark":$highWaterMark}""")
-    s"""{"domainMetadata":{"domain":"delta.rowTracking","configuration":$cfg,"removed":false}}"""
   }
 
   /** SET TBLPROPERTIES: commit a metaData action whose configuration is
@@ -706,24 +676,18 @@ object DeltaWrite {
     val readVersion = DeltaRead.latestVersion(spark, path)
     val (meta, _) = DeltaRead.replayLog(spark, path, None)
     require(meta != null, s"$path has no metaData action in its _delta_log")
-    val root = new Path(path)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val version = readVersion + 1
     val now = System.currentTimeMillis()
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    def js(s: String): String = mapper.writeValueAsString(s)
     val merged = meta.configuration ++ props
-    val configJson = merged.toSeq.sortBy(_._1)
-      .map { case (k, v) => s"${js(k)}:${js(v)}" }.mkString("{", ",", "}")
-    val pcols = meta.partitionCols.map(js).mkString("[", ",", "]")
     // the MERGED configuration governs this commit's own clock — enabling
     // delta.enableInCommitTimestamps stamps the enablement commit itself
     val resultMeta = meta.copy(configuration = merged)
-    val tail = Seq(
-      s"""{"metaData":{"id":${js(carriedId(meta))},"format":{"provider":"parquet","options":{}},"schemaString":${js(meta.schemaJson)},"partitionColumns":$pcols,"configuration":$configJson,"createdTime":$now}}""")
+    val tail = Seq(DeltaActions.metaData(carriedId(meta), meta.schemaJson,
+      meta.partitionCols, merged, now))
     val committed = commitWithRetry(spark, path, readVersion,
       ConflictGuard.exclusive(), _ =>
-      s"""{"commitInfo":{${ictField(spark, path, resultMeta, now)}"timestamp":$now,"operation":"SET TBLPROPERTIES","operationParameters":{"properties":${js(props.toSeq.sortBy(_._1).map { case (k, v) => s"$k=$v" }.mkString(","))}},"engineInfo":"graft"}}""" +: tail)
+      DeltaActions.commitInfo(inCommitTimestamp(spark, path, resultMeta, now), now,
+        "SET TBLPROPERTIES", Seq("properties" ->
+          props.toSeq.sortBy(_._1).map { case (k, v) => s"$k=$v" }.mkString(","))) +: tail)
     maybeAutoCheckpoint(spark, path, committed, meta.configuration)
     committed
   }
@@ -903,24 +867,9 @@ object DeltaWrite {
     if (alreadyOn && toBackfill.isEmpty) return -1L
 
     val now = System.currentTimeMillis()
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    def js(s: String): String = mapper.writeValueAsString(s)
     val lines = scala.collection.mutable.ArrayBuffer[String]()
-
-    // protocol: crossing to writer v7 must enumerate the legacy versions'
-    // implied features alongside the new ones (spec: a table-features
-    // protocol lists EVERYTHING it requires)
-    val implied = Seq(
-      2 -> Seq("appendOnly", "invariants"), 3 -> Seq("checkConstraints"),
-      4 -> Seq("changeDataFeed", "generatedColumns"), 5 -> Seq("columnMapping"),
-      6 -> Seq("identityColumns"))
-      .filter(_._1 <= snap.protocol.minWriter).flatMap(_._2)
-    val baseFeatures =
-      if (snap.protocol.minWriter >= 7) snap.protocol.writerFeatures
-      else implied
-    val features = (baseFeatures ++ Seq("domainMetadata", "rowTracking")).distinct
-    val newProto = snap.protocol.copy(minWriter = 7, writerFeatures = features)
-    if (newProto != snap.protocol) lines += protocolJson(newProto)
+    val newProto = withWriterFeatures(snap.protocol, Seq("domainMetadata", "rowTracking"))
+    if (newProto != snap.protocol) lines += DeltaActions.protocol(newProto)
 
     // configuration: mint materialized-column names unless already pinned
     val suffix = UUID.randomUUID().toString.take(8)
@@ -929,12 +878,9 @@ object DeltaWrite {
       "delta.rowTracking.materializedRowCommitVersionColumnName" ->
         s"_row_ver_mat_$suffix") ++
       snap.meta.configuration + ("delta.enableRowTracking" -> "true")
-    if (merged != snap.meta.configuration) {
-      val configJson = merged.toSeq.sortBy(_._1)
-        .map { case (k, v) => s"${js(k)}:${js(v)}" }.mkString("{", ",", "}")
-      val pcols = snap.meta.partitionCols.map(js).mkString("[", ",", "]")
-      lines += s"""{"metaData":{"id":${js(carriedId(snap.meta))},"format":{"provider":"parquet","options":{}},"schemaString":${js(snap.meta.schemaJson)},"partitionColumns":$pcols,"configuration":$configJson,"createdTime":$now}}"""
-    }
+    if (merged != snap.meta.configuration)
+      lines += DeltaActions.metaData(carriedId(snap.meta), snap.meta.schemaJson,
+        snap.meta.partitionCols, merged, now)
 
     // re-add unbackfilled files with contiguous ranges above the watermark;
     // rendered per OCC attempt — defaultRowCommitVersion stamps the
@@ -942,20 +888,16 @@ object DeltaWrite {
     def backfillLines(attempt: Long): Seq[String] = {
       var next = DeltaRead.rowIdHighWaterMark(snap.domains) + 1
       val out = toBackfill.map { f =>
-        val n = numRecordsOf(f.stats,
-          s"enableRowTracking($path) backfill of ${f.path}")
-        val pvJson = f.partitionValues.toSeq.sortBy(_._1)
-          .map { case (k, v) => s"${js(k)}:${js(v)}" }.mkString("{", ",", "}")
-        val statsField = f.stats.map(st => s""","stats":${js(st)}""").getOrElse("")
-        val dvField = f.dv.map(d => s""","deletionVector":${dvJson(d)}""").getOrElse("")
-        val line = s"""{"add":{"path":${js(f.path)},"partitionValues":$pvJson,"size":${f.size},"modificationTime":${f.modificationTime},"dataChange":false$statsField$dvField,"baseRowId":$next,"defaultRowCommitVersion":$attempt}}"""
-        next += n
+        val line = DeltaActions.add(f.path, f.partitionValues, f.size,
+          f.modificationTime, dataChange = false, f.stats, f.dv, Some(next), Some(attempt))
+        next += numRecordsOf(f.stats, s"enableRowTracking($path) backfill of ${f.path}")
         line
       }
-      out :+ rowTrackingDomainLine(next - 1)
+      out :+ DeltaActions.rowTrackingDomain(next - 1)
     }
-    val info =
-      s"""{"commitInfo":{${ictField(spark, path, snap.meta.copy(configuration = merged), now)}"timestamp":$now,"operation":"ENABLE ROW TRACKING","operationParameters":{"backfilledFiles":${toBackfill.size}},"engineInfo":"graft"}}"""
+    val info = DeltaActions.commitInfo(
+      inCommitTimestamp(spark, path, snap.meta.copy(configuration = merged), now), now,
+      "ENABLE ROW TRACKING", Seq("backfilledFiles" -> toBackfill.size))
     // exclusive: the assigned ranges and backfill set ARE the snapshot —
     // any concurrent commit invalidates both
     val committed = commitWithRetry(spark, path, readVersion,
@@ -1136,6 +1078,14 @@ object DeltaWrite {
     out.select(ordered.map(col).toSeq: _*)
   }
 
+  /** Identity-column fields of a table schema (`delta.identity.start`
+    * metadata), with the last-issued value each would continue from.
+    */
+  private[io] def identityFieldsOf(meta: DeltaRead.Meta): Seq[StructField] =
+    if (!meta.schemaJson.contains("delta.identity.")) Nil
+    else DataType.fromJson(meta.schemaJson).asInstanceOf[StructType]
+      .fields.filter(_.metadata.contains("delta.identity.start")).toSeq
+
   /** Identity assignment: append `name` holding gap-free values
     * `lastIssued + step, lastIssued + 2·step, …` in the batch's
     * partition-then-row order. `zipWithIndex` is the one legitimate RDD
@@ -1146,40 +1096,6 @@ object DeltaWrite {
     * Returns the frame and the batch row count (caller derives the new
     * watermark as `lastIssued + step·n`).
     */
-  /** The `metaData` action republishing the STORED schema with bumped
-    * identity high-water marks — the spec's writer obligation: the marks
-    * ride the SAME commit as the rows that consumed them (a crash between
-    * data and mark would re-issue values). Shared by the append path and
-    * MERGE's unmatched-insert minting.
-    */
-  private[io] def identityMetaLine(meta: DeltaRead.Meta,
-      hwBumps: Map[String, Long], now: Long): String = {
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    def js(s: String): String = mapper.writeValueAsString(s)
-    val old = DataType.fromJson(meta.schemaJson).asInstanceOf[StructType]
-    val bumped = StructType(old.fields.map { f =>
-      hwBumps.get(f.name) match {
-        case Some(hw) => f.copy(metadata =
-          new org.apache.spark.sql.types.MetadataBuilder()
-            .withMetadata(f.metadata)
-            .putLong("delta.identity.highWaterMark", hw).build())
-        case None => f
-      }
-    })
-    val pcols = meta.partitionCols.map(js).mkString("[", ",", "]")
-    val config = meta.configuration.toSeq.sortBy(_._1)
-      .map { case (k, v) => s"${js(k)}:${js(v)}" }.mkString("{", ",", "}")
-    s"""{"metaData":{"id":${js(carriedId(meta))},"format":{"provider":"parquet","options":{}},"schemaString":${js(bumped.json)},"partitionColumns":$pcols,"configuration":$config,"createdTime":$now}}"""
-  }
-
-  /** Identity-column fields of a table schema (`delta.identity.start`
-    * metadata), with the last-issued value each would continue from.
-    */
-  private[io] def identityFieldsOf(meta: DeltaRead.Meta): Seq[StructField] =
-    if (!meta.schemaJson.contains("delta.identity.")) Nil
-    else DataType.fromJson(meta.schemaJson).asInstanceOf[StructType]
-      .fields.filter(_.metadata.contains("delta.identity.start")).toSeq
-
   private[io] def assignIdentityValues(df: DataFrame, name: String,
       lastIssued: Long, step: Long): (DataFrame, Long) = {
     import org.apache.spark.sql.types.LongType
@@ -1195,18 +1111,18 @@ object DeltaWrite {
     (out, n)
   }
 
-  /** The `"inCommitTimestamp":N,` fragment for the NEXT commit's
-    * commitInfo when the table enables `delta.enableInCommitTimestamps` —
+  /** The `inCommitTimestamp` of the NEXT commit's commitInfo when the
+    * table enables `delta.enableInCommitTimestamps` —
     * strictly monotone past the last commit's in-commit clock
     * (`max(wallclock, prev + 1)`, the protocol's rule, which is what makes
     * timestamp time travel immune to wall-clock skew between writers).
-    * Empty when the feature is off. Re-derive PER OCC ATTEMPT: a retried
+    * None when the feature is off. Re-derive PER OCC ATTEMPT: a retried
     * commit must clock past the winner it lost to, not its own first try.
     */
-  private[io] def ictField(spark: SparkSession, path: String,
-      meta: DeltaRead.Meta, now: Long): String = {
+  private[io] def inCommitTimestamp(spark: SparkSession, path: String,
+      meta: DeltaRead.Meta, now: Long): Option[Long] = {
     if (!meta.configuration.get("delta.enableInCommitTimestamps").contains("true"))
-      return ""
+      return None
     val dir = new Path(new Path(path), "_delta_log")
     val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
@@ -1230,7 +1146,7 @@ object DeltaWrite {
                 .orElse(Option(ci.get("timestamp")).map(_.asLong()))
           }.flatten.getOrElse(0L)
       }.getOrElse(0L)
-    s""""inCommitTimestamp":${math.max(now, prev + 1)},"""
+    Some(math.max(now, prev + 1))
   }
 
   /** Validate a batch against the table's stored CHECK constraints — one
@@ -1315,41 +1231,26 @@ object DeltaWrite {
     val toRemove = liveNow.filterNot(f => thenByPath.contains(f.path))
     val metaChanged = metaNow != metaThen
     if (toAdd.isEmpty && toRemove.isEmpty && !metaChanged) return -1L
-    val root = new Path(path)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val version = readVersion + 1
     val now = System.currentTimeMillis()
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    def js(s: String): String = mapper.writeValueAsString(s)
     val lines = scala.collection.mutable.ArrayBuffer[String]()
-    def commitInfoLine(): String = {
-      val ict = ictField(spark, path, if (metaChanged) metaThen else metaNow, now)
-      s"""{"commitInfo":{$ict"timestamp":$now,"operation":"RESTORE","operationParameters":{"version":$toVersion},"engineInfo":"graft"}}"""
-    }
-    if (metaChanged) {
-      val configJson = metaThen.configuration.toSeq.sortBy(_._1)
-        .map { case (k, v) => s"${js(k)}:${js(v)}" }.mkString("{", ",", "}")
-      val pcols = metaThen.partitionCols.map(js).mkString("[", ",", "]")
+    if (metaChanged)
       // the CURRENT id, not the historical one: the GUID identifies the
       // table across its whole life — a legacy log whose early commits
       // minted per-commit ids must not flip back on restore
-      lines += s"""{"metaData":{"id":${js(carriedId(metaNow))},"format":{"provider":"parquet","options":{}},"schemaString":${js(metaThen.schemaJson)},"partitionColumns":$pcols,"configuration":$configJson,"createdTime":$now}}"""
-    }
-    toRemove.foreach { f =>
-      lines += s"""{"remove":{"path":${js(f.path)},"deletionTimestamp":$now,"dataChange":true}}"""
-    }
+      lines += DeltaActions.metaData(carriedId(metaNow), metaThen.schemaJson,
+        metaThen.partitionCols, metaThen.configuration, now)
+    toRemove.foreach(f => lines += DeltaActions.remove(f.path, now, dataChange = true, None))
+    // a resurrected file carries its historical DV verbatim — the blob
+    // still resolves against this table's root (VACUUM spares live DVs)
     toAdd.foreach { f =>
-      val pvJson = f.partitionValues.toSeq.sortBy(_._1)
-        .map { case (k, v) => s"${js(k)}:${js(v)}" }.mkString("{", ",", "}")
-      val statsField = f.stats.map(st => s""","stats":${js(st)}""").getOrElse("")
-      // a resurrected file carries its historical DV verbatim — the blob
-      // still resolves against this table's root (VACUUM spares live DVs)
-      val dvField = f.dv.map(d => s""","deletionVector":${dvJson(d)}""").getOrElse("")
-      lines += s"""{"add":{"path":${js(f.path)},"partitionValues":$pvJson,"size":${f.size},"modificationTime":${f.modificationTime},"dataChange":true$statsField$dvField${ridFieldOf(f)}}}"""
+      lines += DeltaActions.add(f.path, f.partitionValues, f.size, f.modificationTime,
+        dataChange = true, f.stats, f.dv, f.baseRowId, f.defaultRowCommitVersion)
     }
     val committed = commitWithRetry(spark, path, readVersion,
-      ConflictGuard.exclusive(toRemove.map(_.path).toSet),
-      _ => commitInfoLine() +: lines.toSeq)
+      ConflictGuard.exclusive(toRemove.map(_.path).toSet), _ =>
+      DeltaActions.commitInfo(
+        inCommitTimestamp(spark, path, if (metaChanged) metaThen else metaNow, now),
+        now, "RESTORE", Seq("version" -> toVersion)) +: lines.toSeq)
     // effective config after the restore commit governs the interval
     maybeAutoCheckpoint(spark, path, committed,
       (if (metaChanged) metaThen else metaNow).configuration)
@@ -1381,26 +1282,22 @@ object DeltaWrite {
     require(!fs.exists(new Path(destRoot, "_delta_log")),
       s"$dest is already a Delta table — clone only creates fresh tables")
     val srcQualified = fs.makeQualified(srcRoot).toUri.getPath
-    val version = 0L
     val now = System.currentTimeMillis()
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    def js(s: String): String = mapper.writeValueAsString(s)
-    val configJson = meta.configuration.toSeq.sortBy(_._1)
-      .map { case (k, v) => s"${js(k)}:${js(v)}" }.mkString("{", ",", "}")
-    val pcols = meta.partitionCols.map(js).mkString("[", ",", "]")
     val lines = scala.collection.mutable.ArrayBuffer[String]()
-    lines += s"""{"commitInfo":{${ictField(spark, dest, meta, now)}"timestamp":$now,"operation":"CLONE","operationParameters":{"source":${js(src)}},"engineInfo":"graft"}}"""
+    lines += DeltaActions.commitInfo(inCommitTimestamp(spark, dest, meta, now), now,
+      "CLONE", Seq("source" -> src))
     // the SOURCE's replayed protocol, features included — a clone that
     // re-derived (reader, writer) from the mapping mode would drop
     // declared features (typeWidening, deletionVectors) from its only
     // protocol record
-    lines += protocolJson(proto)
-    lines += s"""{"metaData":{"id":${js(UUID.randomUUID().toString)},"format":{"provider":"parquet","options":{}},"schemaString":${js(meta.schemaJson)},"partitionColumns":$pcols,"configuration":$configJson,"createdTime":$now}}"""
+    lines += DeltaActions.protocol(proto)
+    lines += DeltaActions.metaData(UUID.randomUUID().toString, meta.schemaJson,
+      meta.partitionCols, meta.configuration, now)
     // live domain metadata carries into the clone's v0: dropping the
     // delta.rowTracking watermark would make the clone's first append
     // mint ids that COLLIDE with the cloned files' ranges
     snap.domains.toSeq.sortBy(_._1).foreach { case (dom, cfg) =>
-      lines += s"""{"domainMetadata":{"domain":${js(dom)},"configuration":${js(cfg)},"removed":false}}"""
+      lines += DeltaActions.domainMetadata(dom, cfg)
     }
     live.foreach { f =>
       // a source file that is itself absolute (clone-of-a-clone: the
@@ -1409,44 +1306,20 @@ object DeltaWrite {
       val abs =
         if (f.path.startsWith("/") || f.path.contains("://")) f.path
         else s"$srcQualified/${f.path}"
-      val pvJson = f.partitionValues.toSeq.sortBy(_._1)
-        .map { case (k, v) => s"${js(k)}:${js(v)}" }.mkString("{", ",", "}")
-      val statsField = f.stats.map(st => s""","stats":${js(st)}""").getOrElse("")
       // uuid-relative DV blobs resolve against the table root, which for
       // the clone is WRONG — rewrite them to absolute `p` form pointing
       // into the source (inline `i` and already-absolute `p` carry over)
-      val dvField = f.dv.map { d =>
-        val portable =
-          if (d.storageType == "u")
-            d.copy(storageType = "p", pathOrInlineDv = fs.makeQualified(
-              DeletionVectors.resolvedPath(srcRoot, d)).toUri.getPath)
-          else d
-        s""","deletionVector":${dvJson(portable)}"""
-      }.getOrElse("")
-      lines += s"""{"add":{"path":${js(abs)},"partitionValues":$pvJson,"size":${f.size},"modificationTime":${f.modificationTime},"dataChange":true$statsField$dvField${ridFieldOf(f)}}}"""
+      val portable = f.dv.map { d =>
+        if (d.storageType == "u")
+          d.copy(storageType = "p", pathOrInlineDv = fs.makeQualified(
+            DeletionVectors.resolvedPath(srcRoot, d)).toUri.getPath)
+        else d
+      }
+      lines += DeltaActions.add(abs, f.partitionValues, f.size, f.modificationTime,
+        dataChange = true, f.stats, portable, f.baseRowId, f.defaultRowCommitVersion)
     }
-    publishCommit(fs, new Path(destRoot, "_delta_log"), version, lines.toSeq)
-    version
-  }
-
-  /** A `protocol` action JSON line — features serialized only when
-    * declared, versions verbatim from the replayed [[DeltaRead.Protocol]].
-    */
-  private[io] def protocolJson(p: DeltaRead.Protocol): String = {
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    def arr(name: String, fs0: Seq[String]): String =
-      if (fs0.isEmpty) ""
-      else s""","$name":${fs0.map(mapper.writeValueAsString).mkString("[", ",", "]")}"""
-    s"""{"protocol":{"minReaderVersion":${p.minReader},"minWriterVersion":${p.minWriter}""" +
-      arr("readerFeatures", p.readerFeatures) + arr("writerFeatures", p.writerFeatures) + "}}"
-  }
-
-  /** A `deletionVector` descriptor as the add action's JSON field. */
-  private[io] def dvJson(d: DeletionVectors.Descriptor): String = {
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    def js(s: String): String = mapper.writeValueAsString(s)
-    val off = d.offset.map(o => s""","offset":$o""").getOrElse("")
-    s"""{"storageType":${js(d.storageType)},"pathOrInlineDv":${js(d.pathOrInlineDv)}$off,"sizeInBytes":${d.sizeInBytes},"cardinality":${d.cardinality}}"""
+    publishCommit(fs, new Path(destRoot, "_delta_log"), 0L, lines.toSeq)
+    0L
   }
 
   /** ALTER COLUMN TYPE (widening only): commit a metaData action whose
@@ -1482,29 +1355,15 @@ object DeltaWrite {
       "only byte/short/int → wider integral and float → double promote losslessly at scan time")
     val widened = StructType(schema.fields.updated(idx,
       schema(idx).copy(dataType = to)))
-    val root = new Path(path)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val version = readVersion + 1
-    val now = System.currentTimeMillis()
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    def js(s: String): String = mapper.writeValueAsString(s)
-    val configJson = meta.configuration.toSeq.sortBy(_._1)
-      .map { case (k, v) => s"${js(k)}:${js(v)}" }.mkString("{", ",", "}")
-    val pcols = meta.partitionCols.map(js).mkString("[", ",", "]")
     // MERGE the feature into the replayed protocol — overwriting it would
     // silently drop features a prior commit (or a foreign writer) declared
     val newProto = DeltaRead.Protocol(
       math.max(3, proto.minReader), math.max(7, proto.minWriter),
       (proto.readerFeatures :+ "typeWidening").distinct,
       (proto.writerFeatures :+ "typeWidening").distinct)
-    val tail = Seq(
-      protocolJson(newProto),
-      s"""{"metaData":{"id":${js(carriedId(meta))},"format":{"provider":"parquet","options":{}},"schemaString":${js(widened.json)},"partitionColumns":$pcols,"configuration":$configJson,"createdTime":$now}}""")
-    val committed = commitWithRetry(spark, path, readVersion,
-      ConflictGuard.exclusive(), _ =>
-      s"""{"commitInfo":{${ictField(spark, path, meta, now)}"timestamp":$now,"operation":"CHANGE COLUMN","operationParameters":{"column":${js(column)},"type":${js(to.simpleString)}},"engineInfo":"graft"}}""" +: tail)
-    maybeAutoCheckpoint(spark, path, committed, meta.configuration)
-    committed
+    commitSchemaChange(spark, path, readVersion, meta, Some(newProto), widened,
+      meta.configuration, "CHANGE COLUMN",
+      Seq("column" -> column, "type" -> to.simpleString))
   }
 
   /** ALTER COLUMN SET DEFAULT: record `default` as the column's
@@ -1551,10 +1410,10 @@ object DeltaWrite {
       .putString("CURRENT_DEFAULT", default).build()
     val updated = StructType(schema.fields.updated(idx,
       schema(idx).copy(metadata = newMeta)))
-    commitSchemaChange(spark, path, readVersion, meta, proto, updated,
-      protoExtraWriter = Seq("allowColumnDefaults"),
-      operation = "ALTER COLUMN",
-      opParams = s""""column":${jsonStr(column)},"default":${jsonStr(default)}""")
+    commitSchemaChange(spark, path, readVersion, meta,
+      Some(withWriterFeatures(proto, Seq("allowColumnDefaults"))).filter(_ != proto),
+      updated, meta.configuration, "ALTER COLUMN",
+      Seq("column" -> column, "default" -> default))
   }
 
   /** ALTER COLUMN DROP DEFAULT: remove the column's `CURRENT_DEFAULT`.
@@ -1566,7 +1425,7 @@ object DeltaWrite {
   def dropColumnDefault(spark: SparkSession, path: String,
       column: String): Long = {
     val readVersion = DeltaRead.latestVersion(spark, path)
-    val (meta, _, proto) = DeltaRead.replayLogWithProtocol(spark, path, None)
+    val (meta, _) = DeltaRead.replayLog(spark, path, None)
     require(meta != null, s"$path has no metaData action in its _delta_log")
     val schema = DataType.fromJson(meta.schemaJson).asInstanceOf[StructType]
     val idx = schema.fieldNames.indexOf(column)
@@ -1578,9 +1437,9 @@ object DeltaWrite {
       .withMetadata(schema(idx).metadata).remove("CURRENT_DEFAULT").build()
     val updated = StructType(schema.fields.updated(idx,
       schema(idx).copy(metadata = newMeta)))
-    commitSchemaChange(spark, path, readVersion, meta, proto, updated,
-      protoExtraWriter = Nil, operation = "ALTER COLUMN",
-      opParams = s""""column":${jsonStr(column)},"dropDefault":"true"""")
+    commitSchemaChange(spark, path, readVersion, meta, None, updated,
+      meta.configuration, "ALTER COLUMN",
+      Seq("column" -> column, "dropDefault" -> "true"))
   }
 
   /** CONVERT TO DELTA — adopt an existing parquet directory IN PLACE:
@@ -1638,9 +1497,6 @@ object DeltaWrite {
       s"files disagree on the partition key sequence: ${keySeqs.mkString(" vs ")}")
     val partitionCols = keySeqs.head
     val now = System.currentTimeMillis()
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    def js(s: String): String = mapper.writeValueAsString(s)
-    val pcols = partitionCols.map(js).mkString("[", ",", "]")
     // Footer reads run EXECUTOR-side: at the op's own design point — adopting
     // a 100 TB table in place — the file list is O(10^6) and each footer is a
     // blocking round-trip; a driver loop serializes hours of I/O before the
@@ -1658,18 +1514,15 @@ object DeltaWrite {
         it.map(rel => rel -> footerStats(c, new Path(rootStr, rel)))
       }.collect().toMap
     }
-    val addLines = withParts.map { case (rel, pv, size) =>
-      val pvJson = pv.sortBy(_._1)
-        .map { case (k, v) => s"${js(k)}:${js(v)}" }.mkString("{", ",", "}")
-      val statsField = statsByRel(rel)
-        .map(s => s""","stats":${js(s)}""").getOrElse("")
-      s"""{"add":{"path":${js(encodeFilePath(rel))},"partitionValues":$pvJson,"size":$size,"modificationTime":$now,"dataChange":true$statsField}}"""
-    }
     val lines =
-      s"""{"commitInfo":{"timestamp":$now,"operation":"CONVERT","operationParameters":{"numFiles":"${files.size}"},"engineInfo":"graft"}}""" +:
-      """{"protocol":{"minReaderVersion":1,"minWriterVersion":2}}""" +:
-      s"""{"metaData":{"id":${js(UUID.randomUUID().toString)},"format":{"provider":"parquet","options":{}},"schemaString":${js(schema.json)},"partitionColumns":$pcols,"configuration":{},"createdTime":$now}}""" +:
-      addLines
+      DeltaActions.commitInfo(None, now, "CONVERT", Seq("numFiles" -> files.size.toString)) +:
+      DeltaActions.protocol(DeltaRead.Protocol(1, 2)) +:
+      DeltaActions.metaData(UUID.randomUUID().toString, schema.json, partitionCols,
+        Map.empty, now) +:
+      withParts.map { case (rel, pv, size) =>
+        DeltaActions.add(encodeFilePath(rel), pv.toMap, size, now, dataChange = true,
+          statsByRel(rel), None, None, None)
+      }
     publishCommit(fs, new Path(root, "_delta_log"), 0L, lines)
     0L
   }
@@ -1705,9 +1558,9 @@ object DeltaWrite {
         hasStruct(mt.keyType) || hasStruct(mt.valueType)
       case _ => false
     }
-    val (field, cfgOverride) = meta.mappingMode match {
+    val (field, config) = meta.mappingMode match {
       case "none" =>
-        (StructField(column, dataType, nullable = true), None)
+        (StructField(column, dataType, nullable = true), meta.configuration)
       case _ =>
         require(!hasStruct(dataType),
           s"ADD COLUMN $column: struct-bearing types on a mapped table " +
@@ -1720,14 +1573,12 @@ object DeltaWrite {
           .putString("delta.columnMapping.physicalName", s"col-${UUID.randomUUID()}")
           .build()
         (StructField(column, dataType, nullable = true, md),
-          Some(meta.configuration +
-            ("delta.columnMapping.maxColumnId" -> (maxId + 1).toString)))
+          meta.configuration +
+            ("delta.columnMapping.maxColumnId" -> (maxId + 1).toString))
     }
-    commitSchemaChange(spark, path, readVersion, meta, proto,
-      StructType(schema.fields :+ field), protoExtraWriter = Nil,
-      operation = "ADD COLUMN",
-      opParams = s""""column":${jsonStr(column)},"type":${jsonStr(dataType.simpleString)}""",
-      configOverride = cfgOverride)
+    commitSchemaChange(spark, path, readVersion, meta, None,
+      StructType(schema.fields :+ field), config, "ADD COLUMN",
+      Seq("column" -> column, "type" -> dataType.simpleString))
   }
 
   /** ALTER TABLE RENAME COLUMN — the verb column mapping exists for: on a
@@ -1764,9 +1615,8 @@ object DeltaWrite {
     checkNotReferenced(meta, schema, from, "RENAME COLUMN")
     val updated = StructType(schema.fields.updated(idx,
       schema(idx).copy(name = to)))
-    commitSchemaChange(spark, path, readVersion, meta, proto, updated,
-      protoExtraWriter = Nil, operation = "RENAME COLUMN",
-      opParams = s""""from":${jsonStr(from)},"to":${jsonStr(to)}""")
+    commitSchemaChange(spark, path, readVersion, meta, None, updated,
+      meta.configuration, "RENAME COLUMN", Seq("from" -> from, "to" -> to))
   }
 
   /** ALTER TABLE DROP COLUMN — metadata-only on a mapped table: the field
@@ -1796,9 +1646,8 @@ object DeltaWrite {
         "laid out by them)")
     checkNotReferenced(meta, schema, column, "DROP COLUMN")
     val updated = StructType(schema.fields.filterNot(_.name == column))
-    commitSchemaChange(spark, path, readVersion, meta, proto, updated,
-      protoExtraWriter = Nil, operation = "DROP COLUMN",
-      opParams = s""""column":${jsonStr(column)}""")
+    commitSchemaChange(spark, path, readVersion, meta, None, updated,
+      meta.configuration, "DROP COLUMN", Seq("column" -> column))
   }
 
   /** Refuse a rename/drop whose target is referenced BY NAME in stored
@@ -1826,50 +1675,41 @@ object DeltaWrite {
     }
   }
 
-  private def jsonStr(s: String): String =
-    new com.fasterxml.jackson.databind.ObjectMapper().writeValueAsString(s)
-
-  /** Shared commit shape for metadata-only schema edits (defaults here;
-    * [[widenColumnType]] predates it): one commit carrying an optional
-    * protocol MERGE (never an overwrite — dropping a foreign writer's
+  /** Shared commit shape for metadata-only schema edits: one commit
+    * carrying `protocol` when the edit upgrades it (always a MERGE into
+    * the replayed record, never an overwrite — dropping a foreign writer's
     * declared features would break its invariants) and the new schema
-    * under the unchanged configuration/partitioning.
+    * under the table's partitioning and `configuration`.
     */
   private def commitSchemaChange(spark: SparkSession, path: String,
-      readVersion: Long, meta: DeltaRead.Meta, proto: DeltaRead.Protocol,
-      updated: StructType, protoExtraWriter: Seq[String],
-      operation: String, opParams: String,
-      configOverride: Option[Map[String, String]] = None): Long = {
+      readVersion: Long, meta: DeltaRead.Meta, protocol: Option[DeltaRead.Protocol],
+      updated: StructType, configuration: Map[String, String],
+      operation: String, params: Seq[(String, Any)]): Long = {
     val now = System.currentTimeMillis()
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    def js(s: String): String = mapper.writeValueAsString(s)
-    val configJson = configOverride.getOrElse(meta.configuration)
-      .toSeq.sortBy(_._1)
-      .map { case (k, v) => s"${js(k)}:${js(v)}" }.mkString("{", ",", "}")
-    val pcols = meta.partitionCols.map(js).mkString("[", ",", "]")
-    // crossing to writer v7 must enumerate the legacy versions' implied
-    // features alongside the new ones (spec: a table-features protocol
-    // lists EVERYTHING it requires — the enableRowTracking convention)
+    val tail = protocol.map(DeltaActions.protocol).toSeq :+ DeltaActions.metaData(
+      carriedId(meta), updated.json, meta.partitionCols, configuration, now)
+    val committed = commitWithRetry(spark, path, readVersion,
+      ConflictGuard.exclusive(), _ =>
+      DeltaActions.commitInfo(inCommitTimestamp(spark, path, meta, now), now,
+        operation, params) +: tail)
+    maybeAutoCheckpoint(spark, path, committed, meta.configuration)
+    committed
+  }
+
+  /** `proto` upgraded to writer version 7 declaring `extra`. Crossing to
+    * writer v7 must enumerate the legacy versions' implied features
+    * alongside the new ones (spec: a table-features protocol lists
+    * EVERYTHING it requires); a v7 protocol keeps its own list.
+    */
+  private def withWriterFeatures(proto: DeltaRead.Protocol,
+      extra: Seq[String]): DeltaRead.Protocol = {
     val implied = Seq(
       2 -> Seq("appendOnly", "invariants"), 3 -> Seq("checkConstraints"),
       4 -> Seq("changeDataFeed", "generatedColumns"), 5 -> Seq("columnMapping"),
       6 -> Seq("identityColumns"))
       .filter(_._1 <= proto.minWriter).flatMap(_._2)
-    val baseFeatures =
-      if (proto.minWriter >= 7) proto.writerFeatures else implied
-    val newProto =
-      if (protoExtraWriter.isEmpty ||
-          (proto.minWriter >= 7 && protoExtraWriter.forall(proto.writerFeatures.contains)))
-        proto
-      else proto.copy(minWriter = 7,
-        writerFeatures = (baseFeatures ++ protoExtraWriter).distinct)
-    val tail = (if (newProto != proto) Seq(protocolJson(newProto)) else Nil) :+
-      s"""{"metaData":{"id":${js(carriedId(meta))},"format":{"provider":"parquet","options":{}},"schemaString":${js(updated.json)},"partitionColumns":$pcols,"configuration":$configJson,"createdTime":$now}}"""
-    val committed = commitWithRetry(spark, path, readVersion,
-      ConflictGuard.exclusive(), _ =>
-      s"""{"commitInfo":{${ictField(spark, path, meta, now)}"timestamp":$now,"operation":${js(operation)},"operationParameters":{$opParams},"engineInfo":"graft"}}""" +: tail)
-    maybeAutoCheckpoint(spark, path, committed, meta.configuration)
-    committed
+    val base = if (proto.minWriter >= 7) proto.writerFeatures else implied
+    proto.copy(minWriter = 7, writerFeatures = (base ++ extra).distinct)
   }
 
   /** Stage change-data files under `_change_data/` (the CDF layout: an
@@ -1974,14 +1814,10 @@ object DeltaWrite {
     require(zCols.distinct.size == zCols.size, s"duplicate z-order column in $zCols")
     val readVersion = DeltaRead.latestVersion(spark, path)
     val snap = DeltaRead.replayFull(spark, path, None)
-    val (meta, live, proto) = (snap.meta, snap.files, snap.protocol)
+    val meta = snap.meta
     require(meta != null, s"$path has no metaData action")
-    checkWritable(meta, proto, s"compactZOrder of $path", removesData = false,
+    checkWritable(meta, snap.protocol, s"compactZOrder of $path", removesData = false,
       identityOk = true)
-    // reclustering rewrites every row — materialize stable ids, like compact
-    val rt = rowTrackingOf(meta)
-    val matFields = rowTrackingFields(rt)
-    val tracked = rt.isDefined || proto.writerFeatures.contains("rowTracking")
     val schema = DataType.fromJson(meta.schemaJson).asInstanceOf[StructType]
     zCols.foreach { c =>
       require(!meta.partitionCols.contains(c),
@@ -1995,17 +1831,14 @@ object DeltaWrite {
     val l2p = schema.fieldNames.zip(phys.fieldNames).toMap
     val pCols = zCols.map(l2p)
 
-    val logicalData = StructType(
-      schema.fields.filterNot(f => meta.partitionCols.contains(f.name)))
-    val groups = live.groupBy(_.partitionValues)
+    // unlike bin-packing, ALL of a partition's files rewrite (reclustering
+    // is the point)
+    val groups = snap.files.groupBy(_.partitionValues)
       .filter { case (_, files) =>
         files.size >= 2 || files.map(_.size).sum > targetBytes ||
           files.exists(_.dv.isDefined) }
     if (groups.isEmpty) return -1L
 
-    val conf = spark.sparkContext.hadoopConfiguration
-    val root = new Path(path)
-    val fs = root.getFileSystem(conf)
     // ONE global quantile pass over everything being reclustered — per-
     // partition bounds would make the same value land in different bins
     // across partitions for no skipping benefit
@@ -2017,21 +1850,63 @@ object DeltaWrite {
         .select(pCols.zip(qNames).map { case (pc, n) =>
           col(s"`$pc`").as(n) }: _*),
       qNames, bins)
+    val binNames = pCols.indices.map(i => s"__b$i")
+    rewriteGroups(spark, path, readVersion, snap, groups, targetBytes,
+      Seq("zOrderBy" -> zCols.mkString(","), "targetBytes" -> targetBytes)) { (rows, nOut) =>
+      val binned = pCols.zip(allBounds).zip(binNames).foldLeft(rows) {
+        case (cur, ((pc, b), name)) =>
+          cur.withColumn(name, ZOrder.binScaled(col(s"`$pc`"), b, bins))
+      }
+      binned
+        .withColumn("__z", ZOrder.interleaveBitsN(binNames.map(col),
+          ZOrder.bitsFor(bins)))
+        .repartitionByRange(nOut, col("__z"))
+        .sortWithinPartitions(col("__z"))
+        .drop(binNames :+ "__z": _*)
+    }
+  }
 
-    val version = readVersion + 1
+  /** The OPTIMIZE rewrite shared by bin-packing ([[compact]]) and
+    * z-ordering ([[compactZOrderN]]), which differ only in `arrange` — how
+    * a partition group's rows lay out over its `nOut` ≈ bytes/targetBytes
+    * output files. Per group: plain files read raw under the physical
+    * layout; files carrying a deletion vector read through the log-backed
+    * DV-filtering scan (logical columns, renamed back to the physical
+    * layout), so the rewrite materializes their deletes away and the new
+    * file drops the descriptor; on a row-tracked table every carried row's
+    * stable id and original commit version MATERIALIZE into the
+    * configured physical columns — a rewrite never moves a row's
+    * identity. The swap commits as remove+add with `dataChange=false`
+    * under the disjoint-rewrite guard.
+    */
+  private def rewriteGroups(spark: SparkSession, path: String, readVersion: Long,
+      snap: DeltaRead.Snapshot, groups: Map[Map[String, String], Seq[DeltaRead.LiveFile]],
+      targetBytes: Long, params: Seq[(String, Any)])(
+      arrange: (DataFrame, Int) => DataFrame): Long = {
+    import org.apache.spark.sql.functions.col
+    val meta = snap.meta
+    val rt = rowTrackingOf(meta)
+    val matFields = rowTrackingFields(rt)
+    val tracked = rt.isDefined || snap.protocol.writerFeatures.contains("rowTracking")
+    // the rewrite is a raw byte shuffle: on a name-mapped table the files
+    // store PHYSICAL column names, so the read schema must be physical too
+    // (a logical-name read would silently null every column)
+    val dataSchema = compactReadSchema(meta)
+    val schema = DataType.fromJson(meta.schemaJson).asInstanceOf[StructType]
+    val logicalData = StructType(
+      schema.fields.filterNot(f => meta.partitionCols.contains(f.name)))
+    val conf = spark.sparkContext.hadoopConfiguration
+    val root = new Path(path)
+    val fs = root.getFileSystem(conf)
     val now = System.currentTimeMillis()
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    def js(s: String): String = mapper.writeValueAsString(s)
-    val lines = scala.collection.mutable.ArrayBuffer[String]()
-    def commitInfoLine(): String =
-      s"""{"commitInfo":{${ictField(spark, path, meta, now)}"timestamp":$now,"operation":"OPTIMIZE","operationParameters":{"zOrderBy":${js(zCols.mkString(","))},"targetBytes":$targetBytes},"engineInfo":"graft"}}"""
 
-    val pendingAdds = scala.collection.mutable.ArrayBuffer[(Long, String => String)]()
-    groups.foreach { case (pv, files) =>
+    val staged = groups.toSeq.flatMap { case (pv, files) =>
+      // dir layout from the pv's OWN keys (physical on mapped tables);
+      // cosmetic either way — add.partitionValues is what readers use
       val dirSegs = pv.toSeq.sortBy(_._1).map { case (k, v) => s"$k=$v" }
       val nOut = math.max(1,
         math.ceil(files.map(_.size).sum.toDouble / targetBytes).toInt)
-      val staging = new Path(root, s".optz-staging-${UUID.randomUUID()}")
+      val staging = new Path(root, s".opt-staging-${UUID.randomUUID()}")
       val (dvFiles, plainFiles) = files.partition(_.dv.isDefined)
       val plainDf =
         if (plainFiles.isEmpty) None
@@ -2042,8 +1917,6 @@ object DeltaWrite {
             raw.withColumn("__file", col("_metadata.file_path"))
               .withColumn("__row_idx", col("_metadata.row_index")))))
         }
-      // DV-bearing files recluster through the DV-filtering scan — the
-      // rewrite materializes their deletes away and drops the descriptor
       val dvDf =
         if (dvFiles.isEmpty) None
         else {
@@ -2056,56 +1929,32 @@ object DeltaWrite {
           Some(rt.fold(shaped)(r =>
             materializeRowIds(spark, path, r, dvFiles, shaped)))
         }
-      val binNames = pCols.indices.map(i => s"__b$i")
-      val unioned = (plainDf.toSeq ++ dvDf).reduce(_ unionByName _)
-      val binned = pCols.zip(allBounds).zip(binNames).foldLeft(unioned) {
-        case (cur, ((pc, b), name)) =>
-          cur.withColumn(name, ZOrder.binScaled(col(s"`$pc`"), b, bins))
-      }
-      val clustered = binned
-        .withColumn("__z", ZOrder.interleaveBitsN(binNames.map(col),
-          ZOrder.bitsFor(bins)))
-        .repartitionByRange(nOut, col("__z"))
-        .sortWithinPartitions(col("__z"))
-        .drop(binNames :+ "__z": _*)
-      stagedWriter(clustered).save(staging.toString)
-      listParquet(fs, staging).foreach { p =>
+      stagedWriter(arrange((plainDf.toSeq ++ dvDf).reduce(_ unionByName _), nOut))
+        .save(staging.toString)
+      val out = listParquet(fs, staging).map { p =>
         val fresh = (dirSegs :+ s"part-${UUID.randomUUID()}.snappy.parquet").mkString("/")
         val dest = new Path(root, fresh)
         fs.mkdirs(dest.getParent)
         require(fs.rename(p, dest), s"failed to move $p to $dest")
-        val size = fs.getFileStatus(dest).getLen
-        val pvJson = pv.toSeq.sortBy(_._1)
-          .map { case (k, v) => s"${js(k)}:${js(v)}" }.mkString("{", ",", "}")
-        val stats = footerStats(conf, dest)
-        val statsField = stats.map(s => s""","stats":${js(s)}""").getOrElse("")
-        val n = if (tracked) numRecordsOf(stats, s"$path zorder $fresh") else 0L
-        pendingAdds += ((n, (rid: String) =>
-          s"""{"add":{"path":${js(encodeFilePath(fresh))},"partitionValues":$pvJson,"size":$size,"modificationTime":$now,"dataChange":false$statsField$rid}}"""))
+        StagedFile(encodeFilePath(fresh), pv, fs.getFileStatus(dest).getLen,
+          footerStats(conf, dest))
       }
       fs.delete(staging, true)
-      files.foreach { f =>
-        lines += s"""{"remove":{"path":${js(f.path)},"deletionTimestamp":$now,"dataChange":false}}"""
-      }
+      out
     }
+    val rewritten = groups.values.flatten.toSeq
+    val removes = rewritten.map(f => DeltaActions.remove(f.path, now, dataChange = false, None))
     val addLines = renderAdds(spark, path, tracked,
       DeltaRead.rowIdHighWaterMark(snap.domains), readVersion + 1,
-      pendingAdds.toSeq) _
+      staged, now, dataChange = false) _
     val committed = commitWithRetry(spark, path, readVersion,
-      ConflictGuard.disjointRewrite(groups.values.flatten.map(_.path).toSet),
-      attempt => commitInfoLine() +: (addLines(attempt) ++ lines.toSeq))
-    maybeAutoCheckpoint(spark, path, committed, snap.meta.configuration)
+      ConflictGuard.disjointRewrite(rewritten.map(_.path).toSet), attempt =>
+      DeltaActions.commitInfo(inCommitTimestamp(spark, path, meta, now), now,
+        "OPTIMIZE", params) +: (addLines(attempt) ++ removes))
+    maybeAutoCheckpoint(spark, path, committed, meta.configuration)
     committed
   }
 
-  /** Mint column-mapping metadata for a fresh name-mapped table: every
-    * StructField at every nesting depth (including through arrays and
-    * maps) gains a sequential `delta.columnMapping.id` and a
-    * `col-<uuid>` `delta.columnMapping.physicalName` — assigned exactly
-    * once for the table's lifetime, which is what makes later logical
-    * renames metadata-only. Returns the metadata-bearing logical schema
-    * and the max assigned id (for `delta.columnMapping.maxColumnId`).
-    */
   /** Rename a logical-name batch to a mapped table's physical layout for
     * staging. Mode `name` stages under the physical names; mode `id`
     * ADDITIONALLY carries `parquet.field.id` metadata on every field (via
@@ -2123,6 +1972,14 @@ object DeltaWrite {
     df.select(DeltaRead.physicalSelect(ms, phys): _*)
   }
 
+  /** Mint column-mapping metadata for a fresh name-mapped table: every
+    * StructField at every nesting depth (including through arrays and
+    * maps) gains a sequential `delta.columnMapping.id` and a
+    * `col-<uuid>` `delta.columnMapping.physicalName` — assigned exactly
+    * once for the table's lifetime, which is what makes later logical
+    * renames metadata-only. Returns the metadata-bearing logical schema
+    * and the max assigned id (for `delta.columnMapping.maxColumnId`).
+    */
   private def mintMappingMetadata(schema: StructType): (StructType, Int) = {
     import org.apache.spark.sql.types.{ArrayType, MapType, MetadataBuilder, StructField}
     var id = 0
@@ -2605,36 +2462,20 @@ object DeltaWrite {
     */
   def compact(spark: SparkSession, path: String,
       targetBytes: Long = 128L * 1024 * 1024, minFiles: Int = 2): Long = {
-    import org.apache.spark.sql.functions.col
     require(targetBytes > 0 && minFiles >= 2,
       s"need targetBytes > 0 and minFiles >= 2, got $targetBytes/$minFiles")
     val readVersion = DeltaRead.latestVersion(spark, path)
     val snap = DeltaRead.replayFull(spark, path, None)
-    val (meta, live, proto) = (snap.meta, snap.files, snap.protocol)
-    require(meta != null, s"$path has no metaData action")
+    require(snap.meta != null, s"$path has no metaData action")
     // dataChange=false: allowed even on delta.appendOnly tables (the spec's
     // carve-out for maintenance rewrites)
-    checkWritable(meta, proto, s"compact of $path", removesData = false,
+    checkWritable(snap.meta, snap.protocol, s"compact of $path", removesData = false,
       identityOk = true)
-    // row-tracked tables: the rewrite MATERIALIZES each carried row's
-    // stable id and original commit version into the configured physical
-    // columns — compaction must never move a row's identity
-    val rt = rowTrackingOf(meta)
-    val matFields = rowTrackingFields(rt)
-    val tracked = rt.isDefined || proto.writerFeatures.contains("rowTracking")
-    // the rewrite is a raw byte shuffle: on a name-mapped table the files
-    // store PHYSICAL column names, so the read schema must be physical too
-    // (a logical-name read would silently null every column)
-    val dataSchema = compactReadSchema(meta)
-    val schema = DataType.fromJson(meta.schemaJson).asInstanceOf[StructType]
-    val logicalData = StructType(
-      schema.fields.filterNot(f => meta.partitionCols.contains(f.name)))
-    // Files carrying a deletion vector ALWAYS rewrite (any size): their
-    // rows read through the DV-filtering scan, so the rewrite materializes
-    // the deletes away and the new file drops the descriptor — the seam
-    // that lets checkpoint/clone/streaming compose with externally-written
-    // DVs. DV-free files bin-pack by the size rule as before.
-    val groups = live.groupBy(_.partitionValues)
+    // Files carrying a deletion vector ALWAYS rewrite (any size): the
+    // rewrite materializes the deletes away — the seam that lets
+    // checkpoint/clone/streaming compose with externally-written DVs.
+    // DV-free files bin-pack by the size rule.
+    val groups = snap.files.groupBy(_.partitionValues)
       .map { case (pv, files) =>
         val smalls = files.filter(f => f.size < targetBytes && f.dv.isEmpty)
         val dvs = files.filter(_.dv.isDefined)
@@ -2642,80 +2483,8 @@ object DeltaWrite {
       }
       .filter(_._2.nonEmpty)
     if (groups.isEmpty) return -1L
-
-    val conf = spark.sparkContext.hadoopConfiguration
-    val root = new Path(path)
-    val fs = root.getFileSystem(conf)
-    val version = readVersion + 1
-    val now = System.currentTimeMillis()
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    def js(s: String): String = mapper.writeValueAsString(s)
-    val lines = scala.collection.mutable.ArrayBuffer[String]()
-    def commitInfoLine(): String =
-      s"""{"commitInfo":{${ictField(spark, path, meta, now)}"timestamp":$now,"operation":"OPTIMIZE","operationParameters":{"targetBytes":$targetBytes},"engineInfo":"graft"}}"""
-
-    val pendingAdds = scala.collection.mutable.ArrayBuffer[(Long, String => String)]()
-    groups.foreach { case (pv, smalls) =>
-      // dir layout from the pv's OWN keys (physical on mapped tables);
-      // cosmetic either way — add.partitionValues is what readers use
-      val dirSegs = pv.toSeq.sortBy(_._1).map { case (k, v) => s"$k=$v" }
-      val nOut = math.max(1,
-        math.ceil(smalls.map(_.size).sum.toDouble / targetBytes).toInt)
-      val staging = new Path(root, s".opt-staging-${UUID.randomUUID()}")
-      val (dvFiles, plainFiles) = smalls.partition(_.dv.isDefined)
-      val plainDf =
-        if (plainFiles.isEmpty) None
-        else {
-          val raw = rawReader(spark, StructType(dataSchema.fields ++ matFields))
-            .parquet(plainFiles.map(f => DeltaRead.resolveFilePath(path, f.path)): _*)
-          Some(rt.fold(raw)(r => materializeRowIds(spark, path, r, plainFiles,
-            raw.withColumn("__file", col("_metadata.file_path"))
-              .withColumn("__row_idx", col("_metadata.row_index")))))
-        }
-      // DV-bearing files go through the log-backed DV-filtering scan
-      // (logical columns), then rename back to the physical layout the
-      // staged files must store
-      val dvDf =
-        if (dvFiles.isEmpty) None
-        else {
-          val scanned = DeltaRead.filesDf(spark, path, meta, dvFiles,
-            provenance = false, rowIndex = rt.isDefined, extraPhysCols = matFields)
-          val shaped = scanned.select(
-            DeltaRead.physicalSelect(logicalData, dataSchema) ++
-              matFields.map(f => col(s"`${f.name}`")) ++
-              (if (rt.isDefined) Seq(col("__file"), col("__row_idx")) else Nil): _*)
-          Some(rt.fold(shaped)(r =>
-            materializeRowIds(spark, path, r, dvFiles, shaped)))
-        }
-      val packed = (plainDf.toSeq ++ dvDf).reduce(_ unionByName _).coalesce(nOut)
-      stagedWriter(packed).save(staging.toString)
-      listParquet(fs, staging).foreach { p =>
-        val fresh = (dirSegs :+ s"part-${UUID.randomUUID()}.snappy.parquet").mkString("/")
-        val dest = new Path(root, fresh)
-        fs.mkdirs(dest.getParent)
-        require(fs.rename(p, dest), s"failed to move $p to $dest")
-        val size = fs.getFileStatus(dest).getLen
-        val pvJson = pv.toSeq.sortBy(_._1)
-          .map { case (k, v) => s"${js(k)}:${js(v)}" }.mkString("{", ",", "}")
-        val stats = footerStats(conf, dest)
-        val statsField = stats.map(s => s""","stats":${js(s)}""").getOrElse("")
-        val n = if (tracked) numRecordsOf(stats, s"$path compact $fresh") else 0L
-        pendingAdds += ((n, (rid: String) =>
-          s"""{"add":{"path":${js(encodeFilePath(fresh))},"partitionValues":$pvJson,"size":$size,"modificationTime":$now,"dataChange":false$statsField$rid}}"""))
-      }
-      fs.delete(staging, true)
-      smalls.foreach { f =>
-        lines += s"""{"remove":{"path":${js(f.path)},"deletionTimestamp":$now,"dataChange":false}}"""
-      }
-    }
-    val addLines = renderAdds(spark, path, tracked,
-      DeltaRead.rowIdHighWaterMark(snap.domains), readVersion + 1,
-      pendingAdds.toSeq) _
-    val committed = commitWithRetry(spark, path, readVersion,
-      ConflictGuard.disjointRewrite(groups.values.flatten.map(_.path).toSet),
-      attempt => commitInfoLine() +: (addLines(attempt) ++ lines.toSeq))
-    maybeAutoCheckpoint(spark, path, committed, snap.meta.configuration)
-    committed
+    rewriteGroups(spark, path, readVersion, snap, groups, targetBytes,
+      Seq("targetBytes" -> targetBytes))(_ coalesce _)
   }
 
   /** Metadata cleanup (Delta's log retention): delete commit JSONs — and
@@ -2836,13 +2605,12 @@ object DeltaWrite {
 
   /** Distributed write of `df` into a dot-prefixed staging dir inside the
     * table, then per-file rename to a fresh unique name under the table
-    * root (hive layout when `partitionBy` is set). Returns one add tuple
-    * per published file: (table-relative path, partitionValues, size,
-    * footer stats). Shared by WRITE and MERGE/DELETE commits — readers
-    * never see a file before the commit that adds it.
+    * root (hive layout when `partitionBy` is set). Returns one
+    * [[StagedFile]] per published file. Shared by WRITE and MERGE/DELETE
+    * commits — readers never see a file before the commit that adds it.
     */
   private[io] def stageDataFiles(df: DataFrame, root: Path,
-      partitionBy: Seq[String]): Seq[(String, Map[String, String], Long, Option[String])] = {
+      partitionBy: Seq[String]): Seq[StagedFile] = {
     val conf = df.sparkSession.sparkContext.hadoopConfiguration
     val fs = root.getFileSystem(conf)
     val staging = new Path(root, s".staging-${UUID.randomUUID()}")
@@ -2868,9 +2636,8 @@ object DeltaWrite {
       val dest = new Path(root, fresh)
       fs.mkdirs(dest.getParent)
       require(fs.rename(p, dest), s"failed to move $p to $dest")
-      val size = fs.getFileStatus(dest).getLen
-      val stats = footerStats(conf, dest)
-      (encodeFilePath(fresh), pv, size, stats)
+      StagedFile(encodeFilePath(fresh), pv, fs.getFileStatus(dest).getLen,
+        footerStats(conf, dest))
     }
     fs.delete(staging, true)
     adds

@@ -197,6 +197,11 @@ class ExtSpec extends SparkSpec {
     val gotDist = Dedup.dupClusters(pairs, "id_a", "id_b", driverThreshold = -1L)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(gotDist == want)
+    // certified-bound fast path (one collect, no edge checkpoint): identical
+    val gotBound = Dedup.dupClusters(pairs, "id_a", "id_b",
+      pairBound = Some(pairs.count()))
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(gotBound == want)
   }
 
   test("keepBest: one representative per cluster (best score, id tie-break); singletons survive") {
