@@ -1,8 +1,11 @@
 #!/bin/bash
 # Fast runner: java directly against compiled classes + the Spark jars,
 # skipping sbt JVM startup. Usage: scripts/run.sh <mainClass> [args...]
+# Runs the classes of the checkout this script lives in, so a second
+# checkout (an A/B against another commit) drives its own build.
 set -e
-CP="/root/repo/target/scala-2.13/classes"
+ROOT="$(cd "$(dirname "$0")/.." && pwd)"
+CP="$ROOT/target/scala-2.13/classes"
 for j in /opt/spark/jars/*.jar; do CP="$CP:$j"; done
 OPENS=""
 for p in java.base/java.lang java.base/java.lang.invoke java.base/java.lang.reflect \

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Scratch per-query timing harness for local iteration: `BenchOne <sfDir>
   * <query...>` prints three timed passes per named query (same session
   * config as Bench).
@@ -9,15 +7,7 @@ import org.apache.spark.sql.SparkSession
 object BenchOne {
   def main(args: Array[String]): Unit = {
     val dir = args(0)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(Harness.cpus)
     args.drop(1).foreach { n =>
       val q = Bench.fastVariants.getOrElse(n, SparkEntry.queries(n))
       for (i <- 1 to 3) {

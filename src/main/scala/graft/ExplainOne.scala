@@ -1,19 +1,10 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Scratch: print the formatted physical plan of named queries. */
 object ExplainOne {
   def main(args: Array[String]): Unit = {
     val dir = args(0)
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Harness.session(Harness.cpus)
     args.drop(1).foreach { n =>
       println(s"===== $n")
       val q = Bench.fastVariants.getOrElse(n, SparkEntry.queries(n))

@@ -334,7 +334,7 @@ object QRound4 {
     * derives FROM the tf frame, and at runtime AQE's ReusedExchange computes
     * the explode+partial-agg shuffle ONCE for both consumers (static explain
     * shows the subtree twice; the executed plan has reused_exchange=1 and
-    * one fewer scan — tools/ProfileReuse q58_tfidf). The corpus size joins
+    * one fewer scan — OPTIMIZATION_r14.md, q58_tfidf). The corpus size joins
     * as a broadcast scalar; the per-doc cut runs through the TopKPerKey heap
     * operator (<= 3 rows per key shuffle, no full sort). Deterministic ties
     * via (score DESC, token); output ordered by (doc_id, token) so the
@@ -359,7 +359,7 @@ object QRound4 {
       .select(col("doc_id"), col("e.token").as("token"), col("e.tf").as("tf"))
     // NOTE (r14 opt): dfreq and the scored join both consume tf and AQE's
     // ReusedExchange does NOT fire (column pruning canonicalizes the two
-    // exchanges differently — ProfileReuse: scans=3, reused_exchange=0),
+    // exchanges differently — scans=3, reused_exchange=0, OPTIMIZATION_r14.md),
     // so tf re-derives per consumer. A localCheckpoint here was A/B'd and
     // LOST at bench scale (the materialization job's floor exceeds the
     // re-derived explode); at real scale, materialize tf to parquet.

@@ -1,8 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
-import graft.{Queries, SparkEntry}
+import graft.{Harness, SparkEntry}
 
 /** Plan audit (dev tool): for each query, print the physical-plan features
   * that matter at 100 TB — scan pushdown/pruning, join strategies, exchange
@@ -12,13 +10,7 @@ object PlanAudit {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
     val only = args.headOption
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Harness.session(Harness.cpus)
 
     SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => only.forall(n.contains) }

@@ -1,9 +1,9 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Harness, Tables}
 
 /** Decompose the fixed per-query floor that dominates the local bench
   * (BENCH_r*.json): the cheapest oracle queries cost ~0.13–0.35s at
@@ -34,15 +34,7 @@ import graft.Tables
 object ProfileFloor {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(Harness.cpus)
 
     def noop(df: DataFrame): Unit =
       df.write.format("noop").mode("overwrite").save()

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /** A/B the IVF assignment forms at production-ish cell counts: the
@@ -13,11 +13,7 @@ object ProfileIvf {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val cellCounts =
       if (args.length > 1) args.drop(1).map(_.toInt).toSeq else Seq(64, 256, 1024)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Harness.session(graft.Harness.cpus)
     import graft.ext.Similarity
 
     def composed(vec: Column, cents: Seq[Seq[Double]]): Column = {

@@ -1,9 +1,9 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Harness, Tables}
 import graft.ext.{PQ, Similarity}
 
 /** ANN quality harness — "measure, don't guess" for the recall/latency
@@ -75,12 +75,7 @@ object RecallEval {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val k = args.lift(1).map(_.toInt).getOrElse(5)
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Harness.session(Harness.cpus)
     val emb = Tables.embeddings(spark, sfDir)
     evaluate(emb, k, dim = 64).foreach { case (m, r) =>
       println(f"""{"method":"$m","recall_at_$k":$r%.4f}""")

@@ -1,13 +1,8 @@
 package graft.tools
-import org.apache.spark.sql.SparkSession
 object RecallProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
-    val spark = SparkSession.builder().master("local[16]")
-      .config("spark.sql.shuffle.partitions", 16)
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Harness.session(graft.Harness.cpus)
     val emb = graft.Tables.embeddings(spark, sfDir)
     val k = 3
     val truth = RecallEval.bruteForce(emb, k)

@@ -45,11 +45,7 @@ object ScaleData {
     val src = args(0)
     val out = args(1)
     val factor = if (args.length > 2) args(2).toInt else 10
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Harness.session(graft.Harness.cpus)
     write(spark, src, out, factor)
     spark.stop()
   }

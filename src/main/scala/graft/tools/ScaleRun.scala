@@ -3,10 +3,9 @@ package graft.tools
 import java.util.concurrent.atomic.AtomicLong
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Bench, Harness, Tables}
 
 /** The 10× scale self-test: run the scale-critical operator fleet at the
   * driver's sf0.1 and at a [[ScaleData]]-derived ~sf1, and report each
@@ -55,19 +54,9 @@ object ScaleRun {
     val big = args(1)
     val factor = if (args.length > 2) args(2).toInt else 10
     val only: Set[String] = args.drop(3).toSet
-    val spark = SparkSession.builder().master(
-        s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(Harness.cpus)
     val meter = new Meter
     spark.sparkContext.addSparkListener(meter)
-
-    val tmp = java.nio.file.Files.createTempDirectory("graft_scale").toString
 
     def timed(name: String, runs: Int = 3)(act: () => Long): Obs = {
       if (only.nonEmpty && !only.exists(name.startsWith)) return Obs(name, -1, -1, -1, -1)
@@ -132,8 +121,7 @@ object ScaleRun {
       // mass stays constant; build once per (dir, run)
       var annPath: String = null
       out += timed("b50_ann_build")(() => {
-        annPath = java.nio.file.Files.createTempDirectory(
-          java.nio.file.Paths.get(tmp), "ann").toString
+        annPath = Harness.tmp("ann")
         AnnIndex.build(emb, "vec_id", "embedding", annPath,
           nCells = nCells, extraCols = Seq("label"))
         emb.count()
@@ -141,8 +129,7 @@ object ScaleRun {
       val wantsAnn = only.isEmpty || only.exists(o =>
         "b50_ann_query".startsWith(o) || "b53_hard_negatives".startsWith(o))
       if (annPath == null && wantsAnn) {
-        annPath = java.nio.file.Files.createTempDirectory(
-          java.nio.file.Paths.get(tmp), "ann").toString
+        annPath = Harness.tmp("ann")
         AnnIndex.build(emb, "vec_id", "embedding", annPath,
           nCells = nCells, extraCols = Seq("label"))
       }
@@ -169,8 +156,7 @@ object ScaleRun {
       // identity-column table creation: the gap-free assignment is one
       // localCheckpoint + count + zipWithIndex map — must be linear
       out += timed("b66_identity_create")(() => {
-        val p = java.nio.file.Files.createTempDirectory(
-          java.nio.file.Paths.get(tmp), "ident").toString + "/t"
+        val p = Harness.tmp("ident") + "/t"
         graft.io.DeltaWrite.writeDeltaTableIdentity(
           Tables.orders(spark, dir).select(col("o_orderstatus"),
             round(col("o_totalprice") * 100, 0).cast("long").as("cents")),
@@ -187,8 +173,7 @@ object ScaleRun {
       var maintPath: String = null
       var maintEpoch = 0L
       if (wantsMaintain) {
-        maintPath = java.nio.file.Files.createTempDirectory(
-          java.nio.file.Paths.get(tmp), "annm").toString
+        maintPath = Harness.tmp("annm")
         AnnIndex.build(emb, "vec_id", "embedding", maintPath, nCells = nCells)
       }
       out += timed("b67_ann_maintain_epoch")(() => {
@@ -204,18 +189,13 @@ object ScaleRun {
       })
 
       // standing DV-merge table: built untimed, merges are the timed verb
-      val dml = java.nio.file.Files.createTempDirectory(
-        java.nio.file.Paths.get(tmp), "dv").toString + "/orders_delta"
+      val dml = Harness.tmp("dv") + "/orders_delta"
       if (only.isEmpty || only.exists("b57_merge_upsert_dv".startsWith))
         graft.io.DeltaWrite.writeDeltaTable(
-          Tables.orders(spark, dir).select(col("o_orderkey"), col("o_orderstatus"),
-            round(col("o_totalprice") * 100, 0).cast("long").as("cents")),
-          dml, "append")
+          Bench.ordersCents(spark, dir), dml, "append")
       out += timed("b57_merge_upsert_dv")(() => {
-        val src = Tables.orders(spark, dir)
-          .filter(col("o_orderkey") % 100 === 0)
-          .select(col("o_orderkey"), col("o_orderstatus"),
-            (round(col("o_totalprice") * 100, 0).cast("long") + 1).as("cents"))
+        val src = Bench.ordersCents(spark, dir).filter(col("o_orderkey") % 100 === 0)
+          .withColumn("cents", col("cents") + 1)
         graft.io.DeltaMerge.merge(spark, dml, src, Seq("o_orderkey"),
           useDeletionVectors = true)
         graft.io.DeltaRead.readDeltaTable(spark, dml).count()
@@ -228,8 +208,7 @@ object ScaleRun {
       // touched keys — never corpus²)
       val wantsCdc = only.isEmpty || only.exists(o =>
         "b60_change_diff".startsWith(o) || "b60_view_epoch".startsWith(o))
-      val cdcDir = java.nio.file.Files.createTempDirectory(
-        java.nio.file.Paths.get(tmp), "cdc").toString + "/orders_cdc"
+      val cdcDir = Harness.tmp("cdc") + "/orders_cdc"
       if (wantsCdc) {
         graft.io.DeltaWrite.writeDeltaTable(
           Tables.orders(spark, dir).select(col("o_orderkey"),
@@ -250,8 +229,7 @@ object ScaleRun {
       out += timed("b60_change_diff")(() =>
         graft.io.DeltaRead.changeDiff(spark, cdcDir, 0L).count())
       out += timed("b60_view_epoch")(() => {
-        val v = java.nio.file.Files.createTempDirectory(
-          java.nio.file.Paths.get(tmp), "cview").toString + "/view"
+        val v = Harness.tmp("cview") + "/view"
         val viewSchema = org.apache.spark.sql.types.StructType(Seq(
           org.apache.spark.sql.types.StructField("grp",
             org.apache.spark.sql.types.StringType),
@@ -282,8 +260,7 @@ object ScaleRun {
       var cdcAnnPath: String = null
       var cdcAnnEpoch = 0L
       if (wantsCdcAnn) {
-        cdcAnnPath = java.nio.file.Files.createTempDirectory(
-          java.nio.file.Paths.get(tmp), "anncdc").toString
+        cdcAnnPath = Harness.tmp("anncdc")
         graft.ext.AnnIndex.build(emb, "vec_id", "embedding", cdcAnnPath,
           nCells = nCells)
       }
@@ -308,8 +285,7 @@ object ScaleRun {
       val wantsConvert = only.isEmpty || only.exists("b69_convert_footers".startsWith)
       var convDir: String = null
       if (wantsConvert) {
-        convDir = java.nio.file.Files.createTempDirectory(
-          java.nio.file.Paths.get(tmp), "conv").toString + "/t"
+        convDir = Harness.tmp("conv") + "/t"
         spark.range(nFiles.toLong * 20)
           .select(col("id"), (col("id") % 7).cast("string").as("s"))
           .repartition(nFiles).write.parquet(convDir)

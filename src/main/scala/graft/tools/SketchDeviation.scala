@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Measures the q32 MinHash-sketch estimate's deviation from the exact
@@ -10,15 +9,7 @@ import org.apache.spark.sql.functions._
 object SketchDeviation {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Harness.session(graft.Harness.cpus)
     import graft.functions.MinHashSketch
     val k = args.lift(1).map(_.toInt).getOrElse(32)
     val docs = graft.Tables.documents(spark, sfDir)
