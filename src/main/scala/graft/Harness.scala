@@ -29,9 +29,10 @@ object Harness {
     spark
   }
 
-  /** One process-wide scratch root, deleted on JVM exit — mains that need
-    * disk (bench fixtures, ScaleRun's indexes and tables) carve subdirs here
-    * instead of leaking a fresh createTempDirectory per iteration/run.
+  /** One process-wide scratch root, deleted on JVM exit — mains and
+    * queries that need disk (bench fixtures, ScaleRun's indexes and tables,
+    * the in-query Delta tables of q94/q106+) carve subdirs here instead of
+    * leaking a fresh createTempDirectory per iteration/run.
     */
   private lazy val tmpRoot: Path = {
     val root = Files.createTempDirectory("graft_tmp")

@@ -625,9 +625,7 @@ object QPipelineExt {
     * end-to-end (the q69/q73 convention).
     */
   def q94DeltaRoundtrip(s: SparkSession, d: String): DataFrame = {
-    val path = new java.io.File(
-      java.nio.file.Files.createTempDirectory("graft_q94_").toFile,
-      "orders_delta").getAbsolutePath
+    val path = new java.io.File(Harness.tmp("graft_q94"), "orders_delta").getAbsolutePath
     val src = orders(s, d).select(col("o_orderkey"), col("o_orderstatus"),
       round(col("o_totalprice") * 100, 0).cast("long").as("cents"))
     graft.io.DeltaWrite.writeDeltaTable(

@@ -26,9 +26,7 @@ object QRound10 {
     * hash. Integer cents throughout (the q69/q73 convention).
     */
   def q111DvDml(s: SparkSession, d: String): DataFrame = {
-    val path = new java.io.File(
-      java.nio.file.Files.createTempDirectory("graft_q111_").toFile,
-      "customer_delta").getAbsolutePath
+    val path = new java.io.File(Harness.tmp("graft_q111"), "customer_delta").getAbsolutePath
     val cust = customer(s, d).select(col("c_custkey"), col("c_mktsegment"),
       round(col("c_acctbal") * 100, 0).cast("long").as("cents"))
     graft.io.DeltaWrite.writeDeltaTable(cust, path, "append") // v0

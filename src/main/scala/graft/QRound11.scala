@@ -27,9 +27,7 @@ object QRound11 {
     * materialized columns, which is the feature under test.
     */
   def q113RowTracking(s: SparkSession, d: String): DataFrame = {
-    val path = new java.io.File(
-      java.nio.file.Files.createTempDirectory("graft_q113_").toFile,
-      "orders_rt").getAbsolutePath
+    val path = new java.io.File(Harness.tmp("graft_q113"), "orders_rt").getAbsolutePath
     val base = orders(s, d).filter(col("o_orderkey") % 13 === 0)
       .select(col("o_orderkey"),
         round(col("o_totalprice") * 100, 0).cast("long").as("cents"))
@@ -80,9 +78,7 @@ object QRound11 {
     * the same three verbs symbolically over the source parquet.
     */
   def q114ChangeDiff(s: SparkSession, d: String): DataFrame = {
-    val path = new java.io.File(
-      java.nio.file.Files.createTempDirectory("graft_q114_").toFile,
-      "orders_cd").getAbsolutePath
+    val path = new java.io.File(Harness.tmp("graft_q114"), "orders_cd").getAbsolutePath
     val base = orders(s, d).filter(col("o_orderkey") % 7 === 3)
       .select(col("o_orderkey"),
         round(col("o_totalprice") * 100, 0).cast("long").as("cents"))
@@ -143,9 +139,7 @@ object QRound11 {
     * oracle derives the same final state from the source parquet.
     */
   def q115V2Checkpoint(s: SparkSession, d: String): DataFrame = {
-    val path = new java.io.File(
-      java.nio.file.Files.createTempDirectory("graft_q115_").toFile,
-      "customer_v2cp").getAbsolutePath
+    val path = new java.io.File(Harness.tmp("graft_q115"), "customer_v2cp").getAbsolutePath
     val cust = customer(s, d).select(col("c_custkey"), col("c_mktsegment"),
       round(col("c_acctbal") * 100, 0).cast("long").as("cents"))
     graft.io.DeltaWrite.writeDeltaTable(
@@ -200,7 +194,7 @@ object QRound11 {
     * are integer-valued doubles, exact well past this magnitude).
     */
   def q116ChangeView(s: SparkSession, d: String): DataFrame = {
-    val root = java.nio.file.Files.createTempDirectory("graft_q116_").toFile
+    val root = Harness.tmp("graft_q116")
     val src = new java.io.File(root, "orders_src").getAbsolutePath
     val view = new java.io.File(root, "orders_view").getAbsolutePath
     val base = orders(s, d).filter(col("o_orderkey") % 7 === 2)

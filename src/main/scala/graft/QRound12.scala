@@ -24,9 +24,7 @@ object QRound12 {
     * or mis-sequenced segment all break it.
     */
   def q119LogCompaction(s: SparkSession, d: String): DataFrame = {
-    val path = new java.io.File(
-      java.nio.file.Files.createTempDirectory("graft_q119_").toFile,
-      "customer_logc").getAbsolutePath
+    val path = new java.io.File(Harness.tmp("graft_q119"), "customer_logc").getAbsolutePath
     val cust = customer(s, d).select(col("c_custkey"), col("c_mktsegment"),
       round(col("c_acctbal") * 100, 0).cast("long").as("cents"))
     graft.io.DeltaWrite.writeDeltaTable(

@@ -157,9 +157,7 @@ object QRound13 {
     * the hash.
     */
   def q125ConvertToDelta(s: SparkSession, d: String): DataFrame = {
-    val dir = new java.io.File(
-      java.nio.file.Files.createTempDirectory("graft_q125_").toFile,
-      "customer_raw").getAbsolutePath
+    val dir = new java.io.File(Harness.tmp("graft_q125"), "customer_raw").getAbsolutePath
     customer(s, d).select(col("c_custkey"), col("c_mktsegment"),
       round(col("c_acctbal") * 100, 0).cast("long").as("cents"))
       .write.partitionBy("c_mktsegment").parquet(dir)

@@ -65,7 +65,7 @@ object QRound14 {
     * (q106 family; b54/b57 bench the standing merge shape).
     */
   def q127IdentityMerge(s: SparkSession, d: String): DataFrame = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_q127").toString + "/t"
+    val dir = Harness.tmp("graft_q127") + "/t"
     val cust = load(s, d, "customer")
     val cents = round(col("c_acctbal") * 100, 0).cast("long")
     graft.io.DeltaWrite.writeDeltaTableIdentity(
@@ -127,7 +127,7 @@ object QRound14 {
     * Delta build → Bench skip list (b60 benches the standing diff).
     */
   def q128CdcNetState(s: SparkSession, d: String): DataFrame = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_q128").toString + "/t"
+    val dir = Harness.tmp("graft_q128") + "/t"
     val orders = load(s, d, "orders")
     val cents = round(col("o_totalprice") * 100, 0).cast("long")
     val base = orders.select(col("o_orderkey"), col("o_orderstatus"),

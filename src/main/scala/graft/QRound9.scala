@@ -24,9 +24,7 @@ object QRound9 {
     * convention).
     */
   def q106MergeRoundtrip(s: SparkSession, d: String): DataFrame = {
-    val path = new java.io.File(
-      java.nio.file.Files.createTempDirectory("graft_q106_").toFile,
-      "customer_delta").getAbsolutePath
+    val path = new java.io.File(Harness.tmp("graft_q106"), "customer_delta").getAbsolutePath
     val cust = customer(s, d).select(col("c_custkey"), col("c_mktsegment"),
       round(col("c_acctbal") * 100, 0).cast("long").as("cents"))
     // v0: base table = the custkeys not ≡ 1 (mod 3)
@@ -83,9 +81,7 @@ object QRound9 {
     * it.
     */
   def q107SchemaEvolution(s: SparkSession, d: String): DataFrame = {
-    val path = new java.io.File(
-      java.nio.file.Files.createTempDirectory("graft_q107_").toFile,
-      "orders_delta").getAbsolutePath
+    val path = new java.io.File(Harness.tmp("graft_q107"), "orders_delta").getAbsolutePath
     val src = orders(s, d).select(col("o_orderkey"), col("o_orderstatus"),
       round(col("o_totalprice") * 100, 0).cast("long").as("cents"))
     graft.io.DeltaWrite.writeDeltaTable(
@@ -129,9 +125,7 @@ object QRound9 {
     * (partition-pruned scan metrics) and benched as b53.
     */
   def q108HardNegativesAnn(s: SparkSession, d: String): DataFrame = {
-    val path = new java.io.File(
-      java.nio.file.Files.createTempDirectory("graft_q108_").toFile,
-      "ann").getAbsolutePath
+    val path = new java.io.File(Harness.tmp("graft_q108"), "ann").getAbsolutePath
     val emb = embeddings(s, d)
     graft.ext.AnnIndex.build(emb, "vec_id", "embedding", path, nCells = 8,
       extraCols = Seq("label"))
@@ -164,9 +158,7 @@ object QRound9 {
     * or the feed reader breaks the hash. Integer cents throughout.
     */
   def q109ChangeFeed(s: SparkSession, d: String): DataFrame = {
-    val path = new java.io.File(
-      java.nio.file.Files.createTempDirectory("graft_q109_").toFile,
-      "customer_delta").getAbsolutePath
+    val path = new java.io.File(Harness.tmp("graft_q109"), "customer_delta").getAbsolutePath
     val cust = customer(s, d).select(col("c_custkey"), col("c_mktsegment"),
       round(col("c_acctbal") * 100, 0).cast("long").as("cents"))
     graft.io.DeltaWrite.writeDeltaTable(
@@ -219,9 +211,7 @@ object QRound9 {
     * AnnIndexSpec pins the sub-linear nProbe regime and b53/b50 bench it.
     */
   def q110KnnJoin(s: SparkSession, d: String): DataFrame = {
-    val path = new java.io.File(
-      java.nio.file.Files.createTempDirectory("graft_q110_").toFile,
-      "ann").getAbsolutePath
+    val path = new java.io.File(Harness.tmp("graft_q110"), "ann").getAbsolutePath
     val emb = embeddings(s, d)
     graft.ext.AnnIndex.build(emb, "vec_id", "embedding", path, nCells = 8)
     graft.ext.AnnIndex.knnJoin(s, path, emb, "vec_id", "embedding",

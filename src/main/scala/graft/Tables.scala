@@ -149,7 +149,7 @@ object Tables {
   private def normalizedNanosDir(s: SparkSession, d: String, raw: DataFrame): String =
     nanosNormCache.computeIfAbsent(new java.io.File(s"$d/events.parquet").getAbsolutePath,
       _ => {
-        val out = java.nio.file.Files.createTempDirectory("graft_events_norm_")
+        val out = Harness.tmp("graft_events_norm")
         raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
           .write.mode("overwrite").parquet(s"$out/events.parquet")
         out.toString

@@ -1,20 +1,78 @@
 package graft.io
 
+import scala.jdk.CollectionConverters._
+
+import com.fasterxml.jackson.databind.JsonNode
 import org.apache.spark.sql.types.{DataType, MetadataBuilder, StructType}
 
-/** The Delta log-action encoder: every JSON line a commit publishes is
-  * rendered here, one function per action kind, so the log format (key
-  * order, which fields are optional, how strings escape) lives in one
-  * place. Writers decide WHAT a commit says; this object decides how it
-  * is spelled. Key order is part of the committed bytes (LogShapeSpec
-  * pins it), and optional fields are omitted rather than written as null.
+/** The Delta log-action codec: every JSON line a commit publishes is
+  * rendered here, one function per action kind, and every action a reader
+  * consumes is decoded here, so the log format (key order, which fields
+  * are optional, their defaults, how strings escape) lives in one place.
+  * Writers decide WHAT a commit says; this object decides how it is
+  * spelled. Key order is part of the committed bytes (LogShapeSpec pins
+  * it), and optional fields are omitted rather than written as null.
   */
 private[io] object DeltaActions {
 
   private val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
 
   /** A JSON string literal. */
-  private def str(s: String): String = mapper.writeValueAsString(s)
+  def str(s: String): String = mapper.writeValueAsString(s)
+
+  /** One log line (or any JSON document the log stores) as a tree. */
+  def parse(json: String): JsonNode = mapper.readTree(json)
+
+  /** A parsed action back to its one-line form. */
+  def render(node: JsonNode): String = mapper.writeValueAsString(node)
+
+  /** An `add` or `remove` changes data unless it says otherwise — a
+    * missing `dataChange` is true per the protocol; `false` marks
+    * OPTIMIZE-style rewrites that move rows without changing them.
+    */
+  def dataChange(action: JsonNode): Boolean =
+    Option(action.get("dataChange")).forall(_.asBoolean(true))
+
+  /** The data-changing `kind` (`add` / `remove`) actions of a commit. */
+  def dataChanging(actions: Seq[JsonNode], kind: String): Seq[JsonNode] =
+    actions.collect { case n if n.has(kind) && dataChange(n.get(kind)) => n.get(kind) }
+
+  /** A commit's clock: the monotonic `inCommitTimestamp` when the table
+    * enables it (authoritative over the wall clock), else
+    * `commitInfo.timestamp`; None when neither is recorded (callers fall
+    * back to the file's modification time, the protocol's rule).
+    */
+  def commitTimestamp(commitInfo: JsonNode): Option[Long] =
+    Option(commitInfo.get("inCommitTimestamp")).map(_.asLong())
+      .orElse(Option(commitInfo.get("timestamp")).map(_.asLong()))
+
+  /** `numRecords` from an add's stats JSON, when recorded. */
+  def numRecords(stats: String): Option[Long] =
+    Option(parse(stats).get("numRecords")).map(_.asLong())
+
+  /** One `add` action → [[DeltaRead.LiveFile]] (replay, range reads and
+    * conflict checks all decode adds here).
+    */
+  def parseAdd(a: JsonNode): DeltaRead.LiveFile = {
+    val pv = Option(a.get("partitionValues"))
+      .map(n => n.properties().asScala.map(e => e.getKey -> e.getValue.asText()).toMap)
+      .getOrElse(Map.empty[String, String])
+    val dv = Option(a.get("deletionVector")).map { d =>
+      DeletionVectors.Descriptor(
+        d.get("storageType").asText(), d.get("pathOrInlineDv").asText(),
+        Option(d.get("offset")).map(_.asLong()),
+        d.get("sizeInBytes").asLong(), d.get("cardinality").asLong())
+    }
+    DeltaRead.LiveFile(a.get("path").asText(), pv,
+      size = Option(a.get("size")).map(_.asLong()).getOrElse(0L),
+      modificationTime =
+        Option(a.get("modificationTime")).map(_.asLong()).getOrElse(0L),
+      stats = Option(a.get("stats")).map(_.asText()).filter(_.nonEmpty),
+      dv = dv,
+      baseRowId = Option(a.get("baseRowId")).map(_.asLong()),
+      defaultRowCommitVersion =
+        Option(a.get("defaultRowCommitVersion")).map(_.asLong()))
+  }
 
   /** A string map as a JSON object, keys sorted (partition values and
     * table configuration — the order is part of the committed bytes).

@@ -156,8 +156,6 @@ private[io] class DeltaLogFileIndex(
     override val partitionSchema: StructType,
     genPrune: Map[String, GenPrune] = Map.empty) extends FileIndex {
 
-  private val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-
   override def rootPaths: Seq[Path] = Seq(new Path(tablePath))
 
   override def refresh(): Unit = ()
@@ -269,7 +267,7 @@ private[io] class DeltaLogFileIndex(
     * PROVE no row can match `filter`.
     */
   private def mayMatch(f: DeltaRead.LiveFile, filter: Expression): Boolean = {
-    val stats = f.stats.map(mapper.readTree).orNull
+    val stats = f.stats.map(DeltaActions.parse).orNull
     if (stats == null) return true
     def stat(kind: String, c: String): Option[String] =
       Option(stats.get(kind)).flatMap(n => Option(n.get(c))).map(_.asText())

@@ -55,7 +55,7 @@ object DeltaMerge {
       s"whenMatched must be update or delete, got $whenMatched")
     require(keyCols.nonEmpty, "keyCols must be non-empty")
     val readVersion = DeltaRead.latestVersion(spark, path)
-    val (meta, live, proto) = DeltaRead.replayLogWithProtocol(spark, path, None)
+    val DeltaRead.Snapshot(meta, live, proto, _) = DeltaRead.replayFull(spark, path, None)
     require(meta != null, s"$path has no metaData action in its _delta_log")
     DeltaWrite.checkWritable(meta, proto, s"DML on $path", removesData = true,
       identityOk = true) // minting handled below: assignment + hw bump + exclusive OCC
@@ -286,7 +286,7 @@ object DeltaMerge {
     */
   def deleteWhere(spark: SparkSession, path: String, condition: Column): Long = {
     val readVersion = DeltaRead.latestVersion(spark, path)
-    val (meta, live, proto) = DeltaRead.replayLogWithProtocol(spark, path, None)
+    val DeltaRead.Snapshot(meta, live, proto, _) = DeltaRead.replayFull(spark, path, None)
     require(meta != null, s"$path has no metaData action in its _delta_log")
     // deletes only REMOVE rows: identity values carry in survivors
     // verbatim and the watermark stands (values are never reused)
@@ -338,7 +338,7 @@ object DeltaMerge {
   def deleteWhereDv(spark: SparkSession, path: String, condition: Column,
       maxVectorFileBytes: Long = DvWrite.DefaultMaxVectorFileBytes): Long = {
     val readVersion = DeltaRead.latestVersion(spark, path)
-    val (meta, live, proto) = DeltaRead.replayLogWithProtocol(spark, path, None)
+    val DeltaRead.Snapshot(meta, live, proto, _) = DeltaRead.replayFull(spark, path, None)
     require(meta != null, s"$path has no metaData action in its _delta_log")
     // deletes only REMOVE rows: identity values carry in survivors
     // verbatim and the watermark stands (values are never reused)
@@ -379,7 +379,7 @@ object DeltaMerge {
       set: Map[String, Column]): Long = {
     require(set.nonEmpty, "set must map at least one column")
     val readVersion = DeltaRead.latestVersion(spark, path)
-    val (meta, live, proto) = DeltaRead.replayLogWithProtocol(spark, path, None)
+    val DeltaRead.Snapshot(meta, live, proto, _) = DeltaRead.replayFull(spark, path, None)
     require(meta != null, s"$path has no metaData action in its _delta_log")
     // UPDATE carries identity values verbatim — but a SET targeting the
     // identity column itself would mint values outside the contract
@@ -594,7 +594,6 @@ object DeltaMerge {
         lazy val taskFs = tableRoot.getFileSystem(confBc.value.value)
         lazy val writer = new DvWrite.VectorFileWriter(taskFs, tableRoot,
           maxVectorFileBytes)
-        val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
         val rows = it.buffered
         val planned = new Iterator[(String, Option[DeletionVectors.Descriptor])] {
           def hasNext: Boolean = rows.hasNext
@@ -613,9 +612,7 @@ object DeltaMerge {
                 (DvWrite.serializeData(
                   DvWrite.mergeSorted(oldBits.values, idxs)), old.cardinality + n)
             }
-            val numRecords = lf.stats.flatMap { s =>
-              Option(mapper.readTree(s).get("numRecords")).map(_.asLong())
-            }
+            val numRecords = lf.stats.flatMap(DeltaActions.numRecords)
             // fully shadowed → no vector: the commit removes the file
             val desc =
               if (numRecords.contains(card)) None
@@ -786,7 +783,7 @@ object DeltaMerge {
       set: Map[String, Column]): Long = {
     require(set.nonEmpty, "set must map at least one column")
     val readVersion = DeltaRead.latestVersion(spark, path)
-    val (meta, live, proto) = DeltaRead.replayLogWithProtocol(spark, path, None)
+    val DeltaRead.Snapshot(meta, live, proto, _) = DeltaRead.replayFull(spark, path, None)
     require(meta != null, s"$path has no metaData action in its _delta_log")
     // UPDATE carries identity values verbatim — but a SET targeting the
     // identity column itself would mint values outside the contract

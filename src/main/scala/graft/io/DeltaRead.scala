@@ -2,7 +2,8 @@ package graft.io
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.hadoop.fs.Path
+import com.fasterxml.jackson.databind.JsonNode
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, LongType, StructField, StructType}
@@ -191,8 +192,7 @@ object DeltaRead {
     */
   private[io] def rowIdHighWaterMark(domains: Domains): Long =
     domains.get("delta.rowTracking").map { cfg =>
-      val n = new com.fasterxml.jackson.databind.ObjectMapper().readTree(cfg)
-      Option(n.get("rowIdHighWaterMark")).map(_.asLong()).getOrElse(-1L)
+      Option(DeltaActions.parse(cfg).get("rowIdHighWaterMark")).map(_.asLong()).getOrElse(-1L)
     }.getOrElse(-1L)
 
   /** Resolve an action's `path` field against the table root, per the
@@ -328,6 +328,29 @@ object DeltaRead {
       lit(" — file-key normalization diverged between scan and log sides")))
       .cast(LongType)
 
+  /** `(version, commit timestamp)` per available commit JSON, ascending —
+    * the in-commit clock when the table enables it (authoritative over the
+    * wall-clock field), else `commitInfo.timestamp`, else file mtime.
+    */
+  private[graft] def commitTimestamps(spark: SparkSession,
+      path: String): Seq[(Long, Long)] =
+    commitInfos(spark, path).map { case (v, ts, _) => (v, ts) }
+
+  /** `(version, commit timestamp, commitInfo)` per available commit JSON,
+    * ascending — the [[commitTimestamps]] clock plus the commitInfo action
+    * [[history]] reports. Reads each commit up to its commitInfo line.
+    */
+  private def commitInfos(spark: SparkSession,
+      path: String): Seq[(Long, Long, Option[JsonNode])] = {
+    val dir = new Path(path, "_delta_log")
+    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    require(fs.exists(dir), s"$path is not a Delta table (no _delta_log directory)")
+    listCommits(fs, dir).map { case (v, st) =>
+      val ci = commitInfo(fs, dir, v)
+      (v, ci.flatMap(DeltaActions.commitTimestamp).getOrElse(st.getModificationTime), ci)
+    }
+  }
+
   /** The latest version whose commit timestamp is at or before `tsMillis`
     * — Delta's timestamp time travel. A commit's timestamp is its
     * `commitInfo.timestamp` when recorded (this writer and delta-spark
@@ -338,39 +361,6 @@ object DeltaRead {
     * predates the earliest available commit (cleaned history cannot be
     * resolved by time) — never silently returns a later state.
     */
-  /** `(version, commit timestamp)` per available commit JSON, ascending —
-    * the in-commit clock when the table enables it (authoritative over the
-    * wall-clock field), else `commitInfo.timestamp`, else file mtime.
-    */
-  private[graft] def commitTimestamps(spark: SparkSession,
-      path: String): Seq[(Long, Long)] = {
-    val dir = new Path(path, "_delta_log")
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(fs.exists(dir), s"$path is not a Delta table (no _delta_log directory)")
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    fs.listStatus(dir).iterator
-      .filter { st =>
-        val n = st.getPath.getName
-        n.endsWith(".json") && n.dropRight(5).forall(_.isDigit)
-      }
-      .map { st =>
-        val v = st.getPath.getName.dropRight(5).toLong
-        val in = fs.open(st.getPath)
-        val content = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-          finally in.close()
-        val ciTs = content.split('\n').iterator.filter(_.nonEmpty)
-          .map(mapper.readTree)
-          .collectFirst { case n if n.has("commitInfo") =>
-            val ci = n.get("commitInfo")
-            // inCommitTimestamps tables: the monotonic in-commit clock is
-            // authoritative over the wall-clock `timestamp` field
-            Option(ci.get("inCommitTimestamp")).map(_.asLong())
-              .orElse(Option(ci.get("timestamp")).map(_.asLong())) }
-          .flatten
-        (v, ciTs.getOrElse(st.getModificationTime))
-      }.toSeq.sortBy(_._1)
-  }
-
   def versionAtTimestamp(spark: SparkSession, path: String, tsMillis: Long): Long = {
     val commits = commitTimestamps(spark, path)
     require(commits.nonEmpty, s"$path has no commit JSONs to resolve a timestamp against")
@@ -629,29 +619,7 @@ object DeltaRead {
     val schema = DataType.fromJson(metaHead.schemaJson).asInstanceOf[StructType]
     val root = new Path(path)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val dir = new Path(path, "_delta_log")
-    require(fs.exists(dir), s"$path is not a Delta table (no _delta_log)")
-    val hi = math.min(toVersion.getOrElse(Long.MaxValue),
-      latestVersion(spark, path))
-    val versions = fs.listStatus(dir).iterator.map(_.getPath.getName)
-      .collect { case n if n.endsWith(".json") && n.dropRight(5).forall(_.isDigit) =>
-        n.dropRight(5).toLong }.toSeq.sorted.filter(v => v > fromVersion && v <= hi)
-    // The listed commit JSONs must cover the range GAP-FREE: after
-    // checkpoint cleanup ([[DeltaWrite.cleanupMetadata]]) deletes
-    // checkpoint-covered commits, an `earliest` (fromVersion = -1)
-    // bootstrap would otherwise silently omit the cleaned commits'
-    // inserts — the replayed diff no longer composes to the head
-    // snapshot. Refuse loudly instead (the fromVersion >= 0 path already
-    // fails at replayLog when fromVersion itself was cleaned; this check
-    // makes EVERY gap loud, not just the start).
-    val expectedRange = math.max(fromVersion + 1, 0L) to hi
-    require(versions == expectedRange,
-      s"changeDiff($fromVersion): commit JSONs for versions " +
-        s"${expectedRange.filterNot(versions.contains).mkString(", ")} of $path " +
-        "were cleaned up (checkpointed history) — the range cannot be " +
-        "decomposed from the log; enable delta.enableChangeDataFeed so " +
-        "future DML records change files, and re-derive consumers from a " +
-        "snapshot")
+    val commits = commitsInRange(spark, path, "changeDiff", fromVersion, toVersion)
     // file state as of fromVersion (empty before the first commit); kept
     // current across EVERY action in the range — dataChange=false
     // relocations (OPTIMIZE) update it without emitting rows, so a later
@@ -659,7 +627,6 @@ object DeltaRead {
     val state = scala.collection.mutable.LinkedHashMap[String, LiveFile]()
     if (fromVersion >= 0)
       replayLog(spark, path, Some(fromVersion))._2.foreach(f => state(f.path) = f)
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
 
     def bits(f: LiveFile): Option[DeletionVectors.RoaringArray] =
       f.dv.map(d => DeletionVectors.load(fs, root, d))
@@ -683,21 +650,11 @@ object DeltaRead {
       slices += SliceReq(f.copy(dv = None), v, changeType, inSet, notInSet)
     }
 
-    versions.foreach { v =>
-      val in = fs.open(new Path(dir, f"$v%020d.json"))
-      val content = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-        finally in.close()
-      val adds = scala.collection.mutable.ArrayBuffer[(LiveFile, Boolean)]()
-      val removes = scala.collection.mutable.ArrayBuffer[(String, Boolean)]()
-      content.split('\n').iterator.filter(_.nonEmpty).foreach { line =>
-        val node = mapper.readTree(line)
-        def dc(a: com.fasterxml.jackson.databind.JsonNode): Boolean =
-          Option(a.get("dataChange")).forall(_.asBoolean(true))
-        if (node.has("add"))
-          adds += ((parseAdd(node.get("add")), dc(node.get("add"))))
-        if (node.has("remove"))
-          removes += ((node.get("remove").get("path").asText(), dc(node.get("remove"))))
-      }
+    commits.foreach { case (v, actions) =>
+      val adds = actions.collect { case n if n.has("add") =>
+        (DeltaActions.parseAdd(n.get("add")), DeltaActions.dataChange(n.get("add"))) }
+      val removes = actions.collect { case n if n.has("remove") =>
+        (n.get("remove").get("path").asText(), DeltaActions.dataChange(n.get("remove"))) }
       val addPaths = adds.map(_._1.path).toSet
       adds.foreach { case (f, dataChange) =>
         if (dataChange) state.get(f.path) match {
@@ -760,7 +717,6 @@ object DeltaRead {
     frames.reduce(_ unionByName _)
   }
 
-  /** add/remove actions with version in (fromExclusive, toInclusive]. */
   /** DESCRIBE DETAIL: one row summarizing the table's current state —
     * version, live file count and byte size, row count from the log's
     * add.stats (null when any live file lacks numRecords, never a guess),
@@ -771,9 +727,8 @@ object DeltaRead {
     import spark.implicits._
     val (meta, live) = replayLog(spark, path, None)
     require(meta != null, s"$path has no metaData action in its _delta_log")
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
     val counts = live.map(_.stats.flatMap(s =>
-      scala.util.Try(mapper.readTree(s).get("numRecords").asLong()).toOption))
+      scala.util.Try(DeltaActions.numRecords(s)).toOption.flatten))
     val numRecords: Option[Long] =
       if (counts.nonEmpty && counts.forall(_.isDefined)) Some(counts.flatten.sum)
       else if (live.isEmpty) Some(0L) else None
@@ -833,31 +788,12 @@ object DeltaRead {
     */
   def history(spark: SparkSession, path: String): DataFrame = {
     import spark.implicits._
-    val dir = new Path(path, "_delta_log")
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(fs.exists(dir), s"$path is not a Delta table (no _delta_log directory)")
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    val rows = fs.listStatus(dir).iterator
-      .filter { st =>
-        val n = st.getPath.getName
-        n.endsWith(".json") && n.dropRight(5).forall(_.isDigit)
-      }
-      .map { st =>
-        val v = st.getPath.getName.dropRight(5).toLong
-        val in = fs.open(st.getPath)
-        val content = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-          finally in.close()
-        val ci = content.split('\n').iterator.filter(_.nonEmpty)
-          .map(mapper.readTree).collectFirst {
-            case n if n.has("commitInfo") => n.get("commitInfo") }
-        (v,
-          ci.flatMap(c => Option(c.get("inCommitTimestamp")).map(_.asLong())
-              .orElse(Option(c.get("timestamp")).map(_.asLong())))
-            .getOrElse(st.getModificationTime),
-          ci.flatMap(c => Option(c.get("operation")).map(_.asText())).getOrElse(""),
-          ci.flatMap(c => Option(c.get("operationParameters")).map(_.toString)).getOrElse("{}"),
-          ci.flatMap(c => Option(c.get("engineInfo")).map(_.asText())).getOrElse(""))
-      }.toSeq.sortBy(-_._1)
+    val rows = commitInfos(spark, path).map { case (v, ts, ci) =>
+      (v, ts,
+        ci.flatMap(c => Option(c.get("operation")).map(_.asText())).getOrElse(""),
+        ci.flatMap(c => Option(c.get("operationParameters")).map(_.toString)).getOrElse("{}"),
+        ci.flatMap(c => Option(c.get("engineInfo")).map(_.asText())).getOrElse(""))
+    }.sortBy(-_._1)
     rows.toDF("version", "timestamp", "operation", "operationParameters", "engineInfo")
   }
 
@@ -876,17 +812,15 @@ object DeltaRead {
     * `_change_data/` files exactly like data tombstones, per Delta's own
     * contract. Name-mapped tables serve logical columns, as everywhere.
     *
-    * ENABLEMENT BOUNDARY (deliberately RELAXED by default): Delta errors
-    * when the requested range predates the version at which CDF was
-    * enabled; this reader instead serves pre-enablement APPENDS exactly
-    * (their rows are fully recorded in add files) and still fails loudly
-    * on any pre-enablement commit it cannot decompose — the feed is never
-    * silently incomplete. Pass `strict = true` for Delta's own contract:
-    * refuse any range starting before the last observable false→true flip
-    * of `delta.enableChangeDataFeed`.
+    * ENABLEMENT BOUNDARY (deliberately RELAXED): Delta errors when the
+    * requested range predates the version at which CDF was enabled; this
+    * reader instead serves pre-enablement APPENDS exactly (their rows are
+    * fully recorded in add files) and still fails loudly on any
+    * pre-enablement commit it cannot decompose, and on a range whose
+    * commits were cleaned up — the feed is never silently incomplete.
     */
   def changeFeed(spark: SparkSession, path: String, fromVersion: Long,
-      toVersion: Option[Long] = None, strict: Boolean = false): DataFrame = {
+      toVersion: Option[Long] = None): DataFrame = {
     val (meta, _) = replayLog(spark, path, toVersion)
     require(meta != null, s"$path has no metaData action in its _delta_log")
     val schema = DataType.fromJson(meta.schemaJson).asInstanceOf[StructType]
@@ -899,62 +833,13 @@ object DeltaRead {
       case "id" => physicalSchemaWithIds(schema)
       case _ => schema
     }
-    val conf = spark.sparkContext.hadoopConfiguration
     val root = new Path(path)
-    val fs = root.getFileSystem(conf)
-    val dir = new Path(path, "_delta_log")
-    val hi = toVersion.getOrElse(Long.MaxValue)
-    val allVersions = fs.listStatus(dir).iterator.map(_.getPath.getName)
-      .collect { case n if n.endsWith(".json") && n.dropRight(5).forall(_.isDigit) =>
-        n.dropRight(5).toLong }.toSeq.sorted
-    val versions = allVersions.filter(v => v > fromVersion && v <= hi)
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-
-    // strict = Delta's own contract: a range whose start predates the
-    // OBSERVABLE enablement of delta.enableChangeDataFeed refuses.
-    // (Transitions cleaned out of the JSON history cannot be checked.)
-    if (strict) {
-      var cdfOn = false
-      var enabledAt = -1L
-      allVersions.foreach { v =>
-        val in0 = fs.open(new Path(dir, f"$v%020d.json"))
-        val content0 = try scala.io.Source.fromInputStream(in0, "UTF-8").mkString
-          finally in0.close()
-        content0.split('\n').iterator.filter(_.nonEmpty)
-          .filter(_.contains("\"metaData\"")).foreach { line =>
-            val node = mapper.readTree(line)
-            if (node.has("metaData")) {
-              val on = Option(node.get("metaData").get("configuration")).exists(c =>
-                Option(c.get("delta.enableChangeDataFeed")).exists(_.asText() == "true"))
-              if (on && !cdfOn) enabledAt = v
-              cdfOn = on
-            }
-          }
-      }
-      if (enabledAt >= 0)
-        require(fromVersion >= enabledAt - 1,
-          s"changeFeed($fromVersion): delta.enableChangeDataFeed was enabled at " +
-            s"version $enabledAt of $path — changes before it were never recorded; " +
-            s"request fromVersion >= ${enabledAt - 1} (or strict = false for the " +
-            "relaxed append-decomposition contract)")
-    }
-
-    val perVersion: Seq[DataFrame] = versions.flatMap { v =>
-      val in = fs.open(new Path(dir, f"$v%020d.json"))
-      val content = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-        finally in.close()
-      val cdcPaths = scala.collection.mutable.ArrayBuffer[String]()
-      val adds = scala.collection.mutable.ArrayBuffer[LiveFile]()
-      var removed = 0
-      content.split('\n').iterator.filter(_.nonEmpty).foreach { line =>
-        val node = mapper.readTree(line)
-        def dataChange(a: com.fasterxml.jackson.databind.JsonNode): Boolean =
-          Option(a.get("dataChange")).forall(_.asBoolean(true))
-        if (node.has("cdc"))
-          cdcPaths += new Path(root, node.get("cdc").get("path").asText()).toString
-        if (node.has("add") && dataChange(node.get("add"))) adds += parseAdd(node.get("add"))
-        if (node.has("remove") && dataChange(node.get("remove"))) removed += 1
-      }
+    val commits = commitsInRange(spark, path, "changeFeed", fromVersion, toVersion)
+    val perVersion: Seq[DataFrame] = commits.flatMap { case (v, actions) =>
+      val cdcPaths = actions.collect { case n if n.has("cdc") =>
+        new Path(root, n.get("cdc").get("path").asText()).toString }
+      val adds = DeltaActions.dataChanging(actions, "add").map(DeltaActions.parseAdd)
+      val removed = DeltaActions.dataChanging(actions, "remove").size
       val changed: Option[DataFrame] =
         if (cdcPaths.nonEmpty) {
           // id mode needs the EXPLICIT physical schema (with field ids)
@@ -969,11 +854,11 @@ object DeltaRead {
                   org.apache.spark.sql.types.LongType))))
                 .option(FieldIdParquetFileFormat.readFlag, "true")
             else spark.read
-          Some(reader.parquet(cdcPaths.toSeq: _*)
+          Some(reader.parquet(cdcPaths: _*)
             .select(logicalSelect(schema, phys) :+ col("_change_type"): _*))
         }
         else if (removed == 0 && adds.nonEmpty)
-          Some(filesDf(spark, path, meta, adds.toSeq, provenance = false)
+          Some(filesDf(spark, path, meta, adds, provenance = false)
             .withColumn("_change_type", lit("insert")))
         else if (removed == 0) None // property/metadata-only commit
         else throw new IllegalArgumentException(
@@ -1024,66 +909,50 @@ object DeltaRead {
         col("_commit_version"): _*)
   }
 
+  /** Data-changing add/remove actions with version in (fromExclusive,
+    * toInclusive]: the adds by path (last wins) and the removed paths.
+    */
   private def actionsInRange(spark: SparkSession, path: String,
       fromExclusive: Long, toInclusive: Option[Long]): (Seq[LiveFile], Seq[String]) = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val fs = new Path(path).getFileSystem(conf)
-    val dir = new Path(path, "_delta_log")
-    require(fs.exists(dir), s"$path is not a Delta table (no _delta_log)")
-    val hi = toInclusive.getOrElse(Long.MaxValue)
-    val versions = fs.listStatus(dir).iterator.map(_.getPath.getName)
-      .collect { case n if n.endsWith(".json") && n.dropRight(5).forall(_.isDigit) =>
-        n.dropRight(5).toLong }
-      .filter(v => v > fromExclusive && v <= hi).toSeq.sorted
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    val actions = commitsInRange(spark, path, "changesSince", fromExclusive, toInclusive)
+      .flatMap(_._2)
+    // dataChange=false actions (OPTIMIZE/compaction rewrites) move rows
+    // between files without changing them — transparent to incremental
+    // readers: their adds carry no new data, their removes break no
+    // exactness.
     val adds = scala.collection.mutable.LinkedHashMap[String, LiveFile]()
-    val removes = scala.collection.mutable.ArrayBuffer[String]()
-    versions.foreach { v =>
-      val in = fs.open(new Path(dir, f"$v%020d.json"))
-      val content = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-        finally in.close()
-      content.split('\n').iterator.filter(_.nonEmpty).foreach { line =>
-        val node = mapper.readTree(line)
-        // dataChange=false actions (OPTIMIZE/compaction rewrites) move rows
-        // between files without changing them — transparent to incremental
-        // readers: their adds carry no new data, their removes break no
-        // exactness. Missing dataChange defaults to true per the spec.
-        def dataChange(a: com.fasterxml.jackson.databind.JsonNode): Boolean =
-          Option(a.get("dataChange")).forall(_.asBoolean(true))
-        if (node.has("add") && dataChange(node.get("add"))) {
-          val f = parseAdd(node.get("add"))
-          adds.put(f.path, f)
-        }
-        if (node.has("remove") && dataChange(node.get("remove")))
-          removes += node.get("remove").get("path").asText()
-      }
-    }
-    (adds.values.toSeq, removes.toSeq)
+    DeltaActions.dataChanging(actions, "add").map(DeltaActions.parseAdd)
+      .foreach(f => adds.put(f.path, f))
+    (adds.values.toSeq,
+      DeltaActions.dataChanging(actions, "remove").map(_.get("path").asText()))
   }
 
-  /** One `add` action node → [[LiveFile]] (shared by replay and
-    * range-scan parsing).
+  /** The commits in `(fromVersion, toVersion]` (default: head), each with
+    * its parsed actions, ascending — the one range read behind
+    * [[changesSince]], [[changeDiff]] and [[changeFeed]]. The commit
+    * JSONs must cover the range GAP-FREE: after checkpoint cleanup
+    * ([[DeltaWrite.cleanupMetadata]]) deletes checkpoint-covered commits,
+    * an `earliest` (fromVersion = -1) read would otherwise silently omit
+    * the cleaned commits' rows. Every gap, not just the start, is refused
+    * loudly, naming the `reader`. The head comes from the same listing
+    * (a checkpoint or compacted range may be its only record).
     */
-  private def parseAdd(a: com.fasterxml.jackson.databind.JsonNode): LiveFile = {
-    val fp = a.get("path").asText()
-    val pv = Option(a.get("partitionValues"))
-      .map(n => n.properties().asScala.map(e => e.getKey -> e.getValue.asText()).toMap)
-      .getOrElse(Map.empty[String, String])
-    val dv = Option(a.get("deletionVector")).map { d =>
-      DeletionVectors.Descriptor(
-        d.get("storageType").asText(), d.get("pathOrInlineDv").asText(),
-        Option(d.get("offset")).map(_.asLong()),
-        d.get("sizeInBytes").asLong(), d.get("cardinality").asLong())
-    }
-    LiveFile(fp, pv,
-      size = Option(a.get("size")).map(_.asLong()).getOrElse(0L),
-      modificationTime =
-        Option(a.get("modificationTime")).map(_.asLong()).getOrElse(0L),
-      stats = Option(a.get("stats")).map(_.asText()).filter(_.nonEmpty),
-      dv = dv,
-      baseRowId = Option(a.get("baseRowId")).map(_.asLong()),
-      defaultRowCommitVersion =
-        Option(a.get("defaultRowCommitVersion")).map(_.asLong()))
+  private def commitsInRange(spark: SparkSession, path: String, reader: String,
+      fromVersion: Long, toVersion: Option[Long]): Seq[(Long, Seq[JsonNode])] = {
+    val dir = new Path(path, "_delta_log")
+    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    require(fs.exists(dir), s"$path is not a Delta table (no _delta_log)")
+    val names = fs.listStatus(dir).toSeq.map(_.getPath.getName)
+    val listed = names.flatMap(commitVersion).toSet
+    val range = math.max(fromVersion + 1, 0L) to
+      math.min(toVersion.getOrElse(Long.MaxValue), listedHead(names))
+    val cleaned = range.filterNot(listed)
+    require(cleaned.isEmpty,
+      s"$reader($fromVersion): commit JSONs for versions ${cleaned.mkString(", ")} " +
+        s"of $path were cleaned up (checkpointed history) — the range cannot " +
+        "be read from the log; re-derive consumers from a snapshot " +
+        "(readDeltaTable) and read changes after its version")
+    range.map(v => v -> readCommit(fs, dir, v))
   }
 
   /** Latest version number in the log (`-1` if the directory is empty).
@@ -1097,36 +966,25 @@ object DeltaRead {
     val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
     val dir = new Path(path, "_delta_log")
     if (!fs.exists(dir)) return -1L
-    val names = fs.listStatus(dir).map(_.getPath.getName)
-    val fromJson = names.iterator
-      .collect { case n if n.endsWith(".json") && n.dropRight(5).forall(_.isDigit) =>
-        n.dropRight(5).toLong }
-      .foldLeft(-1L)(math.max)
-    val fromCompacted = names.iterator
-      .collect { case n if n.endsWith(".compacted.json") =>
-        n.stripSuffix(".compacted.json").split('.')(1).toLong }
-      .foldLeft(-1L)(math.max)
-    math.max(math.max(fromJson, fromCompacted),
-      readLastCheckpoint(spark, fs, dir).map(_.version).getOrElse(-1L))
+    listedHead(fs.listStatus(dir).toSeq.map(_.getPath.getName))
   }
+
+  /** The newest version a `_delta_log` listing records: a commit, the end
+    * of a compacted range, or a checkpoint (a checkpoint file lands only
+    * after its version committed, so it never names a future version).
+    */
+  private def listedHead(names: Seq[String]): Long =
+    names.iterator.flatMap(n => commitVersion(n)
+      .orElse(compactedRange(n).map(_._2)).orElse(checkpointVersion(n)))
+      .foldLeft(-1L)(math.max)
 
   /** Replay the log up to (and including) `versionAsOf` (default: head).
     * Returns the last metaData and the live file set.
     */
   private[io] def replayLog(spark: SparkSession, path: String,
       versionAsOf: Option[Long]): (Meta, Seq[LiveFile]) = {
-    val (m, l, _) = replayLogWithProtocol(spark, path, versionAsOf)
-    (m, l)
-  }
-
-  /** [[replayLog]] plus the replayed [[Protocol]] (last protocol action
-    * wins; a feature-free default for logs predating explicit protocol
-    * records).
-    */
-  private[io] def replayLogWithProtocol(spark: SparkSession, path: String,
-      versionAsOf: Option[Long]): (Meta, Seq[LiveFile], Protocol) = {
     val s = replayFull(spark, path, versionAsOf)
-    (s.meta, s.files, s.protocol)
+    (s.meta, s.files)
   }
 
   /** Full replayed snapshot: metadata, live files, protocol, and live
@@ -1148,15 +1006,13 @@ object DeltaRead {
     // checkpoint fast path: _last_checkpoint names a parquet snapshot of
     // the log; only commits AFTER it need JSON replay. Skipped when time
     // traveling to a version before the checkpoint.
-    val lastCp = readLastCheckpoint(spark, fs, dir).filter(_.version <= cut)
+    val lastCp = readLastCheckpoint(fs, dir).filter(_.version <= cut)
     var meta: Meta = null
     var protocol: Protocol = Protocol(1, 2)
     val live = scala.collection.mutable.LinkedHashMap[String, LiveFile]()
     val domains = scala.collection.mutable.LinkedHashMap[String, String]()
 
     lastCp.foreach { cpRef =>
-      val cpPaths = checkpointFiles(fs, dir, cpRef)
-
       def processActions(cp: DataFrame, where: String): Unit = {
         val cols = cp.columns.toSet
         if (cols.contains("protocol")) {
@@ -1250,8 +1106,7 @@ object DeltaRead {
             }
       }
 
-      val cp = if (cpPaths.forall(_.endsWith(".json")))
-        spark.read.json(cpPaths: _*) else spark.read.parquet(cpPaths: _*)
+      val cp = readCheckpointTop(spark, fs, dir, cpRef)
       processActions(cp, s"$dir checkpoint")
       // V2 spec checkpoints move the file actions into sidecar parquet
       // under _delta_log/_sidecars/; the top file keeps protocol/metaData
@@ -1272,23 +1127,16 @@ object DeltaRead {
       }
     }
 
-    val listed = fs.listStatus(dir).map(_.getPath.getName)
+    val listed = fs.listStatus(dir).toSeq.map(_.getPath.getName)
     val base = lastCp.map(_.version).getOrElse(-1L)
-    val versions = listed.iterator
-      .collect { case n if n.endsWith(".json") && n.dropRight(5).forall(_.isDigit) =>
-        n.dropRight(5).toLong }
-      .filter(v => v <= cut && v > base)
-      .toSeq.sorted
+    val versions = listed.flatMap(commitVersion).filter(v => v <= cut && v > base).sorted
     // LOG COMPACTION files (`<s>.<e>.compacted.json`, written by
     // [[DeltaWrite.compactLog]]): a usable one lies wholly inside the
     // replay window — never past the cut (its content is the range's END
     // state, so a mid-range time travel cannot use it) and never below
     // the checkpoint base.
-    val compactedAll = listed.iterator.collect {
-      case n if n.endsWith(".compacted.json") =>
-        val parts = n.stripSuffix(".compacted.json").split('.')
-        (parts(0).toLong, parts(1).toLong)
-    }.filter { case (s, e) => s > base && e <= cut }.toSeq.sorted
+    val compactedAll = listed.flatMap(compactedRange)
+      .filter { case (s, e) => s > base && e <= cut }.sorted
     // The requested version must actually EXIST — "any commit <= cut" is
     // not enough (versionAsOf=99 on a 2-version table would silently
     // return the head otherwise; Delta raises a time-travel error).
@@ -1320,18 +1168,14 @@ object DeltaRead {
               s"compacted range starting there" +
               (if (base >= 0) s" (usable checkpoint covers up to $base)"
                else "") + " — intermediate commits were cleaned")
-          segments += new Path(dir, f"$at%020d.json")
+          segments += commitPath(dir, at)
           at += 1
       }
     }
 
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
     segments.foreach { seg =>
-      val in = fs.open(seg)
-      val content = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-        finally in.close()
-      content.split('\n').iterator.filter(_.nonEmpty).foreach { line =>
-        val node = mapper.readTree(line)
+      logLines(fs, seg).foreach { line =>
+        val node = DeltaActions.parse(line)
         if (node.has("protocol")) {
           val p = node.get("protocol")
           val minR = Option(p.get("minReaderVersion")).map(_.asInt()).getOrElse(1)
@@ -1361,7 +1205,7 @@ object DeltaRead {
           meta = candidate
         }
         if (node.has("add")) {
-          val f = parseAdd(node.get("add"))
+          val f = DeltaActions.parseAdd(node.get("add"))
           live.put(f.path, f)
         }
         if (node.has("remove"))
@@ -1445,15 +1289,72 @@ object DeltaRead {
       }
   }
 
-  private[io] def readLastCheckpoint(spark: SparkSession,
-      fs: org.apache.hadoop.fs.FileSystem, dir: Path): Option[CheckpointRef] = {
+  private[io] def readLastCheckpoint(fs: FileSystem, dir: Path): Option[CheckpointRef] = {
     val p = new Path(dir, "_last_checkpoint")
     if (!fs.exists(p)) return None
-    val in = fs.open(p)
-    val content = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-    val node = new com.fasterxml.jackson.databind.ObjectMapper().readTree(content)
+    val node = DeltaActions.parse(logLines(fs, p).mkString("\n"))
     Option(node.get("version")).map(v => CheckpointRef(v.asLong(),
       Option(node.get("parts")).map(_.asInt()).filter(_ > 0)))
   }
+
+  /** The top file(s) of a checkpoint, loaded in whichever form it is
+    * stored: JSON (a V2 top file may be) or parquet. Replay, txn recovery
+    * and metadata cleanup all load checkpoints here.
+    */
+  private[io] def readCheckpointTop(spark: SparkSession, fs: FileSystem, dir: Path,
+      cpRef: CheckpointRef): DataFrame = {
+    val paths = checkpointFiles(fs, dir, cpRef)
+    if (paths.forall(_.endsWith(".json"))) spark.read.json(paths: _*)
+    else spark.read.parquet(paths: _*)
+  }
+
+  /** The version of a commit file `NNN.json`, None for every other log
+    * file — the one place the commit name pattern is matched.
+    */
+  private[io] def commitVersion(name: String): Option[Long] =
+    if (name.length > 5 && name.endsWith(".json") && name.dropRight(5).forall(_.isDigit))
+      Some(name.dropRight(5).toLong)
+    else None
+
+  private[io] def commitPath(dir: Path, version: Long): Path =
+    new Path(dir, f"$version%020d.json")
+
+  /** `(start, end)` of a log compaction file `<s>.<e>.compacted.json`. */
+  private[io] def compactedRange(name: String): Option[(Long, Long)] =
+    if (!name.endsWith(".compacted.json")) None
+    else {
+      val parts = name.stripSuffix(".compacted.json").split('.')
+      Some((parts(0).toLong, parts(1).toLong))
+    }
+
+  /** The version of a checkpoint file in any of the three naming forms. */
+  private[io] def checkpointVersion(name: String): Option[Long] =
+    if (!name.contains(".checkpoint.")) None
+    else name.split('.').headOption.filter(h => h.nonEmpty && h.forall(_.isDigit))
+      .map(_.toLong)
+
+  /** The commit files of a log as `(version, status)`, ascending. */
+  private[io] def listCommits(fs: FileSystem, dir: Path): Seq[(Long, FileStatus)] =
+    fs.listStatus(dir).toSeq
+      .flatMap(st => commitVersion(st.getPath.getName).map(_ -> st)).sortBy(_._1)
+
+  /** One log file's non-empty lines — a commit, a compacted range or
+    * `_last_checkpoint`. The one place log bytes are read.
+    */
+  private[io] def logLines(fs: FileSystem, file: Path): Seq[String] = {
+    val in = fs.open(file)
+    val content = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
+      finally in.close()
+    content.split('\n').toSeq.filter(_.nonEmpty)
+  }
+
+  /** One commit's actions, parsed, in log order. */
+  private[io] def readCommit(fs: FileSystem, dir: Path, version: Long): Seq[JsonNode] =
+    logLines(fs, commitPath(dir, version)).map(DeltaActions.parse)
+
+  /** A commit's `commitInfo` action, parsing only lines that can hold it. */
+  private[io] def commitInfo(fs: FileSystem, dir: Path, version: Long): Option[JsonNode] =
+    logLines(fs, commitPath(dir, version)).iterator
+      .filter(_.contains("\"commitInfo\"")).map(DeltaActions.parse)
+      .collectFirst { case n if n.has("commitInfo") => n.get("commitInfo") }
 }

@@ -567,12 +567,9 @@ object DeltaWrite {
     * baseRowId range assignment on row-tracked tables (this writer's
     * [[footerStats]] always records it).
     */
-  private[io] def numRecordsOf(stats: Option[String], where: String): Long = {
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    stats.flatMap(s => Option(mapper.readTree(s).get("numRecords")).map(_.asLong()))
-      .getOrElse(throw new IllegalStateException(
-        s"$where: row tracking needs numRecords stats to assign baseRowIds"))
-  }
+  private[io] def numRecordsOf(stats: Option[String], where: String): Long =
+    stats.flatMap(DeltaActions.numRecords).getOrElse(throw new IllegalStateException(
+      s"$where: row tracking needs numRecords stats to assign baseRowIds"))
 
   /** Row-tracking state of a table: the materialized row-id / commit-
     * version column names its configuration pins (minted at creation).
@@ -717,8 +714,8 @@ object DeltaWrite {
       .foreach { k =>
         val root = new Path(path)
         val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        val lastCp = DeltaRead.readLastCheckpoint(spark, fs,
-          new Path(root, "_delta_log")).map(_.version).getOrElse(0L)
+        val lastCp = DeltaRead.readLastCheckpoint(fs, new Path(root, "_delta_log"))
+          .map(_.version).getOrElse(0L)
         if (version > 0 && version - lastCp >= k)
           try checkpoint(spark, path)
           catch {
@@ -768,9 +765,7 @@ object DeltaWrite {
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val dir = new Path(path, "_delta_log")
     require(fs.exists(dir), s"$path is not a Delta table (no _delta_log)")
-    val jsons = fs.listStatus(dir).iterator.map(_.getPath.getName)
-      .collect { case n if n.endsWith(".json") && n.dropRight(5).forall(_.isDigit) =>
-        n.dropRight(5).toLong }.toSeq.sorted
+    val jsons = DeltaRead.listCommits(fs, dir).map(_._1)
     val start = if (startVersion >= 0) startVersion else jsons.headOption.getOrElse(
       throw new IllegalArgumentException(s"$path has no commit JSONs to compact"))
     val end = if (endVersion >= 0) endVersion else jsons.last
@@ -780,7 +775,6 @@ object DeltaWrite {
       s"compactLog($start, $end): missing commit JSONs " +
         s"${range.filterNot(jsons.contains).mkString(", ")} in $dir")
 
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
     var protoLine: String = null
     var metaLine: String = null
     val txns = scala.collection.mutable.LinkedHashMap[String, String]()
@@ -794,28 +788,17 @@ object DeltaWrite {
     // spec's DV-then-COW history caught).
     val files = scala.collection.mutable.LinkedHashMap[String, Either[String, String]]()
     range.foreach { v =>
-      val in = fs.open(new Path(dir, f"$v%020d.json"))
-      val content = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-        finally in.close()
-      content.split('\n').iterator.filter(_.nonEmpty).foreach { line =>
-        val node = mapper.readTree(line)
+      DeltaRead.logLines(fs, DeltaRead.commitPath(dir, v)).foreach { line =>
+        val node = DeltaActions.parse(line)
         if (node.has("protocol")) protoLine = line
         if (node.has("metaData")) metaLine = line
         if (node.has("txn")) txns(node.get("txn").get("appId").asText()) = line
         if (node.has("domainMetadata"))
           domains(node.get("domainMetadata").get("domain").asText()) = line
-        if (node.has("add")) {
-          val p = node.get("add").get("path").asText()
-          files(p) = Left(mapper.writeValueAsString(
-            mapper.createObjectNode().set[com.fasterxml.jackson.databind.node.ObjectNode](
-              "add", node.get("add").deepCopy())))
-        }
-        if (node.has("remove")) {
-          val p = node.get("remove").get("path").asText()
-          files(p) = Right(mapper.writeValueAsString(
-            mapper.createObjectNode().set[com.fasterxml.jackson.databind.node.ObjectNode](
-              "remove", node.get("remove").deepCopy())))
-        }
+        if (node.has("add"))
+          files(node.get("add").get("path").asText()) = Left(DeltaActions.render(node))
+        if (node.has("remove"))
+          files(node.get("remove").get("path").asText()) = Right(DeltaActions.render(node))
       }
     }
     val lines = Option(protoLine).toSeq ++ Option(metaLine).toSeq ++
@@ -1125,27 +1108,12 @@ object DeltaWrite {
       return None
     val dir = new Path(new Path(path), "_delta_log")
     val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
     // last commit's in-commit clock (its wall-clock timestamp as the
     // pre-enablement fallback); 0 when the JSON tail was cleaned — the
     // wall clock then dominates, which stays monotone
-    val prev = fs.listStatus(dir).iterator.map(_.getPath)
-      .filter { p =>
-        val n = p.getName
-        n.endsWith(".json") && n.dropRight(5).forall(_.isDigit)
-      }
-      .toSeq.sortBy(_.getName).lastOption.map { p =>
-        val in = fs.open(p)
-        val content = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-          finally in.close()
-        content.linesIterator.filter(_.contains("\"commitInfo\""))
-          .map(mapper.readTree).collectFirst {
-            case n if n.has("commitInfo") =>
-              val ci = n.get("commitInfo")
-              Option(ci.get("inCommitTimestamp")).map(_.asLong())
-                .orElse(Option(ci.get("timestamp")).map(_.asLong()))
-          }.flatten.getOrElse(0L)
-      }.getOrElse(0L)
+    val prev = DeltaRead.listCommits(fs, dir).lastOption
+      .flatMap { case (v, _) => DeltaRead.commitInfo(fs, dir, v) }
+      .flatMap(DeltaActions.commitTimestamp).getOrElse(0L)
     Some(math.max(now, prev + 1))
   }
 
@@ -1184,7 +1152,7 @@ object DeltaWrite {
     */
   def restore(spark: SparkSession, path: String, toVersion: Long): Long = {
     val readVersion = DeltaRead.latestVersion(spark, path)
-    val (metaNow, liveNow, protoNow) = DeltaRead.replayLogWithProtocol(spark, path, None)
+    val DeltaRead.Snapshot(metaNow, liveNow, protoNow, _) = DeltaRead.replayFull(spark, path, None)
     require(metaNow != null, s"$path has no metaData action in its _delta_log")
     checkWritable(metaNow, protoNow, s"restore of $path", removesData = true,
       identityOk = true) // watermark preserved below, never rolled back
@@ -1336,7 +1304,7 @@ object DeltaWrite {
       to: DataType): Long = {
     import org.apache.spark.sql.types._
     val readVersion = DeltaRead.latestVersion(spark, path)
-    val (meta, _, proto) = DeltaRead.replayLogWithProtocol(spark, path, None)
+    val DeltaRead.Snapshot(meta, _, proto, _) = DeltaRead.replayFull(spark, path, None)
     require(meta != null, s"$path has no metaData action in its _delta_log")
     require(meta.mappingMode == "none",
       "widenColumnType on a column-mapped table is not supported here")
@@ -1382,7 +1350,7 @@ object DeltaWrite {
       default: String): Long = {
     import org.apache.spark.sql.functions.expr
     val readVersion = DeltaRead.latestVersion(spark, path)
-    val (meta, _, proto) = DeltaRead.replayLogWithProtocol(spark, path, None)
+    val DeltaRead.Snapshot(meta, _, proto, _) = DeltaRead.replayFull(spark, path, None)
     require(meta != null, s"$path has no metaData action in its _delta_log")
     val schema = DataType.fromJson(meta.schemaJson).asInstanceOf[StructType]
     val idx = schema.fieldNames.indexOf(column)
@@ -1546,7 +1514,7 @@ object DeltaWrite {
   def addColumn(spark: SparkSession, path: String, column: String,
       dataType: DataType): Long = {
     val readVersion = DeltaRead.latestVersion(spark, path)
-    val (meta, _, proto) = DeltaRead.replayLogWithProtocol(spark, path, None)
+    val DeltaRead.Snapshot(meta, _, proto, _) = DeltaRead.replayFull(spark, path, None)
     require(meta != null, s"$path has no metaData action in its _delta_log")
     val schema = DataType.fromJson(meta.schemaJson).asInstanceOf[StructType]
     require(!schema.fieldNames.contains(column),
@@ -1597,7 +1565,7 @@ object DeltaWrite {
   def renameColumn(spark: SparkSession, path: String, from: String,
       to: String): Long = {
     val readVersion = DeltaRead.latestVersion(spark, path)
-    val (meta, _, proto) = DeltaRead.replayLogWithProtocol(spark, path, None)
+    val DeltaRead.Snapshot(meta, _, proto, _) = DeltaRead.replayFull(spark, path, None)
     require(meta != null, s"$path has no metaData action in its _delta_log")
     require(meta.mappingMode != "none",
       s"RENAME COLUMN on $path requires column mapping — unmapped files " +
@@ -1631,7 +1599,7 @@ object DeltaWrite {
     */
   def dropColumn(spark: SparkSession, path: String, column: String): Long = {
     val readVersion = DeltaRead.latestVersion(spark, path)
-    val (meta, _, proto) = DeltaRead.replayLogWithProtocol(spark, path, None)
+    val DeltaRead.Snapshot(meta, _, proto, _) = DeltaRead.replayFull(spark, path, None)
     require(meta != null, s"$path has no metaData action in its _delta_log")
     require(meta.mappingMode != "none",
       s"DROP COLUMN on $path requires column mapping — unmapped tables " +
@@ -2097,17 +2065,9 @@ object DeltaWrite {
     def refuse(why: String): Nothing =
       throw new java.util.ConcurrentModificationException(
         s"commit conflict with concurrent version $version in $logDir: $why")
-    val p = new Path(logDir, f"$version%020d.json")
-    if (!fs.exists(p))
+    if (!fs.exists(DeltaRead.commitPath(logDir, version)))
       refuse("the winning commit JSON is no longer readable")
-    val in = fs.open(p)
-    val content = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    content.linesIterator.filter(_.nonEmpty).foreach { line =>
-      val node = mapper.readTree(line)
-      def dataChange(a: com.fasterxml.jackson.databind.JsonNode): Boolean =
-        Option(a.get("dataChange")).forall(_.asBoolean(true))
+    DeltaRead.readCommit(fs, logDir, version).foreach { node =>
       if (node.has("protocol"))
         refuse("a concurrent writer upgraded the table protocol")
       if (node.has("metaData"))
@@ -2123,11 +2083,11 @@ object DeltaWrite {
         if (guard.ourRemoves.contains(rp))
           refuse(s"a concurrent writer already removed $rp, which this commit " +
             "also rewrites — one rewrite would be silently lost")
-        if (!guard.allowConcurrentDataChange && dataChange(r))
+        if (!guard.allowConcurrentDataChange && DeltaActions.dataChange(r))
           refuse("a concurrent writer removed data under this commit's snapshot")
       }
       Option(node.get("add")).foreach { a =>
-        if (!guard.allowConcurrentDataChange && dataChange(a))
+        if (!guard.allowConcurrentDataChange && DeltaActions.dataChange(a))
           refuse("a concurrent writer added data that this snapshot-exclusive " +
             "commit (overwrite/restore) would silently drop")
       }
@@ -2155,109 +2115,18 @@ object DeltaWrite {
     */
   def checkpoint(spark: SparkSession, path: String, parts: Int): Long = {
     require(parts >= 1, s"parts must be >= 1, got $parts")
-    val version = DeltaRead.latestVersion(spark, path)
-    require(version >= 0, s"$path has no commits to checkpoint")
-    val snap = DeltaRead.replayFull(spark, path, None)
-    val (meta, live, proto) = (snap.meta, snap.files, snap.protocol)
-    require(meta != null, s"$path has no metaData action")
-    // txn high-water marks must survive the checkpoint: once a later
-    // cleanup drops pre-checkpoint JSON commits, these rows are the only
-    // record the idempotent streaming sink can consult (spec: checkpoints
-    // carry txn actions)
-    val txns = txnVersions(spark, path)
-    val conf = spark.sparkContext.hadoopConfiguration
+    val (version, snap, txns) = checkpointState(spark, path)
     val logDir = new Path(new Path(path), "_delta_log")
-    val fs = logDir.getFileSystem(conf)
-
-    import org.apache.spark.sql.functions._
-    import spark.implicits._
-    val txnType = "struct<appId:string,version:bigint,lastUpdated:bigint>"
-    val metaType = "struct<id:string,schemaString:string," +
-      "partitionColumns:array<string>,configuration:map<string,string>>"
-    val protoType = "struct<minReaderVersion:int,minWriterVersion:int," +
-      "readerFeatures:array<string>,writerFeatures:array<string>>"
-    def featArr(fs0: Seq[String]) =
-      if (fs0.isEmpty) lit(null).cast("array<string>") else typedlit(fs0)
-    val addRows = live.map(f => CheckpointAdd(f.path, f.partitionValues,
-      f.size, f.modificationTime, dataChange = false, f.stats.orNull,
-      f.dv.map(d => CheckpointDv(d.storageType, d.pathOrInlineDv, d.offset,
-        d.sizeInBytes, d.cardinality)),
-      f.baseRowId, f.defaultRowCommitVersion))
-    val addsDf = addRows.toDF()
-      .select(struct(col("path"), col("partitionValues"), col("size"),
-        col("modificationTime"), col("dataChange"), col("stats"),
-        col("deletionVector"), col("baseRowId"),
-        col("defaultRowCommitVersion")).as("add"))
-      .withColumn("metaData", lit(null).cast(metaType))
-      .withColumn("protocol", lit(null).cast(protoType))
-      .withColumn("txn", lit(null).cast(txnType))
-    val metaDf = Seq(1).toDF("__one")
-      .select(
-        lit(null).cast(addsDf.schema("add").dataType.sql).as("add"),
-        struct(lit(carriedId(meta)).as("id"),
-          lit(meta.schemaJson).as("schemaString"),
-          typedlit(meta.partitionCols).as("partitionColumns"),
-          typedlit(meta.configuration).as("configuration")).as("metaData"),
-        struct(lit(proto.minReader).as("minReaderVersion"),
-          lit(proto.minWriter).as("minWriterVersion"),
-          featArr(proto.readerFeatures).as("readerFeatures"),
-          featArr(proto.writerFeatures).as("writerFeatures")).as("protocol"),
-        lit(null).cast(txnType).as("txn"))
-    val txnDf = txns.toSeq.map { case (a, (v, lu)) => (a, v, lu) }
-      .toDF("__a", "__v", "__lu")
-      .select(
-        lit(null).cast(addsDf.schema("add").dataType.sql).as("add"),
-        lit(null).cast(metaType).as("metaData"),
-        lit(null).cast(protoType).as("protocol"),
-        struct(col("__a").as("appId"), col("__v").as("version"),
-          col("__lu").as("lastUpdated")).as("txn"))
-    // live domain metadata (row tracking's high watermark and any domain
-    // another writer recorded) must survive the checkpoint: once cleanup
-    // drops the JSON tail, these rows are its only record
-    val dmType = "struct<domain:string,configuration:string,removed:boolean>"
-    val domDf = snap.domains.toSeq.toDF("__d", "__c").select(
-      lit(null).cast(addsDf.schema("add").dataType.sql).as("add"),
-      lit(null).cast(metaType).as("metaData"),
-      lit(null).cast(protoType).as("protocol"),
-      lit(null).cast(txnType).as("txn"),
-      struct(col("__d").as("domain"), col("__c").as("configuration"),
-        lit(false).as("removed")).as("domainMetadata"))
-    val cpDf = metaDf
-      .unionByName(txnDf)
-      .unionByName(addsDf.select(col("add"), col("metaData"), col("protocol"), col("txn")))
-      .withColumn("domainMetadata", lit(null).cast(dmType))
-      .unionByName(domDf)
-
-    val staging = new Path(new Path(path), s".cp-staging-${UUID.randomUUID()}")
-    (if (parts == 1) cpDf.coalesce(1) else cpDf.repartition(parts))
-      .write.mode("overwrite").parquet(staging.toString)
-    val staged = listParquet(fs, staging)
+    val fs = logDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val rows = actionRows(addRows(spark, snap.files), stateRows(spark, snap, txns),
+      domainRows(spark, snap))
     // empty partitions write no file — the slice count is what landed
-    val n = staged.size
-    val partsField =
-      if (parts == 1) {
-        val dest = new Path(logDir, f"$version%020d.checkpoint.parquet")
-        fs.delete(dest, false)
-        require(fs.rename(staged.head, dest), s"failed to publish checkpoint $dest")
-        ""
-      } else {
-        staged.zipWithIndex.foreach { case (p, i) =>
-          val dest = new Path(logDir,
-            f"$version%020d.checkpoint.${i + 1}%010d.$n%010d.parquet")
-          fs.delete(dest, false)
-          require(fs.rename(p, dest), s"failed to publish checkpoint slice $dest")
-        }
-        s""","parts":$n"""
-      }
-    fs.delete(staging, true)
-    val lc = new Path(logDir, "_last_checkpoint")
-    val tmp = new Path(logDir, s".tmp-lc-${UUID.randomUUID()}")
-    val out = fs.create(tmp, true)
-    try out.write(
-      s"""{"version":$version,"size":${live.size + 2 + txns.size}$partsField}""".getBytes("UTF-8"))
-    finally out.close()
-    fs.delete(lc, false)
-    require(fs.rename(tmp, lc), s"failed to update $lc")
+    val n = publishSlices(fs, new Path(path), rows, parts) { (i, n) =>
+      if (parts == 1) new Path(logDir, f"$version%020d.checkpoint.parquet")
+      else new Path(logDir, f"$version%020d.checkpoint.$i%010d.$n%010d.parquet")
+    }.size
+    publishLastCheckpoint(fs, logDir, version, snap.files.size + 2 + txns.size,
+      if (parts == 1) None else Some(n))
     version
   }
 
@@ -2276,57 +2145,95 @@ object DeltaWrite {
     */
   def checkpointV2(spark: SparkSession, path: String, sidecarParts: Int = 1): Long = {
     require(sidecarParts >= 1, s"sidecarParts must be >= 1, got $sidecarParts")
-    val version = DeltaRead.latestVersion(spark, path)
-    require(version >= 0, s"$path has no commits to checkpoint")
-    val snap = DeltaRead.replayFull(spark, path, None)
-    val (meta, live, proto) = (snap.meta, snap.files, snap.protocol)
-    require(meta != null, s"$path has no metaData action")
-    val txns = txnVersions(spark, path)
-    val conf = spark.sparkContext.hadoopConfiguration
+    val (version, snap, txns) = checkpointState(spark, path)
     val root = new Path(path)
     val logDir = new Path(root, "_delta_log")
-    val fs = logDir.getFileSystem(conf)
+    val fs = logDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
 
     import org.apache.spark.sql.functions._
     import spark.implicits._
     // 1) sidecars: every live add (same row shape the classic checkpoint
     // embeds), sliced for parallel write, one uuid-named file per slice
-    val addRows = live.map(f => CheckpointAdd(f.path, f.partitionValues,
+    val sidecarDir = new Path(logDir, "_sidecars")
+    fs.mkdirs(sidecarDir)
+    val sidecars = publishSlices(fs, root, addRows(spark, snap.files), sidecarParts) {
+      (_, _) => new Path(sidecarDir, s"${UUID.randomUUID()}.parquet")
+    }.map { dest =>
+      val st = fs.getFileStatus(dest)
+      (dest.getName, st.getLen, st.getModificationTime)
+    }
+
+    // 2) the top file: the metaData+protocol row, one row per txn
+    // high-water mark, one row per sidecar reference, the
+    // checkpointMetadata action and the live domains
+    val scRows = sidecars.toDF("__p", "__s", "__m").select(
+      struct(col("__p").as("path"), col("__s").as("sizeInBytes"),
+        col("__m").as("modificationTime")).as("sidecar"))
+    val cpmRow = Seq(version).toDF("__v")
+      .select(struct(col("__v").as("version")).as("checkpointMetadata"))
+    publishSlices(fs, root, actionRows(stateRows(spark, snap, txns), scRows, cpmRow,
+      domainRows(spark, snap)), 1) { (_, _) =>
+      new Path(logDir, f"$version%020d.checkpoint.${UUID.randomUUID()}.parquet")
+    }
+
+    // 3) the pointer: no `parts` — readers discover the uuid name by
+    // prefix listing (the v2 discovery rule)
+    publishLastCheckpoint(fs, logDir, version, 1 + txns.size + sidecars.size, None)
+    version
+  }
+
+  /** What every checkpoint snapshots: the head version, the replayed
+    * state at it, and the txn high-water marks — which must survive the
+    * checkpoint: once a later cleanup drops pre-checkpoint JSON commits,
+    * its txn rows are the only record the idempotent streaming sink can
+    * consult (spec: checkpoints carry txn actions).
+    */
+  private def checkpointState(spark: SparkSession,
+      path: String): (Long, DeltaRead.Snapshot, Map[String, (Long, Long)]) = {
+    val version = DeltaRead.latestVersion(spark, path)
+    require(version >= 0, s"$path has no commits to checkpoint")
+    val snap = DeltaRead.replayFull(spark, path, None)
+    require(snap.meta != null, s"$path has no metaData action")
+    (version, snap, txnVersions(spark, path))
+  }
+
+  /** Checkpoint row sets as one frame; a row is null in every action
+    * column it does not carry.
+    */
+  private def actionRows(rows: DataFrame*): DataFrame =
+    rows.reduce(_.unionByName(_, allowMissingColumns = true))
+
+  /** One `add` row per live file — classic checkpoints embed these, v2
+    * checkpoints move them into sidecars.
+    */
+  private def addRows(spark: SparkSession, live: Seq[DeltaRead.LiveFile]): DataFrame = {
+    import org.apache.spark.sql.functions.{col, struct}
+    import spark.implicits._
+    live.map(f => CheckpointAdd(f.path, f.partitionValues,
       f.size, f.modificationTime, dataChange = false, f.stats.orNull,
       f.dv.map(d => CheckpointDv(d.storageType, d.pathOrInlineDv, d.offset,
         d.sizeInBytes, d.cardinality)),
-      f.baseRowId, f.defaultRowCommitVersion))
-    val addsDf = addRows.toDF()
+      f.baseRowId, f.defaultRowCommitVersion)).toDF()
       .select(struct(col("path"), col("partitionValues"), col("size"),
         col("modificationTime"), col("dataChange"), col("stats"),
         col("deletionVector"), col("baseRowId"),
         col("defaultRowCommitVersion")).as("add"))
-    val staging = new Path(root, s".cp2-staging-${UUID.randomUUID()}")
-    (if (sidecarParts == 1) addsDf.coalesce(1) else addsDf.repartition(sidecarParts))
-      .write.mode("overwrite").parquet(staging.toString)
-    val sidecarDir = new Path(logDir, "_sidecars")
-    fs.mkdirs(sidecarDir)
-    val sidecars = listParquet(fs, staging).map { p =>
-      val name = s"${UUID.randomUUID()}.parquet"
-      val dest = new Path(sidecarDir, name)
-      require(fs.rename(p, dest), s"failed to publish sidecar $dest")
-      val st = fs.getFileStatus(dest)
-      (name, st.getLen, st.getModificationTime)
-    }
-    fs.delete(staging, true)
+  }
 
-    // 2) the top file: one metaData+protocol+checkpointMetadata row, one
-    // row per txn high-water mark, one row per sidecar reference
-    val txnType = "struct<appId:string,version:bigint,lastUpdated:bigint>"
-    val metaType = "struct<id:string,schemaString:string," +
-      "partitionColumns:array<string>,configuration:map<string,string>>"
-    val protoType = "struct<minReaderVersion:int,minWriterVersion:int," +
-      "readerFeatures:array<string>,writerFeatures:array<string>>"
-    val scType = "struct<path:string,sizeInBytes:bigint,modificationTime:bigint>"
-    val cpmType = "struct<version:bigint>"
+  /** The metaData+protocol row — the REPLAYED protocol, features included
+    * (the checkpoint may become the only protocol record once the JSON tail
+    * is cleaned, so deriving one from the mapping mode would silently
+    * downgrade a typeWidening/DV table) — and one `txn` row per
+    * high-water mark.
+    */
+  private def stateRows(spark: SparkSession, snap: DeltaRead.Snapshot,
+      txns: Map[String, (Long, Long)]): DataFrame = {
+    import org.apache.spark.sql.functions._
+    import spark.implicits._
+    val (meta, proto) = (snap.meta, snap.protocol)
     def featArr(fs0: Seq[String]) =
       if (fs0.isEmpty) lit(null).cast("array<string>") else typedlit(fs0)
-    val metaDf = Seq(1).toDF("__one").select(
+    val metaRow = Seq(1).toDF("__one").select(
       struct(lit(carriedId(meta)).as("id"),
         lit(meta.schemaJson).as("schemaString"),
         typedlit(meta.partitionCols).as("partitionColumns"),
@@ -2334,56 +2241,57 @@ object DeltaWrite {
       struct(lit(proto.minReader).as("minReaderVersion"),
         lit(proto.minWriter).as("minWriterVersion"),
         featArr(proto.readerFeatures).as("readerFeatures"),
-        featArr(proto.writerFeatures).as("writerFeatures")).as("protocol"),
-      lit(null).cast(txnType).as("txn"),
-      lit(null).cast(scType).as("sidecar"),
-      struct(lit(version).as("version")).as("checkpointMetadata"))
-    val txnDf = txns.toSeq.map { case (a, (v, lu)) => (a, v, lu) }
-      .toDF("__a", "__v", "__lu").select(
-        lit(null).cast(metaType).as("metaData"),
-        lit(null).cast(protoType).as("protocol"),
-        struct(col("__a").as("appId"), col("__v").as("version"),
-          col("__lu").as("lastUpdated")).as("txn"),
-        lit(null).cast(scType).as("sidecar"),
-        lit(null).cast(cpmType).as("checkpointMetadata"))
-    val scDf = sidecars.toDF("__p", "__s", "__m").select(
-      lit(null).cast(metaType).as("metaData"),
-      lit(null).cast(protoType).as("protocol"),
-      lit(null).cast(txnType).as("txn"),
-      struct(col("__p").as("path"), col("__s").as("sizeInBytes"),
-        col("__m").as("modificationTime")).as("sidecar"),
-      lit(null).cast(cpmType).as("checkpointMetadata"))
-    val dmType = "struct<domain:string,configuration:string,removed:boolean>"
-    val domDf = snap.domains.toSeq.toDF("__d", "__c").select(
-      lit(null).cast(metaType).as("metaData"),
-      lit(null).cast(protoType).as("protocol"),
-      lit(null).cast(txnType).as("txn"),
-      lit(null).cast(scType).as("sidecar"),
-      lit(null).cast(cpmType).as("checkpointMetadata"),
+        featArr(proto.writerFeatures).as("writerFeatures")).as("protocol"))
+    val txnRows = txns.toSeq.map { case (a, (v, lu)) => (a, v, lu) }
+      .toDF("__a", "__v", "__lu")
+      .select(struct(col("__a").as("appId"), col("__v").as("version"),
+        col("__lu").as("lastUpdated")).as("txn"))
+    actionRows(metaRow, txnRows)
+  }
+
+  /** Live domain metadata (row tracking's high watermark and any domain
+    * another writer recorded) must survive the checkpoint: once cleanup
+    * drops the JSON tail, these rows are its only record.
+    */
+  private def domainRows(spark: SparkSession, snap: DeltaRead.Snapshot): DataFrame = {
+    import org.apache.spark.sql.functions.{col, lit, struct}
+    import spark.implicits._
+    snap.domains.toSeq.toDF("__d", "__c").select(
       struct(col("__d").as("domain"), col("__c").as("configuration"),
         lit(false).as("removed")).as("domainMetadata"))
-    val topDf = metaDf.unionByName(txnDf).unionByName(scDf)
-      .withColumn("domainMetadata", lit(null).cast(dmType))
-      .unionByName(domDf)
-    val staging2 = new Path(root, s".cp2-top-staging-${UUID.randomUUID()}")
-    topDf.coalesce(1).write.mode("overwrite").parquet(staging2.toString)
-    val topDest = new Path(logDir,
-      f"$version%020d.checkpoint.${UUID.randomUUID()}.parquet")
-    require(fs.rename(listParquet(fs, staging2).head, topDest),
-      s"failed to publish v2 checkpoint $topDest")
-    fs.delete(staging2, true)
+  }
 
-    // 3) the pointer: no `parts` — readers discover the uuid name by
-    // prefix listing (the v2 discovery rule)
+  /** Write `rows` as up to `parts` parquet slices into a staging dir under
+    * the table root and rename slice `i` of the `n` that landed to
+    * `dest(i, n)` (1-based). Returns the published paths.
+    */
+  private def publishSlices(fs: org.apache.hadoop.fs.FileSystem, root: Path,
+      rows: DataFrame, parts: Int)(dest: (Int, Int) => Path): Seq[Path] = {
+    val staging = new Path(root, s".cp-staging-${UUID.randomUUID()}")
+    (if (parts == 1) rows.coalesce(1) else rows.repartition(parts))
+      .write.mode("overwrite").parquet(staging.toString)
+    val staged = listParquet(fs, staging)
+    val out = staged.zipWithIndex.map { case (p, i) =>
+      val d = dest(i + 1, staged.size)
+      fs.delete(d, false)
+      require(fs.rename(p, d), s"failed to publish checkpoint file $d")
+      d
+    }
+    fs.delete(staging, true)
+    out
+  }
+
+  /** Point `_last_checkpoint` at `version` (temp + rename). */
+  private def publishLastCheckpoint(fs: org.apache.hadoop.fs.FileSystem, logDir: Path,
+      version: Long, size: Long, parts: Option[Int]): Unit = {
     val lc = new Path(logDir, "_last_checkpoint")
     val tmp = new Path(logDir, s".tmp-lc-${UUID.randomUUID()}")
     val out = fs.create(tmp, true)
-    try out.write(
-      s"""{"version":$version,"size":${1 + txns.size + sidecars.size}}""".getBytes("UTF-8"))
+    try out.write((s"""{"version":$version,"size":$size""" +
+      parts.map(n => s""","parts":$n""").getOrElse("") + "}").getBytes("UTF-8"))
     finally out.close()
     fs.delete(lc, false)
     require(fs.rename(tmp, lc), s"failed to update $lc")
-    version
   }
 
   /** Highest committed `txn` version per appId — checkpoint `txn` rows
@@ -2402,13 +2310,11 @@ object DeltaWrite {
     val acc = scala.collection.mutable.Map[String, (Long, Long)]()
     def bump(appId: String, v: Long, lastUpdated: Long = 0L): Unit =
       if (acc.get(appId).forall(_._1 < v)) acc(appId) = (v, lastUpdated)
-    val lastCp = DeltaRead.readLastCheckpoint(spark, fs, dir)
+    val lastCp = DeltaRead.readLastCheckpoint(fs, dir)
     lastCp.foreach { cpRef =>
       // all three naming forms — a v2 checkpoint carries its txn rows in
       // the uuid-named TOP file
-      val cpPaths = DeltaRead.checkpointFiles(fs, dir, cpRef)
-      val cp = if (cpPaths.forall(_.endsWith(".json")))
-        spark.read.json(cpPaths: _*) else spark.read.parquet(cpPaths: _*)
+      val cp = DeltaRead.readCheckpointTop(spark, fs, dir, cpRef)
       if (cp.columns.contains("txn"))
         cp.select(col("txn")).filter(col("txn.appId").isNotNull).collect()
           .foreach { r =>
@@ -2419,24 +2325,13 @@ object DeltaWrite {
               t.getLong(t.fieldIndex("version")), lu)
           }
     }
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    fs.listStatus(dir).iterator.map(_.getPath)
-      .filter { p =>
-        val n = p.getName
-        n.endsWith(".json") && n.dropRight(5).forall(_.isDigit) &&
-          lastCp.forall(n.dropRight(5).toLong > _.version)
-      }
-      .toSeq.sortBy(_.getName)
-      .foreach { p =>
-        val in = fs.open(p)
-        val content = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-          finally in.close()
-        content.linesIterator.filter(_.contains("\"txn\"")).foreach { line =>
-          val t = mapper.readTree(line).get("txn")
-          if (t != null && t.get("appId") != null)
-            bump(t.get("appId").asText(), t.get("version").asLong(),
-              Option(t.get("lastUpdated")).map(_.asLong()).getOrElse(0L))
-        }
+    DeltaRead.listCommits(fs, dir).map(_._1).filter(v => lastCp.forall(v > _.version))
+      .flatMap(v => DeltaRead.logLines(fs, DeltaRead.commitPath(dir, v)))
+      .filter(_.contains("\"txn\"")).foreach { line =>
+        val t = DeltaActions.parse(line).get("txn")
+        if (t != null && t.get("appId") != null)
+          bump(t.get("appId").asText(), t.get("version").asLong(),
+            Option(t.get("lastUpdated")).map(_.asLong()).getOrElse(0L))
       }
     acc.toMap
   }
@@ -2506,25 +2401,20 @@ object DeltaWrite {
     val logDir = new Path(new Path(path), "_delta_log")
     val fs = logDir.getFileSystem(conf)
     require(fs.exists(logDir), s"$path is not a Delta table (no _delta_log)")
-    val lastCp = DeltaRead.readLastCheckpoint(spark, fs, logDir)
+    val lastCp = DeltaRead.readLastCheckpoint(fs, logDir)
       .getOrElse(return Nil) // nothing to anchor replay on — delete nothing
     val cutoff = System.currentTimeMillis() - retentionMs
     val deleted = scala.collection.mutable.ArrayBuffer[String]()
     fs.listStatus(logDir).foreach { st =>
       val n = st.getPath.getName
-      val jsonV = if (n.endsWith(".json") && n.dropRight(5).forall(_.isDigit))
-        Some(n.dropRight(5).toLong) else None
-      // a superseded checkpoint: strictly older than the one
-      // _last_checkpoint names (any of the three naming forms)
-      val cpV = if (n.contains(".checkpoint.") || n.endsWith(".checkpoint.parquet"))
-        n.split('.').headOption.filter(_.forall(_.isDigit)).map(_.toLong) else None
-      // a compacted range ([[compactLog]]) is expendable once the
+      // a superseded checkpoint is strictly older than the one
+      // _last_checkpoint names (any of the three naming forms); a
+      // compacted range ([[compactLog]]) is expendable once the
       // checkpoint covers its END — replay never consults it again
-      val compV = if (n.endsWith(".compacted.json"))
-        Some(n.stripSuffix(".compacted.json").split('.')(1).toLong) else None
       val expendable =
-        jsonV.exists(_ <= lastCp.version) || cpV.exists(_ < lastCp.version) ||
-          compV.exists(_ <= lastCp.version)
+        DeltaRead.commitVersion(n).exists(_ <= lastCp.version) ||
+          DeltaRead.checkpointVersion(n).exists(_ < lastCp.version) ||
+          DeltaRead.compactedRange(n).exists(_._2 <= lastCp.version)
       if (expendable && st.getModificationTime < cutoff) {
         if (fs.delete(st.getPath, false)) deleted += n
       }
@@ -2536,9 +2426,7 @@ object DeltaWrite {
     val scDir = new Path(logDir, "_sidecars")
     if (fs.exists(scDir)) {
       import org.apache.spark.sql.functions.col
-      val tops = DeltaRead.checkpointFiles(fs, logDir, lastCp)
-      val top = if (tops.forall(_.endsWith(".json")))
-        spark.read.json(tops: _*) else spark.read.parquet(tops: _*)
+      val top = DeltaRead.readCheckpointTop(spark, fs, logDir, lastCp)
       val referenced: Set[String] =
         if (!top.columns.contains("sidecar")) Set.empty
         else top.select(col("sidecar.path")).filter(col("sidecar.path").isNotNull)
@@ -2754,13 +2642,12 @@ object DeltaWrite {
           }
         }
       }
-      val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
       def jv(v: Any): String = v match {
-        case s: String => mapper.writeValueAsString(s)
+        case s: String => DeltaActions.str(s)
         case other => other.toString
       }
       def obj(m: scala.collection.Map[String, Any]): String =
-        m.map { case (k, v) => s"${mapper.writeValueAsString(k)}:${jv(v)}" }
+        m.map { case (k, v) => s"${DeltaActions.str(k)}:${jv(v)}" }
           .mkString("{", ",", "}")
       Some(s"""{"numRecords":$numRecords,"minValues":${obj(mins)},""" +
         s""""maxValues":${obj(maxs)},"nullCount":${obj(nulls)}}""")

@@ -207,7 +207,7 @@ class DeletionVectorSpec extends SparkSpec {
     // the replayed protocol survived the checkpoint (not derived from the
     // mapping mode): reader 3 + deletionVectors feature, as the external
     // DV commit declared
-    val proto = DeltaRead.replayLogWithProtocol(spark, table, None)._3
+    val proto = DeltaRead.replayFull(spark, table, None).protocol
     assert(proto.minReader == 3 && proto.readerFeatures.contains("deletionVectors"), proto)
 
     // compact reads THROUGH the vector and commits the rewrite without the

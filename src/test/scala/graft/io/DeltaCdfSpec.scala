@@ -72,6 +72,27 @@ class DeltaCdfSpec extends SparkSpec {
     assert(feedRows(table, 2L) == Seq((3L, "delete", 1L, "a", 10L)))
   }
 
+  test("cleaned history: changeDiff refuses a range whose commits were cleaned up") {
+    val table = tmp("graft_cdf_cleaned")
+    DeltaWrite.writeDeltaTable(
+      Seq((1L, "a", 10L), (2L, "b", 20L)).toDF("id", "v", "n"), table, "append") // v0
+    DeltaWrite.setTableProperties(spark, table,
+      Map("delta.enableChangeDataFeed" -> "true")) // v1
+    DeltaWrite.checkpoint(spark, table)
+    Thread.sleep(20) // let mtimes fall strictly before the zero-retention cutoff
+    DeltaWrite.cleanupMetadata(spark, table, retentionMs = 0L) // drops v0-v1 JSONs
+    DeltaWrite.writeDeltaTable(
+      Seq((3L, "c", 30L)).toDF("id", "v", "n"), table, "append") // v2
+    // the feed alone would serve v2's one insert; the cleaned v0 rows
+    // would be silently missing
+    val e = intercept[IllegalArgumentException] {
+      DeltaRead.changeDiff(spark, table, -1L).collect()
+    }
+    assert(e.getMessage.contains("cleaned"), e.getMessage)
+    // a range after the cleaned commits still reads
+    assert(feedRows(table, 1L) == Seq((2L, "insert", 3L, "c", 30L)))
+  }
+
   test("a _commit_version filter prunes whole change-file scans; projection prunes columns") {
     val table = tmp("graft_cdf_prune")
     DeltaWrite.writeDeltaTable(

@@ -126,7 +126,7 @@ class DeltaCrashSpec extends SparkSpec {
       assert(v == (if (lands) n + 1 else n), s"$phase: head is v$v")
       assert(rows(t) == (if (lands) after1 else before))
       assert(rows(t, Some(n)) == before)
-      def lastCheckpoint = DeltaRead.readLastCheckpoint(spark,
+      def lastCheckpoint = DeltaRead.readLastCheckpoint(
         new Path(t).getFileSystem(spark.sparkContext.hadoopConfiguration),
         new Path(t, "_delta_log")).map(_.version)
       assert(!lastCheckpoint.contains(n + 1), "no checkpoint survives a crash before it")

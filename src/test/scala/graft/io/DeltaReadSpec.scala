@@ -746,6 +746,13 @@ class DeltaReadSpec extends SparkSpec {
       DeltaRead.changeDiff(spark, table, -1L).collect()
     }
     assert(e.getMessage.contains("cleaned"), e.getMessage)
+    // every range reader shares the gap check: none serves a partial range
+    Seq[() => Unit](
+      () => DeltaRead.changesSince(spark, table, -1L).collect(),
+      () => DeltaRead.changeFeed(spark, table, -1L).collect()).foreach { read =>
+      val e2 = intercept[IllegalArgumentException](read())
+      assert(e2.getMessage.contains("cleaned"), e2.getMessage)
+    }
   }
 
   test("id resolution is SCAN-scoped: works with session flags forced off, leaks nothing") {

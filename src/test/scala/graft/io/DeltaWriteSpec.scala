@@ -749,7 +749,7 @@ class DeltaWriteSpec extends SparkSpec {
 
     // SET DEFAULT commits a protocol upgrade declaring the public feature
     DeltaWrite.setColumnDefault(spark, table, "src", "'web'")
-    val (_, _, proto) = DeltaRead.replayLogWithProtocol(spark, table, None)
+    val proto = DeltaRead.replayFull(spark, table, None).protocol
     assert(proto.minWriter == 7 &&
       proto.writerFeatures.contains("allowColumnDefaults"), proto.toString)
 
@@ -871,7 +871,7 @@ class DeltaWriteSpec extends SparkSpec {
     val table = tmp("graft_dw_ident")
     DeltaWrite.writeDeltaTableIdentity(
       Seq("a", "b", "c").toDF("v"), table, "rid", start = 100L, step = 10L)
-    val (_, _, proto) = DeltaRead.replayLogWithProtocol(spark, table, None)
+    val proto = DeltaRead.replayFull(spark, table, None).protocol
     assert(proto.minWriter == 7 &&
       proto.writerFeatures.contains("identityColumns"), proto.toString)
     val v0 = DeltaRead.readDeltaTable(spark, table).orderBy("rid")
@@ -952,7 +952,7 @@ class DeltaWriteSpec extends SparkSpec {
     DeltaWrite.writeDeltaTable(
       (1L to 5L).map(i => (i, i)).toDF("id", "v"), table, "append")      // v0
     def lastCp(): Option[Long] =
-      DeltaRead.readLastCheckpoint(spark,
+      DeltaRead.readLastCheckpoint(
         new org.apache.hadoop.fs.Path(table)
           .getFileSystem(spark.sparkContext.hadoopConfiguration),
         new org.apache.hadoop.fs.Path(table, "_delta_log")).map(_.version)
@@ -1210,7 +1210,7 @@ class DeltaWriteSpec extends SparkSpec {
     // an identity-advancing append that minted a fresh id would look like a
     // table REPLACEMENT to every external Delta client
     def idOf(p: String): String =
-      DeltaRead.replayLogWithProtocol(spark, p, None)._1.id
+      DeltaRead.replayFull(spark, p, None).meta.id
     val t = tmp("graft_dw_metaid")
     DeltaWrite.writeDeltaTableIdentity(Seq("a", "b").toDF("v"), t, "rid")
     val id0 = idOf(t)

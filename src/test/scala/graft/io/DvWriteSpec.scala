@@ -118,7 +118,7 @@ class DvWriteSpec extends SparkSpec {
     DeltaWrite.writeDeltaTable(
       (0L until 10L).map(i => (i, "x")).toDF("id", "v"), table, "append")
     DeltaMerge.deleteWhereDv(spark, table, col("id") === 1L)
-    val (_, _, proto) = DeltaRead.replayLogWithProtocol(spark, table, None)
+    val proto = DeltaRead.replayFull(spark, table, None).protocol
     assert(proto.minReader == 3 && proto.minWriter == 7)
     assert(proto.readerFeatures.contains("deletionVectors"))
     assert(proto.writerFeatures.contains("deletionVectors"))
@@ -299,7 +299,7 @@ class DvWriteSpec extends SparkSpec {
     DeltaMerge.deleteWhereDv(spark, table, col("id") >= 20L)
     assert(ids(table) == (0L until 20L))
     // protocol keeps columnMapping alongside the new feature
-    val (_, _, proto) = DeltaRead.replayLogWithProtocol(spark, table, None)
+    val proto = DeltaRead.replayFull(spark, table, None).protocol
     assert(proto.readerFeatures.contains("deletionVectors"))
   }
 }

@@ -209,6 +209,67 @@ class LogShapeSpec extends SparkSpec {
       s"$AddFile} x2")
   }
 
+  /** A checkpoint's files as one DataFrame: ordered top-level columns and
+    * the non-null row count per action column.
+    */
+  private def cpShape(files: Seq[String]): (Seq[String], Map[String, Long]) = {
+    val df = spark.read.parquet(files: _*)
+    val counts = df.select(df.columns.map(c => count(col(c)).as(c)).toSeq: _*).head()
+    (df.columns.toSeq, df.columns.map(c => c -> counts.getAs[Long](c)).toMap)
+  }
+
+  private def lastCheckpointKeys(path: String): Seq[String] = {
+    val src = scala.io.Source.fromFile(s"$path/_delta_log/_last_checkpoint", "UTF-8")
+    try mapper.readTree(src.mkString).fieldNames().asScala.toSeq finally src.close()
+  }
+
+  test("checkpoints: classic, multi-part and v2 with sidecars") {
+    // a row-tracked table with a txn mark: 4 live files, 1 txn, 1 domain
+    def table(prefix: String): String = {
+      val t = tmp(prefix)
+      DeltaWrite.writeDeltaTableRowTracked(rows(0, 10), t)
+      DeltaWrite.writeDeltaTable(rows(10, 20), t, "append", Nil, Some(("app", 1L)))
+      t
+    }
+    def logFiles(t: String, version: Long): Seq[String] =
+      new java.io.File(s"$t/_delta_log").listFiles().map(_.getPath)
+        .filter(_.contains(f"/$version%020d.checkpoint.")).sorted.toSeq
+    val actions = Seq("add", "metaData", "protocol", "txn", "domainMetadata")
+
+    val c = table("shape_cp")
+    val cv = DeltaWrite.checkpoint(spark, c)
+    assert(logFiles(c, cv).map(new java.io.File(_).getName) ==
+      Seq(f"$cv%020d.checkpoint.parquet"))
+    assert(cpShape(logFiles(c, cv)) ==
+      ((actions, Map("add" -> 4L, "metaData" -> 1L, "protocol" -> 1L, "txn" -> 1L,
+        "domainMetadata" -> 1L))))
+    assert(lastCheckpointKeys(c) == Seq("version", "size"))
+
+    val m = table("shape_cp_parts")
+    val mv = DeltaWrite.checkpoint(spark, m, parts = 3)
+    assert(logFiles(m, mv).map(new java.io.File(_).getName) ==
+      (1 to 3).map(i => f"$mv%020d.checkpoint.$i%010d.${3}%010d.parquet"))
+    assert(cpShape(logFiles(m, mv)) == cpShape(logFiles(c, cv)))
+    assert(lastCheckpointKeys(m) == Seq("version", "size", "parts"))
+
+    val v = table("shape_cp_v2")
+    val vv = DeltaWrite.checkpointV2(spark, v, sidecarParts = 2)
+    val top = logFiles(v, vv)
+    assert(top.size == 1 && top.head.endsWith(".parquet"), top.toString)
+    assert(cpShape(top) ==
+      ((Seq("metaData", "protocol", "txn", "sidecar", "checkpointMetadata", "domainMetadata"),
+        Map("metaData" -> 1L, "protocol" -> 1L, "txn" -> 1L, "sidecar" -> 2L,
+          "checkpointMetadata" -> 1L, "domainMetadata" -> 1L))))
+    val sidecars = new java.io.File(s"$v/_delta_log/_sidecars").listFiles()
+      .map(_.getPath).filter(_.endsWith(".parquet")).sorted.toSeq
+    assert(sidecars.size == 2, sidecars.toString)
+    assert(cpShape(sidecars) == ((Seq("add"), Map("add" -> 4L))))
+    assert(lastCheckpointKeys(v) == Seq("version", "size"))
+
+    // each kind replays to the same table
+    Seq(c, m, v).foreach(t => assert(DeltaRead.readDeltaTable(spark, t).count() == 20L))
+  }
+
   test("convert, enableRowTracking, widenColumnType and add column on a plain table") {
     val d = tmp("shape_convert")
     rows(0, 20).repartition(2).write.parquet(d)
