@@ -3,7 +3,7 @@ package graft.io
 import scala.jdk.CollectionConverters._
 
 import com.fasterxml.jackson.databind.JsonNode
-import org.apache.spark.sql.types.{DataType, MetadataBuilder, StructType}
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** The Delta log-action codec: every JSON line a commit publishes is
   * rendered here, one function per action kind, and every action a reader
@@ -118,15 +118,8 @@ private[io] object DeltaActions {
     */
   def identityMetaData(meta: DeltaRead.Meta, hwBumps: Map[String, Long],
       now: Long): String = {
-    val old = DataType.fromJson(meta.schemaJson).asInstanceOf[StructType]
-    val bumped = StructType(old.fields.map { f =>
-      hwBumps.get(f.name) match {
-        case Some(hw) => f.copy(metadata = new MetadataBuilder()
-          .withMetadata(f.metadata)
-          .putLong("delta.identity.highWaterMark", hw).build())
-        case None => f
-      }
-    })
+    val bumped = DeltaWrite.withHighWaterMarks(
+      DataType.fromJson(meta.schemaJson).asInstanceOf[StructType], hwBumps)
     metaData(DeltaWrite.carriedId(meta), bumped.json, meta.partitionCols,
       meta.configuration, now)
   }

@@ -3,7 +3,7 @@ package graft.io
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DataType, StructField, StructType}
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Row-level Delta DML — MERGE (upsert) and DELETE — as copy-on-write
   * commits over [[DeltaWrite]]'s log protocol. This is the reference's
@@ -66,7 +66,7 @@ object DeltaMerge {
       s"merge key $k is not a column of the source"))
     // IDENTITY columns: the source must OMIT them — matched updates carry
     // the target's stored value, unmatched inserts mint past the high
-    // watermark ([[DeltaWrite.assignIdentityValues]]'s gap-free contract)
+    // watermark ([[DeltaWrite.mintIdentity]]'s gap-free contract)
     // and the bumped mark rides the same commit. A source-supplied
     // identity value would either clobber a matched row's engine-assigned
     // value or mint outside the contract — refused, like GENERATED ALWAYS.
@@ -158,13 +158,9 @@ object DeltaMerge {
     val (insertRows, hwBumps): (Option[DataFrame], Map[String, Long]) =
       if (!insertUnmatched) (None, Map.empty)
       else {
-        val unmatched = source1
-          .join(base.select(keyCols.map(col): _*), keyCols, "left_anti")
-        if (identityFields.isEmpty) (Some(unmatched), Map.empty)
-        else {
-          val (withIds, bumps) = assignInsertIdentity(unmatched, identityFields)
-          (Some(withIds), bumps)
-        }
+        val (withIds, bumps) = DeltaWrite.mintIdentity(source1
+          .join(base.select(keyCols.map(col): _*), keyCols, "left_anti"), identityFields)
+        (Some(withIds), bumps)
       }
     val newData = insertRows match {
       case Some(ins) => survivors.unionByName(
@@ -203,53 +199,6 @@ object DeltaMerge {
       cdc, txn, hwBumps)
   }
 
-  /** Gap-free identity assignment for MERGE's unmatched inserts — the
-    * append path's contract ([[DeltaWrite.assignIdentityValues]]:
-    * localCheckpoint + count + zipWithIndex past the stored watermark),
-    * returning the batch with values and the new last-issued mark per
-    * column. A non-empty bump map forces the metaData republish and the
-    * EXCLUSIVE conflict guard (two concurrent minting commits would issue
-    * the same values — the loser refuses, never retries with its staged
-    * files).
-    */
-  private def assignInsertIdentity(unmatched: DataFrame,
-      identityFields: Seq[StructField]): (DataFrame, Map[String, Long]) =
-    identityFields.foldLeft((unmatched, Map.empty[String, Long])) {
-      case ((cur, bumps), f) =>
-        val step = f.metadata.getLong("delta.identity.step")
-        val lastIssued =
-          if (f.metadata.contains("delta.identity.highWaterMark"))
-            f.metadata.getLong("delta.identity.highWaterMark")
-          else f.metadata.getLong("delta.identity.start") - step
-        val (withId, n) = DeltaWrite.assignIdentityValues(cur, f.name,
-          lastIssued, step)
-        if (n == 0) (withId, bumps)
-        else (withId, bumps + (f.name -> (lastIssued + step * n)))
-    }
-
-  /** A change-data batch renamed to the table's physical layout for
-    * staging under `_change_data/` — name mode renames, id mode
-    * additionally rides `parquet.field.id` metadata into the staged
-    * footers so the id-resolving CDF reader can serve them.
-    */
-  private def cdcPhysical(c: DataFrame, meta: DeltaRead.Meta): DataFrame =
-    if (meta.mappingMode == "none") c
-    else {
-      val ms = DataType.fromJson(meta.schemaJson).asInstanceOf[StructType]
-      // id mode: the projected schema carries `parquet.field.id` metadata,
-      // which [[DeltaWrite.stagedWriter]] honors per-write — no session flag
-      val phys = meta.mappingMode match {
-        case "id" => DeltaRead.physicalSchemaWithIds(ms)
-        case _ => DeltaRead.physicalSchema(ms)
-      }
-      c.select(DeltaRead.physicalSelect(ms, phys) :+ col("_change_type"): _*)
-    }
-
-  /** Whether the table opted into the change data feed
-    * (`delta.enableChangeDataFeed = true` — set at create or via
-    * [[DeltaWrite.setTableProperties]]). DML on a CDF table pays one
-    * extra pass over the touched subset to materialize the change rows.
-    */
   /** Read `touched` with STABLE ROW IDS attached when the table is
     * row-tracked: logical columns plus the two materialized physical
     * columns, each row's column values resolved to its stable id
@@ -274,6 +223,11 @@ object DeltaMerge {
   private def matCols(rt: Option[DeltaWrite.RowTracking]): Seq[Column] =
     rt.toSeq.flatMap(r => Seq(col(s"`${r.matId}`"), col(s"`${r.matVer}`")))
 
+  /** Whether the table opted into the change data feed
+    * (`delta.enableChangeDataFeed = true` — set at create or via
+    * [[DeltaWrite.setTableProperties]]). DML on a CDF table pays one
+    * extra pass over the touched subset to materialize the change rows.
+    */
   private def cdfEnabled(meta: DeltaRead.Meta): Boolean =
     meta.configuration.get("delta.enableChangeDataFeed").contains("true")
 
@@ -500,11 +454,8 @@ object DeltaMerge {
     val (inserts, hwBumps): (Option[DataFrame], Map[String, Long]) =
       if (!insertUnmatched) (None, Map.empty)
       else {
-        val unmatched = source1.join(matchedKeys, keyCols, "left_anti")
-        val idFields = DeltaWrite.identityFieldsOf(meta)
-        val (withIds, bumps) =
-          if (idFields.isEmpty) (unmatched, Map.empty[String, Long])
-          else assignInsertIdentity(unmatched, idFields)
+        val (withIds, bumps) = DeltaWrite.mintIdentity(
+          source1.join(matchedKeys, keyCols, "left_anti"), DeltaWrite.identityFieldsOf(meta))
         (Some(withIds.select(fieldCols ++ rtFresh: _*)), bumps)
       }
     val newRows = (matchedSrc.toSeq ++ inserts).reduceOption(_ unionByName _)
@@ -676,15 +627,7 @@ object DeltaMerge {
       where: String): Seq[DeltaWrite.StagedFile] = {
     DeltaWrite.enforceConstraints(rows, meta, where)
     DeltaWrite.applyGenerated(rows, meta, where)
-    val (stageDf, stageCols) =
-      if (meta.mappingMode != "none") {
-        val ms = DataType.fromJson(meta.schemaJson).asInstanceOf[StructType]
-        val l2p = ms.fieldNames
-          .zip(DeltaRead.physicalSchema(ms).fieldNames).toMap
-        (DeltaWrite.stagePhysical(rows, ms, meta.mappingMode),
-          meta.partitionCols.map(c => l2p.getOrElse(c, c)))
-      } else (rows, meta.partitionCols)
-    DeltaWrite.stageDataFiles(stageDf, root, stageCols)
+    DeltaWrite.stageBatch(rows, root, meta)
   }
 
   /** Publish a DML commit, atomically: stage `newRows` (partitioned like
@@ -722,13 +665,11 @@ object DeltaMerge {
     def mkLines(version: Long): Seq[String] = {
       cdcStaged.foreach { case (rel, _) => fs.delete(new Path(root, rel), false) }
       cdcStaged = cdcData.toSeq.flatMap { c =>
-        DeltaWrite.stageCdcFiles(
-          cdcPhysical(c, meta).withColumn("_commit_version", lit(version)), root)
+        DeltaWrite.stageCdcFiles(DeltaWrite.stagePhysical(c, meta, col("_change_type"))
+          .withColumn("_commit_version", lit(version)), root)
       }
       val now = System.currentTimeMillis()
-      val lines = scala.collection.mutable.ArrayBuffer(DeltaActions.commitInfo(
-        DeltaWrite.inCommitTimestamp(spark, path, meta, now), now, operation,
-        if (deletionVectors) params :+ ("deletionVectors" -> true) else params))
+      val lines = scala.collection.mutable.ArrayBuffer[String]()
       protocol.foreach(lines += DeltaActions.protocol(_))
       if (hwBumps.nonEmpty)
         lines += DeltaActions.identityMetaData(meta, hwBumps, now)
@@ -762,9 +703,8 @@ object DeltaMerge {
     val guard =
       if (hwBumps.nonEmpty) ConflictGuard.exclusive(removed, txn.map(_._1))
       else ConflictGuard.disjointRewrite(removed, txn.map(_._1))
-    val committed = DeltaWrite.commitWithRetry(spark, path, readVersion, guard, mkLines)
-    DeltaWrite.maybeAutoCheckpoint(spark, path, committed, meta.configuration)
-    committed
+    DeltaWrite.commit(spark, path, readVersion, meta, operation,
+      if (deletionVectors) params :+ ("deletionVectors" -> true) else params, guard)(mkLines)
   }
 
   /** UPDATE the Delta table at `path` SET `set` WHERE `condition` — the

@@ -149,6 +149,17 @@ object DeltaRead {
     StructType(logical.fields.map(renameField))
   }
 
+  /** The schema a table's data files store under its mapping mode:
+    * [[physicalSchema]] for `name`, [[physicalSchemaWithIds]] for `id`,
+    * the logical schema itself when unmapped.
+    */
+  private[io] def physicalLayout(schema: StructType, mappingMode: String): StructType =
+    mappingMode match {
+      case "name" => physicalSchema(schema)
+      case "id" => physicalSchemaWithIds(schema)
+      case _ => schema
+    }
+
   /** The inverse of [[logicalSelect]]: renames a logical-name DataFrame to
     * the physical layout — what [[DeltaWrite]] stages into a mapped
     * table. Same alias + positional-cast mechanics; the target field's
@@ -411,11 +422,7 @@ object DeltaRead {
     // flag, so the parquet reader resolves columns by FIELD ID (the mode's
     // authority — file-local column names are free to differ). Unmapped
     // tables take the same code path with phys == schema.
-    val phys = meta.mappingMode match {
-      case "name" => physicalSchema(schema)
-      case "id" => physicalSchemaWithIds(schema)
-      case _ => schema
-    }
+    val phys = physicalLayout(schema, meta.mappingMode)
     // id mode: the read flag rides the RELATION's options (overlaid onto
     // the per-query hadoop conf after session confs), so id-resolution is
     // scoped to exactly this scan — never leaked session-wide
@@ -828,11 +835,7 @@ object DeltaRead {
     // them with [[DeltaWrite.stagePhysical]]'s id projection), so the
     // read resolves them the same way the data scan does — via a
     // read-scoped option, never a session flag
-    val phys = meta.mappingMode match {
-      case "name" => physicalSchema(schema)
-      case "id" => physicalSchemaWithIds(schema)
-      case _ => schema
-    }
+    val phys = physicalLayout(schema, meta.mappingMode)
     val root = new Path(path)
     val commits = commitsInRange(spark, path, "changeFeed", fromVersion, toVersion)
     val perVersion: Seq[DataFrame] = commits.flatMap { case (v, actions) =>
@@ -894,11 +897,7 @@ object DeltaRead {
     // stages into every cdc footer, and a SOURCE-scoped option makes the
     // parquet source resolve by them — same mechanics as the batch
     // changeFeed, no session flag
-    val phys = meta.mappingMode match {
-      case "name" => physicalSchema(schema)
-      case "id" => physicalSchemaWithIds(schema)
-      case _ => schema
-    }
+    val phys = physicalLayout(schema, meta.mappingMode)
     val fileSchema = phys.add("_change_type", "string").add("_commit_version", "long")
     val reader = spark.readStream.schema(fileSchema)
     (if (meta.mappingMode == "id")

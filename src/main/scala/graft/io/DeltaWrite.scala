@@ -107,24 +107,16 @@ object DeltaWrite {
   private[io] def sameSchema(a: StructType, b: StructType): Boolean =
     comparableType(a) == comparableType(b)
 
-  /** Write `df` to the Delta table at `path` with an idempotence token:
-    * the commit carries a `txn` action `{appId, version}` (the public
-    * protocol's application-transaction marker), and [[lastTxnVersion]]
-    * reads the high-water mark back — the exactly-once handshake
-    * streaming sinks use to skip replayed epochs.
-    */
-  def writeDeltaTable(df: DataFrame, path: String, mode: String,
-      partitionBy: Seq[String], txn: Option[(String, Long)]): Long =
-    writeDeltaTableImpl(df, path, mode, partitionBy, txn, mergeSchema = false)
-
   /** Write `df` to the Delta table at `path`. `mode` ∈ {append, overwrite}
     * (the reference's validated surface). Returns the committed version.
-    */
-  def writeDeltaTable(df: DataFrame, path: String, mode: String,
-      partitionBy: Seq[String] = Nil): Long =
-    writeDeltaTableImpl(df, path, mode, partitionBy, None, mergeSchema = false)
-
-  /** Append with SCHEMA EVOLUTION (the `mergeSchema` analog — the q81
+    *
+    * `txn = Some((appId, version))` is an idempotence token: the commit
+    * carries a `txn` action `{appId, version}` (the public protocol's
+    * application-transaction marker), and [[lastTxnVersion]] reads the
+    * high-water mark back — the exactly-once handshake streaming sinks
+    * use to skip replayed epochs.
+    *
+    * `mergeSchema = true` appends with SCHEMA EVOLUTION (the q81
     * unionByName semantics at the storage layer): columns the batch adds
     * are APPENDED to the table schema via a new `metaData` action; columns
     * the batch lacks are simply absent from its files (the log-schema read
@@ -134,9 +126,9 @@ object DeltaWrite {
     * batch explicitly). Partitioning can never evolve.
     */
   def writeDeltaTable(df: DataFrame, path: String, mode: String,
-      partitionBy: Seq[String], txn: Option[(String, Long)],
-      mergeSchema: Boolean): Long =
-    writeDeltaTableImpl(df, path, mode, partitionBy, txn, mergeSchema)
+      partitionBy: Seq[String] = Nil, txn: Option[(String, Long)] = None,
+      mergeSchema: Boolean = false): Long =
+    writeDeltaTableImpl(df, path, mode, partitionBy, txn, mergeSchema, None)
 
   /** Create (or write into) a COLUMN-MAPPED Delta table: a fresh table
     * gets column-mapping metadata minted for every field — sequential
@@ -155,8 +147,10 @@ object DeltaWrite {
       partitionBy: Seq[String] = Nil, mappingMode: String = "name"): Long = {
     require(mappingMode == "name" || mappingMode == "id",
       s"mappingMode must be name or id, got $mappingMode")
+    val (minted, maxId) = mintMappingMetadata(df.schema)
     writeDeltaTableImpl(df, path, mode, partitionBy, None, mergeSchema = false,
-      createMapped = Some(mappingMode))
+      Some(NewTable(minted, Map("delta.columnMapping.mode" -> mappingMode,
+        "delta.columnMapping.maxColumnId" -> maxId.toString))))
   }
 
   /** Create a ROW-TRACKED Delta table (the public `rowTracking` writer
@@ -187,8 +181,9 @@ object DeltaWrite {
       s"$path already exists — row tracking can only be enabled at table " +
         "creation (enabling later would need a baseRowId backfill of every " +
         "live file)")
-    writeDeltaTableImpl(df, path, "overwrite", partitionBy, None,
-      mergeSchema = false, createRowTracked = true)
+    writeDeltaTableImpl(df, path, "overwrite", partitionBy, None, mergeSchema = false,
+      Some(NewTable(df.schema,
+        mintMaterializedNames() + ("delta.enableRowTracking" -> "true"))))
   }
 
   /** Create an IDENTITY-COLUMN Delta table (the public `identityColumns`
@@ -210,34 +205,59 @@ object DeltaWrite {
   def writeDeltaTableIdentity(df: DataFrame, path: String, idCol: String,
       start: Long = 1L, step: Long = 1L, allowExplicitInsert: Boolean = false,
       partitionBy: Seq[String] = Nil): Long = {
+    import org.apache.spark.sql.functions.col
+    import org.apache.spark.sql.types.{LongType, MetadataBuilder}
     require(step != 0L, "identity step must be non-zero")
     require(!df.columns.contains(idCol),
       s"$idCol must not be supplied at creation — identity values are assigned")
     require(DeltaRead.latestVersion(df.sparkSession, path) < 0,
       s"$path already exists — identity columns can only be declared at " +
         "table creation here (adding one later would need a backfill)")
-    val (withId, n) = assignIdentityValues(df, idCol, start - step, step)
-    val mdb = new org.apache.spark.sql.types.MetadataBuilder()
+    val declared = StructField(idCol, LongType, nullable = false, new MetadataBuilder()
       .putLong("delta.identity.start", start)
       .putLong("delta.identity.step", step)
-      .putBoolean("delta.identity.allowExplicitInsert", allowExplicitInsert)
+      .putBoolean("delta.identity.allowExplicitInsert", allowExplicitInsert).build())
+    val (withId, marks) = mintIdentity(df, Seq(declared))
     // the watermark is the last ISSUED value — absent until one exists
-    if (n > 0) mdb.putLong("delta.identity.highWaterMark", start + step * (n - 1))
-    import org.apache.spark.sql.functions.col
-    val typed = withId.select(
-      col(idCol).as(idCol, mdb.build()) +: df.columns.map(col).toSeq: _*)
+    val md = withHighWaterMarks(StructType(Seq(declared)), marks).head.metadata
+    val typed = withId.select(col(idCol).as(idCol, md) +: df.columns.map(col).toSeq: _*)
     writeDeltaTableImpl(typed, path, "overwrite", partitionBy, None,
-      mergeSchema = false, createIdentity = true)
+      mergeSchema = false, Some(NewTable(typed.schema, Map.empty)))
   }
 
+  /** A fresh table as its creating entry point describes it: the schema
+    * its first `metaData` publishes (column-mapping or identity metadata
+    * included) and the configuration it opts into. The version-0 protocol
+    * derives from both ([[createProtocol]]).
+    */
+  private final case class NewTable(schema: StructType, configuration: Map[String, String])
+
+  /** The version-0 protocol a [[NewTable]] needs. */
+  private def createProtocol(t: NewTable): DeltaRead.Protocol =
+    if (t.configuration.contains("delta.columnMapping.mode"))
+      // column mapping requires reader 2 / writer 5 per the protocol
+      DeltaRead.Protocol(2, 5)
+    else if (t.configuration.get("delta.enableRowTracking").contains("true"))
+      // rowTracking is a writer-only table feature (writer version 7);
+      // domainMetadata carries its high watermark
+      DeltaRead.Protocol(1, 7, Nil, Seq("domainMetadata", "rowTracking"))
+    else if (t.schema.exists(_.metadata.contains("delta.identity.start")))
+      // identityColumns is a writer-only table feature: readers see
+      // plain bigint values; only writers owe the assignment contract
+      DeltaRead.Protocol(1, 7, Nil, Seq("identityColumns"))
+    else DeltaRead.Protocol(1, 2)
+
+  /** The write every entry point shares: `create` describes the table a
+    * fresh path becomes (None: the batch's own schema, no configuration);
+    * an existing table keeps what its log says.
+    */
   private def writeDeltaTableImpl(df0: DataFrame, path: String, mode: String,
       partitionBy: Seq[String], txn: Option[(String, Long)],
-      mergeSchema: Boolean, createMapped: Option[String] = None,
-      createIdentity: Boolean = false,
-      createRowTracked: Boolean = false): Long = {
+      mergeSchema: Boolean, create: Option[NewTable]): Long = {
     require(mode == "append" || mode == "overwrite",
       s"write_mode must be append or overwrite, got $mode")
-    require(!createRowTracked || createMapped.isEmpty,
+    require(!create.exists(c => c.configuration.contains("delta.columnMapping.mode") &&
+        c.configuration.contains("delta.enableRowTracking")),
       "row tracking and column mapping cannot both be enabled at creation here")
     val spark = df0.sparkSession
     val conf = spark.sparkContext.hadoopConfiguration
@@ -269,7 +289,8 @@ object DeltaWrite {
     // republish and an EXCLUSIVE conflict guard (two concurrent
     // identity-generating commits would issue the same values; the loser
     // must refuse, never retry with its already-staged data files).
-    require(existingFull.isDefined || createIdentity ||
+    require(existingFull.isDefined ||
+        create.exists(c => createProtocol(c).writerFeatures.contains("identityColumns")) ||
         !df0.schema.fields.exists(_.metadata.contains("delta.identity.start")),
       s"creating an identity table at $path requires writeDeltaTableIdentity — " +
         "raw delta.identity metadata would publish without the " +
@@ -279,36 +300,27 @@ object DeltaWrite {
     require(identityFields.isEmpty || !mergeSchema,
       s"mergeSchema on identity table $path is not supported — schema " +
         "evolution would republish the identity metadata from the batch side")
-    val (dfI, hwBumps): (DataFrame, Map[String, Long]) =
-      identityFields.foldLeft((dfDG, Map.empty[String, Long])) {
-        case ((cur, bumps), f) =>
-          val step = f.metadata.getLong("delta.identity.step")
-          val lastIssued =
-            if (f.metadata.contains("delta.identity.highWaterMark"))
-              f.metadata.getLong("delta.identity.highWaterMark")
-            else f.metadata.getLong("delta.identity.start") - step
-          if (!cur.columns.contains(f.name)) {
-            val (withId, n) = assignIdentityValues(cur, f.name, lastIssued, step)
-            if (n == 0) (withId, bumps)
-            else (withId, bumps + (f.name -> (lastIssued + step * n)))
-          } else {
-            require(f.metadata.contains("delta.identity.allowExplicitInsert") &&
-                f.metadata.getBoolean("delta.identity.allowExplicitInsert"),
-              s"write to $path supplies identity column ${f.name}, which is " +
-                "GENERATED ALWAYS — omit it to have values assigned")
-            import org.apache.spark.sql.functions.{col, count, lit, max, min, when}
-            val r = cur.agg(
-              count(when(col(f.name).isNull, lit(1))).as("nulls"),
-              max(col(f.name)).as("mx"), min(col(f.name)).as("mn")).collect()(0)
-            require(r.getLong(0) == 0L,
-              s"write to $path: identity column ${f.name} has null values")
-            val extreme = if (r.isNullAt(1)) None
-              else Some(if (step > 0) r.getLong(1) else r.getLong(2))
-            val advances = extreme.exists(e =>
-              (step > 0 && e > lastIssued) || (step < 0 && e < lastIssued))
-            (cur, if (advances) bumps + (f.name -> extreme.get) else bumps)
-          }
-      }
+    val (supplied, omitted) = identityFields.partition(f => dfDG.columns.contains(f.name))
+    val explicitBumps: Seq[(String, Long)] = supplied.flatMap { f =>
+      require(f.metadata.contains("delta.identity.allowExplicitInsert") &&
+          f.metadata.getBoolean("delta.identity.allowExplicitInsert"),
+        s"write to $path supplies identity column ${f.name}, which is " +
+          "GENERATED ALWAYS — omit it to have values assigned")
+      import org.apache.spark.sql.functions.{col, count, lit, max, min, when}
+      val r = dfDG.agg(
+        count(when(col(f.name).isNull, lit(1))).as("nulls"),
+        max(col(f.name)).as("mx"), min(col(f.name)).as("mn")).collect()(0)
+      require(r.getLong(0) == 0L,
+        s"write to $path: identity column ${f.name} has null values")
+      val step = f.metadata.getLong("delta.identity.step")
+      val last = lastIssued(f)
+      val extreme = if (r.isNullAt(1)) None
+        else Some(if (step > 0) r.getLong(1) else r.getLong(2))
+      extreme.filter(e => (step > 0 && e > last) || (step < 0 && e < last))
+        .map(f.name -> _)
+    }
+    val (dfI, mintBumps) = mintIdentity(dfDG, omitted)
+    val hwBumps: Map[String, Long] = mintBumps ++ explicitBumps
     // an assigned identity column lands at the end of the batch — restore
     // the table's column order so the schema gates below compare shapes
     val df = existingFull.filter(_ => identityFields.nonEmpty).map { e =>
@@ -336,19 +348,6 @@ object DeltaWrite {
     existingFull.foreach { s =>
       checkWritable(s.meta, s.protocol, s"write to $path",
         removesData = mode == "overwrite", identityOk = true) }
-    // row tracking: fresh tables opt in via createRowTracked; existing
-    // tables carry delta.enableRowTracking in their configuration. Every
-    // add this commit stages gets a fresh baseRowId range under the
-    // domain-metadata high watermark (re-read per OCC attempt — a
-    // concurrent winner may have advanced it).
-    // assignment is owed whenever the PROTOCOL supports the feature (the
-    // spec's "supported" state); enablement (delta.enableRowTracking)
-    // additionally obliges DML/maintenance to PRESERVE ids
-    val rowTracked = createRowTracked || existingFull.exists(e =>
-      e.meta.configuration.get("delta.enableRowTracking").contains("true") ||
-        e.protocol.writerFeatures.contains("rowTracking"))
-    val snapshotWm = existingFull
-      .map(s => DeltaRead.rowIdHighWaterMark(s.domains)).getOrElse(-1L)
     val version = readVersion + 1
 
     existing.foreach { case (meta, _) =>
@@ -397,27 +396,29 @@ object DeltaWrite {
     // CHECK constraints: the batch must satisfy every stored constraint
     // before anything stages
     existing.foreach { case (meta, _) =>
-      enforceConstraints(df, meta, s"write to $path") }
-
-    // Column mapping: the logical schema carrying the mapping metadata —
-    // an existing mapped table supplies its own; a fresh createMapped
-    // table mints ids + physical names now. None for unmapped tables.
-    val minted: Option[(StructType, Int)] =
-      if (createMapped.isDefined) {
-        require(existing.isEmpty || existing.exists(_._1.mappingMode != "none"),
-          s"$path already exists WITHOUT column mapping — enabling mapping on " +
-            "an existing table would orphan its logical-name files")
-        if (existing.isEmpty) Some(mintMappingMetadata(df.schema)) else None
-      } else None
-    val mappedSchema: Option[StructType] = existing match {
-      case Some((meta, _)) if meta.mappingMode != "none" =>
-        Some(DataType.fromJson(meta.schemaJson).asInstanceOf[StructType])
-      case _ => minted.map(_._1)
+      enforceConstraints(df, meta, s"write to $path")
+      require(meta.mappingMode != "none" ||
+          !create.exists(_.configuration.contains("delta.columnMapping.mode")),
+        s"$path already exists WITHOUT column mapping — enabling mapping on " +
+          "an existing table would orphan its logical-name files")
     }
-    // the mode the staged files must serve: an existing table's stored
-    // mode wins; a fresh createMapped table uses the requested one
-    val effectiveMapping: String = existing.map(_._1.mappingMode)
-      .filter(_ != "none").orElse(createMapped).getOrElse("none")
+
+    // The table this batch writes into: the stored one, or the fresh one
+    // its entry point describes. Its mapping mode, schema (mapping
+    // metadata included) and configuration govern the rest.
+    val created = create.getOrElse(NewTable(df.schema, Map.empty))
+    val current: DeltaRead.Meta = existing.map(_._1).getOrElse(
+      DeltaRead.Meta(created.schema.json, partitionBy, created.configuration))
+    // row tracking: assignment is owed whenever the PROTOCOL supports the
+    // feature (the spec's "supported" state); enablement
+    // (delta.enableRowTracking) additionally obliges DML/maintenance to
+    // PRESERVE ids. Every add this commit stages gets a fresh baseRowId
+    // range under the domain-metadata high watermark (re-read per OCC
+    // attempt — a concurrent winner may have advanced it).
+    val rowTracked = current.configuration.get("delta.enableRowTracking").contains("true") ||
+      existingFull.exists(_.protocol.writerFeatures.contains("rowTracking"))
+    val snapshotWm = existingFull
+      .map(s => DeltaRead.rowIdHighWaterMark(s.domains)).getOrElse(-1L)
 
     // The schema the table carries AFTER this commit: evolved appends
     // keep the old column order and append the batch's new columns. Any
@@ -425,7 +426,7 @@ object DeltaWrite {
     // null-fills optional columns but refuses a required one that is
     // absent from the file — so batch-new columns (absent from old files)
     // and table columns the batch omits (absent from new files) both
-    // widen to nullable.
+    // widen to nullable. Mapped tables keep their metadata-bearing schema.
     val tableSchema: StructType = existing match {
       case Some((meta, _)) if mode == "append" && mergeSchema =>
         val old = DataType.fromJson(meta.schemaJson).asInstanceOf[StructType]
@@ -436,43 +437,10 @@ object DeltaWrite {
           .filterNot(f => old.fieldNames.contains(f.name))
           .map(_.copy(nullable = true))
         StructType(keptOld ++ appended)
-      case _ => mappedSchema.getOrElse(df.schema)
-    }
-
-    // 1) data files: stage inside the table (same filesystem → rename is a
-    // metadata op), then move under fresh names. The staging dir is
-    // dot-prefixed: invisible to any reader listing the table. Mapped
-    // tables stage under the PHYSICAL names (stats keys and partition
-    // directories follow automatically).
-    val (stageDf, stagePartitionBy) = mappedSchema match {
-      case Some(ms) =>
-        val l2p = ms.fieldNames
-          .zip(DeltaRead.physicalSchema(ms).fieldNames).toMap
-        (stagePhysical(df, ms, effectiveMapping),
-          partitionBy.map(c => l2p.getOrElse(c, c)))
-      case None => (df, partitionBy)
-    }
-    val adds = stageDataFiles(stageDf, root, stagePartitionBy)
-
-    // 2) the commit
-    val now = System.currentTimeMillis()
-    val lines = scala.collection.mutable.ArrayBuffer[String]()
-    if (version == 0L)
-      lines += DeltaActions.protocol(
-        if (mappedSchema.isDefined)
-          // column mapping requires reader 2 / writer 5 per the protocol
-          DeltaRead.Protocol(2, 5)
-        else if (createRowTracked)
-          // rowTracking is a writer-only table feature (writer version 7);
-          // domainMetadata carries its high watermark
-          DeltaRead.Protocol(1, 7, Nil, Seq("domainMetadata", "rowTracking"))
-        else if (createIdentity)
-          // identityColumns is a writer-only table feature: readers see
-          // plain bigint values; only writers owe the assignment contract
-          DeltaRead.Protocol(1, 7, Nil, Seq("identityColumns"))
-        else DeltaRead.Protocol(1, 2))
-    txn.foreach { case (appId, txnVersion) =>
-      lines += DeltaActions.txn(appId, txnVersion, now)
+      case Some((meta, _)) if meta.mappingMode != "none" =>
+        DataType.fromJson(meta.schemaJson).asInstanceOf[StructType]
+      case Some(_) => df.schema
+      case None => created.schema
     }
     val schemaChanged = existing.forall { case (meta, _) =>
       !sameSchema(tableSchema,
@@ -482,46 +450,45 @@ object DeltaWrite {
         (mergeSchema && tableSchema.json != meta.schemaJson) ||
         meta.partitionCols != partitionBy
     }
-    if (schemaChanged) {
-      require(mode == "overwrite" || existing.isEmpty || mergeSchema,
-        "unreachable: append checked above")
-      // generated date()/year() over TIMESTAMP: partition values depend on
-      // the writer's session zone — record it so the reader can derive
-      // pruning bounds (absent → derivation disabled, never wrong). Kept
-      // verbatim when already recorded: live files were written under it.
-      val genTz: Map[String, String] =
-        if (GeneratedPruning.needsWriterZone(tableSchema) &&
-            !existing.exists(_._1.configuration.contains(GeneratedPruning.TimeZoneProp)))
-          Map(GeneratedPruning.TimeZoneProp ->
-            spark.sessionState.conf.sessionLocalTimeZone)
-        else Map.empty
-      val config = minted match {
-        case Some((_, maxId)) =>
-          genTz ++ Map(
-            "delta.columnMapping.mode" -> createMapped.getOrElse("name"),
-            "delta.columnMapping.maxColumnId" -> maxId.toString)
-        case None if createRowTracked && existing.isEmpty =>
-          // fresh row-tracked table: enable the feature and MINT the
-          // materialized-column names rewriting commits will preserve
-          // stable ids under (spec: writer-chosen, stored in the table
-          // configuration, outside the table schema)
-          val suffix = UUID.randomUUID().toString.take(8)
-          genTz ++ Map(
-            "delta.enableRowTracking" -> "true",
-            "delta.rowTracking.materializedRowIdColumnName" ->
-              s"_row_id_mat_$suffix",
-            "delta.rowTracking.materializedRowCommitVersionColumnName" ->
-              s"_row_ver_mat_$suffix")
-        case None =>
-          // a schema-changing overwrite must CARRY the existing table
-          // configuration — emitting {} would silently drop properties
-          // like delta.enableChangeDataFeed
-          existing.map(_._1.configuration).getOrElse(Map.empty) ++ genTz
+    // generated date()/year() over TIMESTAMP: partition values depend on
+    // the writer's session zone — record it so the reader can derive
+    // pruning bounds (absent → derivation disabled, never wrong). Kept
+    // verbatim when already recorded: live files were written under it.
+    // A schema-changing overwrite CARRIES the existing configuration —
+    // emitting {} would silently drop properties like
+    // delta.enableChangeDataFeed.
+    val published: DeltaRead.Meta =
+      if (!schemaChanged) current
+      else {
+        require(mode == "overwrite" || existing.isEmpty || mergeSchema,
+          "unreachable: append checked above")
+        val genTz: Map[String, String] =
+          if (GeneratedPruning.needsWriterZone(tableSchema) &&
+              !current.configuration.contains(GeneratedPruning.TimeZoneProp))
+            Map(GeneratedPruning.TimeZoneProp ->
+              spark.sessionState.conf.sessionLocalTimeZone)
+          else Map.empty
+        DeltaRead.Meta(tableSchema.json, partitionBy, current.configuration ++ genTz,
+          existing.map(e => carriedId(e._1)).getOrElse(UUID.randomUUID().toString))
       }
-      lines += DeltaActions.metaData(
-        existing.map(e => carriedId(e._1)).getOrElse(UUID.randomUUID().toString),
-        tableSchema.json, partitionBy, config, now)
+
+    // 1) data files: stage inside the table (same filesystem → rename is a
+    // metadata op), then move under fresh names. The staging dir is
+    // dot-prefixed: invisible to any reader listing the table. Mapped
+    // tables stage under the PHYSICAL names (stats keys and partition
+    // directories follow automatically).
+    val adds = stageBatch(df, root, published)
+
+    // 2) the commit
+    val now = System.currentTimeMillis()
+    val lines = scala.collection.mutable.ArrayBuffer[String]()
+    if (version == 0L) lines += DeltaActions.protocol(createProtocol(created))
+    txn.foreach { case (appId, txnVersion) =>
+      lines += DeltaActions.txn(appId, txnVersion, now)
     }
+    if (schemaChanged)
+      lines += DeltaActions.metaData(published.id, published.schemaJson,
+        published.partitionCols, published.configuration, now)
     // identity watermark advance: same schema, new highWaterMark — one
     // metaData action republishing the STORED schema with bumped marks in
     // the same commit as the rows that consumed them (the spec's writer
@@ -553,14 +520,8 @@ object DeltaWrite {
         ConflictGuard.exclusive(
           existing.map(_._2.map(_.path).toSet).getOrElse(Set.empty), txn.map(_._1))
       else ConflictGuard.blindAppend(txn.map(_._1))
-    // the commitInfo line rebuilds per OCC attempt: a retried commit's
-    // in-commit clock must pass the winner it lost to
-    val committed = commitWithRetry(spark, path, readVersion, guard, attempt =>
-      DeltaActions.commitInfo(existing.flatMap(e => inCommitTimestamp(spark, path, e._1, now)),
-        now, "WRITE", Seq("mode" -> mode)) +: (lines.toSeq ++ addLines(attempt)))
-    maybeAutoCheckpoint(spark, path, committed,
-      existing.map(_._1.configuration).getOrElse(Map.empty))
-    committed
+    commit(spark, path, readVersion, published, "WRITE", Seq("mode" -> mode), guard)(
+      attempt => lines.toSeq ++ addLines(attempt))
   }
 
   /** `numRecords` from an add action's stats JSON — required for
@@ -587,6 +548,17 @@ object DeltaWrite {
         "delta.rowTracking.materializedRowCommitVersionColumnName",
         throw new IllegalStateException(
           "row tracking enabled without materializedRowCommitVersionColumnName"))))
+
+  /** Freshly minted names of the materialized row-id / commit-version
+    * columns rewriting commits preserve stable ids under (spec:
+    * writer-chosen, stored in the table configuration, outside the table
+    * schema).
+    */
+  private def mintMaterializedNames(): Map[String, String] = {
+    val suffix = UUID.randomUUID().toString.take(8)
+    Map("delta.rowTracking.materializedRowIdColumnName" -> s"_row_id_mat_$suffix",
+      "delta.rowTracking.materializedRowCommitVersionColumnName" -> s"_row_ver_mat_$suffix")
+  }
 
   private[io] def rowTrackingFields(rt: Option[RowTracking]): Seq[StructField] =
     rt.toSeq.flatMap(r => Seq(
@@ -674,17 +646,35 @@ object DeltaWrite {
     val (meta, _) = DeltaRead.replayLog(spark, path, None)
     require(meta != null, s"$path has no metaData action in its _delta_log")
     val now = System.currentTimeMillis()
-    val merged = meta.configuration ++ props
-    // the MERGED configuration governs this commit's own clock — enabling
-    // delta.enableInCommitTimestamps stamps the enablement commit itself
-    val resultMeta = meta.copy(configuration = merged)
+    // the MERGED configuration governs this commit's own clock and
+    // checkpoint interval — enabling delta.enableInCommitTimestamps
+    // stamps the enablement commit itself
+    val merged = meta.copy(configuration = meta.configuration ++ props)
     val tail = Seq(DeltaActions.metaData(carriedId(meta), meta.schemaJson,
-      meta.partitionCols, merged, now))
-    val committed = commitWithRetry(spark, path, readVersion,
-      ConflictGuard.exclusive(), _ =>
-      DeltaActions.commitInfo(inCommitTimestamp(spark, path, resultMeta, now), now,
-        "SET TBLPROPERTIES", Seq("properties" ->
-          props.toSeq.sortBy(_._1).map { case (k, v) => s"$k=$v" }.mkString(","))) +: tail)
+      meta.partitionCols, merged.configuration, now))
+    commit(spark, path, readVersion, merged, "SET TBLPROPERTIES",
+      Seq("properties" -> props.toSeq.sortBy(_._1).map { case (k, v) => s"$k=$v" }
+        .mkString(",")), ConflictGuard.exclusive())(_ => tail)
+  }
+
+  /** THE commit step every commit path takes: per OCC attempt, render
+    * `commitInfo` (`operation`, `params`, the in-commit clock of `meta`)
+    * ahead of `actions(attempt)` and publish through [[commitWithRetry]]
+    * under `guard`; then auto-checkpoint. `meta` is the table as this
+    * commit publishes it — its configuration decides both the in-commit
+    * clock and the checkpoint interval. Returns the committed version.
+    */
+  private[io] def commit(spark: SparkSession, path: String, readVersion: Long,
+      meta: DeltaRead.Meta, operation: String, params: Seq[(String, Any)],
+      guard: ConflictGuard)(actions: Long => Seq[String]): Long = {
+    val committed = commitWithRetry(spark, path, readVersion, guard, { attempt =>
+      // the clock re-derives per attempt: a retried commit's in-commit
+      // timestamp must pass the winner it lost to
+      val now = System.currentTimeMillis()
+      val info = DeltaActions.commitInfo(inCommitTimestamp(spark, path, meta, now), now,
+        operation, params)
+      info +: actions(attempt)
+    })
     maybeAutoCheckpoint(spark, path, committed, meta.configuration)
     committed
   }
@@ -698,15 +688,14 @@ object DeltaWrite {
     * commits (compact, restore, SET TBLPROPERTIES, …) consume the
     * multiple-of-k slots so an interleaved workload skips checkpoints
     * indefinitely; the gap trigger fires on whichever commit crosses the
-    * interval, and EVERY commit path calls this (data, DML, and
-    * maintenance alike). A checkpoint is an optimization on top
-    * of an already-published commit, so failures warn and never fail the
-    * caller. The interval is read from the PRE-commit configuration a
-    * caller already holds (a commit that changes the property takes
-    * effect from the next commit — documented, matches the reference
-    * behavior closely enough for a single-writer engine).
+    * interval, and EVERY commit path reaches this through [[commit]]
+    * (data, DML, and maintenance alike). A checkpoint is an optimization
+    * on top of an already-published commit, so failures warn and never
+    * fail the caller. The interval is read from the POST-commit
+    * configuration (delta-spark's rule: the committed snapshot decides),
+    * so a commit that changes the property is governed by its new value.
     */
-  private[io] def maybeAutoCheckpoint(spark: SparkSession, path: String,
+  private def maybeAutoCheckpoint(spark: SparkSession, path: String,
       version: Long, config: Map[String, String]): Unit =
     config.get("delta.checkpointInterval")
       .flatMap(s => scala.util.Try(s.trim.toInt).toOption)
@@ -855,11 +844,7 @@ object DeltaWrite {
     if (newProto != snap.protocol) lines += DeltaActions.protocol(newProto)
 
     // configuration: mint materialized-column names unless already pinned
-    val suffix = UUID.randomUUID().toString.take(8)
-    val merged = Map(
-      "delta.rowTracking.materializedRowIdColumnName" -> s"_row_id_mat_$suffix",
-      "delta.rowTracking.materializedRowCommitVersionColumnName" ->
-        s"_row_ver_mat_$suffix") ++
+    val merged = mintMaterializedNames() ++
       snap.meta.configuration + ("delta.enableRowTracking" -> "true")
     if (merged != snap.meta.configuration)
       lines += DeltaActions.metaData(carriedId(snap.meta), snap.meta.schemaJson,
@@ -878,16 +863,11 @@ object DeltaWrite {
       }
       out :+ DeltaActions.rowTrackingDomain(next - 1)
     }
-    val info = DeltaActions.commitInfo(
-      inCommitTimestamp(spark, path, snap.meta.copy(configuration = merged), now), now,
-      "ENABLE ROW TRACKING", Seq("backfilledFiles" -> toBackfill.size))
     // exclusive: the assigned ranges and backfill set ARE the snapshot —
     // any concurrent commit invalidates both
-    val committed = commitWithRetry(spark, path, readVersion,
-      ConflictGuard.exclusive(),
-      attempt => info +: (lines.toSeq ++ backfillLines(attempt)))
-    maybeAutoCheckpoint(spark, path, committed, snap.meta.configuration)
-    committed
+    commit(spark, path, readVersion, snap.meta.copy(configuration = merged),
+      "ENABLE ROW TRACKING", Seq("backfilledFiles" -> toBackfill.size),
+      ConflictGuard.exclusive())(attempt => lines.toSeq ++ backfillLines(attempt))
   }
 
   /** ADD CONSTRAINT `name` CHECK (`exprSql`): stored as
@@ -1069,6 +1049,38 @@ object DeltaWrite {
     else DataType.fromJson(meta.schemaJson).asInstanceOf[StructType]
       .fields.filter(_.metadata.contains("delta.identity.start")).toSeq
 
+  /** The last value an identity column issued: its high watermark, or
+    * `start - step` before the first.
+    */
+  private def lastIssued(f: StructField): Long =
+    if (f.metadata.contains("delta.identity.highWaterMark"))
+      f.metadata.getLong("delta.identity.highWaterMark")
+    else f.metadata.getLong("delta.identity.start") - f.metadata.getLong("delta.identity.step")
+
+  /** The one identity-minting fold — appends, MERGE's unmatched inserts
+    * and [[writeDeltaTableIdentity]]'s first batch: each of `fields` (all
+    * omitted by `df`) gets gap-free values past its last issued one
+    * ([[assignIdentityValues]]). Returns the batch with the columns
+    * appended and the new high watermark of every column that issued a
+    * value.
+    */
+  private[io] def mintIdentity(df: DataFrame,
+      fields: Seq[StructField]): (DataFrame, Map[String, Long]) =
+    fields.foldLeft((df, Map.empty[String, Long])) { case ((cur, marks), f) =>
+      val step = f.metadata.getLong("delta.identity.step")
+      val (withId, n) = assignIdentityValues(cur, f.name, lastIssued(f), step)
+      (withId, if (n == 0) marks else marks + (f.name -> (lastIssued(f) + step * n)))
+    }
+
+  /** `schema` with each named identity column's high watermark set. */
+  private[io] def withHighWaterMarks(schema: StructType,
+      marks: Map[String, Long]): StructType =
+    StructType(schema.fields.map { f =>
+      marks.get(f.name).fold(f)(hw => f.copy(metadata =
+        new org.apache.spark.sql.types.MetadataBuilder().withMetadata(f.metadata)
+          .putLong("delta.identity.highWaterMark", hw).build()))
+    })
+
   /** Identity assignment: append `name` holding gap-free values
     * `lastIssued + step, lastIssued + 2·step, …` in the batch's
     * partition-then-row order. `zipWithIndex` is the one legitimate RDD
@@ -1076,10 +1088,10 @@ object DeltaWrite {
     * count-partials-then-offset pass (Spark's windowless row_number would
     * single-partition the batch); the batch localCheckpoints first so the
     * count job and the map job see the same rows in the same order.
-    * Returns the frame and the batch row count (caller derives the new
-    * watermark as `lastIssued + step·n`).
+    * Returns the frame and the batch row count (the new watermark is
+    * `lastIssued + step·n`).
     */
-  private[io] def assignIdentityValues(df: DataFrame, name: String,
+  private def assignIdentityValues(df: DataFrame, name: String,
       lastIssued: Long, step: Long): (DataFrame, Long) = {
     import org.apache.spark.sql.types.LongType
     val spark = df.sparkSession
@@ -1102,16 +1114,17 @@ object DeltaWrite {
     * None when the feature is off. Re-derive PER OCC ATTEMPT: a retried
     * commit must clock past the winner it lost to, not its own first try.
     */
-  private[io] def inCommitTimestamp(spark: SparkSession, path: String,
+  private def inCommitTimestamp(spark: SparkSession, path: String,
       meta: DeltaRead.Meta, now: Long): Option[Long] = {
     if (!meta.configuration.get("delta.enableInCommitTimestamps").contains("true"))
       return None
     val dir = new Path(new Path(path), "_delta_log")
     val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
     // last commit's in-commit clock (its wall-clock timestamp as the
-    // pre-enablement fallback); 0 when the JSON tail was cleaned — the
-    // wall clock then dominates, which stays monotone
-    val prev = DeltaRead.listCommits(fs, dir).lastOption
+    // pre-enablement fallback); 0 when the JSON tail was cleaned or no
+    // log exists yet (a clone's version 0) — the wall clock then
+    // dominates, which stays monotone
+    val prev = (if (fs.exists(dir)) DeltaRead.listCommits(fs, dir).lastOption else None)
       .flatMap { case (v, _) => DeltaRead.commitInfo(fs, dir, v) }
       .flatMap(DeltaActions.commitTimestamp).getOrElse(0L)
     Some(math.max(now, prev + 1))
@@ -1165,26 +1178,20 @@ object DeltaWrite {
     // consumer that saw them. Keep, per identity column, the mark
     // furthest along its step direction.
     val metaThen: DeltaRead.Meta = {
-      val idNow = identityFieldsOf(metaNow).map(f => f.name -> f).toMap
+      val idNow = identityFieldsOf(metaNow)
       if (idNow.isEmpty) metaThen0
       else {
         val hwKey = "delta.identity.highWaterMark"
+        val marksNow = idNow.filter(_.metadata.contains(hwKey))
+          .map(f => f.name -> f.metadata.getLong(hwKey)).toMap
         val thenSchema = DataType.fromJson(metaThen0.schemaJson).asInstanceOf[StructType]
-        val adj = StructType(thenSchema.fields.map { f =>
-          idNow.get(f.name).filter(_.metadata.contains(hwKey)) match {
-            case Some(nf) =>
-              val step = f.metadata.getLong("delta.identity.step")
-              val hwNow = nf.metadata.getLong(hwKey)
-              val keep =
-                if (!f.metadata.contains(hwKey)) hwNow
-                else if (step > 0) math.max(f.metadata.getLong(hwKey), hwNow)
-                else math.min(f.metadata.getLong(hwKey), hwNow)
-              f.copy(metadata = new org.apache.spark.sql.types.MetadataBuilder()
-                .withMetadata(f.metadata).putLong(hwKey, keep).build())
-            case None => f
-          }
-        })
-        metaThen0.copy(schemaJson = adj.json)
+        val keep = thenSchema.fields.flatMap(f => marksNow.get(f.name).map { hwNow =>
+          val step = f.metadata.getLong("delta.identity.step")
+          f.name -> (if (!f.metadata.contains(hwKey)) hwNow
+            else if (step > 0) math.max(f.metadata.getLong(hwKey), hwNow)
+            else math.min(f.metadata.getLong(hwKey), hwNow))
+        }).toMap
+        metaThen0.copy(schemaJson = withHighWaterMarks(thenSchema, keep).json)
       }
     }
     val nowByPath = liveNow.map(f => f.path -> f).toMap
@@ -1214,15 +1221,9 @@ object DeltaWrite {
       lines += DeltaActions.add(f.path, f.partitionValues, f.size, f.modificationTime,
         dataChange = true, f.stats, f.dv, f.baseRowId, f.defaultRowCommitVersion)
     }
-    val committed = commitWithRetry(spark, path, readVersion,
-      ConflictGuard.exclusive(toRemove.map(_.path).toSet), _ =>
-      DeltaActions.commitInfo(
-        inCommitTimestamp(spark, path, if (metaChanged) metaThen else metaNow, now),
-        now, "RESTORE", Seq("version" -> toVersion)) +: lines.toSeq)
-    // effective config after the restore commit governs the interval
-    maybeAutoCheckpoint(spark, path, committed,
-      (if (metaChanged) metaThen else metaNow).configuration)
-    committed
+    commit(spark, path, readVersion, if (metaChanged) metaThen else metaNow, "RESTORE",
+      Seq("version" -> toVersion), ConflictGuard.exclusive(toRemove.map(_.path).toSet))(
+      _ => lines.toSeq)
   }
 
   /** SHALLOW CLONE: create a NEW Delta table at `dest` whose version-0
@@ -1252,8 +1253,6 @@ object DeltaWrite {
     val srcQualified = fs.makeQualified(srcRoot).toUri.getPath
     val now = System.currentTimeMillis()
     val lines = scala.collection.mutable.ArrayBuffer[String]()
-    lines += DeltaActions.commitInfo(inCommitTimestamp(spark, dest, meta, now), now,
-      "CLONE", Seq("source" -> src))
     // the SOURCE's replayed protocol, features included — a clone that
     // re-derived (reader, writer) from the mapping mode would drop
     // declared features (typeWidening, deletionVectors) from its only
@@ -1286,8 +1285,10 @@ object DeltaWrite {
       lines += DeltaActions.add(abs, f.partitionValues, f.size, f.modificationTime,
         dataChange = true, f.stats, portable, f.baseRowId, f.defaultRowCommitVersion)
     }
-    publishCommit(fs, new Path(destRoot, "_delta_log"), 0L, lines.toSeq)
-    0L
+    // a fresh table: a concurrent creator of `dest` wins version 0 and
+    // this commit refuses through the conflict check
+    commit(spark, dest, -1L, meta, "CLONE", Seq("source" -> src),
+      ConflictGuard.exclusive())(_ => lines.toSeq)
   }
 
   /** ALTER COLUMN TYPE (widening only): commit a metaData action whose
@@ -1483,7 +1484,6 @@ object DeltaWrite {
       }.collect().toMap
     }
     val lines =
-      DeltaActions.commitInfo(None, now, "CONVERT", Seq("numFiles" -> files.size.toString)) +:
       DeltaActions.protocol(DeltaRead.Protocol(1, 2)) +:
       DeltaActions.metaData(UUID.randomUUID().toString, schema.json, partitionCols,
         Map.empty, now) +:
@@ -1491,8 +1491,8 @@ object DeltaWrite {
         DeltaActions.add(encodeFilePath(rel), pv.toMap, size, now, dataChange = true,
           statsByRel(rel), None, None, None)
       }
-    publishCommit(fs, new Path(root, "_delta_log"), 0L, lines)
-    0L
+    commit(spark, path, -1L, DeltaRead.Meta(schema.json, partitionCols), "CONVERT",
+      Seq("numFiles" -> files.size.toString), ConflictGuard.exclusive())(_ => lines)
   }
 
   /** ALTER TABLE ADD COLUMN — schema evolution as ONE metadata-only
@@ -1656,12 +1656,9 @@ object DeltaWrite {
     val now = System.currentTimeMillis()
     val tail = protocol.map(DeltaActions.protocol).toSeq :+ DeltaActions.metaData(
       carriedId(meta), updated.json, meta.partitionCols, configuration, now)
-    val committed = commitWithRetry(spark, path, readVersion,
-      ConflictGuard.exclusive(), _ =>
-      DeltaActions.commitInfo(inCommitTimestamp(spark, path, meta, now), now,
-        operation, params) +: tail)
-    maybeAutoCheckpoint(spark, path, committed, meta.configuration)
-    committed
+    commit(spark, path, readVersion,
+      meta.copy(schemaJson = updated.json, configuration = configuration), operation,
+      params, ConflictGuard.exclusive())(_ => tail)
   }
 
   /** `proto` upgraded to writer version 7 declaring `extra`. Crossing to
@@ -1686,21 +1683,10 @@ object DeltaWrite {
     * whole by version, never pruned by partition. Returns (relative path,
     * size) per staged file.
     */
-  private[io] def stageCdcFiles(df: DataFrame, root: Path): Seq[(String, Long)] = {
-    val conf = df.sparkSession.sparkContext.hadoopConfiguration
-    val fs = root.getFileSystem(conf)
-    val staging = new Path(root, s".staging-cdc-${UUID.randomUUID()}")
-    stagedWriter(df).save(staging.toString)
-    val out = listParquet(fs, staging).map { p =>
-      val fresh = s"_change_data/cdc-${UUID.randomUUID()}.snappy.parquet"
-      val dest = new Path(root, fresh)
-      fs.mkdirs(dest.getParent)
-      require(fs.rename(p, dest), s"failed to move $p to $dest")
-      (fresh, fs.getFileStatus(dest).getLen)
-    }
-    fs.delete(staging, true)
-    out
-  }
+  private[io] def stageCdcFiles(df: DataFrame, root: Path): Seq[(String, Long)] =
+    stageAndMove(df, root, ".staging-cdc-", Nil)(
+      _ => s"_change_data/cdc-${UUID.randomUUID()}.snappy.parquet")
+      .map { case (fresh, st) => (fresh, st.getLen) }
 
   /** The DATA-file read schema for a raw compaction rewrite: the
     * non-partition fields, under PHYSICAL names on a name-mapped table
@@ -1712,11 +1698,7 @@ object DeltaWrite {
     // `parquet.field.id` metadata through the read schema, so Spark both
     // resolves source columns by footer id (the caller flips the read
     // flag) and emits ids into the staged footers
-    val phys = meta.mappingMode match {
-      case "name" => DeltaRead.physicalSchema(schema)
-      case "id" => DeltaRead.physicalSchemaWithIds(schema)
-      case _ => schema
-    }
+    val phys = DeltaRead.physicalLayout(schema, meta.mappingMode)
     val l2p = schema.fieldNames.zip(phys.fieldNames).toMap
     val physPartCols = meta.partitionCols.map(c => l2p.getOrElse(c, c))
     StructType(phys.fields.filterNot(f => physPartCols.contains(f.name)))
@@ -1736,9 +1718,9 @@ object DeltaWrite {
   }
 
   /** A staging writer that emits `parquet.field.id` footer metadata when
-    * the batch schema carries it (id-mapped staging) — via
-    * [[FieldIdParquetFileFormat]]'s job-conf override, so the session's
-    * write flag is never touched. Plain parquet otherwise.
+    * the batch schema carries it (id-mapped staging, [[stagePhysical]]) —
+    * via [[FieldIdParquetFileFormat]]'s job-conf override, so the
+    * session's write flag is never touched. Plain parquet otherwise.
     */
   private[io] def stagedWriter(
       df: DataFrame): org.apache.spark.sql.DataFrameWriter[org.apache.spark.sql.Row] =
@@ -1865,7 +1847,6 @@ object DeltaWrite {
       schema.fields.filterNot(f => meta.partitionCols.contains(f.name)))
     val conf = spark.sparkContext.hadoopConfiguration
     val root = new Path(path)
-    val fs = root.getFileSystem(conf)
     val now = System.currentTimeMillis()
 
     val staged = groups.toSeq.flatMap { case (pv, files) =>
@@ -1874,7 +1855,6 @@ object DeltaWrite {
       val dirSegs = pv.toSeq.sortBy(_._1).map { case (k, v) => s"$k=$v" }
       val nOut = math.max(1,
         math.ceil(files.map(_.size).sum.toDouble / targetBytes).toInt)
-      val staging = new Path(root, s".opt-staging-${UUID.randomUUID()}")
       val (dvFiles, plainFiles) = files.partition(_.dv.isDefined)
       val plainDf =
         if (plainFiles.isEmpty) None
@@ -1897,47 +1877,51 @@ object DeltaWrite {
           Some(rt.fold(shaped)(r =>
             materializeRowIds(spark, path, r, dvFiles, shaped)))
         }
-      stagedWriter(arrange((plainDf.toSeq ++ dvDf).reduce(_ unionByName _), nOut))
-        .save(staging.toString)
-      val out = listParquet(fs, staging).map { p =>
-        val fresh = (dirSegs :+ s"part-${UUID.randomUUID()}.snappy.parquet").mkString("/")
-        val dest = new Path(root, fresh)
-        fs.mkdirs(dest.getParent)
-        require(fs.rename(p, dest), s"failed to move $p to $dest")
-        StagedFile(encodeFilePath(fresh), pv, fs.getFileStatus(dest).getLen,
-          footerStats(conf, dest))
-      }
-      fs.delete(staging, true)
-      out
+      val arranged = arrange((plainDf.toSeq ++ dvDf).reduce(_ unionByName _), nOut)
+      stageAndMove(arranged, root, ".opt-staging-", Nil)(
+        _ => (dirSegs :+ s"part-${UUID.randomUUID()}.snappy.parquet").mkString("/"))
+        .map { case (fresh, st) =>
+          StagedFile(encodeFilePath(fresh), pv, st.getLen, footerStats(conf, st.getPath)) }
     }
     val rewritten = groups.values.flatten.toSeq
     val removes = rewritten.map(f => DeltaActions.remove(f.path, now, dataChange = false, None))
     val addLines = renderAdds(spark, path, tracked,
       DeltaRead.rowIdHighWaterMark(snap.domains), readVersion + 1,
       staged, now, dataChange = false) _
-    val committed = commitWithRetry(spark, path, readVersion,
-      ConflictGuard.disjointRewrite(rewritten.map(_.path).toSet), attempt =>
-      DeltaActions.commitInfo(inCommitTimestamp(spark, path, meta, now), now,
-        "OPTIMIZE", params) +: (addLines(attempt) ++ removes))
-    maybeAutoCheckpoint(spark, path, committed, meta.configuration)
-    committed
+    commit(spark, path, readVersion, meta, "OPTIMIZE", params,
+      ConflictGuard.disjointRewrite(rewritten.map(_.path).toSet))(
+      attempt => addLines(attempt) ++ removes)
   }
 
-  /** Rename a logical-name batch to a mapped table's physical layout for
-    * staging. Mode `name` stages under the physical names; mode `id`
-    * ADDITIONALLY carries `parquet.field.id` metadata on every field (via
-    * [[DeltaRead.physicalSchemaWithIds]]) and flips the session's
-    * field-id write flag, so the staged footers embed the ids that are
-    * the mode's resolution authority — a conforming id-mode reader never
-    * looks at the column names at all.
+  /** Rename a logical-name batch to the table's physical layout for
+    * staging, `extra` columns riding along after the table's; unmapped
+    * tables stage the batch as it is. Mode `name` stages under the
+    * physical names; mode `id` ADDITIONALLY carries `parquet.field.id`
+    * metadata on every field (via [[DeltaRead.physicalSchemaWithIds]]),
+    * which [[stagedWriter]] turns into footer field ids — the mode's
+    * resolution authority: a conforming id-mode reader never looks at the
+    * column names at all.
     */
-  private[io] def stagePhysical(df: DataFrame, ms: StructType,
-      mappingMode: String): DataFrame = {
-    val phys = mappingMode match {
-      case "id" => DeltaRead.physicalSchemaWithIds(ms)
-      case _ => DeltaRead.physicalSchema(ms)
+  private[io] def stagePhysical(df: DataFrame, meta: DeltaRead.Meta,
+      extra: org.apache.spark.sql.Column*): DataFrame =
+    if (meta.mappingMode == "none") df
+    else {
+      val ms = DataType.fromJson(meta.schemaJson).asInstanceOf[StructType]
+      df.select(DeltaRead.physicalSelect(ms,
+        DeltaRead.physicalLayout(ms, meta.mappingMode)) ++ extra: _*)
     }
-    df.select(DeltaRead.physicalSelect(ms, phys): _*)
+
+  /** Stage a logical-name batch as data files of the table `meta`
+    * describes — the one staging path of writes and DML: the batch and
+    * its partition columns rename to the physical layout
+    * ([[stagePhysical]]), then [[stageDataFiles]] writes and publishes.
+    */
+  private[io] def stageBatch(df: DataFrame, root: Path,
+      meta: DeltaRead.Meta): Seq[StagedFile] = {
+    val ms = DataType.fromJson(meta.schemaJson).asInstanceOf[StructType]
+    val l2p = ms.fieldNames.zip(DeltaRead.physicalSchema(ms).fieldNames).toMap
+    stageDataFiles(stagePhysical(df, meta), root,
+      meta.partitionCols.map(c => l2p.getOrElse(c, c)))
   }
 
   /** Mint column-mapping metadata for a fresh name-mapped table: every
@@ -2500,35 +2484,46 @@ object DeltaWrite {
   private[io] def stageDataFiles(df: DataFrame, root: Path,
       partitionBy: Seq[String]): Seq[StagedFile] = {
     val conf = df.sparkSession.sparkContext.hadoopConfiguration
-    val fs = root.getFileSystem(conf)
-    val staging = new Path(root, s".staging-${UUID.randomUUID()}")
-    val writer = stagedWriter(df)
-    if (partitionBy.nonEmpty) writer.partitionBy(partitionBy: _*)
-    writer.save(staging.toString)
-
-    val staged = listParquet(fs, staging)
-    val adds = staged.map { p =>
-      val rel = relativize(staging, p)
-      val dirPart = rel.split('/').dropRight(1)
+    stageAndMove(df, root, ".staging-", partitionBy) { rel =>
+      (rel.split('/').dropRight(1) :+ s"part-${UUID.randomUUID()}.snappy.parquet").mkString("/")
+    }.map { case (fresh, st) =>
       // partition dir names are percent-ESCAPED by Spark's writer; the
       // log's partitionValues record the TRUE value (storing the escaped
       // string would mis-serve every read of the column), and the log's
       // path is [[encodeFilePath]]'d so the reader's percent-decode lands
       // back on the on-disk name
-      val pv = dirPart.collect { case s if s.contains('=') =>
+      val pv = fresh.split('/').dropRight(1).collect { case s if s.contains('=') =>
         val Array(k, v) = s.split("=", 2)
         k -> org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
           .unescapePathName(v)
       }.toMap
-      val fresh = (dirPart :+ s"part-${UUID.randomUUID()}.snappy.parquet").mkString("/")
+      StagedFile(encodeFilePath(fresh), pv, st.getLen, footerStats(conf, st.getPath))
+    }
+  }
+
+  /** Write `df` (hive-partitioned by `partitionBy`) into a fresh staging
+    * dir `<prefix><uuid>` under `root` — dot-prefixed, so no reader lists
+    * it — then move each part file to `root/<name(rel)>`, `rel` being its
+    * path inside the staging dir, and drop the staging dir. Returns each
+    * moved file's table-relative name and status.
+    */
+  private def stageAndMove(df: DataFrame, root: Path, prefix: String,
+      partitionBy: Seq[String])(name: String => String)
+      : Seq[(String, org.apache.hadoop.fs.FileStatus)] = {
+    val fs = root.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
+    val staging = new Path(root, s"$prefix${UUID.randomUUID()}")
+    val writer = stagedWriter(df)
+    if (partitionBy.nonEmpty) writer.partitionBy(partitionBy: _*)
+    writer.save(staging.toString)
+    val out = listParquet(fs, staging).map { p =>
+      val fresh = name(relativize(staging, p))
       val dest = new Path(root, fresh)
       fs.mkdirs(dest.getParent)
       require(fs.rename(p, dest), s"failed to move $p to $dest")
-      StagedFile(encodeFilePath(fresh), pv, fs.getFileStatus(dest).getLen,
-        footerStats(conf, dest))
+      (fresh, fs.getFileStatus(dest))
     }
     fs.delete(staging, true)
-    adds
+    out
   }
 
   /** The LOG form of an on-disk relative path. The protocol's reader rule

@@ -9,6 +9,9 @@ import org.scalatest.funsuite.AnyFunSuite
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.session
   lazy val sf: String = "/root/testdata/sf0.001"
+
+  /** A fresh scratch directory, removed when the JVM exits ([[Harness.tmp]]). */
+  def tmp(prefix: String): String = Harness.tmp(prefix)
 }
 
 object SparkSpec {

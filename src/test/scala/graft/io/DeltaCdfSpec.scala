@@ -1,7 +1,5 @@
 package graft.io
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -13,9 +11,6 @@ import graft.SparkSpec
   */
 class DeltaCdfSpec extends SparkSpec {
   import spark.implicits._
-
-  private def tmp(prefix: String): String =
-    Files.createTempDirectory(prefix).toString
 
   private def feedRows(path: String, from: Long, to: Option[Long] = None) =
     DeltaRead.changeFeed(spark, path, from, to)

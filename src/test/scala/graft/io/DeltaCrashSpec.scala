@@ -1,6 +1,5 @@
 package graft.io
 
-import java.nio.file.Files
 import java.util.concurrent.atomic.AtomicInteger
 
 import scala.util.Try
@@ -59,13 +58,15 @@ object CrashFs {
   }
 }
 
-/** Crash-point matrix for the shared DML commit: a MERGE (copy-on-write
-  * and deletion-vector) dies at each phase of its commit — after the data
+/** Crash-point matrix for the commit paths: a MERGE (copy-on-write and
+  * deletion-vector) dies at each phase of its commit — after the data
   * files are staged, after the CDC files are staged, after the temp commit
   * JSON is written, after the put-if-absent publish, and before the
   * auto-checkpoint. Readers must then see version N with the pre-merge
   * rows or N+1 with the post-merge rows and change feed, never a mix, and
-  * the next MERGE must commit cleanly on top.
+  * the next MERGE must commit cleanly on top. An append, an overwrite and
+  * a compaction run the same phases minus the CDC one (they stage no
+  * change files), each followed by a clean append.
   */
 class DeltaCrashSpec extends SparkSpec {
   import spark.implicits._
@@ -73,7 +74,7 @@ class DeltaCrashSpec extends SparkSpec {
   spark.sparkContext.hadoopConfiguration.set("fs.crash.impl", classOf[CrashFs].getName)
 
   private def table(): String = {
-    val t = "crash://" + Files.createTempDirectory("graft_crash").toString + "/t"
+    val t = "crash://" + tmp("graft_crash") + "/t"
     DeltaWrite.writeDeltaTable(
       (0L until 40L).map(i => (i, i * 10)).toDF("id", "v").repartition(2), t, "overwrite")
     DeltaWrite.setTableProperties(spark, t, Map(
@@ -107,29 +108,45 @@ class DeltaCrashSpec extends SparkSpec {
     ("after the temp commit JSON is written", "rename", logTmp, false, false),
     ("after the put-if-absent publish", "rename", logTmp, true, true),
     ("before the auto-checkpoint", "create", ".cp-staging-", false, true))
+  // a commit that stages no change files goes from its data files straight
+  // to the temp commit JSON, so its first phase traps that create
+  private val plainPhases =
+    phases.head.copy(_2 = phases(1)._2, _3 = phases(1)._3) +: phases.drop(2)
+
+  private def lastCheckpoint(t: String): Option[Long] = DeltaRead.readLastCheckpoint(
+    new Path(t).getFileSystem(spark.sparkContext.hadoopConfiguration),
+    new Path(t, "_delta_log")).map(_.version)
+
+  /** Arms the trap, runs `commit` and checks the crash outcome: the head
+    * is N or N+1 per `lands`, the rows are `landed` or `before`, version N
+    * time-travels to `before`, and no checkpoint of N+1 survives.
+    */
+  private def crash(t: String, phase: String, op: String, marker: String, after: Boolean,
+      lands: Boolean, before: Map[Long, Long], landed: Map[Long, Long])(
+      commit: => Long): Long = {
+    val n = DeltaRead.latestVersion(spark, t)
+    CrashFs.arm(op, marker, after)
+    val outcome = Try(commit)
+    assert(CrashFs.disarm(), s"no $op of a $marker path happened")
+    // the checkpoint is best-effort: its failure never fails the commit
+    if (marker == ".cp-staging-") assert(outcome.isSuccess, outcome.toString)
+    else assert(Iterator.iterate(outcome.failed.get)(_.getCause).takeWhile(_ != null)
+      .exists(e => String.valueOf(e.getMessage).contains("injected crash")), outcome.toString)
+
+    val v = DeltaRead.latestVersion(spark, t)
+    assert(v == (if (lands) n + 1 else n), s"$phase: head is v$v")
+    assert(rows(t) == (if (lands) landed else before))
+    assert(rows(t, Some(n)) == before)
+    assert(!lastCheckpoint(t).contains(n + 1), "no checkpoint survives a crash before it")
+    v
+  }
 
   for (dv <- Seq(false, true); (phase, op, marker, after, lands) <- phases)
     test(s"${if (dv) "DV" else "COW"} merge crashing $phase leaves version N or N+1, never torn") {
       val t = table()
-      val n = DeltaRead.latestVersion(spark, t)
       val before = rows(t)
       val after1 = applied(before, 30L, 100L)
-      CrashFs.arm(op, marker, after)
-      val outcome = Try(upsert(t, 30L, 100L, dv))
-      assert(CrashFs.disarm(), s"no $op of a $marker path happened")
-      // the checkpoint is best-effort: its failure never fails the merge
-      if (marker == ".cp-staging-") assert(outcome.isSuccess, outcome.toString)
-      else assert(Iterator.iterate(outcome.failed.get)(_.getCause).takeWhile(_ != null)
-        .exists(e => String.valueOf(e.getMessage).contains("injected crash")), outcome.toString)
-
-      val v = DeltaRead.latestVersion(spark, t)
-      assert(v == (if (lands) n + 1 else n), s"$phase: head is v$v")
-      assert(rows(t) == (if (lands) after1 else before))
-      assert(rows(t, Some(n)) == before)
-      def lastCheckpoint = DeltaRead.readLastCheckpoint(
-        new Path(t).getFileSystem(spark.sparkContext.hadoopConfiguration),
-        new Path(t, "_delta_log")).map(_.version)
-      assert(!lastCheckpoint.contains(n + 1), "no checkpoint survives a crash before it")
+      val v = crash(t, phase, op, marker, after, lands, before, after1)(upsert(t, 30L, 100L, dv))
       if (lands)
         assert(changes(t, v) == Map("update_preimage" -> 10L,
           "update_postimage" -> 10L, "insert" -> 10L))
@@ -139,6 +156,35 @@ class DeltaCrashSpec extends SparkSpec {
       val next = upsert(t, 45L, 1000L, dv)
       assert(next == v + 1)
       assert(rows(t) == applied(model, 45L, 1000L))
-      assert(lastCheckpoint.contains(next), "the next commit auto-checkpoints")
+      assert(lastCheckpoint(t).contains(next), "the next commit auto-checkpoints")
+    }
+
+  private def batch(lo: Long, hi: Long, mult: Long) =
+    (lo until hi).map(i => (i, i * mult)).toDF("id", "v").repartition(2)
+
+  // (name, the commit, its effect on the rows)
+  private val others: Seq[(String, String => Long, Map[Long, Long] => Map[Long, Long])] = Seq(
+    ("append", t => DeltaWrite.writeDeltaTable(batch(40L, 60L, 10L), t, "append"),
+      _ ++ (40L until 60L).map(i => i -> i * 10)),
+    ("overwrite", t => DeltaWrite.writeDeltaTable(batch(0L, 20L, 7L), t, "overwrite"),
+      _ => (0L until 20L).map(i => i -> i * 7).toMap),
+    ("compact", t => DeltaWrite.compact(spark, t), identity))
+
+  for ((name, commit, effect) <- others; (phase, op, marker, after, lands) <- plainPhases)
+    test(s"$name crashing $phase leaves version N or N+1, never torn") {
+      val t = table()
+      val before = rows(t)
+      val files = DeltaRead.replayFull(spark, t, None).files.size
+      val v = crash(t, phase, op, marker, after, lands, before, effect(before))(commit(t))
+      // a compaction changes no row: the live file set tells N from N+1
+      if (name == "compact")
+        assert((DeltaRead.replayFull(spark, t, None).files.size < files) == lands)
+
+      // the next commit lands cleanly on top of whatever landed
+      val model = if (lands) effect(before) else before
+      val next = DeltaWrite.writeDeltaTable(batch(100L, 110L, 3L), t, "append")
+      assert(next == v + 1)
+      assert(rows(t) == model ++ (100L until 110L).map(i => i -> i * 3))
+      assert(lastCheckpoint(t).contains(next), "the next commit auto-checkpoints")
     }
 }

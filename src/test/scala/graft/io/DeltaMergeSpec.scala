@@ -1,7 +1,5 @@
 package graft.io
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -12,9 +10,6 @@ import graft.SparkSpec
   */
 class DeltaMergeSpec extends SparkSpec {
   import spark.implicits._
-
-  private def tmp(prefix: String): String =
-    Files.createTempDirectory(prefix).toString
 
   private def rows(path: String, versionAsOf: Option[Long] = None): Seq[(Long, String, Long)] =
     DeltaRead.readDeltaTable(spark, path, versionAsOf)

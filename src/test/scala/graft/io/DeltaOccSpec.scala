@@ -1,6 +1,5 @@
 package graft.io
 
-import java.nio.file.Files
 import java.util.ConcurrentModificationException
 import java.util.concurrent.{CountDownLatch, Executors, TimeUnit}
 
@@ -19,9 +18,6 @@ import graft.SparkSpec
   */
 class DeltaOccSpec extends SparkSpec {
   import spark.implicits._
-
-  private def tmp(prefix: String): String =
-    Files.createTempDirectory(prefix).toString
 
   private def fsOf(path: String) =
     new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)

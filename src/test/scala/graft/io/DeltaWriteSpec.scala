@@ -13,9 +13,6 @@ import graft.SparkSpec
 class DeltaWriteSpec extends SparkSpec {
   import spark.implicits._
 
-  private def tmp(prefix: String): String =
-    Files.createTempDirectory(prefix).toString
-
   test("overwrite then append round-trip: replay, time travel, changesSince, latestVersion") {
     val table = tmp("graft_dw1")
     val d0 = Seq((1L, "a"), (2L, "b")).toDF("id", "v")
@@ -227,6 +224,12 @@ class DeltaWriteSpec extends SparkSpec {
     assert(DeltaRead.versionAtTimestamp(spark, table, vals(1)) == 2L)
     assert(DeltaRead.readDeltaTable(spark, table, timestampAsOf = Some(vals(1)))
       .count() == 2L)
+    // a shallow clone carries the configuration: its version 0, which has
+    // no commit before it, stamps the clock too
+    val clone = tmp("graft_dw_ict_clone")
+    assert(DeltaWrite.cloneShallow(spark, table, clone) == 0L)
+    assert(new String(java.nio.file.Files.readAllBytes(
+      Paths.get(clone, "_delta_log", f"${0L}%020d.json")), "UTF-8").contains("inCommitTimestamp"))
   }
 
   test("writer protocol gate: appendOnly, unhonored writer features, schema obligations refuse") {
@@ -972,6 +975,11 @@ class DeltaWriteSpec extends SparkSpec {
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
     assert(rows == Seq((2L, 99L), (3L, 3L), (4L, 4L), (5L, 5L),
       (6L, 6L), (7L, 7L), (8L, 8L)), rows.toString)
+    // the interval the commit publishes governs it: lowering it to 1
+    // checkpoints the property commit itself
+    val v5 = DeltaWrite.setTableProperties(spark, table,
+      Map("delta.checkpointInterval" -> "1"))                            // v5
+    assert(lastCp().contains(v5), s"SET TBLPROPERTIES at v$v5 must checkpoint: ${lastCp()}")
   }
 
   test("generated-column partition pruning: a ts range prunes day=date(ts) partitions") {

@@ -17,9 +17,6 @@ import graft.SparkSpec
 class DvWriteSpec extends SparkSpec {
   import spark.implicits._
 
-  private def tmp(prefix: String): String =
-    Files.createTempDirectory(prefix).toString
-
   private def ids(path: String, versionAsOf: Option[Long] = None): Seq[Long] =
     DeltaRead.readDeltaTable(spark, path, versionAsOf)
       .select("id").orderBy("id").collect().map(_.getLong(0)).toSeq

@@ -1,7 +1,5 @@
 package graft.io
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -14,8 +12,6 @@ import graft.SparkSpec
   */
 class LogCompactionSpec extends SparkSpec {
   import spark.implicits._
-
-  private def tmp(p: String): String = Files.createTempDirectory(p).toString
 
   test("compacted range replays identically; substitution survives JSON loss") {
     val path = tmp("graft_logc_") + "/t"

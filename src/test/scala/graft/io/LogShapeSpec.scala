@@ -1,7 +1,5 @@
 package graft.io
 
-import java.nio.file.Files
-
 import scala.jdk.CollectionConverters._
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
@@ -21,9 +19,6 @@ import graft.SparkSpec
   */
 class LogShapeSpec extends SparkSpec {
   private val mapper = new ObjectMapper()
-
-  private def tmp(prefix: String): String =
-    Files.createTempDirectory(prefix).toString + "/t"
 
   private def keys(n: JsonNode): String =
     if (!n.isObject) ""
@@ -66,7 +61,7 @@ class LogShapeSpec extends SparkSpec {
   private val Dv = "deletionVector{storageType,pathOrInlineDv,offset,sizeInBytes,cardinality}"
 
   test("plain table: create, append, overwrite, properties, COW and DV DML, OPTIMIZE, restore, clone") {
-    val t = tmp("shape_plain")
+    val t = tmp("shape_plain") + "/t"
     check(t, DeltaWrite.writeDeltaTable(rows(0, 40), t, "overwrite", Seq("p")),
       s"$CI{mode},engineInfo}",
       "protocol{minReaderVersion,minWriterVersion}",
@@ -140,7 +135,7 @@ class LogShapeSpec extends SparkSpec {
       s"$Meta{},createdTime}",
       s"$Remove x2",
       s"$AddPart} x4")
-    val c = tmp("shape_clone")
+    val c = tmp("shape_clone") + "/t"
     check(c, DeltaWrite.cloneShallow(spark, t, c),
       s"$CI{source},engineInfo}",
       "protocol{minReaderVersion,minWriterVersion,readerFeatures,writerFeatures}",
@@ -149,7 +144,7 @@ class LogShapeSpec extends SparkSpec {
   }
 
   test("mapped, row-tracked and identity creates, and their follow-up commits") {
-    val m = tmp("shape_mapped")
+    val m = tmp("shape_mapped") + "/t"
     check(m, DeltaWrite.writeDeltaTableMapped(rows(0, 10), m, "overwrite"),
       s"$CI{mode},engineInfo}",
       "protocol{minReaderVersion,minWriterVersion}",
@@ -165,7 +160,7 @@ class LogShapeSpec extends SparkSpec {
       s"$CI{column},engineInfo}",
       s"$Meta{delta.columnMapping.maxColumnId,delta.columnMapping.mode},createdTime}")
 
-    val r = tmp("shape_rowtracked")
+    val r = tmp("shape_rowtracked") + "/t"
     val rtConf = "{delta.enableRowTracking,delta.rowTracking.materializedRowCommitVersionColumnName,delta.rowTracking.materializedRowIdColumnName}"
     check(r, DeltaWrite.writeDeltaTableRowTracked(rows(0, 10), r),
       s"$CI{mode},engineInfo}",
@@ -194,7 +189,7 @@ class LogShapeSpec extends SparkSpec {
       "domainMetadata{domain,configuration,removed}",
       s"$Remove x4")
 
-    val i = tmp("shape_identity")
+    val i = tmp("shape_identity") + "/t"
     val idMeta = s"$Meta{},createdTime}"
     check(i, DeltaWrite.writeDeltaTableIdentity(
         rows(0, 10).drop("id").withColumnRenamed("v", "v0"), i, "rid"),
@@ -226,7 +221,7 @@ class LogShapeSpec extends SparkSpec {
   test("checkpoints: classic, multi-part and v2 with sidecars") {
     // a row-tracked table with a txn mark: 4 live files, 1 txn, 1 domain
     def table(prefix: String): String = {
-      val t = tmp(prefix)
+      val t = tmp(prefix) + "/t"
       DeltaWrite.writeDeltaTableRowTracked(rows(0, 10), t)
       DeltaWrite.writeDeltaTable(rows(10, 20), t, "append", Nil, Some(("app", 1L)))
       t
@@ -271,7 +266,7 @@ class LogShapeSpec extends SparkSpec {
   }
 
   test("convert, enableRowTracking, widenColumnType and add column on a plain table") {
-    val d = tmp("shape_convert")
+    val d = tmp("shape_convert") + "/t"
     rows(0, 20).repartition(2).write.parquet(d)
     check(d, DeltaWrite.convertToDelta(spark, d),
       s"$CI{numFiles},engineInfo}",
@@ -284,7 +279,7 @@ class LogShapeSpec extends SparkSpec {
       s"$Meta{delta.enableRowTracking,delta.rowTracking.materializedRowCommitVersionColumnName,delta.rowTracking.materializedRowIdColumnName},createdTime}",
       s"$AddFile,baseRowId,defaultRowCommitVersion} x2",
       "domainMetadata{domain,configuration,removed}")
-    val w = tmp("shape_widen")
+    val w = tmp("shape_widen") + "/t"
     DeltaWrite.writeDeltaTable(rows(0, 10).withColumn("w", col("w").cast("int")), w, "overwrite")
     check(w, DeltaWrite.widenColumnType(spark, w, "w", LongType),
       s"$CI{column,type},engineInfo}",

@@ -1,7 +1,5 @@
 package graft.io
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -15,9 +13,6 @@ import graft.SparkSpec
   */
 class RowTrackingSpec extends SparkSpec {
   import spark.implicits._
-
-  private def tmp(prefix: String): String =
-    Files.createTempDirectory(prefix).toString
 
   private def table(n: Int): org.apache.spark.sql.DataFrame =
     spark.range(n).select(col("id"), (col("id") * 10).as("v"))

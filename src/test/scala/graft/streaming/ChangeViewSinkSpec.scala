@@ -1,7 +1,5 @@
 package graft.streaming
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -14,8 +12,6 @@ import graft.io.{DeltaMerge, DeltaRead, DeltaWrite}
   */
 class ChangeViewSinkSpec extends SparkSpec {
   import spark.implicits._
-
-  private def tmp(p: String): String = Files.createTempDirectory(p).toString
 
   private def viewEqualsSource(viewPath: String, srcPath: String): Unit = {
     // min/max included: the per-epoch repair pass makes the WHOLE view

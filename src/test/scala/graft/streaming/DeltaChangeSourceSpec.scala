@@ -1,7 +1,5 @@
 package graft.streaming
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
@@ -15,9 +13,6 @@ import graft.io.{DeltaMerge, DeltaRead, DeltaWrite}
   */
 class DeltaChangeSourceSpec extends SparkSpec {
   import spark.implicits._
-
-  private def tmp(prefix: String): String =
-    Files.createTempDirectory(prefix).toString
 
   private def baseTable(path: String): Unit = {
     val df = (1L to 20L).map(i => (i, i * 100L)).toDF("id", "cents")
