@@ -10,7 +10,7 @@ object QRound12 {
   import Tables._
 
   /** Log compaction end-to-end ([[graft.io.DeltaWrite.compactLog]] +
-    * [[graft.io.DeltaRead.replayFull]]'s segment substitution): build a
+    * [[graft.io.DeltaRead.snapshot]]'s segment substitution): build a
     * customer-derived table with two appends, a deletion-vector DELETE
     * (the compacted add must carry its DV descriptor), and a
     * copy-on-write UPDATE (the compacted file must keep the rewrite's

@@ -54,8 +54,8 @@ object DeltaMerge {
     require(whenMatched == "update" || whenMatched == "delete",
       s"whenMatched must be update or delete, got $whenMatched")
     require(keyCols.nonEmpty, "keyCols must be non-empty")
-    val readVersion = DeltaRead.latestVersion(spark, path)
-    val DeltaRead.Snapshot(meta, live, proto, _) = DeltaRead.replayFull(spark, path, None)
+    val snap = DeltaRead.snapshot(spark, path)
+    val DeltaRead.Snapshot(_, meta, live, proto, _, _) = snap
     require(meta != null, s"$path has no metaData action in its _delta_log")
     DeltaWrite.checkWritable(meta, proto, s"DML on $path", removesData = true,
       identityOk = true) // minting handled below: assignment + hw bump + exclusive OCC
@@ -114,8 +114,8 @@ object DeltaMerge {
 
     val srcKeys = source1.select(keyCols.map(col): _*).distinct()
     if (useDeletionVectors)
-      return mergeDv(spark, path, readVersion, source1, srcKeys, keyCols,
-        whenMatched, insertUnmatched, txn, meta, live, proto, schema)
+      return mergeDv(spark, path, snap, source1, srcKeys, keyCols,
+        whenMatched, insertUnmatched, txn, schema)
     val touched = touchedFiles(spark, path, meta, live,
       prov => prov.join(srcKeys, keyCols, "left_semi"))
 
@@ -193,7 +193,7 @@ object DeltaMerge {
           _.select(fieldCols :+ lit("insert").as("_change_type"): _*))
         Some((Seq(matchedPre) ++ matchedPost ++ inserts).reduce(_ unionByName _))
       }
-    commitDml(spark, path, readVersion, meta, proto, touched.map(DvPlan(_, None)),
+    commitDml(spark, path, snap, touched.map(DvPlan(_, None)),
       deletionVectors = false, Some(newData), "MERGE",
       Seq("predicate" -> keyCols.mkString(","), "matchedAction" -> whenMatched),
       cdc, txn, hwBumps)
@@ -239,8 +239,8 @@ object DeltaMerge {
     * version, or -1 when no row matched.
     */
   def deleteWhere(spark: SparkSession, path: String, condition: Column): Long = {
-    val readVersion = DeltaRead.latestVersion(spark, path)
-    val DeltaRead.Snapshot(meta, live, proto, _) = DeltaRead.replayFull(spark, path, None)
+    val snap = DeltaRead.snapshot(spark, path)
+    val DeltaRead.Snapshot(_, meta, live, proto, _, _) = snap
     require(meta != null, s"$path has no metaData action in its _delta_log")
     // deletes only REMOVE rows: identity values carry in survivors
     // verbatim and the watermark stands (values are never reused)
@@ -260,7 +260,7 @@ object DeltaMerge {
       if (cdfEnabled(meta))
         Some(base.filter(hit).select(fieldCols :+ lit("delete").as("_change_type"): _*))
       else None
-    commitDml(spark, path, readVersion, meta, proto, touched.map(DvPlan(_, None)),
+    commitDml(spark, path, snap, touched.map(DvPlan(_, None)),
       deletionVectors = false, Some(survivors), "DELETE",
       Seq("predicate" -> condition.toString), cdc, None, Map.empty)
   }
@@ -291,8 +291,8 @@ object DeltaMerge {
     */
   def deleteWhereDv(spark: SparkSession, path: String, condition: Column,
       maxVectorFileBytes: Long = DvWrite.DefaultMaxVectorFileBytes): Long = {
-    val readVersion = DeltaRead.latestVersion(spark, path)
-    val DeltaRead.Snapshot(meta, live, proto, _) = DeltaRead.replayFull(spark, path, None)
+    val snap = DeltaRead.snapshot(spark, path)
+    val DeltaRead.Snapshot(_, meta, live, proto, _, _) = snap
     require(meta != null, s"$path has no metaData action in its _delta_log")
     // deletes only REMOVE rows: identity values carry in survivors
     // verbatim and the watermark stands (values are never reused)
@@ -317,7 +317,7 @@ object DeltaMerge {
       if (!cdfEnabled(meta)) None
       else Some(hits.select(
         schema.fieldNames.map(col).toSeq :+ lit("delete").as("_change_type"): _*))
-    commitDml(spark, path, readVersion, meta, proto, planned,
+    commitDml(spark, path, snap, planned,
       deletionVectors = true, None, "DELETE",
       Seq("predicate" -> condition.toString), cdc, None, Map.empty)
   }
@@ -332,8 +332,8 @@ object DeltaMerge {
   def updateWhereDv(spark: SparkSession, path: String, condition: Column,
       set: Map[String, Column]): Long = {
     require(set.nonEmpty, "set must map at least one column")
-    val readVersion = DeltaRead.latestVersion(spark, path)
-    val DeltaRead.Snapshot(meta, live, proto, _) = DeltaRead.replayFull(spark, path, None)
+    val snap = DeltaRead.snapshot(spark, path)
+    val DeltaRead.Snapshot(_, meta, live, proto, _, _) = snap
     require(meta != null, s"$path has no metaData action in its _delta_log")
     // UPDATE carries identity values verbatim — but a SET targeting the
     // identity column itself would mint values outside the contract
@@ -383,7 +383,7 @@ object DeltaMerge {
           .unionByName(newRows
             .select(fieldCols :+ lit("update_postimage").as("_change_type"): _*)))
       }
-    commitDml(spark, path, readVersion, meta, proto, planned,
+    commitDml(spark, path, snap, planned,
       deletionVectors = true, Some(newRows), "UPDATE",
       Seq("predicate" -> condition.toString), cdc, None, Map.empty)
   }
@@ -397,12 +397,11 @@ object DeltaMerge {
     * table is scanned exactly once, where the copy-on-write path reads
     * its touched subset three times.
     */
-  private def mergeDv(spark: SparkSession, path: String, readVersion: Long,
+  private def mergeDv(spark: SparkSession, path: String, snap: DeltaRead.Snapshot,
       source1: DataFrame, srcKeys: DataFrame, keyCols: Seq[String],
       whenMatched: String, insertUnmatched: Boolean,
-      txn: Option[(String, Long)], meta: DeltaRead.Meta,
-      live: Seq[DeltaRead.LiveFile], proto: DeltaRead.Protocol,
-      schema: StructType): Long = {
+      txn: Option[(String, Long)], schema: StructType): Long = {
+    val DeltaRead.Snapshot(_, meta, live, _, _, _) = snap
     val root = new Path(path)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val rt = DeltaWrite.rowTrackingOf(meta)
@@ -472,7 +471,7 @@ object DeltaMerge {
           _.select(fieldCols :+ lit("insert").as("_change_type"): _*))
         Some((Seq(matchedPre) ++ matchedPost ++ insertRows).reduce(_ unionByName _))
       }
-    commitDml(spark, path, readVersion, meta, proto, planned,
+    commitDml(spark, path, snap, planned,
       deletionVectors = true, newRows, "MERGE",
       Seq("predicate" -> keyCols.mkString(","), "matchedAction" -> whenMatched),
       cdc, txn, hwBumps)
@@ -639,11 +638,12 @@ object DeltaMerge {
     * vector each file had, and the protocol upgrades on the table's first
     * vector.
     */
-  private def commitDml(spark: SparkSession, path: String, readVersion: Long,
-      meta: DeltaRead.Meta, proto: DeltaRead.Protocol, planned: Seq[DvPlan],
+  private def commitDml(spark: SparkSession, path: String, snap: DeltaRead.Snapshot,
+      planned: Seq[DvPlan],
       deletionVectors: Boolean, newRows: Option[DataFrame], operation: String,
       params: Seq[(String, Any)], cdcData: Option[DataFrame],
       txn: Option[(String, Long)], hwBumps: Map[String, Long]): Long = {
+    val DeltaRead.Snapshot(readVersion, meta, _, proto, domains, _) = snap
     val root = new Path(path)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val where = s"$operation on $path"
@@ -652,8 +652,6 @@ object DeltaMerge {
       if (deletionVectors) dvProtocolUpgrade(proto, where) else None
     val tracked = DeltaWrite.rowTrackingOf(meta).isDefined ||
       proto.writerFeatures.contains("rowTracking")
-    lazy val snapWm = DeltaRead.rowIdHighWaterMark(
-      DeltaRead.replayFull(spark, path, None).domains)
     // change-data files: the changed rows (+ _change_type +
     // _commit_version, so a file stream over _change_data/ needs no log
     // lookup) staged under _change_data/, committed as cdc actions
@@ -688,7 +686,8 @@ object DeltaMerge {
             dataChange = true, f.stats, Some(d), f.baseRowId, f.defaultRowCommitVersion)
         case _ =>
       }
-      lines ++= DeltaWrite.renderAdds(spark, path, tracked, snapWm, readVersion + 1,
+      lines ++= DeltaWrite.renderAdds(spark, path, tracked,
+        DeltaRead.rowIdHighWaterMark(domains), readVersion + 1,
         adds, now, dataChange = true)(version)
       cdcStaged.foreach { case (rel, size) => lines += DeltaActions.cdc(rel, size) }
       lines.toSeq
@@ -722,8 +721,8 @@ object DeltaMerge {
   def updateWhere(spark: SparkSession, path: String, condition: Column,
       set: Map[String, Column]): Long = {
     require(set.nonEmpty, "set must map at least one column")
-    val readVersion = DeltaRead.latestVersion(spark, path)
-    val DeltaRead.Snapshot(meta, live, proto, _) = DeltaRead.replayFull(spark, path, None)
+    val snap = DeltaRead.snapshot(spark, path)
+    val DeltaRead.Snapshot(_, meta, live, proto, _, _) = snap
     require(meta != null, s"$path has no metaData action in its _delta_log")
     // UPDATE carries identity values verbatim — but a SET targeting the
     // identity column itself would mint values outside the contract
@@ -770,7 +769,7 @@ object DeltaMerge {
           .unionByName(base.filter(hit).select(updatedCols: _*)
             .withColumn("_change_type", lit("update_postimage"))))
       } else None
-    commitDml(spark, path, readVersion, meta, proto, touched.map(DvPlan(_, None)),
+    commitDml(spark, path, snap, touched.map(DvPlan(_, None)),
       deletionVectors = false, Some(rewritten), "UPDATE",
       Seq("predicate" -> condition.toString), cdc, None, Map.empty)
   }

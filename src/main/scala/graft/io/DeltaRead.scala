@@ -4,44 +4,37 @@ import scala.jdk.CollectionConverters._
 
 import com.fasterxml.jackson.databind.JsonNode
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, LongType, StructField, StructType}
 
-/** Read-only Delta Lake table support, implemented directly against the
-  * PUBLIC Delta transaction-log format (delta.io protocol spec: a
-  * `_delta_log/` directory of versioned JSON commits containing `metaData`
-  * / `add` / `remove` actions, optionally compacted into
-  * `NNN.checkpoint.parquet` files referenced by `_last_checkpoint`) — no
-  * delta-core jars, which this zero-egress environment cannot resolve.
+/** Delta Lake table state and log I/O, implemented directly against the
+  * PUBLIC transaction-log format (delta.io PROTOCOL.md: a `_delta_log/`
+  * of versioned JSON commits holding `protocol` / `metaData` / `add` /
+  * `remove` / `txn` / `domainMetadata` actions, optionally summarized by
+  * checkpoints named in `_last_checkpoint`) — no delta-core jars. The
+  * reference reads Delta tables through `spark.read.load(path)` with the
+  * delta extension installed (labelspark client.py:347,500).
   *
-  * The reference reads Delta tables through `spark.read.load(path)` with
-  * the delta extension installed (labelspark client.py:347,500); this is
-  * the same read surface re-derived from the log protocol:
-  *
-  *   - log REPLAY: later actions win per file path — an `add` makes the
-  *     file live, a `remove` tombstones it; the live set at the requested
-  *     version is exactly what a Delta reader scans.
-  *   - schema comes from the LAST `metaData` action's `schemaString`
-  *     (which is a Spark StructType JSON — Delta's own encoding), so reads
-  *     survive schema evolution without inference.
-  *   - the scan is ONE relation over a log-backed [[DeltaLogFileIndex]]
-  *     (the seam delta-core itself plugs into): partition columns come
-  *     from each file's `partitionValues` (any directory layout), pushed
-  *     partition filters prune inside the index, and pushed data filters
-  *     skip whole FILES via `add.stats` min/max before they are opened.
-  *   - `versionAsOf` time travel is log replay cut at the version — free
-  *     once replay exists.
-  *
-  * Scale notes: the log itself is driver-side (a Delta log is KBs..MBs —
-  * one JSON action per file, checkpointed; this is true at any table
-  * size), while the DATA read is an ordinary distributed parquet scan of
-  * the live files — pushdown, pruning, and codegen all apply as usual,
-  * with no directory listing (file sizes ride the log) and plan size
-  * independent of the partition count.
-  * Writes stay on [[Sources.writeTable]] (an honest parquet path with mode
-  * validation); implementing the Delta COMMIT protocol (optimistic
-  * concurrency, atomic log append) is out of scope for a reader.
+  * `DeltaRead` owns:
+  *   - SNAPSHOTS: [[snapshot]] replays the log at one version from one
+  *     listing — later actions win per file path, the last protocol and
+  *     metaData win — and every reader and writer plans on that pinned,
+  *     versioned state (writers take their OCC read version from it);
+  *   - the SNAPSHOT CACHE: the last head snapshot per table, advanced by
+  *     the commit JSONs after it, so a table touched many times replays
+  *     each version once; a checkpoint decodes in one Spark job;
+  *   - LOG I/O: listing and reading commits, compacted ranges and
+  *     checkpoints, and the gap-checked range reads behind the change
+  *     surfaces ([[changesSince]], [[changeDiff]], [[changeFeed]]);
+  *   - the SCAN: one relation over a log-backed [[DeltaLogFileIndex]]
+  *     (the seam delta-core plugs into) under the LAST metaData's schema,
+  *     with partition pruning and `add.stats` file skipping, column
+  *     mapping and deletion vectors; time travel is replay cut at a
+  *     version.
+  * The log is driver-side (KBs..MBs at any table size); the data read is
+  * an ordinary distributed parquet scan. Commits are [[DeltaWrite]]'s and
+  * [[DeltaMerge]]'s.
   */
 object DeltaRead {
 
@@ -236,9 +229,9 @@ object DeltaRead {
       "versionAsOf and timestampAsOf are mutually exclusive")
     val pinned = timestampAsOf
       .map(ts => versionAtTimestamp(spark, path, ts)).orElse(versionAsOf)
-    val (meta, files) = replayLog(spark, path, pinned)
-    require(meta != null, s"$path has no metaData action in its _delta_log")
-    filesDf(spark, path, meta, files, provenance = false)
+    val snap = snapshot(spark, path, pinned)
+    require(snap.meta != null, s"$path has no metaData action in its _delta_log")
+    filesDf(spark, path, snap.meta, snap.files, provenance = false)
   }
 
   /** Read a row-tracked Delta table with its ROW IDS and row commit
@@ -272,7 +265,7 @@ object DeltaRead {
       "versionAsOf and timestampAsOf are mutually exclusive")
     val pinned = timestampAsOf
       .map(ts => versionAtTimestamp(spark, path, ts)).orElse(versionAsOf)
-    val snap = replayFull(spark, path, pinned)
+    val snap = snapshot(spark, path, pinned)
     require(snap.meta != null, s"$path has no metaData action in its _delta_log")
     require(snap.protocol.writerFeatures.contains("rowTracking") ||
         snap.meta.configuration.get("delta.enableRowTracking").contains("true"),
@@ -517,7 +510,7 @@ object DeltaRead {
     * not CDC.
     */
   def readStreamAppendOnly(spark: SparkSession, path: String): DataFrame = {
-    val (meta, liveFiles) = replayLog(spark, path, None)
+    val Snapshot(_, meta, liveFiles, _, _, _) = snapshot(spark, path)
     require(meta != null, s"$path has no metaData action in its _delta_log")
     require(meta.mappingMode != "id",
       s"readStreamAppendOnly($path): id-mapped tables resolve columns by " +
@@ -560,7 +553,7 @@ object DeltaRead {
     */
   def changesSince(spark: SparkSession, path: String, fromVersion: Long,
       toVersion: Option[Long] = None): DataFrame = {
-    val (metaHead, _) = replayLog(spark, path, toVersion)
+    val metaHead = snapshot(spark, path, toVersion).meta
     require(metaHead != null, s"$path has no metaData action in its _delta_log")
     val (adds, removes) = actionsInRange(spark, path, fromVersion, toVersion)
     require(removes.isEmpty,
@@ -617,7 +610,7 @@ object DeltaRead {
     */
   def changeDiff(spark: SparkSession, path: String, fromVersion: Long,
       toVersion: Option[Long] = None, preferCdf: Boolean = true): DataFrame = {
-    val (metaHead, _) = replayLog(spark, path, toVersion)
+    val metaHead = snapshot(spark, path, toVersion).meta
     require(metaHead != null, s"$path has no metaData action in its _delta_log")
     if (preferCdf &&
         metaHead.configuration.get("delta.enableChangeDataFeed").contains("true"))
@@ -633,7 +626,7 @@ object DeltaRead {
     // DV delete on a compacted file still finds its prior vector
     val state = scala.collection.mutable.LinkedHashMap[String, LiveFile]()
     if (fromVersion >= 0)
-      replayLog(spark, path, Some(fromVersion))._2.foreach(f => state(f.path) = f)
+      snapshot(spark, path, Some(fromVersion)).files.foreach(f => state(f.path) = f)
 
     def bits(f: LiveFile): Option[DeletionVectors.RoaringArray] =
       f.dv.map(d => DeletionVectors.load(fs, root, d))
@@ -732,7 +725,7 @@ object DeltaRead {
     */
   def tableInfo(spark: SparkSession, path: String): DataFrame = {
     import spark.implicits._
-    val (meta, live) = replayLog(spark, path, None)
+    val Snapshot(version, meta, live, _, _, _) = snapshot(spark, path)
     require(meta != null, s"$path has no metaData action in its _delta_log")
     val counts = live.map(_.stats.flatMap(s =>
       scala.util.Try(DeltaActions.numRecords(s)).toOption.flatten))
@@ -740,7 +733,7 @@ object DeltaRead {
       if (counts.nonEmpty && counts.forall(_.isDefined)) Some(counts.flatten.sum)
       else if (live.isEmpty) Some(0L) else None
     Seq((
-      latestVersion(spark, path),
+      version,
       live.size.toLong,
       live.map(_.size).sum,
       numRecords,
@@ -760,7 +753,7 @@ object DeltaRead {
     */
   def describeColumns(spark: SparkSession, path: String): DataFrame = {
     import spark.implicits._
-    val (meta, _) = replayLog(spark, path, None)
+    val meta = snapshot(spark, path).meta
     require(meta != null, s"$path has no metaData action in its _delta_log")
     val schema = DataType.fromJson(meta.schemaJson).asInstanceOf[StructType]
     schema.fields.toSeq.map { f =>
@@ -828,7 +821,7 @@ object DeltaRead {
     */
   def changeFeed(spark: SparkSession, path: String, fromVersion: Long,
       toVersion: Option[Long] = None): DataFrame = {
-    val (meta, _) = replayLog(spark, path, toVersion)
+    val meta = snapshot(spark, path, toVersion).meta
     require(meta != null, s"$path has no metaData action in its _delta_log")
     val schema = DataType.fromJson(meta.schemaJson).asInstanceOf[StructType]
     // id mode: the cdc files carry footer field ids (the DML verbs stage
@@ -890,7 +883,7 @@ object DeltaRead {
     * before the DML whose changes should appear.
     */
   def readChangeFeedStream(spark: SparkSession, path: String): DataFrame = {
-    val (meta, _) = replayLog(spark, path, None)
+    val meta = snapshot(spark, path).meta
     require(meta != null, s"$path has no metaData action in its _delta_log")
     val schema = DataType.fromJson(meta.schemaJson).asInstanceOf[StructType]
     // id mode: the stream's explicit schema carries the field ids our DML
@@ -977,156 +970,217 @@ object DeltaRead {
       .orElse(compactedRange(n).map(_._2)).orElse(checkpointVersion(n)))
       .foldLeft(-1L)(math.max)
 
-  /** Replay the log up to (and including) `versionAsOf` (default: head).
-    * Returns the last metaData and the live file set.
+  /** The table as replayed at `version`: the last metaData and protocol,
+    * the live files, the live [[Domains]], and every appId's `txn`
+    * high-water mark as `(version, lastUpdated)` — the idempotence token
+    * the streaming sinks consult. `meta` is null when the log holds no
+    * metaData action yet. A writer takes its OCC read version from the
+    * snapshot its actions are planned on, so the two can never disagree.
     */
-  private[io] def replayLog(spark: SparkSession, path: String,
-      versionAsOf: Option[Long]): (Meta, Seq[LiveFile]) = {
-    val s = replayFull(spark, path, versionAsOf)
-    (s.meta, s.files)
-  }
+  private[io] final case class Snapshot(version: Long, meta: Meta, files: Seq[LiveFile],
+      protocol: Protocol, domains: Domains, txns: Map[String, (Long, Long)])
 
-  /** Full replayed snapshot: metadata, live files, protocol, and live
-    * domain metadata (the [[Domains]] map).
+  /** The table at `versionAsOf` (default: the head), from ONE listing of
+    * `_delta_log`: replay stops at the version that listing saw, never
+    * later. A head snapshot is kept per table (the `DeltaLog.update`
+    * design of delta-spark): the next lookup starts from it and replays
+    * only the commit JSONs after it, so an operation's log cost grows with
+    * the commits it has not seen, not with the table's history. A cached
+    * snapshot is used only while the listing still shows its version's
+    * commit JSON with the same length and modification time, that file's
+    * bytes still match (a table deleted and recreated at the same path is
+    * never served stale), and every commit JSON after it is present —
+    * otherwise the replay is cold: the last checkpoint (one Spark job),
+    * then compacted ranges and commit JSONs. Time travel to exactly the
+    * cached version is served from it; older versions replay cold.
     */
-  private[io] final case class Snapshot(meta: Meta, files: Seq[LiveFile],
-      protocol: Protocol, domains: Domains)
-
-  private[io] def replayFull(spark: SparkSession, path: String,
-      versionAsOf: Option[Long]): Snapshot = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val fs = new Path(path).getFileSystem(conf)
+  private[io] def snapshot(spark: SparkSession, path: String,
+      versionAsOf: Option[Long] = None): Snapshot = {
+    val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
     val dir = new Path(path, "_delta_log")
     require(fs.exists(dir), s"$path is not a Delta table (no _delta_log)")
-
-    val cut = versionAsOf.getOrElse(Long.MaxValue)
     require(versionAsOf.forall(_ >= 0), s"versionAsOf must be >= 0")
+    val listing = fs.listStatus(dir).toSeq
+    val names = listing.map(_.getPath.getName)
+    val commits = listing.flatMap(st => commitVersion(st.getPath.getName).map(_ -> st)).toMap
+    val target = versionAsOf.getOrElse(listedHead(names))
+    val key = fs.makeQualified(dir).toString
+    val entry = cache.synchronized(Option(cache.get(key)))
+      .filter(c => commits.get(c.snap.version).exists(c.intact(fs, _)))
+    val snap = entry.filter(c => c.snap.version <= target &&
+        (c.snap.version + 1 to target).forall(commits.contains)) match {
+      case Some(c) if c.snap.version == target => c.snap
+      case Some(c) =>
+        val r = new Replay(c.snap)
+        (c.snap.version + 1 to target).foreach(v => r.commit(fs, dir, commitPath(dir, v)))
+        r.snapshot(target)
+      case None => replayCold(spark, fs, dir, names, versionAsOf, target)
+    }
+    if (entry.forall(_.snap.version < snap.version))
+      commits.get(snap.version).foreach { st =>
+        val c = Cached(snap, st.getLen, st.getModificationTime, digest(fs, st.getPath))
+        cache.synchronized(cache.put(key, c))
+      }
+    snap
+  }
 
+  /** A cached head snapshot and the identity of its version's commit JSON. */
+  private final case class Cached(snap: Snapshot, len: Long, mtime: Long, bytes: Seq[Byte]) {
+    def intact(fs: FileSystem, st: FileStatus): Boolean =
+      st.getLen == len && st.getModificationTime == mtime && digest(fs, st.getPath) == bytes
+  }
+
+  private def digest(fs: FileSystem, file: Path): Seq[Byte] = {
+    val in = fs.open(file)
+    try java.security.MessageDigest.getInstance("SHA-256").digest(in.readAllBytes()).toSeq
+    finally in.close()
+  }
+
+  /** The tables whose head snapshot is kept, least recently used first —
+    * shared by every session in the JVM, which is safe because each lookup
+    * re-checks the entry against the filesystem.
+    */
+  private val CachedTables = 64
+  private val cache = new java.util.LinkedHashMap[String, Cached](16, 0.75f, true) {
+    override def removeEldestEntry(e: java.util.Map.Entry[String, Cached]): Boolean =
+      size > CachedTables
+  }
+
+  /** Forget every cached snapshot, so the next lookup replays cold. */
+  private[io] def clearSnapshotCache(): Unit = cache.synchronized(cache.clear())
+
+  /** The replay fold: actions from commit JSONs, compacted ranges and
+    * checkpoint rows, applied in log order onto a starting snapshot —
+    * later actions win per file path, the last protocol and metaData win,
+    * domains keep their latest configuration and txn keeps each appId's
+    * highest version.
+    */
+  private final class Replay(from: Snapshot) {
+    private var meta = from.meta
+    private var protocol = from.protocol
+    private val live = scala.collection.mutable.LinkedHashMap[String, LiveFile]()
+    live ++= from.files.map(f => f.path -> f)
+    private val domains = scala.collection.mutable.Map[String, String]() ++= from.domains
+    private val txns = scala.collection.mutable.Map[String, (Long, Long)]() ++= from.txns
+
+    private def setProtocol(p: Protocol, where: String): Unit = {
+      checkProtocol(p.minReader, p.readerFeatures, where)
+      protocol = p
+    }
+    // `name` resolves by physical name; `id` resolves by parquet FIELD ID
+    // ([[physicalSchemaWithIds]]) — both read paths are implemented; only
+    // data-rewriting writers refuse mode `id`
+    private def setMeta(m: Meta, where: String): Unit = {
+      require(Seq("none", "name", "id").contains(m.mappingMode),
+        s"$where enables unknown column mapping '${m.mappingMode}'")
+      meta = m
+    }
+    private def domain(name: String, config: String, removed: Boolean): Unit =
+      if (removed) domains.remove(name) else domains.put(name, config)
+    private def txn(appId: String, version: Long, lastUpdated: Long): Unit =
+      if (txns.get(appId).forall(_._1 < version)) txns(appId) = (version, lastUpdated)
+
+    /** Fold one commit JSON or compacted range. */
+    def commit(fs: FileSystem, dir: Path, seg: Path): Unit =
+      logLines(fs, seg).foreach { line =>
+        val node = DeltaActions.parse(line)
+        def strs(n: JsonNode, f: String): Seq[String] =
+          Option(n.get(f)).map(_.elements().asScala.map(_.asText()).toSeq).getOrElse(Nil)
+        Option(node.get("protocol")).foreach { p =>
+          setProtocol(Protocol(Option(p.get("minReaderVersion")).map(_.asInt()).getOrElse(1),
+            Option(p.get("minWriterVersion")).map(_.asInt()).getOrElse(2),
+            strs(p, "readerFeatures"), strs(p, "writerFeatures")), s"$dir ${seg.getName}")
+        }
+        Option(node.get("metaData")).foreach { m =>
+          val config = Option(m.get("configuration"))
+            .map(_.fields().asScala.map(e => e.getKey -> e.getValue.asText()).toMap)
+            .getOrElse(Map.empty[String, String])
+          setMeta(Meta(m.get("schemaString").asText(), strs(m, "partitionColumns"), config,
+            Option(m.get("id")).map(_.asText()).getOrElse("")), dir.toString)
+        }
+        Option(node.get("add")).map(DeltaActions.parseAdd).foreach(f => live.put(f.path, f))
+        Option(node.get("remove")).foreach(r => live.remove(r.get("path").asText()))
+        Option(node.get("domainMetadata")).foreach { d =>
+          domain(d.get("domain").asText(),
+            Option(d.get("configuration")).map(_.asText()).getOrElse(""),
+            Option(d.get("removed")).exists(_.asBoolean(false)))
+        }
+        Option(node.get("txn")).filter(_.get("appId") != null).foreach { t =>
+          txn(t.get("appId").asText(), t.get("version").asLong(),
+            Option(t.get("lastUpdated")).map(_.asLong()).getOrElse(0L))
+        }
+      }
+
+    /** Fold checkpoint rows read under [[CheckpointSchema]]; returns the
+      * sidecar paths they reference (v2 checkpoints).
+      */
+    def checkpoint(rows: Seq[Row], where: String): Seq[String] = rows.flatMap { r =>
+      def struct(c: String): Option[Row] = Option(r.getAs[Row](c))
+      def opt[T](s: Row, f: String): Option[T] = Option(s.getAs[Any](f)).map(_.asInstanceOf[T])
+      def strs(s: Row, f: String): Seq[String] =
+        opt[scala.collection.Seq[String]](s, f).map(_.toSeq).getOrElse(Nil)
+      struct("protocol").filter(_.getAs[Any]("minReaderVersion") != null).foreach { p =>
+        setProtocol(Protocol(p.getAs[Int]("minReaderVersion"),
+          opt[Int](p, "minWriterVersion").getOrElse(2),
+          strs(p, "readerFeatures"), strs(p, "writerFeatures")), where)
+      }
+      struct("metaData").filter(_.getAs[String]("schemaString") != null).foreach { m =>
+        setMeta(Meta(m.getAs[String]("schemaString"), strs(m, "partitionColumns"),
+          opt[scala.collection.Map[String, String]](m, "configuration").map(_.toMap)
+            .getOrElse(Map.empty), opt[String](m, "id").getOrElse("")), where)
+      }
+      struct("add").filter(_.getAs[String]("path") != null).foreach { a =>
+        val dv = opt[Row](a, "deletionVector").map(d => DeletionVectors.Descriptor(
+          d.getAs[String]("storageType"), d.getAs[String]("pathOrInlineDv"),
+          opt[Long](d, "offset"), d.getAs[Long]("sizeInBytes"), d.getAs[Long]("cardinality")))
+        val f = LiveFile(a.getAs[String]("path"),
+          opt[scala.collection.Map[String, String]](a, "partitionValues").map(_.toMap)
+            .getOrElse(Map.empty),
+          size = opt[Long](a, "size").getOrElse(0L),
+          modificationTime = opt[Long](a, "modificationTime").getOrElse(0L),
+          stats = opt[String](a, "stats").filter(_.nonEmpty), dv = dv,
+          baseRowId = opt[Long](a, "baseRowId"),
+          defaultRowCommitVersion = opt[Long](a, "defaultRowCommitVersion"))
+        live.put(f.path, f)
+      }
+      struct("domainMetadata").filter(_.getAs[String]("domain") != null).foreach { d =>
+        domain(d.getAs[String]("domain"), opt[String](d, "configuration").getOrElse(""),
+          opt[Boolean](d, "removed").getOrElse(false))
+      }
+      struct("txn").filter(_.getAs[String]("appId") != null).foreach { t =>
+        txn(t.getAs[String]("appId"), t.getAs[Long]("version"),
+          opt[Long](t, "lastUpdated").getOrElse(0L))
+      }
+      struct("sidecar").flatMap(s => opt[String](s, "path"))
+    }
+
+    def snapshot(version: Long): Snapshot =
+      Snapshot(version, meta, live.values.toSeq, protocol, domains.toMap, txns.toMap)
+  }
+
+  /** Replay from scratch up to `cut`: the last checkpoint at or below it,
+    * then the compacted ranges and commit JSONs after that checkpoint.
+    */
+  private def replayCold(spark: SparkSession, fs: FileSystem, dir: Path,
+      listed: Seq[String], versionAsOf: Option[Long], cut: Long): Snapshot = {
+    val replay = new Replay(Snapshot(-1L, null, Nil, Protocol(1, 2), Map.empty, Map.empty))
     // checkpoint fast path: _last_checkpoint names a parquet snapshot of
     // the log; only commits AFTER it need JSON replay. Skipped when time
     // traveling to a version before the checkpoint.
     val lastCp = readLastCheckpoint(fs, dir).filter(_.version <= cut)
-    var meta: Meta = null
-    var protocol: Protocol = Protocol(1, 2)
-    val live = scala.collection.mutable.LinkedHashMap[String, LiveFile]()
-    val domains = scala.collection.mutable.LinkedHashMap[String, String]()
-
     lastCp.foreach { cpRef =>
-      def processActions(cp: DataFrame, where: String): Unit = {
-        val cols = cp.columns.toSet
-        if (cols.contains("protocol")) {
-          val pcols = cp.select(col("protocol")).schema.head.dataType
-            .asInstanceOf[org.apache.spark.sql.types.StructType].fieldNames.toSet
-          def optArr(name: String) =
-            if (pcols.contains(name)) col(s"protocol.$name")
-            else lit(null).cast("array<string>")
-          cp.select(col("protocol.minReaderVersion"),
-              optArr("readerFeatures"),
-              if (pcols.contains("minWriterVersion")) col("protocol.minWriterVersion")
-              else lit(2),
-              optArr("writerFeatures"))
-            .filter(col("minReaderVersion").isNotNull).collect()
-            .foreach { r =>
-              val rf = if (r.isNullAt(1)) Nil else r.getSeq[String](1)
-              checkProtocol(r.getInt(0), rf, where)
-              protocol = Protocol(r.getInt(0), r.getInt(2), rf,
-                if (r.isNullAt(3)) Nil else r.getSeq[String](3))
-            }
-        }
-        if (cols.contains("metaData")) {
-          // The column-mapping gate must ALSO run on the checkpoint path:
-          // once a table is checkpointed and its early JSON cleaned, the
-          // only metaData action lives here — configuration may be absent
-          // from the checkpoint schema (guard like readerFeatures above).
-          val mcols = cp.select(col("metaData")).schema.head.dataType
-            .asInstanceOf[org.apache.spark.sql.types.StructType].fieldNames.toSet
-          cp.select(col("metaData.schemaString"), col("metaData.partitionColumns"),
-              if (mcols.contains("configuration")) col("metaData.configuration")
-              else lit(null).cast("map<string,string>"),
-              if (mcols.contains("id")) col("metaData.id")
-              else lit(null).cast("string"))
-            .filter(col("metaData.schemaString").isNotNull).collect()
-            .foreach { r =>
-              val config =
-                if (r.isNullAt(2)) Map.empty[String, String]
-                else r.getMap[String, String](2).toMap
-              val candidate = Meta(r.getString(0), r.getSeq[String](1), config,
-                if (r.isNullAt(3)) "" else r.getString(3))
-              require(Seq("none", "name", "id").contains(candidate.mappingMode),
-                s"$where enables unknown column mapping '${candidate.mappingMode}'")
-              meta = candidate
-            }
-        }
-        if (cols.contains("add"))
-          cp.select(col("add")).filter(col("add.path").isNotNull).collect()
-            .foreach { r =>
-              val row = r.getStruct(0)
-              def opt[T](name: String)(get: Int => T): Option[T] =
-                scala.util.Try(row.fieldIndex(name)).toOption
-                  .filterNot(row.isNullAt).map(get)
-              val fp = row.getString(row.fieldIndex("path"))
-              val pv = opt("partitionValues")(i =>
-                row.getMap[String, String](i).toMap).getOrElse(Map.empty)
-              val dv = opt("deletionVector") { i =>
-                val s = row.getStruct(i)
-                def sOpt[T](name: String)(get: Int => T): Option[T] =
-                  scala.util.Try(s.fieldIndex(name)).toOption
-                    .filterNot(s.isNullAt).map(get)
-                DeletionVectors.Descriptor(
-                  s.getString(s.fieldIndex("storageType")),
-                  s.getString(s.fieldIndex("pathOrInlineDv")),
-                  sOpt("offset")(i2 => s.get(i2) match {
-                    case n: java.lang.Integer => n.longValue()
-                    case n: java.lang.Long => n.longValue()
-                  }),
-                  s.getLong(s.fieldIndex("sizeInBytes")),
-                  s.getLong(s.fieldIndex("cardinality")))
-              }
-              live.put(fp, LiveFile(fp, pv,
-                size = opt("size")(row.getLong).getOrElse(0L),
-                modificationTime = opt("modificationTime")(row.getLong).getOrElse(0L),
-                stats = opt("stats")(row.getString).filter(_.nonEmpty),
-                dv = dv,
-                baseRowId = opt("baseRowId")(row.getLong),
-                defaultRowCommitVersion =
-                  opt("defaultRowCommitVersion")(row.getLong)))
-            }
-        if (cols.contains("domainMetadata"))
-          cp.select(col("domainMetadata"))
-            .filter(col("domainMetadata.domain").isNotNull).collect()
-            .foreach { r =>
-              val row = r.getStruct(0)
-              val dom = row.getString(row.fieldIndex("domain"))
-              val cfg = scala.util.Try(row.fieldIndex("configuration")).toOption
-                .filterNot(row.isNullAt).map(row.getString).getOrElse("")
-              val rm = scala.util.Try(row.fieldIndex("removed")).toOption
-                .filterNot(row.isNullAt).exists(row.getBoolean)
-              if (rm) domains.remove(dom) else domains.put(dom, cfg)
-            }
-      }
-
-      val cp = readCheckpointTop(spark, fs, dir, cpRef)
-      processActions(cp, s"$dir checkpoint")
       // V2 spec checkpoints move the file actions into sidecar parquet
       // under _delta_log/_sidecars/; the top file keeps protocol/metaData
-      // (already processed above) plus the sidecar references. Process
-      // every referenced sidecar in ONE scan — their schema is the file-
-      // action subset, which processActions handles unchanged.
-      if (cp.columns.contains("sidecar")) {
-        val sidecarDir = new Path(dir, "_sidecars")
-        val scPaths = cp.select(col("sidecar.path"))
-          .filter(col("sidecar.path").isNotNull).collect().map(_.getString(0))
-          .map { p =>
-            if (p.contains("://") || p.startsWith("/")) p
-            else new Path(sidecarDir, p).toString
-          }
-        if (scPaths.nonEmpty)
-          processActions(spark.read.parquet(scPaths.toIndexedSeq: _*),
-            s"$dir checkpoint sidecars")
-      }
+      // plus the sidecar references, and every sidecar loads in ONE scan
+      val sidecarDir = new Path(dir, "_sidecars")
+      val sidecars = replay.checkpoint(checkpointRows(spark, checkpointFiles(fs, dir, cpRef)),
+        s"$dir checkpoint").map { p =>
+          if (p.contains("://") || p.startsWith("/")) p else new Path(sidecarDir, p).toString
+        }
+      if (sidecars.nonEmpty)
+        replay.checkpoint(checkpointRows(spark, sidecars), s"$dir checkpoint sidecars")
     }
 
-    val listed = fs.listStatus(dir).toSeq.map(_.getPath.getName)
     val base = lastCp.map(_.version).getOrElse(-1L)
     val versions = listed.flatMap(commitVersion).filter(v => v <= cut && v > base).sorted
     // LOG COMPACTION files (`<s>.<e>.compacted.json`, written by
@@ -1154,12 +1208,11 @@ object DeltaRead {
     val jsonSet = versions.toSet
     val replayEnd = math.max(versions.lastOption.getOrElse(base),
       compactedAll.map(_._2).maxOption.getOrElse(base))
-    val segments = scala.collection.mutable.ArrayBuffer[Path]()
     var at = base + 1
     while (at <= replayEnd) {
       compactedAll.filter(_._1 == at).sortBy(-_._2).headOption match {
         case Some((s, e)) =>
-          segments += new Path(dir, f"$s%020d.$e%020d.compacted.json")
+          replay.commit(fs, dir, new Path(dir, f"$s%020d.$e%020d.compacted.json"))
           at = e + 1
         case None =>
           require(jsonSet.contains(at),
@@ -1167,58 +1220,11 @@ object DeltaRead {
               s"compacted range starting there" +
               (if (base >= 0) s" (usable checkpoint covers up to $base)"
                else "") + " — intermediate commits were cleaned")
-          segments += commitPath(dir, at)
+          replay.commit(fs, dir, commitPath(dir, at))
           at += 1
       }
     }
-
-    segments.foreach { seg =>
-      logLines(fs, seg).foreach { line =>
-        val node = DeltaActions.parse(line)
-        if (node.has("protocol")) {
-          val p = node.get("protocol")
-          val minR = Option(p.get("minReaderVersion")).map(_.asInt()).getOrElse(1)
-          val rf = Option(p.get("readerFeatures"))
-            .map(_.elements().asScala.map(_.asText()).toSeq).getOrElse(Nil)
-          checkProtocol(minR, rf, s"$dir ${seg.getName}")
-          protocol = Protocol(minR,
-            Option(p.get("minWriterVersion")).map(_.asInt()).getOrElse(2), rf,
-            Option(p.get("writerFeatures"))
-              .map(_.elements().asScala.map(_.asText()).toSeq).getOrElse(Nil))
-        }
-        if (node.has("metaData")) {
-          val m = node.get("metaData")
-          val pcols = Option(m.get("partitionColumns"))
-            .map(_.elements().asScala.map(_.asText()).toSeq).getOrElse(Nil)
-          val config = Option(m.get("configuration")).map { c =>
-            c.fields().asScala
-              .map(e => e.getKey -> e.getValue.asText()).toMap
-          }.getOrElse(Map.empty[String, String])
-          val candidate = Meta(m.get("schemaString").asText(), pcols, config,
-            Option(m.get("id")).map(_.asText()).getOrElse(""))
-          // `name` resolves by physical name; `id` resolves by parquet
-          // FIELD ID ([[physicalSchemaWithIds]]) — both read paths are
-          // implemented; only data-rewriting writers refuse mode `id`
-          require(Seq("none", "name", "id").contains(candidate.mappingMode),
-            s"$dir enables unknown column mapping '${candidate.mappingMode}'")
-          meta = candidate
-        }
-        if (node.has("add")) {
-          val f = DeltaActions.parseAdd(node.get("add"))
-          live.put(f.path, f)
-        }
-        if (node.has("remove"))
-          live.remove(node.get("remove").get("path").asText())
-        if (node.has("domainMetadata")) {
-          val d = node.get("domainMetadata")
-          val dom = d.get("domain").asText()
-          if (Option(d.get("removed")).exists(_.asBoolean(false))) domains.remove(dom)
-          else domains.put(dom,
-            Option(d.get("configuration")).map(_.asText()).getOrElse(""))
-        }
-      }
-    }
-    Snapshot(meta, live.values.toSeq, protocol, domains.toMap)
+    replay.snapshot(cut)
   }
 
   /** Refuse tables whose protocol demands read behavior this reader does
@@ -1296,15 +1302,57 @@ object DeltaRead {
       Option(node.get("parts")).map(_.asInt()).filter(_ > 0)))
   }
 
-  /** The top file(s) of a checkpoint, loaded in whichever form it is
-    * stored: JSON (a V2 top file may be) or parquet. Replay, txn recovery
-    * and metadata cleanup all load checkpoints here.
+  /** The checkpoint actions this reader folds, as a fixed schema: reading
+    * under it needs no schema-inference job, and a column or field a
+    * checkpoint lacks reads as null.
     */
-  private[io] def readCheckpointTop(spark: SparkSession, fs: FileSystem, dir: Path,
-      cpRef: CheckpointRef): DataFrame = {
-    val paths = checkpointFiles(fs, dir, cpRef)
-    if (paths.forall(_.endsWith(".json"))) spark.read.json(paths: _*)
-    else spark.read.parquet(paths: _*)
+  private val CheckpointSchema = StructType.fromDDL(
+    "protocol STRUCT<minReaderVersion: INT, minWriterVersion: INT, " +
+      "readerFeatures: ARRAY<STRING>, writerFeatures: ARRAY<STRING>>, " +
+    "metaData STRUCT<id: STRING, schemaString: STRING, partitionColumns: ARRAY<STRING>, " +
+      "configuration: MAP<STRING, STRING>>, " +
+    "add STRUCT<path: STRING, partitionValues: MAP<STRING, STRING>, size: BIGINT, " +
+      "modificationTime: BIGINT, stats: STRING, deletionVector: STRUCT<storageType: STRING, " +
+      "pathOrInlineDv: STRING, offset: BIGINT, sizeInBytes: BIGINT, cardinality: BIGINT>, " +
+      "baseRowId: BIGINT, defaultRowCommitVersion: BIGINT>, " +
+    "domainMetadata STRUCT<domain: STRING, configuration: STRING, removed: BOOLEAN>, " +
+    "txn STRUCT<appId: STRING, version: BIGINT, lastUpdated: BIGINT>, " +
+    "sidecar STRUCT<path: STRING>")
+
+  /** Every action row of checkpoint files — the top file(s) in whichever
+    * form they are stored (a V2 top file may be JSON) or v2 sidecars —
+    * in ONE Spark job. The one place checkpoints are read. When a file
+    * stores an action field under another type than [[CheckpointSchema]]
+    * (a DV `offset` as INT32, an untyped empty array), each file is read
+    * under its own inferred schema instead and cast field by field into
+    * the fixed one.
+    */
+  private[io] def checkpointRows(spark: SparkSession, paths: Seq[String]): Seq[Row] = {
+    def load(files: Seq[String], schema: Option[StructType]): DataFrame = {
+      val reader = schema.fold(spark.read)(spark.read.schema)
+      if (files.forall(_.endsWith(".json"))) reader.json(files: _*) else reader.parquet(files: _*)
+    }
+    def actions(df: DataFrame): Seq[Row] =
+      df.filter(CheckpointSchema.fieldNames.map(c => col(c).isNotNull).reduce(_ || _))
+        .collect().toSeq
+    def conform(c: Column, have: Option[DataType], want: DataType): Column = (have, want) match {
+      case (None, _) => lit(null).cast(want)
+      case (Some(h: StructType), w: StructType) =>
+        when(c.isNotNull, struct(w.fields.toSeq.map(f =>
+          conform(c.getField(f.name), h.find(_.name == f.name).map(_.dataType), f.dataType)
+            .as(f.name)): _*))
+      case _ => c.cast(want)
+    }
+    try actions(load(paths, Some(CheckpointSchema)))
+    catch {
+      case e: org.apache.spark.SparkException
+          if e.getCondition == "FAILED_READ_FILE.PARQUET_COLUMN_DATA_TYPE_MISMATCH" =>
+        actions(paths.map { p =>
+          val df = load(Seq(p), None)
+          df.select(CheckpointSchema.fields.toSeq.map(f => conform(col(f.name),
+            df.schema.find(_.name == f.name).map(_.dataType), f.dataType).as(f.name)): _*)
+        }.reduce(_ unionByName _))
+    }
   }
 
   /** The version of a commit file `NNN.json`, None for every other log

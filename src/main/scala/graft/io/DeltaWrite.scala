@@ -5,7 +5,7 @@ import java.util.UUID
 import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types.{DataType, StructField, StructType}
 
 /** Checkpoint row for the `add` side — file-scoped (not nested in the
@@ -266,14 +266,11 @@ object DeltaWrite {
     val logDir = new Path(root, "_delta_log")
 
     // Existing table state (None for a fresh path): schema compatibility
-    // for append, tombstones for overwrite. The read version is captured
-    // BEFORE the replay — the OCC conflict window starts at the snapshot
-    // this commit's content derives from.
-    val readVersion = DeltaRead.latestVersion(spark, path)
-    val existingFull: Option[DeltaRead.Snapshot] =
-      if (fs.exists(logDir))
-        Some(DeltaRead.replayFull(spark, path, None)).filter(_.meta != null)
-      else None
+    // for append, tombstones for overwrite. The OCC conflict window starts
+    // at the version of the snapshot this commit's content derives from.
+    val snap = if (fs.exists(logDir)) Some(DeltaRead.snapshot(spark, path)) else None
+    val readVersion = snap.map(_.version).getOrElse(-1L)
+    val existingFull = snap.filter(_.meta != null)
     // column DEFAULTs, then generated columns, resolve BEFORE schema
     // validation: a batch that omits a defaulted or generated column is
     // completed to the table schema here (defaults first — a generation
@@ -622,8 +619,7 @@ object DeltaWrite {
     if (!tracked) files.map(add(_, None))
     else {
       var next = (if (attempt == firstAttempt) snapshotWm
-        else DeltaRead.rowIdHighWaterMark(
-          DeltaRead.replayFull(spark, path, None).domains)) + 1
+        else DeltaRead.rowIdHighWaterMark(DeltaRead.snapshot(spark, path).domains)) + 1
       val out = files.map { f =>
         val line = add(f, Some(next))
         next += numRecordsOf(f.stats, s"$path add ${f.path}")
@@ -642,8 +638,7 @@ object DeltaWrite {
   def setTableProperties(spark: SparkSession, path: String,
       props: Map[String, String]): Long = {
     require(props.nonEmpty, "props must be non-empty")
-    val readVersion = DeltaRead.latestVersion(spark, path)
-    val (meta, _) = DeltaRead.replayLog(spark, path, None)
+    val DeltaRead.Snapshot(readVersion, meta, _, _, _, _) = DeltaRead.snapshot(spark, path)
     require(meta != null, s"$path has no metaData action in its _delta_log")
     val now = System.currentTimeMillis()
     // the MERGED configuration governs this commit's own clock and
@@ -741,9 +736,10 @@ object DeltaWrite {
     * Compaction is an OPTIMIZATION, not a commit: no version is consumed,
     * the original JSONs stay (cleanup remains checkpoint-keyed — foreign
     * readers are not required to understand compacted files), and the
-    * file publishes atomically (temp + rename). [[DeltaRead.replayFull]]
-    * substitutes the largest non-overlapping compacted coverage for the
-    * per-commit JSONs when replaying. Returns the written path.
+    * file publishes atomically (temp + rename). A cold
+    * [[DeltaRead.snapshot]] substitutes the largest non-overlapping
+    * compacted coverage for the per-commit JSONs when replaying. Returns
+    * the written path.
     *
     * With no explicit range: compact everything after the last
     * checkpoint (or from version 0) up to the head.
@@ -827,12 +823,11 @@ object DeltaWrite {
     * Returns the committed version, or -1 when already fully enabled.
     */
   def enableRowTracking(spark: SparkSession, path: String): Long = {
-    val snap = DeltaRead.replayFull(spark, path, None)
+    val snap = DeltaRead.snapshot(spark, path)
     require(snap.meta != null, s"$path has no metaData action in its _delta_log")
     checkWritable(snap.meta, snap.protocol, s"enableRowTracking of $path",
       identityOk = true,
       removesData = false)
-    val readVersion = DeltaRead.latestVersion(spark, path)
     val alreadyOn =
       snap.meta.configuration.get("delta.enableRowTracking").contains("true")
     val toBackfill = snap.files.filter(_.baseRowId.isEmpty)
@@ -865,7 +860,7 @@ object DeltaWrite {
     }
     // exclusive: the assigned ranges and backfill set ARE the snapshot —
     // any concurrent commit invalidates both
-    commit(spark, path, readVersion, snap.meta.copy(configuration = merged),
+    commit(spark, path, snap.version, snap.meta.copy(configuration = merged),
       "ENABLE ROW TRACKING", Seq("backfilledFiles" -> toBackfill.size),
       ConflictGuard.exclusive())(attempt => lines.toSeq ++ backfillLines(attempt))
   }
@@ -1164,12 +1159,13 @@ object DeltaWrite {
     * log-only operation cannot cheaply verify remote existence).
     */
   def restore(spark: SparkSession, path: String, toVersion: Long): Long = {
-    val readVersion = DeltaRead.latestVersion(spark, path)
-    val DeltaRead.Snapshot(metaNow, liveNow, protoNow, _) = DeltaRead.replayFull(spark, path, None)
+    val DeltaRead.Snapshot(readVersion, metaNow, liveNow, protoNow, _, _) =
+      DeltaRead.snapshot(spark, path)
     require(metaNow != null, s"$path has no metaData action in its _delta_log")
     checkWritable(metaNow, protoNow, s"restore of $path", removesData = true,
       identityOk = true) // watermark preserved below, never rolled back
-    val (metaThen0, liveThen) = DeltaRead.replayLog(spark, path, Some(toVersion))
+    val DeltaRead.Snapshot(_, metaThen0, liveThen, _, _, _) =
+      DeltaRead.snapshot(spark, path, Some(toVersion))
     require(metaThen0 != null, s"$path had no metaData at version $toVersion")
     // IDENTITY watermark preservation (delta-spark's RESTORE rule): the
     // DATA rolls back, the HIGH WATERMARK does not — republishing the
@@ -1242,7 +1238,7 @@ object DeltaWrite {
     * know).
     */
   def cloneShallow(spark: SparkSession, src: String, dest: String): Long = {
-    val snap = DeltaRead.replayFull(spark, src, None)
+    val snap = DeltaRead.snapshot(spark, src)
     val (meta, live, proto) = (snap.meta, snap.files, snap.protocol)
     require(meta != null, s"$src has no metaData action in its _delta_log")
     val srcRoot = new Path(src)
@@ -1304,8 +1300,7 @@ object DeltaWrite {
   def widenColumnType(spark: SparkSession, path: String, column: String,
       to: DataType): Long = {
     import org.apache.spark.sql.types._
-    val readVersion = DeltaRead.latestVersion(spark, path)
-    val DeltaRead.Snapshot(meta, _, proto, _) = DeltaRead.replayFull(spark, path, None)
+    val DeltaRead.Snapshot(readVersion, meta, _, proto, _, _) = DeltaRead.snapshot(spark, path)
     require(meta != null, s"$path has no metaData action in its _delta_log")
     require(meta.mappingMode == "none",
       "widenColumnType on a column-mapped table is not supported here")
@@ -1350,8 +1345,7 @@ object DeltaWrite {
   def setColumnDefault(spark: SparkSession, path: String, column: String,
       default: String): Long = {
     import org.apache.spark.sql.functions.expr
-    val readVersion = DeltaRead.latestVersion(spark, path)
-    val DeltaRead.Snapshot(meta, _, proto, _) = DeltaRead.replayFull(spark, path, None)
+    val DeltaRead.Snapshot(readVersion, meta, _, proto, _, _) = DeltaRead.snapshot(spark, path)
     require(meta != null, s"$path has no metaData action in its _delta_log")
     val schema = DataType.fromJson(meta.schemaJson).asInstanceOf[StructType]
     val idx = schema.fieldNames.indexOf(column)
@@ -1393,8 +1387,7 @@ object DeltaWrite {
     */
   def dropColumnDefault(spark: SparkSession, path: String,
       column: String): Long = {
-    val readVersion = DeltaRead.latestVersion(spark, path)
-    val (meta, _) = DeltaRead.replayLog(spark, path, None)
+    val DeltaRead.Snapshot(readVersion, meta, _, _, _, _) = DeltaRead.snapshot(spark, path)
     require(meta != null, s"$path has no metaData action in its _delta_log")
     val schema = DataType.fromJson(meta.schemaJson).asInstanceOf[StructType]
     val idx = schema.fieldNames.indexOf(column)
@@ -1513,8 +1506,7 @@ object DeltaWrite {
     */
   def addColumn(spark: SparkSession, path: String, column: String,
       dataType: DataType): Long = {
-    val readVersion = DeltaRead.latestVersion(spark, path)
-    val DeltaRead.Snapshot(meta, _, proto, _) = DeltaRead.replayFull(spark, path, None)
+    val DeltaRead.Snapshot(readVersion, meta, _, proto, _, _) = DeltaRead.snapshot(spark, path)
     require(meta != null, s"$path has no metaData action in its _delta_log")
     val schema = DataType.fromJson(meta.schemaJson).asInstanceOf[StructType]
     require(!schema.fieldNames.contains(column),
@@ -1564,8 +1556,7 @@ object DeltaWrite {
     */
   def renameColumn(spark: SparkSession, path: String, from: String,
       to: String): Long = {
-    val readVersion = DeltaRead.latestVersion(spark, path)
-    val DeltaRead.Snapshot(meta, _, proto, _) = DeltaRead.replayFull(spark, path, None)
+    val DeltaRead.Snapshot(readVersion, meta, _, proto, _, _) = DeltaRead.snapshot(spark, path)
     require(meta != null, s"$path has no metaData action in its _delta_log")
     require(meta.mappingMode != "none",
       s"RENAME COLUMN on $path requires column mapping — unmapped files " +
@@ -1598,8 +1589,7 @@ object DeltaWrite {
     * refused on mapped tables today, so no re-add path exists here).
     */
   def dropColumn(spark: SparkSession, path: String, column: String): Long = {
-    val readVersion = DeltaRead.latestVersion(spark, path)
-    val DeltaRead.Snapshot(meta, _, proto, _) = DeltaRead.replayFull(spark, path, None)
+    val DeltaRead.Snapshot(readVersion, meta, _, proto, _, _) = DeltaRead.snapshot(spark, path)
     require(meta != null, s"$path has no metaData action in its _delta_log")
     require(meta.mappingMode != "none",
       s"DROP COLUMN on $path requires column mapping — unmapped tables " +
@@ -1762,8 +1752,7 @@ object DeltaWrite {
     require(targetBytes > 0, s"need targetBytes > 0, got $targetBytes")
     require(zCols.size >= 2, s"z-order needs at least 2 columns, got ${zCols.size}")
     require(zCols.distinct.size == zCols.size, s"duplicate z-order column in $zCols")
-    val readVersion = DeltaRead.latestVersion(spark, path)
-    val snap = DeltaRead.replayFull(spark, path, None)
+    val snap = DeltaRead.snapshot(spark, path)
     val meta = snap.meta
     require(meta != null, s"$path has no metaData action")
     checkWritable(meta, snap.protocol, s"compactZOrder of $path", removesData = false,
@@ -1801,7 +1790,7 @@ object DeltaWrite {
           col(s"`$pc`").as(n) }: _*),
       qNames, bins)
     val binNames = pCols.indices.map(i => s"__b$i")
-    rewriteGroups(spark, path, readVersion, snap, groups, targetBytes,
+    rewriteGroups(spark, path, snap, groups, targetBytes,
       Seq("zOrderBy" -> zCols.mkString(","), "targetBytes" -> targetBytes)) { (rows, nOut) =>
       val binned = pCols.zip(allBounds).zip(binNames).foldLeft(rows) {
         case (cur, ((pc, b), name)) =>
@@ -1829,7 +1818,7 @@ object DeltaWrite {
     * identity. The swap commits as remove+add with `dataChange=false`
     * under the disjoint-rewrite guard.
     */
-  private def rewriteGroups(spark: SparkSession, path: String, readVersion: Long,
+  private def rewriteGroups(spark: SparkSession, path: String,
       snap: DeltaRead.Snapshot, groups: Map[Map[String, String], Seq[DeltaRead.LiveFile]],
       targetBytes: Long, params: Seq[(String, Any)])(
       arrange: (DataFrame, Int) => DataFrame): Long = {
@@ -1886,9 +1875,9 @@ object DeltaWrite {
     val rewritten = groups.values.flatten.toSeq
     val removes = rewritten.map(f => DeltaActions.remove(f.path, now, dataChange = false, None))
     val addLines = renderAdds(spark, path, tracked,
-      DeltaRead.rowIdHighWaterMark(snap.domains), readVersion + 1,
+      DeltaRead.rowIdHighWaterMark(snap.domains), snap.version + 1,
       staged, now, dataChange = false) _
-    commit(spark, path, readVersion, meta, "OPTIMIZE", params,
+    commit(spark, path, snap.version, meta, "OPTIMIZE", params,
       ConflictGuard.disjointRewrite(rewritten.map(_.path).toSet))(
       attempt => addLines(attempt) ++ removes)
   }
@@ -2099,17 +2088,18 @@ object DeltaWrite {
     */
   def checkpoint(spark: SparkSession, path: String, parts: Int): Long = {
     require(parts >= 1, s"parts must be >= 1, got $parts")
-    val (version, snap, txns) = checkpointState(spark, path)
+    val snap = checkpointState(spark, path)
+    val version = snap.version
     val logDir = new Path(new Path(path), "_delta_log")
     val fs = logDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val rows = actionRows(addRows(spark, snap.files), stateRows(spark, snap, txns),
+    val rows = actionRows(addRows(spark, snap.files), stateRows(spark, snap),
       domainRows(spark, snap))
     // empty partitions write no file — the slice count is what landed
     val n = publishSlices(fs, new Path(path), rows, parts) { (i, n) =>
       if (parts == 1) new Path(logDir, f"$version%020d.checkpoint.parquet")
       else new Path(logDir, f"$version%020d.checkpoint.$i%010d.$n%010d.parquet")
     }.size
-    publishLastCheckpoint(fs, logDir, version, snap.files.size + 2 + txns.size,
+    publishLastCheckpoint(fs, logDir, version, snap.files.size + 2 + snap.txns.size,
       if (parts == 1) None else Some(n))
     version
   }
@@ -2129,7 +2119,8 @@ object DeltaWrite {
     */
   def checkpointV2(spark: SparkSession, path: String, sidecarParts: Int = 1): Long = {
     require(sidecarParts >= 1, s"sidecarParts must be >= 1, got $sidecarParts")
-    val (version, snap, txns) = checkpointState(spark, path)
+    val snap = checkpointState(spark, path)
+    val version = snap.version
     val root = new Path(path)
     val logDir = new Path(root, "_delta_log")
     val fs = logDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -2155,30 +2146,28 @@ object DeltaWrite {
         col("__m").as("modificationTime")).as("sidecar"))
     val cpmRow = Seq(version).toDF("__v")
       .select(struct(col("__v").as("version")).as("checkpointMetadata"))
-    publishSlices(fs, root, actionRows(stateRows(spark, snap, txns), scRows, cpmRow,
+    publishSlices(fs, root, actionRows(stateRows(spark, snap), scRows, cpmRow,
       domainRows(spark, snap)), 1) { (_, _) =>
       new Path(logDir, f"$version%020d.checkpoint.${UUID.randomUUID()}.parquet")
     }
 
     // 3) the pointer: no `parts` — readers discover the uuid name by
     // prefix listing (the v2 discovery rule)
-    publishLastCheckpoint(fs, logDir, version, 1 + txns.size + sidecars.size, None)
+    publishLastCheckpoint(fs, logDir, version, 1 + snap.txns.size + sidecars.size, None)
     version
   }
 
-  /** What every checkpoint snapshots: the head version, the replayed
-    * state at it, and the txn high-water marks — which must survive the
-    * checkpoint: once a later cleanup drops pre-checkpoint JSON commits,
-    * its txn rows are the only record the idempotent streaming sink can
-    * consult (spec: checkpoints carry txn actions).
+  /** What every checkpoint snapshots: the head snapshot, txn high-water
+    * marks included — they must survive the checkpoint: once a later
+    * cleanup drops pre-checkpoint JSON commits, its txn rows are the only
+    * record the idempotent streaming sink can consult (spec: checkpoints
+    * carry txn actions).
     */
-  private def checkpointState(spark: SparkSession,
-      path: String): (Long, DeltaRead.Snapshot, Map[String, (Long, Long)]) = {
-    val version = DeltaRead.latestVersion(spark, path)
-    require(version >= 0, s"$path has no commits to checkpoint")
-    val snap = DeltaRead.replayFull(spark, path, None)
+  private def checkpointState(spark: SparkSession, path: String): DeltaRead.Snapshot = {
+    val snap = DeltaRead.snapshot(spark, path)
+    require(snap.version >= 0, s"$path has no commits to checkpoint")
     require(snap.meta != null, s"$path has no metaData action")
-    (version, snap, txnVersions(spark, path))
+    snap
   }
 
   /** Checkpoint row sets as one frame; a row is null in every action
@@ -2210,8 +2199,7 @@ object DeltaWrite {
     * downgrade a typeWidening/DV table) — and one `txn` row per
     * high-water mark.
     */
-  private def stateRows(spark: SparkSession, snap: DeltaRead.Snapshot,
-      txns: Map[String, (Long, Long)]): DataFrame = {
+  private def stateRows(spark: SparkSession, snap: DeltaRead.Snapshot): DataFrame = {
     import org.apache.spark.sql.functions._
     import spark.implicits._
     val (meta, proto) = (snap.meta, snap.protocol)
@@ -2226,7 +2214,7 @@ object DeltaWrite {
         lit(proto.minWriter).as("minWriterVersion"),
         featArr(proto.readerFeatures).as("readerFeatures"),
         featArr(proto.writerFeatures).as("writerFeatures")).as("protocol"))
-    val txnRows = txns.toSeq.map { case (a, (v, lu)) => (a, v, lu) }
+    val txnRows = snap.txns.toSeq.map { case (a, (v, lu)) => (a, v, lu) }
       .toDF("__a", "__v", "__lu")
       .select(struct(col("__a").as("appId"), col("__v").as("version"),
         col("__lu").as("lastUpdated")).as("txn"))
@@ -2278,54 +2266,15 @@ object DeltaWrite {
     require(fs.rename(tmp, lc), s"failed to update $lc")
   }
 
-  /** Highest committed `txn` version per appId — checkpoint `txn` rows
-    * (the only record once log cleanup drops pre-checkpoint JSONs) merged
-    * with every JSON commit after the checkpoint. Empty map for a fresh
-    * path. Cost: driver-side, O(log tail), never O(rows).
-    */
-  private[io] def txnVersions(spark: SparkSession, path: String): Map[String, (Long, Long)] = {
-    import org.apache.spark.sql.functions.col
-    val conf = spark.sparkContext.hadoopConfiguration
-    val root = new Path(path)
-    val fs = root.getFileSystem(conf)
-    val dir = new Path(root, "_delta_log")
-    if (!fs.exists(dir)) return Map.empty
-    // appId -> (high-water txn version, its lastUpdated timestamp)
-    val acc = scala.collection.mutable.Map[String, (Long, Long)]()
-    def bump(appId: String, v: Long, lastUpdated: Long = 0L): Unit =
-      if (acc.get(appId).forall(_._1 < v)) acc(appId) = (v, lastUpdated)
-    val lastCp = DeltaRead.readLastCheckpoint(fs, dir)
-    lastCp.foreach { cpRef =>
-      // all three naming forms — a v2 checkpoint carries its txn rows in
-      // the uuid-named TOP file
-      val cp = DeltaRead.readCheckpointTop(spark, fs, dir, cpRef)
-      if (cp.columns.contains("txn"))
-        cp.select(col("txn")).filter(col("txn.appId").isNotNull).collect()
-          .foreach { r =>
-            val t = r.getStruct(0)
-            val lu = scala.util.Try(t.fieldIndex("lastUpdated")).toOption
-              .filterNot(t.isNullAt).map(t.getLong).getOrElse(0L)
-            bump(t.getString(t.fieldIndex("appId")),
-              t.getLong(t.fieldIndex("version")), lu)
-          }
-    }
-    DeltaRead.listCommits(fs, dir).map(_._1).filter(v => lastCp.forall(v > _.version))
-      .flatMap(v => DeltaRead.logLines(fs, DeltaRead.commitPath(dir, v)))
-      .filter(_.contains("\"txn\"")).foreach { line =>
-        val t = DeltaActions.parse(line).get("txn")
-        if (t != null && t.get("appId") != null)
-          bump(t.get("appId").asText(), t.get("version").asLong(),
-            Option(t.get("lastUpdated")).map(_.asLong()).getOrElse(0L))
-      }
-    acc.toMap
-  }
-
   /** The high-water `txn` version committed for `appId`, -1 when none —
     * the read half of the exactly-once streaming handshake: a sink whose
     * epoch id is <= this has already committed and must skip the replay.
     */
-  def lastTxnVersion(spark: SparkSession, path: String, appId: String): Long =
-    txnVersions(spark, path).get(appId).map(_._1).getOrElse(-1L)
+  def lastTxnVersion(spark: SparkSession, path: String, appId: String): Long = {
+    val log = new Path(path, "_delta_log")
+    if (!log.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(log)) -1L
+    else DeltaRead.snapshot(spark, path).txns.get(appId).map(_._1).getOrElse(-1L)
+  }
 
   /** OPTIMIZE: bin-pack each partition's small live files (< `targetBytes`)
     * into ~`targetBytes` outputs and commit the swap as remove+add with
@@ -2343,8 +2292,7 @@ object DeltaWrite {
       targetBytes: Long = 128L * 1024 * 1024, minFiles: Int = 2): Long = {
     require(targetBytes > 0 && minFiles >= 2,
       s"need targetBytes > 0 and minFiles >= 2, got $targetBytes/$minFiles")
-    val readVersion = DeltaRead.latestVersion(spark, path)
-    val snap = DeltaRead.replayFull(spark, path, None)
+    val snap = DeltaRead.snapshot(spark, path)
     require(snap.meta != null, s"$path has no metaData action")
     // dataChange=false: allowed even on delta.appendOnly tables (the spec's
     // carve-out for maintenance rewrites)
@@ -2362,7 +2310,7 @@ object DeltaWrite {
       }
       .filter(_._2.nonEmpty)
     if (groups.isEmpty) return -1L
-    rewriteGroups(spark, path, readVersion, snap, groups, targetBytes,
+    rewriteGroups(spark, path, snap, groups, targetBytes,
       Seq("targetBytes" -> targetBytes))(_ coalesce _)
   }
 
@@ -2370,7 +2318,7 @@ object DeltaWrite {
     * superseded checkpoint files — whose version is covered by the LAST
     * checkpoint and whose modification time is older than `retentionMs`.
     * Replay correctness is untouched: the checkpoint is a complete
-    * snapshot at its version and [[DeltaRead.replayLog]] anchors on it,
+    * snapshot at its version and [[DeltaRead.snapshot]] anchors on it,
     * so only commits the fast path already skips are removed. The trades
     * are Delta's own: time travel to a cleaned version fails loudly
     * (never returns wrong data) and [[DeltaRead.versionAtTimestamp]]
@@ -2409,12 +2357,10 @@ object DeltaWrite {
     // is the keep criterion)
     val scDir = new Path(logDir, "_sidecars")
     if (fs.exists(scDir)) {
-      import org.apache.spark.sql.functions.col
-      val top = DeltaRead.readCheckpointTop(spark, fs, logDir, lastCp)
-      val referenced: Set[String] =
-        if (!top.columns.contains("sidecar")) Set.empty
-        else top.select(col("sidecar.path")).filter(col("sidecar.path").isNotNull)
-          .collect().map(r => new Path(r.getString(0)).getName).toSet
+      val referenced = DeltaRead.checkpointRows(spark,
+          DeltaRead.checkpointFiles(fs, logDir, lastCp))
+        .flatMap(r => Option(r.getAs[Row]("sidecar")))
+        .flatMap(sc => Option(sc.getAs[String]("path"))).map(new Path(_).getName).toSet
       fs.listStatus(scDir).foreach { st =>
         val n = st.getPath.getName
         if (!referenced.contains(n) && st.getModificationTime < cutoff) {
@@ -2436,7 +2382,7 @@ object DeltaWrite {
   def vacuum(spark: SparkSession, path: String,
       retentionMs: Long = 7L * 24 * 3600 * 1000): Seq[String] = {
     require(retentionMs >= 0, s"retentionMs must be >= 0, got $retentionMs")
-    val (_, live) = DeltaRead.replayLog(spark, path, None)
+    val live = DeltaRead.snapshot(spark, path).files
     val liveSet = live.map(_.path).toSet
     val conf = spark.sparkContext.hadoopConfiguration
     val root = new Path(path)

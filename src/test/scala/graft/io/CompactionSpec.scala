@@ -3,14 +3,9 @@ package graft.io
 import graft.{SparkSpec, Tables}
 import org.apache.spark.sql.functions._
 
-import java.nio.file.Files
-
 class CompactionSpec extends SparkSpec {
 
-  private def freshDir(): String = {
-    val d = Files.createTempDirectory("graft-compact").toFile
-    d.delete(); d.getPath
-  }
+  private def freshDir(): String = tmp("graft-compact") + "/t"
 
   test("compact rewrites a many-small-files table to the computed file count, data intact") {
     val dir = freshDir()

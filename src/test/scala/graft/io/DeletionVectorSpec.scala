@@ -1,7 +1,6 @@
 package graft.io
 
 import java.nio.{ByteBuffer, ByteOrder}
-import java.nio.file.Files
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.functions._
@@ -79,7 +78,7 @@ class DeletionVectorSpec extends SparkSpec {
 
   private def appendDvCommit(table: String, dv: String): Unit = {
     val fs = new Path(table).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val live = DeltaRead.replayLog(spark, table, None)._2
+    val live = DeltaRead.snapshot(spark, table).files
     assert(live.size == 1, s"fixture expects one live file, got $live")
     val f = live.head
     val v = DeltaRead.latestVersion(spark, table) + 1
@@ -91,7 +90,7 @@ class DeletionVectorSpec extends SparkSpec {
   }
 
   private def freshTable(): String = {
-    val table = Files.createTempDirectory("graft_dv").toString
+    val table = tmp("graft_dv")
     // one file, row order = id order (no shuffle on a coalesced local seq)
     DeltaWrite.writeDeltaTable(
       (0L until 10L).map(i => (i, s"v$i")).toDF("id", "v").coalesce(1),
@@ -207,14 +206,14 @@ class DeletionVectorSpec extends SparkSpec {
     // the replayed protocol survived the checkpoint (not derived from the
     // mapping mode): reader 3 + deletionVectors feature, as the external
     // DV commit declared
-    val proto = DeltaRead.replayFull(spark, table, None).protocol
+    val proto = DeltaRead.snapshot(spark, table).protocol
     assert(proto.minReader == 3 && proto.readerFeatures.contains("deletionVectors"), proto)
 
     // compact reads THROUGH the vector and commits the rewrite without the
     // deleted rows — descriptor gone, rows identical
     val cv = DeltaWrite.compact(spark, table)
     assert(cv == 2L)
-    val liveAfter = DeltaRead.replayLog(spark, table, None)._2
+    val liveAfter = DeltaRead.snapshot(spark, table).files
     assert(liveAfter.forall(_.dv.isEmpty), liveAfter)
     assert(DeltaRead.readDeltaTable(spark, table)
       .collect().map(_.getLong(0)).sorted.toSeq == expect)
@@ -238,11 +237,11 @@ class DeletionVectorSpec extends SparkSpec {
       s"""{"storageType":"u","pathOrInlineDv":"${z85Encode(uuidBytes)}","offset":1,"sizeInBytes":${data.length},"cardinality":2}""") // v1
     val expect = (1L to 8L).toSeq
 
-    val dest = Files.createTempDirectory("graft_dv_clone").toString + "/t"
+    val dest = tmp("graft_dv_clone") + "/t"
     DeltaWrite.cloneShallow(spark, table, dest)
     // the clone's descriptor must be ABSOLUTE (p) — uuid-relative would
     // resolve against the clone's own root, where no blob exists
-    val cloneLive = DeltaRead.replayLog(spark, dest, None)._2
+    val cloneLive = DeltaRead.snapshot(spark, dest).files
     assert(cloneLive.flatMap(_.dv).map(_.storageType).distinct == Seq("p"), cloneLive)
     assert(DeltaRead.readDeltaTable(spark, dest)
       .collect().map(_.getLong(0)).sorted.toSeq == expect)
@@ -250,7 +249,7 @@ class DeletionVectorSpec extends SparkSpec {
     // restore across a DV-dropping rewrite resurrects the descriptor
     DeltaWrite.compact(spark, table) // v2: deletes materialized, DV dropped
     DeltaWrite.restore(spark, table, 1L) // v3: back to the DV-carrying state
-    val restoredLive = DeltaRead.replayLog(spark, table, None)._2
+    val restoredLive = DeltaRead.snapshot(spark, table).files
     assert(restoredLive.exists(_.dv.isDefined), restoredLive)
     assert(DeltaRead.readDeltaTable(spark, table)
       .collect().map(_.getLong(0)).sorted.toSeq == expect)

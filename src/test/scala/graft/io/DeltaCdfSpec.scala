@@ -195,7 +195,7 @@ class DeltaCdfSpec extends SparkSpec {
     // prove the ids by resolving under entirely different names
     import org.apache.spark.sql.types._
     val ms = org.apache.spark.sql.types.DataType.fromJson(
-      DeltaRead.replayLog(spark, table, None)._1.schemaJson).asInstanceOf[StructType]
+      DeltaRead.snapshot(spark, table).meta.schemaJson).asInstanceOf[StructType]
     def fid(id: Int) = Metadata.fromJson(s"""{"parquet.field.id":$id}""")
     val foreign = StructType(Seq(
       StructField("c1", LongType, nullable = true, fid(1)),

@@ -174,11 +174,11 @@ class DeltaCrashSpec extends SparkSpec {
     test(s"$name crashing $phase leaves version N or N+1, never torn") {
       val t = table()
       val before = rows(t)
-      val files = DeltaRead.replayFull(spark, t, None).files.size
+      val files = DeltaRead.snapshot(spark, t).files.size
       val v = crash(t, phase, op, marker, after, lands, before, effect(before))(commit(t))
       // a compaction changes no row: the live file set tells N from N+1
       if (name == "compact")
-        assert((DeltaRead.replayFull(spark, t, None).files.size < files) == lands)
+        assert((DeltaRead.snapshot(spark, t).files.size < files) == lands)
 
       // the next commit lands cleanly on top of whatever landed
       val model = if (lands) effect(before) else before

@@ -1,0 +1,81 @@
+package graft.io
+
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.ListenerDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.functions._
+
+import graft.SparkSpec
+
+/** Spark jobs per Delta verb on a tiny checkpointed table. The Delta path
+  * is bound by driver round trips, so its job counts are its cost: a head
+  * read after a checkpoint costs what one before it costs once the
+  * table's snapshot is cached, and at most one job more (the checkpoint
+  * decode) when it is not. Every verb runs on a table with a checkpoint
+  * behind it, so a cold replay added to any commit adds a job and fails
+  * its pin. A lower count is a speedup; a higher one needs a reason.
+  */
+class DeltaJobBudgetSpec extends SparkSpec {
+  import spark.implicits._
+
+  private val group = new AtomicInteger(0)
+
+  /** The Spark jobs `f` starts from this thread. */
+  private def jobs(f: => Any): Int = {
+    val sc = spark.sparkContext
+    val id = s"graft-job-budget-${group.incrementAndGet()}"
+    val n = new AtomicInteger(0)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == id))
+          n.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    sc.setJobGroup(id, "job budget")
+    try { f; ListenerDrain.drain(sc) }
+    finally { sc.clearJobGroup(); sc.removeSparkListener(listener) }
+    n.get
+  }
+
+  private def upsert(lo: Long): org.apache.spark.sql.DataFrame =
+    (lo until lo + 20).map(i => (i, i * 7)).toDF("id", "v").repartition(1)
+
+  test("head reads, MERGE, compact, checkpoint and lastTxnVersion keep their job counts") {
+    val t = tmp("graft_job_budget") + "/t"
+    DeltaWrite.writeDeltaTable(spark.range(0, 400).select(col("id"), (col("id") * 10).as("v"))
+      .repartition(4), t, "append")                                                    // v0
+    DeltaWrite.setTableProperties(spark, t, Map("delta.enableChangeDataFeed" -> "true")) // v1
+    DeltaWrite.writeDeltaTable(Seq((1000L, 1L)).toDF("id", "v"), t, "append",
+      txn = Some(("app", 3L)))                                                         // v2
+    def read(): Long = DeltaRead.readDeltaTable(spark, t).count()
+
+    DeltaRead.clearSnapshotCache()
+    val coldBefore = jobs(read())
+    val warmBefore = jobs(read())
+    val checkpoint = jobs(DeltaWrite.checkpoint(spark, t))
+    val warmAfter = jobs(read())
+    DeltaRead.clearSnapshotCache()
+    val coldAfter = jobs(read())
+    assert(warmAfter <= warmBefore, s"warm head read: $warmAfter jobs after the checkpoint, $warmBefore before")
+    assert(coldAfter <= coldBefore + 1, s"cold head read: $coldAfter jobs after the checkpoint, $coldBefore before")
+
+    var txn = -1L
+    val counts = Map(
+      "read cold" -> coldBefore, "read warm" -> warmBefore, "checkpoint" -> checkpoint,
+      "read warm after checkpoint" -> warmAfter, "read cold after checkpoint" -> coldAfter,
+      "lastTxnVersion" -> jobs { txn = DeltaWrite.lastTxnVersion(spark, t, "app") },
+      "COW MERGE" -> jobs(DeltaMerge.merge(spark, t, upsert(100L), Seq("id"))),
+      "DV MERGE" -> jobs(DeltaMerge.merge(spark, t, upsert(300L), Seq("id"),
+        useDeletionVectors = true)),
+      "compact" -> jobs(DeltaWrite.compact(spark, t)),
+      "checkpoint again" -> jobs(DeltaWrite.checkpoint(spark, t)))
+    assert(txn == 3L)
+    assert(counts == Map(
+      "read cold" -> 2, "read warm" -> 2, "checkpoint" -> 1,
+      "read warm after checkpoint" -> 2, "read cold after checkpoint" -> 3,
+      "lastTxnVersion" -> 0, "COW MERGE" -> 17, "DV MERGE" -> 18, "compact" -> 1,
+      "checkpoint again" -> 1), counts.toSeq.sortBy(_._1).mkString(", "))
+    assert(DeltaRead.readDeltaTable(spark, t).count() == 401L)
+  }
+}

@@ -36,10 +36,10 @@ class DeltaMergeSpec extends SparkSpec {
       Seq((1L, "a", 1L), (2L, "b", 2L)).toDF("id", "v", "n").coalesce(1), table, "append")
     DeltaWrite.writeDeltaTable(
       Seq((3L, "c", 3L)).toDF("id", "v", "n").coalesce(1), table, "append")
-    val before = DeltaRead.replayLog(spark, table, None)._2.map(_.path).toSet
+    val before = DeltaRead.snapshot(spark, table).files.map(_.path).toSet
     DeltaMerge.merge(spark, table,
       Seq((3L, "C", 33L)).toDF("id", "v", "n"), Seq("id"))
-    val after = DeltaRead.replayLog(spark, table, None)._2.map(_.path).toSet
+    val after = DeltaRead.snapshot(spark, table).files.map(_.path).toSet
     // the untouched first-commit file survives by identity
     assert((before & after).nonEmpty, s"untouched file rewritten: $before vs $after")
     assert(rows(table) == Seq((1L, "a", 1L), (2L, "b", 2L), (3L, "C", 33L)))
@@ -76,10 +76,10 @@ class DeltaMergeSpec extends SparkSpec {
       Seq((1L, "a", 1L), (2L, "b", -2L)).toDF("id", "v", "n").coalesce(1), table, "append")
     DeltaWrite.writeDeltaTable(
       Seq((3L, "c", 3L)).toDF("id", "v", "n").coalesce(1), table, "append")
-    val before = DeltaRead.replayLog(spark, table, None)._2.map(_.path).toSet
+    val before = DeltaRead.snapshot(spark, table).files.map(_.path).toSet
     val v = DeltaMerge.deleteWhere(spark, table, col("n") < 0)
     assert(v == 2L)
-    val after = DeltaRead.replayLog(spark, table, None)._2.map(_.path).toSet
+    val after = DeltaRead.snapshot(spark, table).files.map(_.path).toSet
     assert((before & after).nonEmpty, "file with no matching rows was rewritten")
     assert(rows(table) == Seq((1L, "a", 1L), (3L, "c", 3L)))
     // time travel to the pre-delete version still sees the deleted row
@@ -93,14 +93,14 @@ class DeltaMergeSpec extends SparkSpec {
       Seq((1L, "a", 10L), (2L, "b", -20L)).toDF("id", "v", "n").coalesce(1), table, "append")
     DeltaWrite.writeDeltaTable(
       Seq((3L, "c", 30L)).toDF("id", "v", "n").coalesce(1), table, "append")
-    val before = DeltaRead.replayLog(spark, table, None)._2.map(_.path).toSet
+    val before = DeltaRead.snapshot(spark, table).files.map(_.path).toSet
     // set expressions read the CURRENT row: negate-and-flag
     val v = DeltaMerge.updateWhere(spark, table, col("n") < 0,
       Map("n" -> -col("n"), "v" -> upper(col("v"))))
     assert(v == 2L)
     assert(rows(table) == Seq((1L, "a", 10L), (2L, "B", 20L), (3L, "c", 30L)))
     // the file with no matching rows survived by identity
-    val after = DeltaRead.replayLog(spark, table, None)._2.map(_.path).toSet
+    val after = DeltaRead.snapshot(spark, table).files.map(_.path).toSet
     assert((before & after).nonEmpty, "file with no matching rows was rewritten")
     // pre-update state still replayable; no-match returns -1
     assert(rows(table, Some(1L)) == Seq((1L, "a", 10L), (2L, "b", -20L), (3L, "c", 30L)))
@@ -145,7 +145,7 @@ class DeltaMergeSpec extends SparkSpec {
     DeltaMerge.deleteWhere(spark, table, col("n") > 100L)
     assert(rows(table) == Seq((1L, "a", 11L), (3L, "c", 30L)))
     // every live file (originals AND rewrites) stores physical names
-    val files = DeltaRead.replayLog(spark, table, None)._2
+    val files = DeltaRead.snapshot(spark, table).files
     files.foreach { f =>
       val cols = spark.read.parquet(new java.io.File(table, f.path).toString).columns
       assert(cols.forall(_.startsWith("col-")), s"${f.path}: ${cols.mkString(", ")}")
@@ -166,7 +166,7 @@ class DeltaMergeSpec extends SparkSpec {
     assert(back.orderBy("id").collect().map(r => (r.getLong(0), r.getString(1), r.getString(2))).toSeq ==
       Seq((1L, "x", "2024-01-01"), (2L, "Y", "2024-01-02"), (3L, "z", "2024-01-03")))
     // partition values ride the log for the rewritten + inserted files
-    val live = DeltaRead.replayLog(spark, table, None)._2
+    val live = DeltaRead.snapshot(spark, table).files
     assert(live.forall(_.partitionValues.contains("day")), live.toString)
     val pruned = back.filter(col("day") === "2024-01-03").collect().map(_.getLong(0))
     assert(pruned.toSeq == Seq(3L))
@@ -234,7 +234,7 @@ class DeltaMergeSpec extends SparkSpec {
 
     // values-and-mark-in-ONE-commit: the merge's own version already
     // publishes highWaterMark = 4 (a crash after it can never re-issue)
-    val (metaAtMerge, _) = DeltaRead.replayLog(spark, table, Some(v))
+    val metaAtMerge = DeltaRead.snapshot(spark, table, Some(v)).meta
     assert(metaAtMerge.schemaJson.contains("\"delta.identity.highWaterMark\":4"),
       metaAtMerge.schemaJson)
     // and the next plain append continues past the merged inserts

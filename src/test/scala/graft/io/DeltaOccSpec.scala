@@ -3,10 +3,44 @@ package graft.io
 import java.util.ConcurrentModificationException
 import java.util.concurrent.{CountDownLatch, Executors, TimeUnit}
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileStatus, Path, RawLocalFileSystem}
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
+
+/** A local filesystem under the `race` scheme that runs an armed hook once,
+  * right after the first listing of a `_delta_log` directory returns — the
+  * moment a second writer's commit lands between a writer's read of the
+  * log and everything it does after.
+  */
+class RaceFs extends RawLocalFileSystem {
+  override def getUri: java.net.URI = java.net.URI.create("race:///")
+
+  override def listStatus(f: Path): Array[FileStatus] = {
+    val out = super.listStatus(f)
+    if (f.getName == "_delta_log") RaceFs.fire()
+    out
+  }
+}
+
+object RaceFs {
+  @volatile private var hook: Option[() => Unit] = None
+
+  def arm(f: () => Unit): Unit = hook = Some(f)
+
+  /** Clears the hook; true when it ran. */
+  def disarm(): Boolean = {
+    val fired = hook.isEmpty
+    hook = None
+    fired
+  }
+
+  private def fire(): Unit = synchronized {
+    val h = hook
+    hook = None
+    h.foreach(_())
+  }
+}
 
 /** Optimistic concurrency on the Delta commit path: concurrent DISJOINT
   * work retries onto consecutive versions with nothing lost; true
@@ -94,7 +128,7 @@ class DeltaOccSpec extends SparkSpec {
     // the content assertion above is the real pin, and same-file overlap
     // refusal is covered by the generic rewrite-conflict test since DV
     // commits ride the same disjointRewrite guard)
-    val dvCard = DeltaRead.replayLog(spark, table, None)._2
+    val dvCard = DeltaRead.snapshot(spark, table).files
       .flatMap(_.dv).map(_.cardinality).sum
     assert(dvCard > 0L, "expected at least one surviving deletion vector")
   }
@@ -299,5 +333,32 @@ class DeltaOccSpec extends SparkSpec {
     val after = DeltaRead.readDeltaTable(spark, table)
       .select("rid").as[Long].collect().sorted.toSeq
     assert(after == (1L to after.length.toLong), after.toString)
+  }
+
+  test("a DML plans on its pinned snapshot and refuses a winner that removed a file it rewrites") {
+    spark.sparkContext.hadoopConfiguration.set("fs.race.impl", classOf[RaceFs].getName)
+    val local = tmp("graft_occ_pin")
+    val table = "race://" + local
+    DeltaWrite.writeDeltaTable((0L until 10L).map(i => (i, i)).toDF("id", "v").coalesce(1),
+      table, "append") // v0: file F
+    DeltaWrite.writeDeltaTable((10L until 20L).map(i => (i, i)).toDF("id", "v").coalesce(1),
+      table, "append") // v1: file G
+    val f = DeltaRead.snapshot(spark, table, Some(0L)).files.head.path
+    // a second writer publishes v2, removing F, as soon as the DELETE's
+    // first log listing returns: the DELETE must plan on v1 (rewriting F
+    // and G) and check conflicts from v1, never plan on v2 while checking
+    // from v1
+    RaceFs.arm { () =>
+      DeltaWrite.publishCommit(fsOf(local), new Path(local, "_delta_log"), 2L, Seq(
+        DeltaActions.commitInfo(None, System.currentTimeMillis(), "DELETE", Nil),
+        DeltaActions.remove(f, System.currentTimeMillis(), dataChange = true, None)))
+    }
+    val e = intercept[ConcurrentModificationException](
+      DeltaMerge.deleteWhere(spark, table, col("id").isin(5L, 15L)))
+    assert(RaceFs.disarm(), "the second writer never published")
+    assert(e.getMessage.contains(s"concurrent version 2") &&
+      e.getMessage.contains(s"already removed $f"), e.getMessage)
+    assert(DeltaRead.latestVersion(spark, table) == 2L)
+    assert(DeltaRead.readDeltaTable(spark, table).count() == 10L)
   }
 }

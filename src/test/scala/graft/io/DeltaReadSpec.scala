@@ -18,7 +18,7 @@ class DeltaReadSpec extends SparkSpec {
     * the log-relative path.
     */
   private def addFile(table: String, name: String, df: DataFrame): String = {
-    val staging = Files.createTempDirectory("graft_delta_stage").toString
+    val staging = tmp("graft_delta_stage")
     df.coalesce(1).write.mode("overwrite").parquet(staging)
     val part = Files.list(Paths.get(staging)).iterator().asScala
       .find(_.getFileName.toString.endsWith(".parquet")).get
@@ -44,7 +44,7 @@ class DeltaReadSpec extends SparkSpec {
     Files.size(Paths.get(table, name))
 
   test("log replay: adds accumulate, removes tombstone, schema comes from metaData") {
-    val table = Files.createTempDirectory("graft_delta1").toString
+    val table = tmp("graft_delta1")
     val d1 = Seq((1L, "a"), (2L, "b")).toDF("id", "v")
     val f1 = addFile(table, "f1.parquet", d1)
     val f2 = addFile(table, "f2.parquet", Seq((3L, "c")).toDF("id", "v"))
@@ -69,7 +69,7 @@ class DeltaReadSpec extends SparkSpec {
   }
 
   test("partition columns are re-derived from partitionValues with schema types") {
-    val table = Files.createTempDirectory("graft_delta2").toString
+    val table = tmp("graft_delta2")
     // data files do NOT carry the partition column — the Delta layout
     val full = Seq((1L, 10.0, "2024-01-01"), (2L, 20.0, "2024-01-02"))
       .toDF("id", "x", "day")
@@ -88,7 +88,7 @@ class DeltaReadSpec extends SparkSpec {
   }
 
   test("partition pruning: a partition-column filter folds away the other partitions' scans") {
-    val table = Files.createTempDirectory("graft_delta_pp").toString
+    val table = tmp("graft_delta_pp")
     val full = Seq((1L, "2024-01-01")).toDF("id", "day")
     val f1 = addFile(table, "day=2024-01-01/p1.parquet", Seq(Tuple1(1L)).toDF("id"))
     val f2 = addFile(table, "day=2024-01-02/p2.parquet", Seq(Tuple1(2L)).toDF("id"))
@@ -113,7 +113,7 @@ class DeltaReadSpec extends SparkSpec {
   }
 
   test("non-hive file layout: partition values come from the log, not the paths") {
-    val table = Files.createTempDirectory("graft_delta_nh").toString
+    val table = tmp("graft_delta_nh")
     val full = Seq((1L, "x")).toDF("id", "grp")
     val f1 = addFile(table, "flat1.parquet", Seq(Tuple1(1L)).toDF("id"))
     val f2 = addFile(table, "flat2.parquet", Seq(Tuple1(2L)).toDF("id"))
@@ -127,7 +127,7 @@ class DeltaReadSpec extends SparkSpec {
   }
 
   test("data skipping: add.stats min/max prune whole files before they are opened") {
-    val table = Files.createTempDirectory("graft_delta_ds").toString
+    val table = tmp("graft_delta_ds")
     val d = Seq((1L, "a")).toDF("id", "v")
     val f1 = addFile(table, "r1.parquet", Seq((1L, "a"), (2L, "b")).toDF("id", "v"))
     val f2 = addFile(table, "r2.parquet", Seq((10L, "c"), (20L, "d")).toDF("id", "v"))
@@ -185,7 +185,7 @@ class DeltaReadSpec extends SparkSpec {
   }
 
   test("typed partition columns: int values parse from the log and prune correctly") {
-    val table = Files.createTempDirectory("graft_delta_tp").toString
+    val table = tmp("graft_delta_tp")
     val full = Seq((1L, 7)).toDF("id", "bucket")
     val f1 = addFile(table, "b7.parquet", Seq(Tuple1(1L)).toDF("id"))
     val f2 = addFile(table, "b8.parquet", Seq(Tuple1(2L)).toDF("id"))
@@ -201,7 +201,7 @@ class DeltaReadSpec extends SparkSpec {
   }
 
   test("IsNotNull skips a file whose stats say the column is entirely null") {
-    val table = Files.createTempDirectory("graft_delta_nn").toString
+    val table = tmp("graft_delta_nn")
     val d = Seq((1L, Option("a"))).toDF("id", "v")
     val f1 = addFile(table, "n1.parquet", Seq((1L, Option("a"))).toDF("id", "v"))
     val f2 = addFile(table, "n2.parquet", Seq((2L, None: Option[String])).toDF("id", "v"))
@@ -222,7 +222,7 @@ class DeltaReadSpec extends SparkSpec {
   }
 
   test("checkpoint fast path: snapshot parquet + _last_checkpoint, later commits replay on top") {
-    val table = Files.createTempDirectory("graft_delta3").toString
+    val table = tmp("graft_delta3")
     val d = Seq((1L, "a")).toDF("id", "v")
     val f1 = addFile(table, "f1.parquet", d)
     val f2 = addFile(table, "f2.parquet", Seq((2L, "b")).toDF("id", "v"))
@@ -241,7 +241,7 @@ class DeltaReadSpec extends SparkSpec {
          |UNION ALL
          |SELECT null, named_struct('path', 'f2.parquet',
          |  'partitionValues', map())""".stripMargin)
-    val cpStage = Files.createTempDirectory("graft_delta_cp").toString
+    val cpStage = tmp("graft_delta_cp")
     cp.coalesce(1).write.mode("overwrite").parquet(cpStage)
     val cpFile = Files.list(Paths.get(cpStage)).iterator().asScala
       .find(_.getFileName.toString.endsWith(".parquet")).get
@@ -261,7 +261,7 @@ class DeltaReadSpec extends SparkSpec {
   }
 
   test("v2 checkpoint: uuid-named top file + sidecar file actions, later commits replay on top") {
-    val table = Files.createTempDirectory("graft_delta_v2cp").toString
+    val table = tmp("graft_delta_v2cp")
     val d = Seq((1L, "a")).toDF("id", "v")
     val f1 = addFile(table, "f1.parquet", d)
     val f2 = addFile(table, "f2.parquet", Seq((2L, "b")).toDF("id", "v"))
@@ -269,7 +269,7 @@ class DeltaReadSpec extends SparkSpec {
     val logDir = Paths.get(table, "_delta_log")
     Files.createDirectories(logDir)
     def stageOne(df: DataFrame, dest: java.nio.file.Path): Unit = {
-      val stage = Files.createTempDirectory("graft_v2cp_stage").toString
+      val stage = tmp("graft_v2cp_stage")
       df.coalesce(1).write.mode("overwrite").parquet(stage)
       val f = Files.list(Paths.get(stage)).iterator().asScala
         .find(_.getFileName.toString.endsWith(".parquet")).get
@@ -318,7 +318,7 @@ class DeltaReadSpec extends SparkSpec {
     // the steady state after log cleanup: the ONLY metaData action is in the
     // checkpoint parquet — the mapping-mode gate must fire there too, not
     // just on the JSON-commit path
-    val table = Files.createTempDirectory("graft_delta_cpcm").toString
+    val table = tmp("graft_delta_cpcm")
     val d = Seq((1L, "a")).toDF("id", "v")
     val f1 = addFile(table, "f1.parquet", d)
     val sj = d.schema.json
@@ -330,7 +330,7 @@ class DeltaReadSpec extends SparkSpec {
          |UNION ALL
          |SELECT null, named_struct('path', 'f1.parquet', 'partitionValues', map())
          |""".stripMargin)
-    val cpStage = Files.createTempDirectory("graft_delta_cpcm_stage").toString
+    val cpStage = tmp("graft_delta_cpcm_stage")
     cp.coalesce(1).write.mode("overwrite").parquet(cpStage)
     val cpFile = Files.list(Paths.get(cpStage)).iterator().asScala
       .find(_.getFileName.toString.endsWith(".parquet")).get
@@ -345,7 +345,7 @@ class DeltaReadSpec extends SparkSpec {
   }
 
   test("changesSince reads only newly added files; a remove in the range fails loudly") {
-    val table = Files.createTempDirectory("graft_delta_cs").toString
+    val table = tmp("graft_delta_cs")
     val d = Seq((1L, "a")).toDF("id", "v")
     val f1 = addFile(table, "c1.parquet", Seq((1L, "a")).toDF("id", "v"))
     val f2 = addFile(table, "c2.parquet", Seq((2L, "b")).toDF("id", "v"))
@@ -374,7 +374,7 @@ class DeltaReadSpec extends SparkSpec {
   }
 
   test("streaming read: log-derived schema, data files stream in, _delta_log stays invisible") {
-    val table = Files.createTempDirectory("graft_delta_st").toString
+    val table = tmp("graft_delta_st")
     val d = Seq((1L, "a"), (2L, "b")).toDF("id", "v")
     val f1 = addFile(table, "s1.parquet", d)
     writeCommit(table, 0, Seq(
@@ -394,7 +394,7 @@ class DeltaReadSpec extends SparkSpec {
   }
 
   test("time travel to a nonexistent or cleaned version fails loudly, never returns wrong data") {
-    val table = Files.createTempDirectory("graft_delta_tt").toString
+    val table = tmp("graft_delta_tt")
     val d = Seq((1L, "a")).toDF("id", "v")
     val f1 = addFile(table, "f1.parquet", d)
     val f2 = addFile(table, "f2.parquet", Seq((2L, "b")).toDF("id", "v"))
@@ -423,7 +423,7 @@ class DeltaReadSpec extends SparkSpec {
          |SELECT null, named_struct('path', 'f1.parquet', 'partitionValues', map())
          |UNION ALL
          |SELECT null, named_struct('path', 'f2.parquet', 'partitionValues', map())""".stripMargin)
-    val cpStage = Files.createTempDirectory("graft_delta_tt_cp").toString
+    val cpStage = tmp("graft_delta_tt_cp")
     cp.coalesce(1).write.mode("overwrite").parquet(cpStage)
     val cpFile = Files.list(Paths.get(cpStage)).iterator().asScala
       .find(_.getFileName.toString.endsWith(".parquet")).get
@@ -439,7 +439,7 @@ class DeltaReadSpec extends SparkSpec {
   }
 
   test("multi-part checkpoint: _last_checkpoint parts field loads all slices") {
-    val table = Files.createTempDirectory("graft_delta_mp").toString
+    val table = tmp("graft_delta_mp")
     val d = Seq((1L, "a")).toDF("id", "v")
     val f1 = addFile(table, "f1.parquet", d)
     val f2 = addFile(table, "f2.parquet", Seq((2L, "b")).toDF("id", "v"))
@@ -448,7 +448,7 @@ class DeltaReadSpec extends SparkSpec {
     Files.createDirectories(logDir)
     // part 1: the metaData; part 2: the two adds — no JSON for 0..1 at all
     def cpSlice(sql: String, name: String): Unit = {
-      val stage = Files.createTempDirectory("graft_delta_mp_cp").toString
+      val stage = tmp("graft_delta_mp_cp")
       spark.sql(sql).coalesce(1).write.mode("overwrite").parquet(stage)
       val file = Files.list(Paths.get(stage)).iterator().asScala
         .find(_.getFileName.toString.endsWith(".parquet")).get
@@ -476,7 +476,7 @@ class DeltaReadSpec extends SparkSpec {
   }
 
   test("streaming a partitioned table is refused — partition values exist only in the log") {
-    val table = Files.createTempDirectory("graft_delta_sp").toString
+    val table = tmp("graft_delta_sp")
     val full = Seq((1L, "g1")).toDF("id", "grp")
     val f1 = addFile(table, "p1.parquet", Seq(Tuple1(1L)).toDF("id"))
     writeCommit(table, 0, Seq(
@@ -490,7 +490,7 @@ class DeltaReadSpec extends SparkSpec {
 
   test("unsupported protocol or column mapping is refused, never silently misread") {
     def table(protocolLine: String, metaExtra: String = ""): String = {
-      val t = Files.createTempDirectory("graft_delta_proto").toString
+      val t = tmp("graft_delta_proto")
       val df = Seq((1L, "a")).toDF("id", "v")
       val f = addFile(t, "part-0.parquet", df)
       writeCommit(t, 0, Seq(
@@ -535,7 +535,7 @@ class DeltaReadSpec extends SparkSpec {
 
   test("name-mapped table: physical parquet names resolve to logical columns, pruning and skipping intact") {
     import org.apache.spark.sql.types._
-    val table = Files.createTempDirectory("graft_delta_cm_name").toString
+    val table = tmp("graft_delta_cm_name")
     def pn(n: String) = Metadata.fromJson(
       s"""{"delta.columnMapping.id":1,"delta.columnMapping.physicalName":"$n"}""")
     // logical (id, v{x}, part) stored physically as col-aaa, col-bbb{col-ccc}, col-ppp
@@ -588,7 +588,7 @@ class DeltaReadSpec extends SparkSpec {
 
   test("id-mapped table: columns resolve by parquet FIELD ID, pruning and skipping intact") {
     import org.apache.spark.sql.types._
-    val table = Files.createTempDirectory("graft_delta_cm_id").toString
+    val table = tmp("graft_delta_cm_id")
     // logical (id, v, part) with mapping ids 1/2/3 and physical names that
     // the data files DO NOT use — in id mode the field id is the authority
     // and file-local column names are free to differ (foreign writers
@@ -655,7 +655,7 @@ class DeltaReadSpec extends SparkSpec {
 
   test("changeDiff serves append/DV-delete/COW/RESTORE history exactly (vs snapshot diff)") {
     import org.apache.spark.sql.DataFrame
-    val table = Files.createTempDirectory("graft_delta_cdiff").toString
+    val table = tmp("graft_delta_cdiff")
     // v0: 40 rows in several files; v1: append; v2: DV delete; v3: COW
     // delete (rewrite); v4: DV delete that fully shadows a file; v5:
     // RESTORE back to v2 (re-adds removed files, re-exposes DV'd rows)
@@ -711,7 +711,7 @@ class DeltaReadSpec extends SparkSpec {
   }
 
   test("changeDiff plans O(change types) scan legs, not O(files), and refuses cleaned ranges") {
-    val table = Files.createTempDirectory("graft_delta_cdiff_plan").toString
+    val table = tmp("graft_delta_cdiff_plan")
     // a many-file, many-commit history: v0 = 20 files, v1 = 20 more,
     // v2 = DV delete (re-adds touched files), v3 = COW delete (rewrites)
     DeltaWrite.writeDeltaTable(
@@ -759,7 +759,7 @@ class DeltaReadSpec extends SparkSpec {
     import org.apache.spark.sql.types._
     val rk = "spark.sql.parquet.fieldId.read.enabled"
     val wk = "spark.sql.parquet.fieldId.write.enabled"
-    val table = Files.createTempDirectory("graft_delta_cm_scoped").toString
+    val table = tmp("graft_delta_cm_scoped")
     try {
       def m(id: Int, pn: String) = Metadata.fromJson(
         s"""{"delta.columnMapping.id":$id,"delta.columnMapping.physicalName":"$pn"}""")
@@ -805,7 +805,7 @@ class DeltaReadSpec extends SparkSpec {
   }
 
   test("typeWidening: narrow pre-widening files promote to the log's widened schema") {
-    val table = Files.createTempDirectory("graft_delta_tw").toString
+    val table = tmp("graft_delta_tw")
     // f1 written with (int, float) — the pre-widening narrow layout
     val narrow = spark.range(1).selectExpr("1 AS a", "CAST(1.5 AS FLOAT) AS b")
     val f1 = addFile(table, "f1.parquet", narrow)
@@ -826,7 +826,7 @@ class DeltaReadSpec extends SparkSpec {
   }
 
   test("timestampAsOf resolves to the last commit at or before the instant") {
-    val table = Files.createTempDirectory("graft_delta_ts").toString
+    val table = tmp("graft_delta_ts")
     val d = Seq((1L, "a")).toDF("id", "v")
     val f1 = addFile(table, "f1.parquet", d)
     val f2 = addFile(table, "f2.parquet", Seq((2L, "b")).toDF("id", "v"))
@@ -862,7 +862,7 @@ class DeltaReadSpec extends SparkSpec {
   }
 
   test("tableInfo summarizes version, files, bytes, rows, and properties from the log alone") {
-    val table = Files.createTempDirectory("graft_delta_info").toString
+    val table = tmp("graft_delta_info")
     val d = Seq((1L, "a"), (2L, "b")).toDF("id", "v")
     val f1 = addFile(table, "f1.parquet", d)
     writeCommit(table, 0, Seq(
@@ -883,11 +883,11 @@ class DeltaReadSpec extends SparkSpec {
   }
 
   test("not-a-delta-table and empty live set fail or return empty cleanly") {
-    val notDelta = Files.createTempDirectory("graft_delta4").toString
+    val notDelta = tmp("graft_delta4")
     intercept[IllegalArgumentException] {
       DeltaRead.readDeltaTable(spark, notDelta)
     }
-    val table = Files.createTempDirectory("graft_delta5").toString
+    val table = tmp("graft_delta5")
     val d = Seq((1L, "a")).toDF("id", "v")
     val f1 = addFile(table, "f1.parquet", d)
     writeCommit(table, 0, Seq(

@@ -466,11 +466,11 @@ class DeltaWriteSpec extends SparkSpec {
     (0 until 5).foreach { i =>
       DeltaWrite.writeDeltaTable(Seq((i.toLong, s"v$i")).toDF("id", "v"), table, "append")
     }
-    val (_, liveBefore) = DeltaRead.replayLog(spark, table, None)
+    val liveBefore = DeltaRead.snapshot(spark, table).files
     assert(liveBefore.size == 5)
     val v = DeltaWrite.compact(spark, table, targetBytes = 8L * 1024 * 1024)
     assert(v == 5L)
-    val (_, liveAfter) = DeltaRead.replayLog(spark, table, None)
+    val liveAfter = DeltaRead.snapshot(spark, table).files
     assert(liveAfter.size == 1, liveAfter.map(_.path).toString)
     // rewritten file keeps footer stats (skipping works on compacted output)
     assert(liveAfter.head.stats.nonEmpty)
@@ -511,7 +511,7 @@ class DeltaWriteSpec extends SparkSpec {
           s.metrics("numFiles").value
       }.sum
     }
-    val total = DeltaRead.replayLog(spark, table, None)._2.size
+    val total = DeltaRead.snapshot(spark, table).files.size
     assert(total == 8)
     val unskipped = filesRead(
       DeltaRead.readDeltaTable(spark, table).filter(col("a") < 100))
@@ -526,7 +526,7 @@ class DeltaWriteSpec extends SparkSpec {
     assert(after == before, s"$after vs $before")
     assert(DeltaRead.changesSince(spark, table, v - 1).count() == 0L)
     // now point/range predicates on EITHER dimension skip most files
-    val files = DeltaRead.replayLog(spark, table, None)._2.size
+    val files = DeltaRead.snapshot(spark, table).files.size
     assert(files >= 4, s"expected several z-files, got $files")
     val fa = filesRead(DeltaRead.readDeltaTable(spark, table).filter(col("a") < 100))
     val fb = filesRead(DeltaRead.readDeltaTable(spark, table).filter(col("b") < 100))
@@ -556,7 +556,7 @@ class DeltaWriteSpec extends SparkSpec {
     // 2-column z-order first: a and b skip, c is BLIND — every file spans
     // c's full range, so a c predicate opens all of them
     DeltaWrite.compactZOrder(spark, table, "a", "b", targetBytes = 32 * 1024)
-    val files2 = DeltaRead.replayLog(spark, table, None)._2.size
+    val files2 = DeltaRead.snapshot(spark, table).files.size
     assert(files2 >= 4, s"expected several z-files, got $files2")
     val c2 = filesRead(DeltaRead.readDeltaTable(spark, table).filter(col("c") < 100))
     assert(c2 == files2.toLong, s"2-col layout should be blind on c: $c2 of $files2")
@@ -569,7 +569,7 @@ class DeltaWriteSpec extends SparkSpec {
     val after = DeltaRead.readDeltaTable(spark, table)
       .agg(count(lit(1)), sum(col("a")), sum(col("b")), sum(col("c"))).head()
     assert(after == before, s"$after vs $before")
-    val files3 = DeltaRead.replayLog(spark, table, None)._2.size
+    val files3 = DeltaRead.snapshot(spark, table).files.size
     assert(files3 >= 4, s"expected several z-files, got $files3")
     val fa = filesRead(DeltaRead.readDeltaTable(spark, table).filter(col("a") < 100))
     val fb = filesRead(DeltaRead.readDeltaTable(spark, table).filter(col("b") < 100))
@@ -586,7 +586,7 @@ class DeltaWriteSpec extends SparkSpec {
         table, "append", partitionBy = Seq("day"))
     }
     assert(DeltaWrite.compact(spark, table, 8L * 1024 * 1024) == 3L)
-    val (_, live) = DeltaRead.replayLog(spark, table, None)
+    val live = DeltaRead.snapshot(spark, table).files
     assert(live.size == 2, live.map(_.path).toString)
     assert(live.forall(f => f.partitionValues.keySet == Set("day")))
     val back = DeltaRead.readDeltaTable(spark, table)
@@ -621,7 +621,7 @@ class DeltaWriteSpec extends SparkSpec {
     assert(v0 == 0L)
     // the staged parquet stores PHYSICAL col-<uuid> names, not logical
     // ones — and the partition DIRECTORY is physical too
-    val files0 = DeltaRead.replayLog(spark, table, None)._2
+    val files0 = DeltaRead.snapshot(spark, table).files
     assert(files0.head.path.startsWith("col-"), files0.head.path)
     val physCols = spark.read
       .parquet(new java.io.File(table, files0.head.path).toString).columns
@@ -639,7 +639,7 @@ class DeltaWriteSpec extends SparkSpec {
       .filter(col("part") === "x").count() == 2L)
     // checkpoint round-trips the mapping (configuration + protocol floor)
     DeltaWrite.checkpoint(spark, table)
-    val (meta, _) = DeltaRead.replayLog(spark, table, None)
+    val meta = DeltaRead.snapshot(spark, table).meta
     assert(meta.mappingMode == "name")
     assert(meta.configuration.contains("delta.columnMapping.maxColumnId"))
     assert(logicalRows().size == 3)
@@ -663,7 +663,7 @@ class DeltaWriteSpec extends SparkSpec {
     val v0 = DeltaWrite.writeDeltaTableMapped(d0, table, "append",
       mappingMode = "id")
     assert(v0 == 0L)
-    val (meta0, files0) = DeltaRead.replayLog(spark, table, None)
+    val DeltaRead.Snapshot(_, meta0, files0, _, _, _) = DeltaRead.snapshot(spark, table)
     assert(meta0.mappingMode == "id")
     // staged parquet stores col-<uuid> names...
     val fpaths = files0.map(f => new java.io.File(table, f.path).toString)
@@ -695,7 +695,7 @@ class DeltaWriteSpec extends SparkSpec {
     assert(rows() == Seq((2L, "B"), (3L, "C"), (4L, "d")))
     DeltaWrite.compact(spark, table)
     assert(rows() == Seq((2L, "B"), (3L, "C"), (4L, "d")))
-    assert(DeltaRead.replayLog(spark, table, None)._2.forall(_.dv.isEmpty))
+    assert(DeltaRead.snapshot(spark, table).files.forall(_.dv.isEmpty))
   }
 
   test("generated columns: omitted columns compute, mismatched values refuse, DML validates") {
@@ -752,7 +752,7 @@ class DeltaWriteSpec extends SparkSpec {
 
     // SET DEFAULT commits a protocol upgrade declaring the public feature
     DeltaWrite.setColumnDefault(spark, table, "src", "'web'")
-    val proto = DeltaRead.replayFull(spark, table, None).protocol
+    val proto = DeltaRead.snapshot(spark, table).protocol
     assert(proto.minWriter == 7 &&
       proto.writerFeatures.contains("allowColumnDefaults"), proto.toString)
 
@@ -874,7 +874,7 @@ class DeltaWriteSpec extends SparkSpec {
     val table = tmp("graft_dw_ident")
     DeltaWrite.writeDeltaTableIdentity(
       Seq("a", "b", "c").toDF("v"), table, "rid", start = 100L, step = 10L)
-    val proto = DeltaRead.replayFull(spark, table, None).protocol
+    val proto = DeltaRead.snapshot(spark, table).protocol
     assert(proto.minWriter == 7 &&
       proto.writerFeatures.contains("identityColumns"), proto.toString)
     val v0 = DeltaRead.readDeltaTable(spark, table).orderBy("rid")
@@ -888,7 +888,7 @@ class DeltaWriteSpec extends SparkSpec {
     val ids = DeltaRead.readDeltaTable(spark, table)
       .select("rid").as[Long].collect().sorted
     assert(ids.toSeq == Seq(100L, 110L, 120L, 130L, 140L), ids.toSeq.toString)
-    val (meta2, _) = DeltaRead.replayLog(spark, table, None)
+    val meta2 = DeltaRead.snapshot(spark, table).meta
     assert(meta2.schemaJson.contains("\"delta.identity.highWaterMark\":140"),
       meta2.schemaJson)
 
@@ -995,7 +995,7 @@ class DeltaWriteSpec extends SparkSpec {
         .withColumn("d", expr("date(ts)").as("d", md))
         .repartition(2, col("id")),
       table, "append", partitionBy = Seq("d"))
-    val allFiles = DeltaRead.replayLog(spark, table, None)._2.size
+    val allFiles = DeltaRead.snapshot(spark, table).files.size
     assert(allFiles >= 5, s"fixture needs per-day files, got $allFiles")
 
     def filesRead(df: org.apache.spark.sql.DataFrame): Long = {
@@ -1049,7 +1049,7 @@ class DeltaWriteSpec extends SparkSpec {
           .withColumn("d", expr("date(ts)").as("d", md)).repartition(1),
         table, "append", partitionBy = Seq("d"))
       // creation recorded the writer zone for the reader's derivation
-      val (meta, _) = DeltaRead.replayLog(spark, table, None)
+      val meta = DeltaRead.snapshot(spark, table).meta
       assert(meta.configuration.get(GeneratedPruning.TimeZoneProp)
         .contains("UTC"), meta.configuration.toString)
       // read under a zone 14h ahead: the instant's LOCAL date there is
@@ -1063,7 +1063,7 @@ class DeltaWriteSpec extends SparkSpec {
     } finally spark.conf.set("spark.sql.session.timeZone", oldTz)
     // a FOREIGN table (no recorded zone) must keep files rather than
     // derive under the reader zone
-    val stripped = DeltaRead.replayLog(spark, table, None)._1
+    val stripped = DeltaRead.snapshot(spark, table).meta
     assert(GeneratedPruning.forPartitionCols(
       org.apache.spark.sql.types.DataType.fromJson(stripped.schemaJson)
         .asInstanceOf[org.apache.spark.sql.types.StructType],
@@ -1218,7 +1218,7 @@ class DeltaWriteSpec extends SparkSpec {
     // an identity-advancing append that minted a fresh id would look like a
     // table REPLACEMENT to every external Delta client
     def idOf(p: String): String =
-      DeltaRead.replayFull(spark, p, None).meta.id
+      DeltaRead.snapshot(spark, p).meta.id
     val t = tmp("graft_dw_metaid")
     DeltaWrite.writeDeltaTableIdentity(Seq("a", "b").toDF("v"), t, "rid")
     val id0 = idOf(t)
@@ -1312,7 +1312,7 @@ class DeltaWriteSpec extends SparkSpec {
     val readd = DeltaRead.readDeltaTable(spark, mapped).select("id", "n").collect()
     assert(readd.length == 1 && readd.head.isNullAt(1),
       s"dropped values resurrected: ${readd.toSeq}")
-    val (meta, _) = DeltaRead.replayLog(spark, mapped, None)
+    val meta = DeltaRead.snapshot(spark, mapped).meta
     assert(meta.configuration("delta.columnMapping.maxColumnId").toInt == 4)
     // appends carry the re-added column under its NEW physical name
     DeltaWrite.writeDeltaTable(Seq((2L, "y", 9)).toDF("id", "v", "n"),
@@ -1433,7 +1433,7 @@ class DeltaWriteSpec extends SparkSpec {
       .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSeq
     // the clone reads the source's files without copying a byte
     assert(rows(dest) == Seq((1L, "x", 10L), (2L, "y", 20L)))
-    assert(DeltaRead.replayLog(spark, dest, None)._2.forall(_.path.startsWith("/")))
+    assert(DeltaRead.snapshot(spark, dest).files.forall(_.path.startsWith("/")))
     // partition pruning still works on the clone (values rode the log)
     assert(DeltaRead.readDeltaTable(spark, dest)
       .filter(col("part") === "x").count() == 1L)
@@ -1510,7 +1510,7 @@ class DeltaWriteSpec extends SparkSpec {
     assert(e0.getMessage.contains("existing rows violate"), e0.getMessage)
     // a holding constraint lands in the configuration
     DeltaWrite.addCheckConstraint(spark, table, "n_nonneg", "n >= 0")
-    assert(DeltaRead.replayLog(spark, table, None)._1
+    assert(DeltaRead.snapshot(spark, table).meta
       .configuration("delta.constraints.n_nonneg") == "n >= 0")
     // valid append passes; violating append refuses BEFORE committing
     DeltaWrite.writeDeltaTable(

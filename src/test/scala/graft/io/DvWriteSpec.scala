@@ -22,7 +22,7 @@ class DvWriteSpec extends SparkSpec {
       .select("id").orderBy("id").collect().map(_.getLong(0)).toSeq
 
   private def liveFiles(path: String): Seq[DeltaRead.LiveFile] =
-    DeltaRead.replayLog(spark, path, None)._2
+    DeltaRead.snapshot(spark, path).files
 
   test("serializeData round-trips the decoder: array, bitmap, multi-key, high-32 gaps") {
     // array container (small), bitmap container (> 4096 in one key),
@@ -115,7 +115,7 @@ class DvWriteSpec extends SparkSpec {
     DeltaWrite.writeDeltaTable(
       (0L until 10L).map(i => (i, "x")).toDF("id", "v"), table, "append")
     DeltaMerge.deleteWhereDv(spark, table, col("id") === 1L)
-    val proto = DeltaRead.replayFull(spark, table, None).protocol
+    val proto = DeltaRead.snapshot(spark, table).protocol
     assert(proto.minReader == 3 && proto.minWriter == 7)
     assert(proto.readerFeatures.contains("deletionVectors"))
     assert(proto.writerFeatures.contains("deletionVectors"))
@@ -296,7 +296,7 @@ class DvWriteSpec extends SparkSpec {
     DeltaMerge.deleteWhereDv(spark, table, col("id") >= 20L)
     assert(ids(table) == (0L until 20L))
     // protocol keeps columnMapping alongside the new feature
-    val proto = DeltaRead.replayFull(spark, table, None).protocol
+    val proto = DeltaRead.snapshot(spark, table).protocol
     assert(proto.readerFeatures.contains("deletionVectors"))
   }
 }

@@ -40,7 +40,7 @@ class LogCompactionSpec extends SparkSpec {
     // with originals still present the replay result is identical
     assert(state() == before)
     // property from the compacted metaData action carried
-    val meta = DeltaRead.replayLog(spark, path, None)._1
+    val meta = DeltaRead.snapshot(spark, path).meta
     assert(meta.configuration.get("graft.test.marker").contains("yes"))
 
     // delete the covered JSONs: ONLY the compacted file can serve 1..4 now

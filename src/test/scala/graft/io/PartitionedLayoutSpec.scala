@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
 class PartitionedLayoutSpec extends SparkSpec {
 
   private lazy val layoutDir: String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_layout").toString
+    val dir = tmp("graft_layout")
     PartitionedLayout.writeDailyPartitioned(
       graft.Tables.events(spark, sf), "ts", dir)
     dir
@@ -59,7 +59,7 @@ class PartitionedLayoutSpec extends SparkSpec {
   }
 
   test("dynamic day overwrite is idempotent and leaves other days untouched") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-layout-dyn").toString
+    val dir = tmp("graft-layout-dyn")
     val events = graft.Tables.events(spark, sf)
     PartitionedLayout.writeDailyPartitioned(events, "ts", dir)
     val before = PartitionedLayout.read(spark, dir).count()
@@ -73,7 +73,7 @@ class PartitionedLayoutSpec extends SparkSpec {
   }
 
   test("schema-evolved read unions columns across days, nulling the missing ones") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-layout-evo").toString
+    val dir = tmp("graft-layout-evo")
     val events = graft.Tables.events(spark, sf)
     val days = events.select(to_date(col("ts")).cast("string").as("d"))
       .distinct().orderBy("d").collect().map(_.getString(0))

@@ -40,7 +40,7 @@ class RowTrackingSpec extends SparkSpec {
     // original rows untouched
     assert((0L until 10L).forall(id => after1(id) == after0(id)))
     // protocol declares the feature; domain carries the watermark
-    val snap = DeltaRead.replayFull(spark, path, None)
+    val snap = DeltaRead.snapshot(spark, path)
     assert(snap.protocol.writerFeatures.contains("rowTracking"))
     assert(DeltaRead.rowIdHighWaterMark(snap.domains) == 14L)
   }
@@ -121,7 +121,7 @@ class RowTrackingSpec extends SparkSpec {
     val path = tmp("rt_cp") + "/t"
     DeltaWrite.writeDeltaTableRowTracked(table(6), path)
     DeltaWrite.checkpoint(spark, path)
-    val snap = DeltaRead.replayFull(spark, path, None)
+    val snap = DeltaRead.snapshot(spark, path)
     assert(DeltaRead.rowIdHighWaterMark(snap.domains) == 5L,
       "watermark must survive checkpoint replay")
     DeltaWrite.writeDeltaTable(
@@ -131,7 +131,7 @@ class RowTrackingSpec extends SparkSpec {
     // v2 checkpoints carry it too
     DeltaWrite.checkpointV2(spark, path)
     assert(DeltaRead.rowIdHighWaterMark(
-      DeltaRead.replayFull(spark, path, None).domains) == 8L)
+      DeltaRead.snapshot(spark, path).domains) == 8L)
   }
 
   test("RESTORE returns the restored rows' original ids") {
@@ -194,7 +194,7 @@ class RowTrackingSpec extends SparkSpec {
     DeltaWrite.writeDeltaTable(
       spark.range(4, 7).select(col("id"), (col("id") * 10).as("v")),
       path, "append")
-    val snap = DeltaRead.replayFull(spark, path, None)
+    val snap = DeltaRead.snapshot(spark, path)
     val appended = snap.files.filter(_.baseRowId.isDefined)
     assert(appended.nonEmpty, "the new add must carry a baseRowId")
     assert(DeltaRead.rowIdHighWaterMark(snap.domains) >= 2L)

@@ -46,12 +46,12 @@ class UploadSinkV2Spec extends SparkSpec {
     V2SinkTransport.sent.clear(); V2SinkTransport.maxBatch.set(0)
     UploadSinkV2.lastCommitted.remove("v2stream")
 
-    val dir = java.nio.file.Files.createTempDirectory("graft_v2s")
+    val dir = java.nio.file.Paths.get(tmp("graft_v2s"))
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"$sf/events.parquet"), dir.resolve("events.parquet"))
     val stream = graft.streaming.EventsStream.readEvents(spark, dir.toString)
       .select(to_json(struct(col("event_id"), col("event_type"))).as("payload"))
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_v2s_ckpt").toString
+    val ckpt = tmp("graft_v2s_ckpt")
     val q = stream.writeStream.format("graft.io.UploadSinkV2")
       .option("transport", "v2stream").option("batchSize", "200")
       .option("checkpointLocation", ckpt)

@@ -3,8 +3,6 @@ package graft.io
 import graft.{SparkSpec, Tables}
 import org.apache.spark.sql.functions._
 
-import java.nio.file.Files
-
 class ZOrderSpec extends SparkSpec {
 
   private def fileExtents(dir: String, c1: String, c2: String): Seq[(Double, Double)] = {
@@ -33,8 +31,8 @@ class ZOrderSpec extends SparkSpec {
 
   test("z-order bounds BOTH dimensions' file extents; single-column clustering does not") {
     val src = Tables.events(spark, sf).select("event_id", "user_id", "value")
-    val zDir = Files.createTempDirectory("graft-z").toString
-    val cDir = Files.createTempDirectory("graft-c").toString
+    val zDir = tmp("graft-z")
+    val cDir = tmp("graft-c")
     ZOrder.write(spark, src, zDir, "user_id", "value", nFiles = 16)
     src.repartitionByRange(16, col("user_id")).write.mode("overwrite").parquet(cDir)
 
@@ -59,8 +57,8 @@ class ZOrderSpec extends SparkSpec {
     // discriminate — binning-by-quantile would fix that in production;
     // here the test uses the dims the layout is actually good for
     val src = Tables.events(spark, sf).select("event_id", "user_id", "value")
-    val zDir = Files.createTempDirectory("graft-zskip").toString
-    val rDir = Files.createTempDirectory("graft-rskip").toString
+    val zDir = tmp("graft-zskip")
+    val rDir = tmp("graft-rskip")
     ZOrder.write(spark, src, zDir, "user_id", "event_id", nFiles = 16)
     src.repartition(16).write.mode("overwrite").parquet(rDir)
 
@@ -93,8 +91,8 @@ class ZOrderSpec extends SparkSpec {
 
   test("quantile-binned z-order prunes on a SKEWED dimension where linear rank16 cannot") {
     val src = Tables.events(spark, sf).select("event_id", "user_id", "value")
-    val linDir = Files.createTempDirectory("graft-zlin").toString
-    val rnkDir = Files.createTempDirectory("graft-zrnk").toString
+    val linDir = tmp("graft-zlin")
+    val rnkDir = tmp("graft-zrnk")
     // `value` is skew-distributed: linear rank16 collapses it into the
     // low quadrants; equi-depth bins spread it
     ZOrder.write(spark, src, linDir, "user_id", "value", nFiles = 16)
@@ -162,8 +160,8 @@ class ZOrderSpec extends SparkSpec {
 
   test("3-column ranked z-order bounds ALL THREE extents; the 2-col layout is blind on the third") {
     val src = Tables.events(spark, sf).select("event_id", "user_id", "value")
-    val z2 = Files.createTempDirectory("graft-z2").toString
-    val z3 = Files.createTempDirectory("graft-z3").toString
+    val z2 = tmp("graft-z2")
+    val z3 = tmp("graft-z3")
     ZOrder.writeRanked(spark, src, z2, "user_id", "event_id", nFiles = 27, bins = 64)
     ZOrder.writeRankedN(spark, src, z3, Seq("user_id", "event_id", "value"),
       nFiles = 27, bins = 64)
