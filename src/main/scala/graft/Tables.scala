@@ -45,7 +45,16 @@ object Tables {
         m
       } else live
     }
-    bySession.computeIfAbsent(key, _ => build)
+    // not computeIfAbsent: `build` may memo its own input (documents loads
+    // the raw table), and a nested update of the same map can throw
+    // "Recursive update"
+    val hit = bySession.get(key)
+    if (hit != null) hit
+    else {
+      val df = build
+      val raced = bySession.putIfAbsent(key, df)
+      if (raced == null) df else raced
+    }
   }
 
   def load(spark: SparkSession, dir: String, name: String): DataFrame =

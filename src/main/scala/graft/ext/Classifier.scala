@@ -1,7 +1,10 @@
 package graft.ext
 
+import java.math.{BigDecimal => JBigDecimal, RoundingMode}
+
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 /** Trained QUALITY CLASSIFIER over hashed n-gram features — the
   * fasttext-style filter the big pretraining pipelines use to keep
@@ -9,80 +12,83 @@ import org.apache.spark.sql.functions._
   * positive = curated corpus, negative = random crawl, keep by score):
   * logistic regression on the SAME hashed unigram+bigram features as
   * [[Selection]] (bag of buckets, length-normalized), trained by
-  * full-batch gradient descent as a handful of Spark aggregates per
-  * iteration.
+  * full-batch gradient descent.
   *
   * DETERMINISTIC BY CONSTRUCTION, the property every in-query trainer in
   * this repo holds (Bpe, LangModel): each document's gradient
   * contribution rounds ONCE to integer micro-units, so the per-bucket
   * gradient is an exact integer sum — the same weights come out of any
-  * partitioning, any executor count, any run. Float drift from
-  * `sum(double)` addition order never enters the model.
+  * partitioning, any executor count, any run. Float drift from addition
+  * order never enters the model.
   *
-  * Scale shape: the feature matrix (one row per (doc, bucket), ≤
-  * |docs|·B) materializes once and every iteration is two broadcast-join
-  * + aggregate passes over it — the corpus text is tokenized exactly
-  * once, the weight table is ≤ `buckets` rows and broadcasts, and the
-  * only driver-resident state is the weight array (B longs). Iterations
-  * are a fixed small count (full-batch GD on a convex loss — this is a
-  * filter, not a leaderboard model).
+  * Scale shape: each input row is one document. Its features (its
+  * distinct buckets and their shares of its grams) are computed once,
+  * row-locally; training keeps them materialized for its whole run, so
+  * the corpus is tokenized exactly once, and each GD iteration is ONE
+  * map-only pass over them that sums micro-gradients into a
+  * `buckets + 1` long array reduced on the driver — no join, no
+  * exchange, no per-iteration query plan. The only driver-resident state
+  * is that array. Scoring is one per-row column over the same features,
+  * so it keeps the input's rows and partitioning. Iterations are a fixed
+  * small count (full-batch GD on a convex loss — this is a filter, not a
+  * leaderboard model).
   */
 object Classifier {
 
-  /** `w`/`bias` in micro-units of the logit. */
-  final case class Model(buckets: Int, bias: Long, w: Map[Int, Long]) {
-    private[ext] def weightsDf(spark: org.apache.spark.sql.SparkSession) = {
-      import spark.implicits._
-      w.toSeq.map { case (b, v) => (b.toLong, v) }.toDF("__b", "__w")
-    }
-  }
-
-  /** One row per (doc, bucket): `(idCol, __y, __b, __f)` with `__f` the
-    * bucket's share of the doc's grams (length normalization — fasttext's
-    * mean-of-features, which keeps long docs from dominating the loss),
-    * PLUS one bias row per doc (`__b = -1, __f = 1.0` — a real gram can
-    * never bucket to −1, pmod is non-negative).
-    *
-    * Exchange discipline (this used to be 3 shuffles + a sort per corpus
-    * half): the doc's total gram count rides every exploded row (computed
-    * from the gram array itself — no per-doc window), the bias rides the
-    * SAME gram stream as a prepended null key (no post-hoc union that
-    * would discard the partitioning), and the one repartition on the doc
-    * id happens BEFORE the (id, …) aggregate — hash(id) satisfies the
-    * aggregate's clustering requirement, so the groupBy inserts no second
-    * exchange and the output stays id-partitioned for every training pass
-    * downstream.
+  /** `w`/`bias` in micro-units of the logit; `w` holds only the buckets
+    * that occur in the training corpora.
     */
-  private def featureMatrix(df: DataFrame, idCol: String, textCol: String,
-      label: Column, buckets: Int, fast: Boolean): DataFrame = {
-    // null text still yields its bias row (empty gram array, not null)
-    val grams = coalesce(Selection.gramArray(col(textCol), fast),
-      if (fast) array().cast("array<long>") else array().cast("array<string>"))
-    val nullKey =
-      if (fast) lit(null).cast("long") else lit(null).cast("string")
-    df.select(col(idCol), label.as("__y"), explode(array(grams)).as("__ga"))
-      .select(col(idCol), col("__y"), size(col("__ga")).cast("long").as("__n"),
-        explode(concat(array(nullKey), col("__ga"))).as("__g"))
-      .select(col(idCol), col("__y"), col("__n"),
-        when(col("__g").isNull, lit(-1L))
-          .otherwise(Selection.bucketOf(col("__g"), buckets, fast)).as("__b"))
-      .repartition(col(idCol))
-      .groupBy(col(idCol), col("__y"), col("__n"), col("__b"))
-      .agg(count(lit(1)).as("__c"))
-      .select(col(idCol), col("__y"), col("__b"),
-        when(col("__b") === -1L, lit(1.0))
-          .otherwise(col("__c").cast("double") / col("__n")).as("__f"))
+  final case class Model(buckets: Int, bias: Long, w: Map[Int, Long])
+
+  private type Doc = (Array[Int], Array[Double])
+
+  /** Every gram's bucket, in gram order; no grams (null text) is empty. */
+  private def gramBuckets(text: Column, buckets: Int, fast: Boolean): Column =
+    coalesce(transform(Selection.gramArray(text, fast),
+      g => Selection.bucketOf(g, buckets, fast)), array().cast("array<long>"))
+
+  /** A document's features: its distinct buckets ascending behind the
+    * bias bucket −1 (a real gram never buckets to −1), and their values —
+    * 1 for the bias, else the bucket's share of the doc's grams (length
+    * normalization — fasttext's mean-of-features, which keeps long docs
+    * from dominating the loss).
+    */
+  private def features(grams: Seq[Long]): Doc = {
+    val g = grams.toArray.sorted
+    val b = Array.newBuilder[Int] += -1
+    val f = Array.newBuilder[Double] += 1.0
+    var i = 0
+    while (i < g.length) {
+      var j = i
+      while (j < g.length && g(j) == g(i)) j += 1
+      b += g(i).toInt
+      f += (j - i).toDouble / g.length
+      i = j
+    }
+    (b.result(), f.result())
   }
 
-  /** Train on labeled corpora. `lr` is the gradient-ascent step on the
-    * MEAN log-likelihood gradient. Full-batch GD on logistic loss is
-    * stable for `lr < 8` here (the bias feature has value 1, so the
-    * loss's curvature bound is 1/4 regardless of the n-gram features,
-    * which are ≤ 1 by length normalization); the default stays safely
-    * under it and compensates with iterations — each iteration is two
-    * cheap aggregate passes over the materialized feature matrix, not a
-    * corpus re-read. (lr = 50 was tried first and DIVERGED exactly as
-    * the bound predicts: the bias oscillated with ~10× growth per pass.)
+  /** P(positive) of `d` under weights `w` indexed by bucket + 1 (slot 0
+    * the bias).
+    */
+  private def prob(w: Array[Long], d: Doc): Double = {
+    val (b, f) = d
+    var s = 0.0
+    var i = 0
+    while (i < b.length) { s += f(i) * w(b(i) + 1); i += 1 }
+    1.0 / (1.0 + math.exp(-(s / 1e6)))
+  }
+
+  /** Train on labeled corpora, one document per row. `lr` is the
+    * gradient-ascent step on the MEAN log-likelihood gradient. Full-batch
+    * GD on logistic loss is stable for `lr < 8` here (the bias feature has
+    * value 1, so the loss's curvature bound is 1/4 regardless of the
+    * n-gram features, which are ≤ 1 by length normalization); the default
+    * stays safely under it and compensates with iterations — each
+    * iteration is one map-only pass over the materialized features, not a
+    * corpus re-read. (lr = 50 was tried first and DIVERGED exactly as the
+    * bound predicts: the bias oscillated with ~10× growth per pass.)
+    * `idCol` is no longer read: documents are rows, not ids.
     */
   def train(pos: DataFrame, neg: DataFrame, idCol: String, textCol: String,
       buckets: Int, iters: Int = 30, lr: Double = 6.0,
@@ -90,70 +96,52 @@ object Classifier {
     require(iters > 0 && lr > 0)
     val spark = pos.sparkSession
     import spark.implicits._
-    // the bias rides as a synthetic bucket −1 with feature value 1 on
-    // every doc, so one formula covers weights AND bias — each GD pass is
-    // exactly ONE Spark job (logit aggregate → residual join → bucket
-    // gradient → driver collect) instead of separate p/gradient/bias
-    // actions. Both corpora label-tag and union BEFORE the gram explode,
-    // so the whole matrix (bias rows included — featureMatrix emits them
-    // inside the gram stream) builds in ONE explode + ONE id-keyed
-    // exchange; the materialized matrix is HASH-PARTITIONED BY DOC
-    // (localCheckpoint preserves the physical partitioning), and hash(id)
-    // is a valid clustering for both the (id, y) aggregate and the
-    // residual join, so each pass shuffles only the ≤B-row gradient combine
-    val all = pos.select(col(idCol), col(textCol), lit(1).as("__l"))
-      .unionByName(neg.select(col(idCol), col(textCol), lit(0).as("__l")))
-    // the doc count rides the checkpoint materialization via observe() —
-    // one bias row exists per doc, so no separate count job
-    val obs = new org.apache.spark.sql.Observation(
-      s"classifier_ndocs_${java.util.UUID.randomUUID()}")
-    val m = featureMatrix(all, idCol, textCol, col("__l"), buckets, fast)
-      .observe(obs, sum(when(col("__b") === -1L, 1L).otherwise(0L)).as("n"))
-      .localCheckpoint() // tokenize the corpora exactly once, not per pass
-    val nDocs = obs.get("n").asInstanceOf[Long].toDouble
-
-    var w = Map.empty[Int, Long] // key −1 is the bias
-    for (_ <- 1 to iters) {
-      val wDf = w.toSeq.map { case (b, v) => (b.toLong, v) }
-        .toDF("__b", "__w")
-      val p = m.join(broadcast(wDf), Seq("__b"), "left")
-        .groupBy(col(idCol), col("__y"))
-        .agg((coalesce(sum(col("__f") * col("__w")), lit(0.0)) / 1e6)
-          .as("__logit"))
-        .select(col(idCol), col("__y"),
-          (lit(1.0) / (lit(1.0) + exp(-col("__logit")))).as("__p"))
-      // each (doc, bucket) contribution rounds ONCE to micros, so the
-      // bucket gradient is an exact integer sum — partitioning-independent
-      val grad = m.select(col(idCol), col("__b"), col("__f"))
-        .join(p, Seq(idCol))
-        .groupBy(col("__b"))
-        .agg(sum(round((col("__y") - col("__p")) * col("__f") * 1e6, 0)
-          .cast("long")).as("__g"))
-        .collect().map(r => r.getLong(0).toInt -> r.getLong(1)).toMap
-      w = (w.keySet ++ grad.keySet).iterator.map { b =>
-        b -> (w.getOrElse(b, 0L)
-          + math.round(lr * grad.getOrElse(b, 0L) / nDocs))
-      }.toMap
-    }
-    Model(buckets, w.getOrElse(-1, 0L), w - (-1))
+    val docs = pos.select(lit(1), gramBuckets(col(textCol), buckets, fast))
+      .union(neg.select(lit(0), gramBuckets(col(textCol), buckets, fast)))
+      .as[(Int, Seq[Long])].rdd
+      .map { case (y, g) => (y, features(g)) }
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    // per-slot sums of `term(y, p, f)` over every (doc, feature): one
+    // map-only job whose partition arrays add up on the driver
+    def slotSums(w: Array[Long])(term: (Int, Double, Double) => Long): Array[Long] =
+      docs.mapPartitions { it =>
+        val acc = new Array[Long](buckets + 1)
+        it.foreach { case (y, d @ (b, f)) =>
+          val p = prob(w, d)
+          var i = 0
+          while (i < b.length) { acc(b(i) + 1) += term(y, p, f(i)); i += 1 }
+        }
+        Iterator(acc)
+      }.reduce { (a, c) => a.indices.foreach(i => a(i) += c(i)); a }
+    try {
+      // the first pass materializes the features; slot 0 counts the docs,
+      // every other slot its bucket's documents
+      val seen = slotSums(new Array[Long](buckets + 1))((_, _, _) => 1L)
+      val nDocs = seen(0).toDouble
+      val w = new Array[Long](buckets + 1)
+      for (_ <- 1 to iters) {
+        // each (doc, bucket) contribution rounds ONCE to micros, half up
+        // as SQL round(x, 0) does, so the bucket gradient is an exact
+        // integer sum — partitioning-independent
+        val grad = slotSums(w) { (y, p, f) =>
+          JBigDecimal.valueOf((y - p) * f * 1e6).setScale(0, RoundingMode.HALF_UP).longValue
+        }
+        w.indices.foreach(s => w(s) += math.round(lr * grad(s) / nDocs))
+      }
+      Model(buckets, w(0), (1 to buckets).filter(seen(_) > 0).map(s => (s - 1) -> w(s)).toMap)
+    } finally docs.unpersist(blocking = false)
   }
 
-  /** Score `df`: appends `score` ∈ (0, 1) — P(doc ~ positive corpus). */
+  /** Score `df`: appends `score` ∈ (0, 1) — P(doc ~ positive corpus) — to
+    * every row, from that row's text alone (null text: the bias-only
+    * score). `idCol` is no longer read.
+    */
   def score(df: DataFrame, idCol: String, textCol: String, model: Model,
       fast: Boolean = true): DataFrame = {
-    val spark = df.sparkSession
-    // bias rows (__b = -1) join no weight (Model.w excludes the bias) and
-    // contribute 0 via the coalesce — but they guarantee every doc,
-    // including gram-less ones, surfaces in `logits`
-    val m = featureMatrix(df, idCol, textCol, lit(0), model.buckets, fast)
-    val logits = m.join(broadcast(model.weightsDf(spark)), Seq("__b"), "left")
-      .groupBy(col(idCol))
-      .agg(((lit(model.bias) + coalesce(sum(col("__f") * col("__w")), lit(0.0)))
-        / 1e6).as("__logit"))
-      .select(col(idCol),
-        (lit(1.0) / (lit(1.0) + exp(-col("__logit")))).as("score"))
-    df.join(logits, Seq(idCol), "left")
-      // a doc with zero grams has no matrix rows: bias-only score
-      .na.fill(1.0 / (1.0 + math.exp(-model.bias / 1e6)), Seq("score"))
+    val w = new Array[Long](model.buckets + 1)
+    w(0) = model.bias
+    model.w.foreach { case (b, v) => w(b + 1) = v }
+    val p = udf((g: Seq[Long]) => prob(w, features(g)))
+    df.withColumn("score", p(gramBuckets(col(textCol), model.buckets, fast)))
   }
 }

@@ -40,32 +40,10 @@ object Selection {
     * single-space convention ([[TextAnalysis.tokens]]).
     */
   def hashedGramBuckets(df: DataFrame, idCol: String, textCol: String,
-      buckets: Int, fast: Boolean = false): DataFrame =
-    hashedGramBuckets(df, idCol, textCol, buckets, fast, totalCol = None)
-
-  /** As above; `totalCol = Some(name)` additionally carries the doc's TOTAL
-    * gram count on every emitted row — computed from the gram array itself,
-    * so consumers that length-normalize (the classifier's `__f = c / total`)
-    * need no per-doc window pass (an Exchange + Sort) to recover it.
-    */
-  def hashedGramBuckets(df: DataFrame, idCol: String, textCol: String,
-      buckets: Int, fast: Boolean, totalCol: Option[String]): DataFrame = {
+      buckets: Int, fast: Boolean = false): DataFrame = {
     require(buckets > 0, s"need buckets > 0, got $buckets")
-    val grams = gramArray(col(textCol), fast)
-    val b = bucketOf(col("__g"), buckets, fast).as("__b")
-    totalCol match {
-      case None =>
-        df.select(col(idCol), explode(grams).as("__g"))
-          .select(col(idCol), b)
-      case Some(tc) =>
-        // explode(array(grams)) let-binds the gram array ONCE per row
-        // (projections cannot inline through a Generate), so size() and
-        // the element explode share one evaluation
-        df.select(col(idCol), explode(array(grams)).as("__ga"))
-          .select(col(idCol), size(col("__ga")).cast("long").as(tc),
-            explode(col("__ga")).as("__g"))
-          .select(col(idCol), col(tc), b)
-    }
+    df.select(col(idCol), explode(gramArray(col(textCol), fast)).as("__g"))
+      .select(col(idCol), bucketOf(col("__g"), buckets, fast).as("__b"))
   }
 
   /** The unigram+bigram KEY array of one doc — the DSIR feature set. Fast

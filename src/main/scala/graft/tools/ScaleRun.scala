@@ -114,7 +114,9 @@ object ScaleRun {
           docs.filter(col("source") === "src0"),
           docs.filter(col("source") =!= "src0"),
           "doc_id", "text", buckets = 4096, iters = 3)
-        graft.ext.Classifier.score(docs, "doc_id", "text", model).count()
+        // the score sum keeps the per-row score column from being pruned
+        graft.ext.Classifier.score(docs, "doc_id", "text", model)
+          .agg(count(lit(1)), sum(col("score"))).head().getLong(0)
       })
 
       // ANN: production sizing — nCells grows with the corpus so per-cell

@@ -121,7 +121,7 @@ class PipelineSpec extends SparkSpec {
       ("url1", "gk1", "ext1"),
       ("url2", "gk2", "ext2")
     ).toDF("row_data", "global_key", "external_id")
-    val path = java.nio.file.Files.createTempDirectory("graft_import_tbl")
+    val path = java.nio.file.Paths.get(tmp("graft_import_tbl"))
       .resolve("t.parquet").toString
     graft.io.Sources.writeTable(table, path, "overwrite")
 
@@ -185,7 +185,7 @@ class PipelineSpec extends SparkSpec {
     assert(spark.sql("SELECT sum(a) FROM t_spec").collect().head.getLong(0) == 3L)
     assert(Sources.listTables(spark).contains("t_spec"))
     assert(Sources.describeColumns(df) == Seq("a" -> "bigint", "b" -> "string"))
-    val tmp = java.nio.file.Files.createTempDirectory("graft_sink").toString + "/t"
+    val tmp = this.tmp("graft_sink") + "/t"
     Sources.writeTable(df, tmp, "overwrite")
     assert(Sources.readTable(spark, tmp).count() == 2)
     intercept[IllegalArgumentException] { Sources.writeTable(df, tmp, "error") }
@@ -213,13 +213,13 @@ class PipelineSpec extends SparkSpec {
 
   test("sources: format-agnostic table IO (ORC) and text-corpus ingest") {
     val df = Seq((1L, "alpha"), (2L, "beta")).toDF("id", "name")
-    val orc = java.nio.file.Files.createTempDirectory("graft_orc").toString + "/t"
+    val orc = tmp("graft_orc") + "/t"
     Sources.writeTableAs(df, orc, "overwrite", "orc")
     val back = Sources.readTableAs(spark, orc, "orc")
     assert(back.collect().map(r => (r.getLong(0), r.getString(1))).toSet ==
       Set((1L, "alpha"), (2L, "beta")))
 
-    val txt = java.nio.file.Files.createTempDirectory("graft_txt")
+    val txt = java.nio.file.Paths.get(tmp("graft_txt"))
     java.nio.file.Files.write(txt.resolve("corpus.txt"),
       "first doc\nsecond doc\nfirst doc\n".getBytes)
     val corpus = Sources.readTextCorpus(spark, txt.toString)

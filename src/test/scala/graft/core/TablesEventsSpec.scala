@@ -1,6 +1,5 @@
 package graft.core
 
-import java.nio.file.Files
 import java.sql.Timestamp
 
 import org.apache.spark.sql.functions._
@@ -24,7 +23,7 @@ class TablesEventsSpec extends SparkSpec {
   private val t1 = t0 + 3600L * 1000000L
 
   private def writeFixture(encode: String): String = {
-    val dir = Files.createTempDirectory(s"graft_ev_$encode").toString
+    val dir = tmp(s"graft_ev_$encode")
     val base = Seq((1L, t0, 10L), (2L, t1, 20L)).toDF("event_id", "us", "user_id")
     val df = encode match {
       case "ltz" => base.withColumn("ts", timestamp_micros(col("us")))
@@ -71,5 +70,13 @@ class TablesEventsSpec extends SparkSpec {
       m.getOrElse(fail(s"no normalized path in plan\n$s"))
     }
     assert(scanPath(first) == scanPath(second))
+  }
+
+  test("memoized loads nest: a build may memo its own input") {
+    // documents/embeddings memo a widened view whose build memos the raw
+    // table; "Aa" and "BB" share a String hash, so these keys share a bin
+    val df = spark.range(1).toDF()
+    assert(Tables.memo(spark, "nest_Aa")(Tables.memo(spark, "nest_BB")(df)) eq df)
+    assert(Tables.memo(spark, "nest_Aa")(spark.range(2).toDF()) eq df)
   }
 }

@@ -1,7 +1,5 @@
 package graft.ext
 
-import java.nio.file.Files
-
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
 
@@ -23,7 +21,7 @@ class AnnIndexSpec extends SparkSpec {
   }
 
   test("build + exact query: full probe equals brute force; meta round-trips") {
-    val path = Files.createTempDirectory("graft_ann").toString
+    val path = tmp("graft_ann")
     val meta = AnnIndex.build(vecs, "vec_id", "embedding", path, nCells = 3)
     assert(AnnIndex.readMeta(spark, path) == meta)
 
@@ -39,7 +37,7 @@ class AnnIndexSpec extends SparkSpec {
   }
 
   test("probed query scans only the probed cells — partition pruning, not a full read") {
-    val path = Files.createTempDirectory("graft_ann").toString
+    val path = tmp("graft_ann")
     AnnIndex.build(vecs, "vec_id", "embedding", path, nCells = 3)
     val raw = vecs.collect().map(r => r.getLong(0) -> r.getSeq[Float](1).toArray).toMap
     val query = raw(200L).map(_.toDouble)
@@ -53,7 +51,7 @@ class AnnIndexSpec extends SparkSpec {
   }
 
   test("PQ query over the persisted codes finds the planted cluster") {
-    val path = Files.createTempDirectory("graft_ann").toString
+    val path = tmp("graft_ann")
     AnnIndex.build(vecs, "vec_id", "embedding", path, nCells = 3, m = 4, nCodes = 8)
     val raw = vecs.collect().map(r => r.getLong(0) -> r.getSeq[Float](1).toArray).toMap
     val query = raw(0L).map(_.toDouble)
@@ -61,7 +59,7 @@ class AnnIndexSpec extends SparkSpec {
       .collect().map(_.getLong(0))
     assert(top.nonEmpty && top.forall(_ < 100L), top.toSeq.toString)
     // an index built without codes refuses the PQ query loudly
-    val noPq = Files.createTempDirectory("graft_ann").toString
+    val noPq = tmp("graft_ann")
     AnnIndex.build(vecs, "vec_id", "embedding", noPq, nCells = 3)
     val e = intercept[IllegalArgumentException](
       AnnIndex.queryPq(spark, noPq, query, nProbe = 1, k = 3))
@@ -69,7 +67,7 @@ class AnnIndexSpec extends SparkSpec {
   }
 
   test("cleanupStaging removes crash-orphaned staging dirs, touches nothing live") {
-    val path = Files.createTempDirectory("graft_ann_clean").toString
+    val path = tmp("graft_ann_clean")
     AnnIndex.build(vecs, "vec_id", "embedding", path, nCells = 3)
     val fs = new org.apache.hadoop.fs.Path(path)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -83,7 +81,7 @@ class AnnIndexSpec extends SparkSpec {
   }
 
   test("queryPqRefined: exact rerank of the ADC shortlist converges on the exact probe") {
-    val path = Files.createTempDirectory("graft_ann_ref").toString
+    val path = tmp("graft_ann_ref")
     AnnIndex.build(vecs, "vec_id", "embedding", path, nCells = 3, m = 4, nCodes = 8)
     val raw = vecs.collect().map(r => r.getLong(0) -> r.getSeq[Float](1).toArray).toMap
     val query = raw(105L).map(_.toDouble)
@@ -108,7 +106,7 @@ class AnnIndexSpec extends SparkSpec {
     assert(r1.subsetOf(shortlist), s"$r1 not in $shortlist")
 
     // a no-PQ index refuses through the shortlist path
-    val noPq = Files.createTempDirectory("graft_ann_ref2").toString
+    val noPq = tmp("graft_ann_ref2")
     AnnIndex.build(vecs, "vec_id", "embedding", noPq, nCells = 3)
     intercept[IllegalArgumentException](
       AnnIndex.queryPqRefined(spark, noPq, query, nProbe = 1, k = 3))
@@ -116,7 +114,7 @@ class AnnIndexSpec extends SparkSpec {
 
   test("hardNegatives via the index: exhaustive probe equals the broadcast-exact form") {
     val labeled = vecs.withColumn("label", (col("vec_id") % 2).cast("int"))
-    val path = Files.createTempDirectory("graft_ann_hn").toString
+    val path = tmp("graft_ann_hn")
     AnnIndex.build(labeled, "vec_id", "embedding", path, nCells = 3,
       extraCols = Seq("label"))
     val queryIds = Seq(0L, 5L, 100L, 207L)
@@ -134,7 +132,7 @@ class AnnIndexSpec extends SparkSpec {
 
   test("hardNegatives at nProbe=1 reads only the probed cells' files") {
     val labeled = vecs.withColumn("label", (col("vec_id") % 2).cast("int"))
-    val path = Files.createTempDirectory("graft_ann_hn").toString
+    val path = tmp("graft_ann_hn")
     AnnIndex.build(labeled, "vec_id", "embedding", path, nCells = 3,
       extraCols = Seq("label"))
     val totalFiles = spark.read.parquet(path).inputFiles.length
@@ -167,7 +165,7 @@ class AnnIndexSpec extends SparkSpec {
   }
 
   test("append adds vectors to existing cells without retraining; probes see them") {
-    val path = Files.createTempDirectory("graft_ann_app").toString
+    val path = tmp("graft_ann_app")
     val metaBefore = AnnIndex.build(vecs, "vec_id", "embedding", path, nCells = 3)
     // two new points inside the axis-0 cluster
     val extra = Seq(900L, 901L).map { id =>
@@ -188,7 +186,7 @@ class AnnIndexSpec extends SparkSpec {
     assert(e.getMessage.contains("extraCols"), e.getMessage)
     // a PQ index appends by ENCODING the batch with its stored codebooks:
     // the appended ids are visible to ADC-ranked probes immediately
-    val pqPath = Files.createTempDirectory("graft_ann_app_pq").toString
+    val pqPath = tmp("graft_ann_app_pq")
     AnnIndex.build(vecs, "vec_id", "embedding", pqPath, nCells = 3, m = 4, nCodes = 8)
     AnnIndex.append(extra, "vec_id", "embedding", pqPath)
     assert(AnnIndex.readMeta(spark, pqPath).m == 4) // sidecar untouched
@@ -202,7 +200,7 @@ class AnnIndexSpec extends SparkSpec {
   }
 
   test("rebalance merges starved cells into their nearest neighbor; exactness preserved") {
-    val path = Files.createTempDirectory("graft_ann_merge").toString
+    val path = tmp("graft_ann_merge")
     // clusters of 24/24/4 → the third cell is starved (balance 4*3/52 ≈ 0.23)
     val pts = (for {
       (axis, n) <- Seq((0, 24), (1, 24), (2, 4)); i <- 0 until n
@@ -240,7 +238,7 @@ class AnnIndexSpec extends SparkSpec {
   }
 
   test("knnJoin: exhaustive probe equals per-query exact search; cellStats flags drift") {
-    val path = Files.createTempDirectory("graft_ann_knn").toString
+    val path = tmp("graft_ann_knn")
     AnnIndex.build(vecs, "vec_id", "embedding", path, nCells = 3)
     val queries = vecs.filter(col("vec_id").isin(0L, 101L, 207L))
     val joined = AnnIndex.knnJoin(spark, path, queries, "vec_id", "embedding",
@@ -267,7 +265,7 @@ class AnnIndexSpec extends SparkSpec {
   }
 
   test("rebalance splits the hot cell only: bound holds, untouched cells byte-identical, exact results unchanged") {
-    val path = Files.createTempDirectory("graft_ann_rebal").toString
+    val path = tmp("graft_ann_rebal")
     AnnIndex.build(vecs, "vec_id", "embedding", path, nCells = 3)
     // one-sided append: 24 extra vectors into cluster 0's cell → 36/60 of
     // the mass in one cell, balance 1.8
@@ -321,7 +319,7 @@ class AnnIndexSpec extends SparkSpec {
   }
 
   test("rebalance splits SEVERAL breaching cells in one batched round; exactness holds") {
-    val path = Files.createTempDirectory("graft_ann_rebal_multi").toString
+    val path = tmp("graft_ann_rebal_multi")
     AnnIndex.build(vecs, "vec_id", "embedding", path, nCells = 3)
     // bloat TWO cells: 30 extra vectors into cluster 0's and cluster 1's
     // cells each → both breach maxBalance=1.3 simultaneously
@@ -358,13 +356,13 @@ class AnnIndexSpec extends SparkSpec {
 
   test("a non-index path is refused") {
     val e = intercept[IllegalArgumentException](
-      AnnIndex.query(spark, Files.createTempDirectory("not_ann").toString,
+      AnnIndex.query(spark, tmp("not_ann"),
         Array.fill(8)(0.0), 1, 3))
     assert(e.getMessage.contains("_ann_meta.json"), e.getMessage)
   }
 
   test("delete removes ids from touched files only; untouched files byte-identical") {
-    val path = Files.createTempDirectory("graft_ann_del").toString
+    val path = tmp("graft_ann_del")
     AnnIndex.build(vecs, "vec_id", "embedding", path, nCells = 3)
     def listing(): Map[String, (Long, Long)] = {
       val fs = new org.apache.hadoop.fs.Path(path)
@@ -396,7 +394,7 @@ class AnnIndexSpec extends SparkSpec {
   }
 
   test("delete on a PQ index keeps ADC probes valid for the survivors") {
-    val path = Files.createTempDirectory("graft_ann_del_pq").toString
+    val path = tmp("graft_ann_del_pq")
     AnnIndex.build(vecs, "vec_id", "embedding", path, nCells = 3, m = 4, nCodes = 8)
     assert(AnnIndex.delete(spark, path, Seq(0L, 1L)) == 2L)
     val raw = vecs.collect().map(r => r.getLong(0) -> r.getSeq[Float](1).toArray).toMap
@@ -406,7 +404,7 @@ class AnnIndexSpec extends SparkSpec {
   }
 
   test("refreshCodebooks re-encodes only drifted cells; ADC recall restored, others byte-identical") {
-    val path = Files.createTempDirectory("graft_ann_refresh").toString
+    val path = tmp("graft_ann_refresh")
     AnnIndex.build(vecs, "vec_id", "embedding", path, nCells = 3, m = 4, nCodes = 8)
     // drift: append a cluster FAR outside the trained value range — its
     // codes under the stored (gen-0) codebooks collapse onto centers that

@@ -52,7 +52,7 @@ class IncrementalSpec extends SparkSpec {
   test("applyChanges: a real change feed keeps n/sum exact through DML; keys drop at zero") {
     import spark.implicits._
     import graft.io.{DeltaMerge, DeltaRead, DeltaWrite}
-    val table = java.nio.file.Files.createTempDirectory("graft_inc_cdf").toString
+    val table = tmp("graft_inc_cdf")
     val d0 = Seq(("k1", 1L, 10.0), ("k1", 2L, 30.0), ("k2", 3L, 5.0))
       .toDF("k", "id", "v")
     DeltaWrite.writeDeltaTable(d0, table, "append") // v0

@@ -9,7 +9,7 @@ class WebDatasetSpec extends SparkSpec {
   import spark.implicits._
 
   test("round-trip: samples pack as adjacent key.ext entries and read back exactly") {
-    val dir = Files.createTempDirectory("graft_wds").toString
+    val dir = tmp("graft_wds")
     val rows = Seq(
       ("doc-1", "first document text", Array[Byte](1, 2, 3)),
       ("doc-2", "second one", Array[Byte](9)),
@@ -40,7 +40,7 @@ class WebDatasetSpec extends SparkSpec {
   }
 
   test("shards roll at the byte bound without splitting a sample; GNU tar reads the output") {
-    val dir = Files.createTempDirectory("graft_wds_roll").toString
+    val dir = tmp("graft_wds_roll")
     // ~40 KB per sample, 64 KB bound → one sample per shard
     val big = Seq.tabulate(4)(i => (f"sample-$i%02d", "x" * 40000))
     val shards = WebDataset.writeShards(big.toDF("key", "text"),
@@ -78,7 +78,7 @@ class WebDatasetSpec extends SparkSpec {
   test("readShards accepts space-padded octal size fields (GNU/bsdtar interop)") {
     // several standard writers left-pad the 12-byte size with spaces
     // instead of zeros; the parser must strip the padding, not throw
-    val dir = Files.createTempDirectory("graft_wds_pad").toString
+    val dir = tmp("graft_wds_pad")
     val payload = "space padded entry".getBytes("UTF-8")
     val h = WebDataset.tarHeader("k1.txt", payload.length.toLong)
     // rewrite size[124,12) as space-padded octal ("     22 \0"-style)
@@ -106,7 +106,7 @@ class WebDatasetSpec extends SparkSpec {
   }
 
   test("streaming shard reader: new shards arrive as new micro-batches, samples exactly-once") {
-    val base = Files.createTempDirectory("graft_wds_stream").toString
+    val base = tmp("graft_wds_stream")
     val dir = s"$base/in"
     val out = s"$base/out"
     val ckpt = s"$base/ckpt"
@@ -114,7 +114,7 @@ class WebDatasetSpec extends SparkSpec {
     def writeShard(n: Int, rows: Seq[(String, String)]): Unit = {
       // stage in a scratch dir, then move the shard in atomically — the
       // file-source contract for files that appear while a stream runs
-      val stage = Files.createTempDirectory("graft_wds_stage").toString
+      val stage = tmp("graft_wds_stage")
       WebDataset.writeShards(rows.toDF("key", "text"), "key",
         Seq("txt" -> "text"), stage)
       val tars = Files.list(Paths.get(stage)).iterator()
@@ -146,7 +146,7 @@ class WebDatasetSpec extends SparkSpec {
   }
 
   test("oversized keys and null keys refuse loudly") {
-    val dir = Files.createTempDirectory("graft_wds_bad").toString
+    val dir = tmp("graft_wds_bad")
     val e = intercept[Exception](
       WebDataset.writeShards(
         Seq(("k" * 120, "t")).toDF("key", "text"), "key",

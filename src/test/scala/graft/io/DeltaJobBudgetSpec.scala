@@ -1,9 +1,5 @@
 package graft.io
 
-import java.util.concurrent.atomic.AtomicInteger
-
-import org.apache.spark.ListenerDrain
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -18,25 +14,6 @@ import graft.SparkSpec
   */
 class DeltaJobBudgetSpec extends SparkSpec {
   import spark.implicits._
-
-  private val group = new AtomicInteger(0)
-
-  /** The Spark jobs `f` starts from this thread. */
-  private def jobs(f: => Any): Int = {
-    val sc = spark.sparkContext
-    val id = s"graft-job-budget-${group.incrementAndGet()}"
-    val n = new AtomicInteger(0)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == id))
-          n.incrementAndGet()
-    }
-    sc.addSparkListener(listener)
-    sc.setJobGroup(id, "job budget")
-    try { f; ListenerDrain.drain(sc) }
-    finally { sc.clearJobGroup(); sc.removeSparkListener(listener) }
-    n.get
-  }
 
   private def upsert(lo: Long): org.apache.spark.sql.DataFrame =
     (lo until lo + 20).map(i => (i, i * 7)).toDF("id", "v").repartition(1)

@@ -1,7 +1,5 @@
 package graft.streaming
 
-import java.nio.file.Files
-
 import graft.SparkSpec
 import graft.ext.AnnIndex
 import graft.io.{DeltaMerge, DeltaRead, DeltaWrite}
@@ -26,7 +24,7 @@ class AnnCdcSinkSpec extends SparkSpec {
   }
 
   test("delta CDC drives the index: inserts append, DV deletes remove, updates move — exactly-once across restarts") {
-    val base = Files.createTempDirectory("graft_anncdc").toString
+    val base = tmp("graft_anncdc")
     val table = s"$base/vectors"
     val index = s"$base/index"
 
@@ -91,7 +89,7 @@ class AnnCdcSinkSpec extends SparkSpec {
   }
 
   test("crash mid-apply reconciles: half-landed appends never duplicate") {
-    val base = Files.createTempDirectory("graft_anncdc_crash").toString
+    val base = tmp("graft_anncdc_crash")
     val table = s"$base/vectors"
     val index = s"$base/index"
     val seed = for (axis <- 0 until 2; i <- 0 until 5)

@@ -63,7 +63,7 @@ class AnnMaintainSinkSpec extends SparkSpec {
   }
 
   test("file stream appends batches and remediates drift (split fires, data intact)") {
-    val base = Files.createTempDirectory("graft_annsink").toString
+    val base = tmp("graft_annsink")
     val srcDir = s"$base/src"
     val path = s"$base/index"
     Files.createDirectories(Paths.get(srcDir))
@@ -118,7 +118,7 @@ class AnnMaintainSinkSpec extends SparkSpec {
   }
 
   test("crash between append and commit marker replays exactly-once") {
-    val base = Files.createTempDirectory("graft_annsink_crash").toString
+    val base = tmp("graft_annsink_crash")
     val srcDir = s"$base/src"
     val path = s"$base/index"
     Files.createDirectories(Paths.get(srcDir))
@@ -169,7 +169,7 @@ class AnnMaintainSinkSpec extends SparkSpec {
   }
 
   test("compactMarkers folds done markers into the floor; pre-floor replays still skip") {
-    val base = Files.createTempDirectory("graft_annsink_floor").toString
+    val base = tmp("graft_annsink_floor")
     val path = s"$base/index"
     val built = for (axis <- 0 until 2; i <- 0 until 5)
       yield (axis * 100L + i, axisVec(axis, i))
@@ -213,7 +213,7 @@ class AnnMaintainSinkSpec extends SparkSpec {
   }
 
   test("extraCols ride the stream into the index; a batch missing them refuses") {
-    val base = Files.createTempDirectory("graft_annsink_extra").toString
+    val base = tmp("graft_annsink_extra")
     val srcDir = s"$base/src"
     val path = s"$base/index"
     Files.createDirectories(Paths.get(srcDir))
@@ -258,7 +258,7 @@ class AnnMaintainSinkSpec extends SparkSpec {
   }
 
   test("PQ index: refreshEvery offers a retrain without breaking probes") {
-    val base = Files.createTempDirectory("graft_annsink_pq").toString
+    val base = tmp("graft_annsink_pq")
     val srcDir = s"$base/src"
     val path = s"$base/index"
     Files.createDirectories(Paths.get(srcDir))

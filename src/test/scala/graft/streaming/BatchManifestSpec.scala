@@ -39,7 +39,7 @@ class BatchManifestSpec extends SparkSpec {
   }
 
   test("20-batch stream: mid-stream compaction folds to one generation; restart replays nothing") {
-    val base = Files.createTempDirectory("graft_bm_gen").toString
+    val base = tmp("graft_bm_gen")
     val srcDir = s"$base/src"
     val indexDir = s"$base/index"
     val acceptedDir = s"$base/accepted"
@@ -93,7 +93,7 @@ class BatchManifestSpec extends SparkSpec {
   }
 
   test("compactIndexEvery folds generations automatically mid-stream") {
-    val base = Files.createTempDirectory("graft_bm_auto").toString
+    val base = tmp("graft_bm_auto")
     val srcDir = s"$base/src"
     val indexDir = s"$base/index"
     Files.createDirectories(Paths.get(srcDir))
@@ -114,7 +114,7 @@ class BatchManifestSpec extends SparkSpec {
   }
 
   test("a crash mid-index-write is NOT a commit: partial dir invisible, replay redoes it") {
-    val base = Files.createTempDirectory("graft_bm_partial").toString
+    val base = tmp("graft_bm_partial")
     val srcDir = s"$base/src"
     val indexDir = s"$base/index"
     val acceptedDir = s"$base/accepted"
@@ -149,7 +149,7 @@ class BatchManifestSpec extends SparkSpec {
 
   test("embed-sink generation fold: all three stores compact, admission state intact") {
     import org.apache.spark.sql.types.{ArrayType, FloatType}
-    val base = Files.createTempDirectory("graft_bm_embed").toString
+    val base = tmp("graft_bm_embed")
     val srcDir = s"$base/src"
     val state = s"$base/state"
     Files.createDirectories(Paths.get(srcDir))
@@ -204,7 +204,7 @@ class BatchManifestSpec extends SparkSpec {
   }
 
   test("crash-mid-cleanup leftovers: a stale older generation is invisible and the next fold removes it") {
-    val base = Files.createTempDirectory("graft_bm_stale").toString
+    val base = tmp("graft_bm_stale")
     val dir = s"$base/store"
     // simulate the crash point AFTER a fold renamed g3 into place but
     // BEFORE it deleted the superseded dirs: g1 (older gen), b2, b3
@@ -229,7 +229,7 @@ class BatchManifestSpec extends SparkSpec {
   }
 
   test("committed-but-empty batch dirs are skipped, not schema-inference failures") {
-    val base = Files.createTempDirectory("graft_bm_empty").toString
+    val base = tmp("graft_bm_empty")
     val dir = s"$base/store"
     // b0: real rows; b1: _SUCCESS only (a batch whose survivors were all
     // rejected can land zero part files)

@@ -28,7 +28,7 @@ class CurationIngestSinkSpec extends SparkSpec {
   }
 
   test("gates + corpus admission: quality/repetition cut, PII variants collapse, replays add nothing") {
-    val base = Files.createTempDirectory("graft_curation_ingest").toString
+    val base = tmp("graft_curation_ingest")
     val srcDir = s"$base/src"
     Files.createDirectories(Paths.get(srcDir))
 
@@ -71,7 +71,7 @@ class CurationIngestSinkSpec extends SparkSpec {
   }
 
   test("NFC gate: a decomposed re-encoding of an accepted doc collapses onto its fingerprint") {
-    val base = Files.createTempDirectory("graft_curation_nfc").toString
+    val base = tmp("graft_curation_nfc")
     val srcDir = s"$base/src"
     Files.createDirectories(Paths.get(srcDir))
     def runOnce(): Unit = {
@@ -99,11 +99,11 @@ class CurationIngestSinkSpec extends SparkSpec {
     // the full multimodal ingest path: a producer packs samples as tar
     // shards; the streaming reader tails them; curation admits novel docs
     import graft.ext.WebDataset
-    val base = Files.createTempDirectory("graft_wds_curation").toString
+    val base = tmp("graft_wds_curation")
     val shardDir = s"$base/shards"
     Files.createDirectories(Paths.get(shardDir))
     def ship(n: Int, rows: Seq[(String, String)]): Unit = {
-      val stage = Files.createTempDirectory("graft_wds_cur_stage").toString
+      val stage = tmp("graft_wds_cur_stage")
       WebDataset.writeShards(rows.toDF("key", "text"), "key",
         Seq("txt" -> "text"), stage)
       val tars = Files.list(Paths.get(stage)).iterator()
@@ -138,7 +138,7 @@ class CurationIngestSinkSpec extends SparkSpec {
   }
 
   test("crash between the accepted write and the index commit marker replays exactly-once") {
-    val base = Files.createTempDirectory("graft_curation_crash").toString
+    val base = tmp("graft_curation_crash")
     val srcDir = s"$base/src"
     Files.createDirectories(Paths.get(srcDir))
     stage(srcDir, base, "b0", Seq(

@@ -26,7 +26,7 @@ class HeavyHittersStreamSpec extends SparkSpec {
   }
 
   test("exact regime: per-group snapshots accumulate across triggers; state stays bounded") {
-    val base = Files.createTempDirectory("graft_hh_stream").toString
+    val base = tmp("graft_hh_stream")
     val srcDir = s"$base/src"
     Files.createDirectories(Paths.get(srcDir))
 
@@ -70,7 +70,7 @@ class HeavyHittersStreamSpec extends SparkSpec {
   }
 
   test("approximate regime: emitted counters never exceed capacity and keep the MG retention bound") {
-    val base = Files.createTempDirectory("graft_hh_stream_apx").toString
+    val base = tmp("graft_hh_stream_apx")
     val srcDir = s"$base/src"
     Files.createDirectories(Paths.get(srcDir))
     // one group, 40-token vocabulary through capacity 8: the heavy token

@@ -24,7 +24,7 @@ class StreamingSpec extends SparkSpec {
 
   // FileStreamSource wants a directory; stage the events file into one.
   private lazy val eventsDir: String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_stream")
+    val dir = java.nio.file.Paths.get(tmp("graft_stream"))
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"$sf/events.parquet"),
       dir.resolve("events.parquet"))
@@ -188,7 +188,7 @@ class StreamingSpec extends SparkSpec {
 
   test("foreachBatch upload sink drains the stream through the batch transport") {
     val stream = EventsStream.readEvents(spark, eventsDir)
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_sink_ckpt").toString
+    val ckpt = tmp("graft_sink_ckpt")
     val q = EventsStream.uploadSink(
       stream,
       to_json(struct(col("event_id"), col("event_type"))),
@@ -269,8 +269,8 @@ class StreamingSpec extends SparkSpec {
 
   test("partitioned parquet sink: stream lands in date dirs, reads prune") {
     val stream = EventsStream.readEvents(spark, eventsDir)
-    val out = java.nio.file.Files.createTempDirectory("graft_stream_layout").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_layout_ckpt").toString
+    val out = tmp("graft_stream_layout")
+    val ckpt = tmp("graft_layout_ckpt")
     val q = EventsStream.partitionedSink(stream, out, ckpt)
     q.processAllAvailable()
     q.stop()
@@ -291,11 +291,11 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("restart from checkpoint is exactly-once: old files not reprocessed, new ones picked up") {
-    val srcDir = java.nio.file.Files.createTempDirectory("graft_restart_src")
+    val srcDir = java.nio.file.Paths.get(tmp("graft_restart_src"))
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"$sf/events.parquet"), srcDir.resolve("events.parquet"))
-    val out = java.nio.file.Files.createTempDirectory("graft_restart_out").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_restart_ckpt").toString
+    val out = tmp("graft_restart_out")
+    val ckpt = tmp("graft_restart_ckpt")
     val baseCount = graft.Tables.events(spark, sf).count()
 
     val q1 = EventsStream.partitionedSink(
@@ -330,8 +330,8 @@ class StreamingSpec extends SparkSpec {
   test("incremental agg sink: stream-maintained state equals the batch aggregate; replay is idempotent") {
     val stream = EventsStream.readEvents(spark, eventsDir)
       .select(col("user_id"), col("event_type"), col("value"))
-    val stateDir = java.nio.file.Files.createTempDirectory("graft_incr_state").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_incr_ckpt").toString
+    val stateDir = tmp("graft_incr_state")
+    val ckpt = tmp("graft_incr_ckpt")
     val q = IncrementalSink.run(stream, Seq("user_id", "event_type"), "value", stateDir, ckpt)
     q.awaitTermination(120000)
 
@@ -402,7 +402,7 @@ class StreamingSpec extends SparkSpec {
 
   test("streaming ingest dedup: batches admit only novel docs, index grows append-only") {
     import spark.implicits._
-    val base = java.nio.file.Files.createTempDirectory("graft_ingest").toString
+    val base = tmp("graft_ingest")
     val srcDir = s"$base/src"
     val indexDir = s"$base/index"
     val acceptedDir = s"$base/accepted"
@@ -458,7 +458,7 @@ class StreamingSpec extends SparkSpec {
 
   test("streaming embedding ingest dedup: cosine near-dups rejected vs corpus and in-batch") {
     import spark.implicits._
-    val base = java.nio.file.Files.createTempDirectory("graft_embed_ingest").toString
+    val base = tmp("graft_embed_ingest")
     val srcDir = s"$base/src"
     val stateDir = s"$base/state"
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(srcDir))
