@@ -31,7 +31,8 @@ import graft.ext.AnnIndex
   * id-pushed pruned scan (row-group stats skip untouched files), the same
   * honest cost as the takedown verb it wraps.
   *
-  * Exactly-once across restarts: the [[AnnMaintainSink]] two-phase marker,
+  * Exactly-once across restarts: the [[AnnMaintainSink]] two-phase marker
+  * (the index has no log to carry a Delta `txn`, see there),
   * under `<index>/_cdc/` (its own namespace — an ingest maintainer and a
   * CDC maintainer must not share an index anyway, single-writer contract):
   * `b<id>.inflight` before the apply, rename to `.done` after. A replayed

@@ -37,11 +37,12 @@ import graft.ext.{AnnIndex, Similarity}
   * `upToBatch` so a crash anywhere around the commit point folds each
   * batch into the counts exactly once.
   *
-  * Exactly-once across restarts WITHOUT a transactional store — the
-  * [[IngestDedupSink]] manifest trick cannot apply directly because
-  * [[AnnIndex.append]] adds files to shared `cell=` directories rather
-  * than writing a per-batch directory, so the sink brackets the append in
-  * a two-phase marker under `<index>/_stream/`:
+  * Exactly-once across restarts through the sink's own marker, not the
+  * Delta `txn` commit the package's other sinks use: [[AnnIndex.append]]
+  * adds files to shared `cell=` directories, and the index has no log
+  * that could carry a `txn` in the same atomic commit as those files. So
+  * the sink brackets the append in a two-phase marker under
+  * `<index>/_stream/`:
   *
   *   1. `b<id>.inflight` written BEFORE the append;
   *   2. append;

@@ -70,17 +70,7 @@ object ChangeViewSink {
       trigger: Trigger = Trigger.AvailableNow(),
       maxVersionsPerBatch: Option[Long] = None): StreamingQuery = {
     val srcSchema = DeltaRead.readDeltaTable(spark, sourcePath).schema
-    val viewSchema = StructType(
-      keyCols.map(k => srcSchema(k)) ++ Seq(
-        StructField("n", LongType), StructField("sum", DoubleType),
-        StructField("mn", DoubleType), StructField("mx", DoubleType)))
-    val logDir = new org.apache.hadoop.fs.Path(viewPath, "_delta_log")
-    val fs = logDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(logDir))
-      DeltaWrite.writeDeltaTable(
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], viewSchema),
-        viewPath, "append")
+    createView(spark, viewPath, keyCols.map(srcSchema(_)))
     val reader = spark.readStream
       .format("graft.streaming.DeltaChangeSource")
       .option("path", sourcePath)
@@ -97,6 +87,21 @@ object ChangeViewSink {
       }
       .start()
   }
+
+  /** Create the empty view table — `keyFields..., n, sum, mn, mx` — at
+    * `viewPath` before its first commit (pre-Delta state is refused, see
+    * [[DeltaStreamSink.tableVersion]]).
+    */
+  private[streaming] def createView(spark: SparkSession, viewPath: String,
+      keyFields: Seq[StructField]): Unit =
+    if (DeltaStreamSink.tableVersion(spark, viewPath) < 0)
+      DeltaWrite.writeDeltaTable(
+        spark.createDataFrame(
+          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+          StructType(keyFields ++ Seq(
+            StructField("n", LongType), StructField("sum", DoubleType),
+            StructField("mn", DoubleType), StructField("mx", DoubleType)))),
+        viewPath, "append")
 
   /** Fold one change batch into the view — also the poll-driven batch
     * surface (pair with [[graft.io.DeltaRead.changeDiff]]). Returns true

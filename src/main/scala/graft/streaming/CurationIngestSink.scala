@@ -1,11 +1,10 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
-import graft.ext.{Dedup, TextAnalysis}
+import graft.ext.TextAnalysis
 
 /** Streaming CURATION with admission control — the
   * [[graft.ext.Curation]] pipeline's ingest-forever form: every
@@ -27,27 +26,26 @@ import graft.ext.{Dedup, TextAnalysis}
   * re-scan the corpus each trigger or silently change semantics to
   * batch-local. This sink is the admission half; compose both.
   *
-  * Exactly-once: the [[IngestDedupSink]] / [[BatchManifest]] layout — one
-  * `b<batchId>/` directory per micro-batch under accepted/ and the
-  * fingerprint index, index dir written LAST, and a batch counts as
-  * committed only once the index write JOB finished (the dir's `_SUCCESS`
-  * marker — the directory itself appears before any task runs, so a bare
-  * existence check would mistake a crash mid-index-write for a commit and
-  * leave the batch's accepted docs permanently missing from admission). A
-  * crash-replayed batch either finds the committed index (skip) or redoes
-  * both overwrite-mode writes idempotently; gates are deterministic
-  * per-row expressions, so a replay admits the identical set.
-  * [[compactGenerations]] folds old batch dirs so per-epoch listing cost
-  * tracks batches-since-compaction, not stream age.
+  * Exactly-once: the [[IngestDedupSink]] protocol — accepted, then the
+  * fingerprint index, each a Delta commit carrying `txn = (AppId,
+  * batchId)`; an epoch the index's marker covers is skipped, and a replay
+  * after a crash between the two commits admits the identical set (the
+  * gates are deterministic per-row expressions and admission reads only
+  * committed index rows) while the accepted store skips itself by its
+  * own marker. [[compactGenerations]] bin-packs the small files the
+  * epochs leave.
   */
 object CurationIngestSink {
 
+  /** The `txn` appId of this sink's commits (one writer per store). */
+  val AppId = "graft.streaming.CurationIngestSink"
+
   /** All accepted rows so far; None before the first commit. */
   def readAccepted(spark: SparkSession, acceptedDir: String): Option[DataFrame] =
-    BatchManifest.read(spark, acceptedDir)
+    IngestDedupSink.readAccepted(spark, acceptedDir)
 
-  /** Fold committed batch dirs into one generation per store — see
-    * [[IngestDedupSink.compactGenerations]] (same layout, same contract).
+  /** Bin-pack each store's small files — see
+    * [[IngestDedupSink.compactGenerations]] (same stores, same contract).
     */
   def compactGenerations(spark: SparkSession, indexDir: String,
       acceptedDir: String): Long =
@@ -60,56 +58,29 @@ object CurationIngestSink {
       perplexityGate: Option[(String, Double)] = None,
       normalizeNfc: Boolean = false,
       compactIndexEvery: Int = 0): StreamingQuery =
-    docs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        if (!BatchManifest.isBatchCommitted(spark, indexDir, batchId)) {
-          // per-row gates in cleaning order, one codegen'd pass; the
-          // normalized/masked text is what fingerprints (NFC first, so a
-          // decomposed re-encoding of an accepted doc collapses onto its
-          // stored fingerprint instead of re-ingesting as new)
-          var cur = batch.select(col(idCol), col(textCol))
-          if (normalizeNfc)
-            cur = cur.withColumn(textCol,
-              TextAnalysis.normalizeUnicode(col(textCol)))
-          if (scrubPii)
-            cur = cur.withColumn(textCol, TextAnalysis.scrubPii(col(textCol)))
-          maxDupNgramFrac.foreach { bound =>
-            cur = cur.filter(
-              TextAnalysis.dupNgramFraction(col(textCol), 2) <= bound)
-          }
-          cur = cur
-            .withColumn("quality", TextAnalysis.qualityScore(col(textCol)))
-            .filter(col("quality") >= minQuality)
-          perplexityGate.foreach { case (modelId, bound) =>
-            cur = cur.filter(
-              graft.ext.LangModel.perplexityBits(col(textCol), modelId) <= bound)
-          }
-          // one materialization feeds both dedup checks and the anti-join
-          val b = cur.localCheckpoint()
-          val vsCorpus = IngestDedupSink.readIndex(spark, indexDir) match {
-            case Some(idx) =>
-              Dedup.simhashAgainstIndex(b, idCol, textCol, idx, maxHamming)
-                .select(col("new_id").as("__loser"))
-            case None => spark.range(0).select(col("id").as("__loser"))
-          }
-          val vsBatch = Dedup.simhashNearDupPairs(b, idCol, textCol, maxHamming)
-            .select(col("id_b").as("__loser"))
-          val losers = vsCorpus.unionByName(vsBatch).distinct()
-          val survivors = b
-            .join(losers, b(idCol) === losers("__loser"), "left_anti")
-            .localCheckpoint()
-          survivors.write.mode("overwrite").parquet(s"$acceptedDir/b$batchId")
-          Dedup.simhashIndex(survivors, idCol, textCol)
-            .write.mode("overwrite").parquet(s"$indexDir/b$batchId")
-        }
-        if (compactIndexEvery > 0 && (batchId + 1) % compactIndexEvery == 0) {
-          BatchManifest.compact(spark, indexDir)
-          ()
-        }
+    IngestDedupSink.epochs(docs, checkpoint, AppId, Seq(acceptedDir, indexDir),
+        compactIndexEvery) { batch =>
+      // per-row gates in cleaning order, one codegen'd pass; the
+      // normalized/masked text is what fingerprints (NFC first, so a
+      // decomposed re-encoding of an accepted doc collapses onto its
+      // stored fingerprint instead of re-ingesting as new)
+      var cur = batch.select(col(idCol), col(textCol))
+      if (normalizeNfc)
+        cur = cur.withColumn(textCol,
+          TextAnalysis.normalizeUnicode(col(textCol)))
+      if (scrubPii)
+        cur = cur.withColumn(textCol, TextAnalysis.scrubPii(col(textCol)))
+      maxDupNgramFrac.foreach { bound =>
+        cur = cur.filter(
+          TextAnalysis.dupNgramFraction(col(textCol), 2) <= bound)
       }
-      .start()
+      cur = cur
+        .withColumn("quality", TextAnalysis.qualityScore(col(textCol)))
+        .filter(col("quality") >= minQuality)
+      perplexityGate.foreach { case (modelId, bound) =>
+        cur = cur.filter(
+          graft.ext.LangModel.perplexityBits(col(textCol), modelId) <= bound)
+      }
+      IngestDedupSink.admitText(cur, idCol, textCol, indexDir, maxHamming)
+    }
 }

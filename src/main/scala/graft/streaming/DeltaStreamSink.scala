@@ -1,9 +1,10 @@
 package graft.streaming
 
-import org.apache.spark.sql.DataFrame
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
-import graft.io.DeltaWrite
+import graft.io.{DeltaRead, DeltaWrite}
 
 /** Streaming append sink over the [[graft.io.DeltaWrite]] commit protocol
   * with EXACTLY-ONCE epochs — the `txn` handshake from the public Delta
@@ -22,6 +23,11 @@ import graft.io.DeltaWrite
   * Combined with [[graft.io.DeltaRead.readStreamAppendOnly]] on the
   * consumer side, Delta tables become the durable hop between pipeline
   * stages: writer commits are atomic, readers tail `changesSince`.
+  *
+  * Every file-state sink of this package keeps its stores as Delta tables
+  * and commits its epochs through [[writeBatch]] (the ingest sinks) or a
+  * `txn`-carrying MERGE ([[DeltaMergeSink]], [[ChangeViewSink]],
+  * [[IncrementalSink]]); only the ANN sinks keep their own markers.
   */
 object DeltaStreamSink {
 
@@ -56,4 +62,33 @@ object DeltaStreamSink {
       true
     }
   }
+
+  /** The head version of the sink store at `path`, -1 before its first
+    * commit. A store that holds the per-batch directories the file-state
+    * sinks kept before their stores became Delta tables (`b<id>`,
+    * `g<id>`, `v<id>`) and no commit is refused: read as empty, it would
+    * silently reset the sink's admission or aggregate state.
+    */
+  private[streaming] def tableVersion(spark: SparkSession, path: String): Long = {
+    val v = DeltaRead.latestVersion(spark, path)
+    if (v < 0) {
+      val root = new Path(path)
+      val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val old = if (!fs.exists(root)) Nil
+        else fs.listStatus(root).toSeq.map(_.getPath.getName)
+          .filter(_.matches("[bgv]\\d+"))
+      if (old.nonEmpty)
+        throw new IllegalStateException(s"$path holds per-batch sink state " +
+          s"(${old.sorted.take(3).mkString(", ")}) but no _delta_log; the " +
+          "sinks keep their stores as Delta tables — rebuild it from its source")
+    }
+    v
+  }
+
+  /** The Delta store at `path`; None before its first commit (see
+    * [[tableVersion]] for the stores it refuses).
+    */
+  def readTable(spark: SparkSession, path: String): Option[DataFrame] =
+    if (tableVersion(spark, path) < 0) None
+    else Some(DeltaRead.readDeltaTable(spark, path))
 }

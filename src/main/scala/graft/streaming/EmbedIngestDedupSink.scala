@@ -1,11 +1,11 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.ext.Similarity
+import graft.io.DeltaWrite
 
 /** Streaming EMBEDDING ingest with near-dup admission control — the
   * [[IngestDedupSink]] pattern for vector corpora (multimodal pipelines
@@ -16,70 +16,61 @@ import graft.ext.Similarity
   * with the batch), drops in-batch dups (smaller id wins), then appends
   * survivors + their band rows + their vectors.
   *
-  * State layout per committed batch `bN`: `accepted/bN` (original rows),
-  * `vecs/bN` (id, vec, nrm), and `bands/bN` (id, band, h) written LAST —
-  * a batch counts as committed only once the bands write JOB finished
-  * ([[BatchManifest]]'s `_SUCCESS` rule; the directory alone appears
-  * before any task runs), so a crash-replayed batch either finds the
-  * committed bands dir (skip) or redoes the overwrite-mode writes
-  * idempotently, and partial writes are invisible to every reader.
-  * [[compactGenerations]] folds old batch dirs so listing cost tracks
-  * batches-since-compaction, not stream age.
+  * State: three Delta tables under `stateDir` — `accepted` (original
+  * rows), `vecs` (id, vec, nrm) and `bands` (id, band, h), written in that
+  * order, each commit carrying `txn = (AppId, batchId)` — the
+  * [[IngestDedupSink]] protocol with `bands` as the last store: an epoch
+  * its marker covers is skipped, admission reads only committed band rows
+  * (a candidate's vector is fetched by id, so vectors committed ahead of
+  * their bands are never consulted), and on replay each store that
+  * committed before a crash skips itself. [[compactGenerations]]
+  * bin-packs the small files the epochs leave.
   */
 object EmbedIngestDedupSink {
 
-  /** All committed band rows / vector rows; None before the first commit. */
-  def readBands(spark: SparkSession, stateDir: String): Option[DataFrame] =
-    BatchManifest.read(spark, s"$stateDir/bands")
-  def readVecs(spark: SparkSession, stateDir: String): Option[DataFrame] =
-    BatchManifest.read(spark, s"$stateDir/vecs")
-  def readAccepted(spark: SparkSession, stateDir: String): Option[DataFrame] =
-    BatchManifest.read(spark, s"$stateDir/accepted")
+  /** The `txn` appId of this sink's commits (one writer per store). */
+  val AppId = "graft.streaming.EmbedIngestDedupSink"
 
-  /** Fold committed batch dirs into one generation per store — bands
-    * LAST, mirroring the write order (its floor is the commit signal).
-    * Returns the new bands floor (-1 = nothing to fold).
+  private val Stores = Seq("accepted", "vecs", "bands")
+
+  /** All committed band rows / vector rows / accepted rows; None before
+    * the first commit.
     */
-  def compactGenerations(spark: SparkSession, stateDir: String): Long = {
-    BatchManifest.compact(spark, s"$stateDir/accepted")
-    BatchManifest.compact(spark, s"$stateDir/vecs")
-    BatchManifest.compact(spark, s"$stateDir/bands")
-  }
+  def readBands(spark: SparkSession, stateDir: String): Option[DataFrame] =
+    DeltaStreamSink.readTable(spark, s"$stateDir/bands")
+  def readVecs(spark: SparkSession, stateDir: String): Option[DataFrame] =
+    DeltaStreamSink.readTable(spark, s"$stateDir/vecs")
+  def readAccepted(spark: SparkSession, stateDir: String): Option[DataFrame] =
+    DeltaStreamSink.readTable(spark, s"$stateDir/accepted")
+
+  /** Bin-pack each store's small files ([[DeltaWrite.compact]], bands
+    * last). Returns the bands compaction version, -1 when nothing
+    * qualified.
+    */
+  def compactGenerations(spark: SparkSession, stateDir: String): Long =
+    Stores.map(s => DeltaWrite.compact(spark, s"$stateDir/$s")).last
 
   def run(vectors: DataFrame, idCol: String, vecCol: String,
       stateDir: String, checkpoint: String, threshold: Double, dim: Int,
       bands: Int = 32, rowsPerBand: Int = 8, seed: Long = 42L): StreamingQuery = {
     val planes = Similarity.hyperplanes(dim, bands * rowsPerBand, seed)
-    vectors.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        if (!BatchManifest.isBatchCommitted(spark, s"$stateDir/bands", batchId)) {
-          val b = batch.select(col(idCol), col(vecCol)).localCheckpoint()
-          val vsCorpus = (readBands(spark, stateDir), readVecs(spark, stateDir)) match {
-            case (Some(idx), Some(vecs)) =>
-              Similarity.nearDupsAgainstBandIndex(
-                b, idCol, vecCol, idx, vecs, threshold, planes, bands)
-                .select(col("new_id").as("__loser"))
-            case _ => spark.range(0).select(col("id").as("__loser"))
-          }
-          // in-batch: the banded exact-verify pair set, greater id loses
-          val vsBatch = Similarity.nearDupPairsBanded(
-            b, idCol, vecCol, threshold, dim, bands, rowsPerBand, seed)
-            .select(col("id_b").as("__loser"))
-          val losers = vsCorpus.unionByName(vsBatch).distinct()
-          val survivors = b
-            .join(losers, b(idCol) === losers("__loser"), "left_anti")
-            .localCheckpoint()
-          survivors.write.mode("overwrite").parquet(s"$stateDir/accepted/b$batchId")
-          Similarity.vectorStoreRows(survivors, idCol, vecCol)
-            .write.mode("overwrite").parquet(s"$stateDir/vecs/b$batchId")
-          Similarity.bandIndexRows(survivors, idCol, vecCol, planes, bands)
-            .write.mode("overwrite").parquet(s"$stateDir/bands/b$batchId")
-        }
-      }
-      .start()
+    IngestDedupSink.epochs(vectors, checkpoint, AppId,
+        Stores.map(s => s"$stateDir/$s"), compactLastEvery = 0) { batch =>
+      val spark = batch.sparkSession
+      val b = batch.select(col(idCol), col(vecCol)).localCheckpoint()
+      val vsCorpus = for {
+        idx <- readBands(spark, stateDir); vecs <- readVecs(spark, stateDir)
+      } yield Similarity.nearDupsAgainstBandIndex(
+        b, idCol, vecCol, idx, vecs, threshold, planes, bands)
+        .select(col("new_id").as("__loser"))
+      // in-batch: the banded exact-verify pair set, greater id loses
+      val vsBatch = Similarity.nearDupPairsBanded(
+        b, idCol, vecCol, threshold, dim, bands, rowsPerBand, seed)
+        .select(col("id_b").as("__loser"))
+      val survivors = IngestDedupSink.survivorsOf(b, idCol, vsCorpus.toSeq :+ vsBatch)
+      Seq(survivors,
+        Similarity.vectorStoreRows(survivors, idCol, vecCol),
+        Similarity.bandIndexRows(survivors, idCol, vecCol, planes, bands))
+    }
   }
 }

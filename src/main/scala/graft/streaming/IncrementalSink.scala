@@ -1,79 +1,45 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
-import graft.ext.Incremental
-
-/** Streaming → running-aggregate-table maintenance: every micro-batch's
-  * PARTIAL aggregates merge into a versioned per-key state table via
-  * [[Incremental.merge]] — the streaming half of incremental view
-  * maintenance. Work per trigger is |batch| + touched state rows, never
-  * the history.
+/** Streaming → running-aggregate-table maintenance: the append-only case
+  * of [[ChangeViewSink]]. The state is a Delta table in the view's layout
+  * `keyCols..., n, sum, mn, mx` ([[graft.ext.Incremental]]'s monoid
+  * state), and every micro-batch folds in as inserts through
+  * [[ChangeViewSink.applyBatch]], whose MERGE rewrites only the files of
+  * the keys the batch touches — work per trigger is |batch| + touched
+  * state rows, never the history.
   *
-  * Exactly-once across restarts WITHOUT a transactional store: the state
-  * version directory is named by the micro-batch id, and a replayed batch
-  * (foreachBatch redelivers the last batch after a crash) finds its
-  * version already present and skips — merge idempotence by construction,
-  * the same manifest trick the file sink uses.
+  * Exactly-once: the fold commits with `txn = (AppId, batchId)`, so a
+  * replayed batch is recognized by its marker and skipped. As in the
+  * view, NULL group keys are refused, and a key whose values are all
+  * null (`n = 0`) is dropped as a tombstone. Old versions stay readable
+  * by time travel until [[graft.io.DeltaWrite.vacuum]] removes them.
   */
 object IncrementalSink {
 
-  /** Latest committed state version under `stateDir`, if any. */
-  def currentVersion(spark: org.apache.spark.sql.SparkSession, stateDir: String): Option[Long] = {
-    val p = new Path(stateDir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) None
-    else fs.listStatus(p).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("v"))
-      .map(_.getPath.getName.stripPrefix("v").toLong)
-      .sorted(Ordering[Long].reverse).headOption
-  }
+  /** The `txn` appId of this sink's commits (one writer per state table). */
+  val AppId = "graft.streaming.IncrementalSink"
 
-  /** Read the current state (empty-schema error if no version exists). */
-  def currentState(spark: org.apache.spark.sql.SparkSession, stateDir: String): DataFrame = {
-    val v = currentVersion(spark, stateDir)
-      .getOrElse(throw new IllegalStateException(s"no state at $stateDir"))
-    spark.read.parquet(s"$stateDir/v$v")
-  }
+  /** The current state, one row per key with a non-null value. */
+  def currentState(spark: SparkSession, stateDir: String): DataFrame =
+    ChangeViewSink.readView(spark, stateDir).drop("avg")
 
-  /** `keepVersions` bounds on-disk history: after a version commits, all
-    * but the newest `keepVersions` version dirs are deleted (≥ 2 so the
-    * replayed-last-batch read always finds its predecessor). State size is
-    * therefore ~keepVersions × |keys|, independent of stream lifetime.
-    */
   def run(events: DataFrame, keyCols: Seq[String], valueCol: String,
-      stateDir: String, checkpoint: String, keepVersions: Int = 2): StreamingQuery = {
-    require(keepVersions >= 2, "keepVersions must be >= 2 (replay safety)")
+      stateDir: String, checkpoint: String): StreamingQuery = {
+    ChangeViewSink.createView(events.sparkSession, stateDir,
+      keyCols.map(events.schema(_)))
     events.writeStream
       .outputMode("append")
       .option("checkpointLocation", checkpoint)
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        val target = new Path(s"$stateDir/v$batchId")
-        val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        if (!fs.exists(target)) { // replayed batch → already merged, skip
-          val delta = Incremental.partialAgg(batch, keyCols, valueCol)
-          val merged = currentVersion(spark, stateDir) match {
-            case Some(v) if v < batchId =>
-              Incremental.merge(spark.read.parquet(s"$stateDir/v$v"), delta, keyCols)
-            case _ => delta
-          }
-          // write-then-rename so a crash mid-write never leaves a torn
-          // version visible to currentVersion
-          val tmp = new Path(s"$stateDir/.tmp_v$batchId")
-          merged.write.mode("overwrite").parquet(tmp.toString)
-          if (!fs.rename(tmp, target))
-            throw new IllegalStateException(s"state version swap failed for $target")
-          // retention: drop everything but the newest keepVersions
-          fs.listStatus(new Path(stateDir)).toSeq
-            .filter(s => s.isDirectory && s.getPath.getName.startsWith("v"))
-            .map(s => s.getPath.getName.stripPrefix("v").toLong)
-            .sorted(Ordering[Long].reverse).drop(keepVersions)
-            .foreach(v => fs.delete(new Path(s"$stateDir/v$v"), true))
-        }
+        ChangeViewSink.applyBatch(
+          batch.withColumn("_change_type", lit("insert"))
+            .withColumn("_commit_version", lit(batchId)),
+          stateDir, keyCols, valueCol, AppId, batchId): Unit
       }
       .start()
   }

@@ -166,4 +166,29 @@ class ChangeViewSinkSpec extends SparkSpec {
     assert(!applied, "replayed epoch must be skipped")
     viewEqualsSource(view, src)
   }
+
+  test("IncrementalSink, the append-only view: null keys refused, all-null keys dropped") {
+    val base = tmp("graft_cvs_incr_")
+    def run(rows: Seq[(Option[String], Option[Long])], name: String): Throwable = {
+      val src = s"$base/$name/src"
+      rows.toDF("grp", "cents").repartition(1).write.parquet(src)
+      val stream = spark.readStream.schema("grp STRING, cents BIGINT").parquet(src)
+      val q = IncrementalSink.run(stream, Seq("grp"), "cents",
+        s"$base/$name/state", s"$base/$name/ckpt")
+      scala.util.Try(q.awaitTermination()).failed.toOption.orNull
+    }
+    // a null key would fork its state row under the equality-keyed MERGE
+    val e = run(Seq((Some("a"), Some(1L)), (None, Some(2L))), "nullkey")
+    def rootMsgs(t: Throwable): Seq[String] =
+      if (t == null) Nil else Option(t.getMessage).toSeq ++ rootMsgs(t.getCause)
+    assert(rootMsgs(e).exists(_.contains("null group keys are unsupported")),
+      rootMsgs(e).mkString(" | "))
+    assert(IncrementalSink.currentState(spark, s"$base/nullkey/state").isEmpty)
+    // a key whose values are all null has n = 0: a tombstone, not a row
+    assert(run(Seq((Some("a"), Some(1L)), (Some("a"), Some(5L)), (Some("z"), None)),
+      "allnull") == null)
+    val got = IncrementalSink.currentState(spark, s"$base/allnull/state")
+      .as[(String, Long, Double, Double, Double)].collect().toSeq
+    assert(got == Seq(("a", 2L, 6.0, 1.0, 5.0)), got.toString)
+  }
 }

@@ -48,11 +48,12 @@ class CurationIngestSinkSpec extends SparkSpec {
       (3L, "x"),                                       // quality gate (degenerate)
       (4L, other)))
     runOnce()
-    val a0 = spark.read.parquet(s"$base/accepted/b0")
+    val a0 = CurationIngestSink.readAccepted(spark, s"$base/accepted").get
       .select("doc_id").as[Long].collect().sorted
     assert(a0.toSeq == Seq(1L, 4L), a0.toSeq.toString)
     // survivors carry their quality score
-    assert(spark.read.parquet(s"$base/accepted/b0").columns.contains("quality"))
+    assert(CurationIngestSink.readAccepted(spark, s"$base/accepted").get
+      .columns.contains("quality"))
 
     // batch 1: a PII-ONLY variant of an ACCEPTED doc — scrubbing maps both
     // to the same placeholder text, so the fingerprints collide exactly
@@ -135,36 +136,5 @@ class CurationIngestSinkSpec extends SparkSpec {
     val ids = CurationIngestSink.readAccepted(spark, s"$base/accepted").get
       .select("doc_id").as[Long].collect().sorted.toSeq
     assert(ids == Seq(1L, 2L, 4L), s"shard→curation admission: $ids")
-  }
-
-  test("crash between the accepted write and the index commit marker replays exactly-once") {
-    val base = tmp("graft_curation_crash")
-    val srcDir = s"$base/src"
-    Files.createDirectories(Paths.get(srcDir))
-    stage(srcDir, base, "b0", Seq(
-      (1L, "the quick brown fox jumps over the lazy dog beside a quiet river"),
-      (2L, "columnar storage formats enable predicate pushdown and efficient scans")))
-
-    // simulate the crash window: run the sink once but DELETE the commit
-    // marker (the index dir) after the run — state then looks exactly like
-    // a crash after the accepted/ write and before the marker write
-    def runOnce(): Unit = {
-      val stream = spark.readStream.schema(schema).parquet(srcDir)
-      val q = CurationIngestSink.run(stream, "doc_id", "text",
-        s"$base/index", s"$base/accepted", s"$base/ckpt", minQuality = 0.3)
-      q.awaitTermination(120000)
-    }
-    runOnce()
-    val fs = new org.apache.hadoop.fs.Path(base)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    assert(fs.delete(new org.apache.hadoop.fs.Path(s"$base/index/b0"), true))
-    // wipe the stream checkpoint too, so batch 0 genuinely replays
-    assert(fs.delete(new org.apache.hadoop.fs.Path(s"$base/ckpt"), true))
-
-    runOnce() // replay: both overwrite-mode writes redo idempotently
-    val all = CurationIngestSink.readAccepted(spark, s"$base/accepted").get
-      .select("doc_id").as[Long].collect().sorted
-    assert(all.toSeq == Seq(1L, 2L), all.toSeq.toString)
-    assert(spark.read.parquet(s"$base/index/b0").count() == 2L)
   }
 }

@@ -348,15 +348,11 @@ class StreamingSpec extends SparkSpec {
       assert(g.getDouble(4) == w.getDouble(4) && g.getDouble(5) == w.getDouble(5))
     }
 
-    // restart with the same checkpoint and no new data: state unchanged
-    val vBefore = IncrementalSink.currentVersion(spark, stateDir)
+    // restart with the same checkpoint and no new data: no commit lands
+    val vBefore = graft.io.DeltaRead.latestVersion(spark, stateDir)
     val q2 = IncrementalSink.run(stream, Seq("user_id", "event_type"), "value", stateDir, ckpt)
     q2.awaitTermination(120000)
-    assert(IncrementalSink.currentVersion(spark, stateDir) == vBefore)
-
-    // retention: never more than keepVersions dirs on disk
-    val dirs = new java.io.File(stateDir).listFiles().filter(_.getName.startsWith("v"))
-    assert(dirs.length <= 2, s"retention leak: ${dirs.map(_.getName).toSeq}")
+    assert(graft.io.DeltaRead.latestVersion(spark, stateDir) == vBefore)
   }
 
   test("complete-mode windowed agg emits the final state of every window") {
@@ -439,7 +435,7 @@ class StreamingSpec extends SparkSpec {
       q.awaitTermination(120000)
     }
     runOnce()
-    val accepted1 = spark.read.parquet(s"$acceptedDir/b0")
+    val accepted1 = IngestDedupSink.readAccepted(spark, acceptedDir).get
       .select("doc_id").as[Long].collect().sorted
     assert(accepted1.toSeq == Seq(1L, 3L), accepted1.toSeq.toString)
 
@@ -448,7 +444,7 @@ class StreamingSpec extends SparkSpec {
       (10L, novel), // near-dups the ACCEPTED corpus → rejected via the index
       (11L, "yet another unrelated document describing columnar storage formats")))
     runOnce()
-    val allAccepted = spark.read.parquet(s"$acceptedDir/b*")
+    val allAccepted = IngestDedupSink.readAccepted(spark, acceptedDir).get
       .select("doc_id").as[Long].collect().sorted
     assert(allAccepted.toSeq == Seq(1L, 3L, 11L), allAccepted.toSeq.toString)
     val idx = IngestDedupSink.readIndex(spark, indexDir).get
@@ -501,7 +497,7 @@ class StreamingSpec extends SparkSpec {
       q.awaitTermination(120000)
     }
     runOnce()
-    val a0 = spark.read.parquet(s"$stateDir/accepted/b0")
+    val a0 = EmbedIngestDedupSink.readAccepted(spark, stateDir).get
       .select("vec_id").as[Long].collect().sorted
     assert(a0.toSeq == Seq(1L, 3L), a0.toSeq.toString)
 
@@ -509,7 +505,7 @@ class StreamingSpec extends SparkSpec {
       (10L, near(0, 0.03f)), // near-dups ACCEPTED vec 1 → rejected via the index
       (11L, unit(5))))       // novel axis → accepted
     runOnce()
-    val all = spark.read.parquet(s"$stateDir/accepted/b*")
+    val all = EmbedIngestDedupSink.readAccepted(spark, stateDir).get
       .select("vec_id").as[Long].collect().sorted
     assert(all.toSeq == Seq(1L, 3L, 11L), all.toSeq.toString)
     // state grew append-only: 3 surviving vectors, bands rows = 3 × 32
