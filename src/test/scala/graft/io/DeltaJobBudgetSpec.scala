@@ -18,13 +18,19 @@ class DeltaJobBudgetSpec extends SparkSpec {
   private def upsert(lo: Long): org.apache.spark.sql.DataFrame =
     (lo until lo + 20).map(i => (i, i * 7)).toDF("id", "v").repartition(1)
 
-  test("head reads, MERGE, compact, checkpoint and lastTxnVersion keep their job counts") {
+  /** A 401-row CDF table over four files, three commits deep. */
+  private def cdfTable(): String = {
     val t = tmp("graft_job_budget") + "/t"
     DeltaWrite.writeDeltaTable(spark.range(0, 400).select(col("id"), (col("id") * 10).as("v"))
       .repartition(4), t, "append")                                                    // v0
     DeltaWrite.setTableProperties(spark, t, Map("delta.enableChangeDataFeed" -> "true")) // v1
     DeltaWrite.writeDeltaTable(Seq((1000L, 1L)).toDF("id", "v"), t, "append",
       txn = Some(("app", 3L)))                                                         // v2
+    t
+  }
+
+  test("head reads, MERGE, compact, checkpoint and lastTxnVersion keep their job counts") {
+    val t = cdfTable()
     def read(): Long = DeltaRead.readDeltaTable(spark, t).count()
 
     DeltaRead.clearSnapshotCache()
@@ -54,5 +60,20 @@ class DeltaJobBudgetSpec extends SparkSpec {
       "lastTxnVersion" -> 0, "COW MERGE" -> 17, "DV MERGE" -> 18, "compact" -> 1,
       "checkpoint again" -> 1), counts.toSeq.sortBy(_._1).mkString(", "))
     assert(DeltaRead.readDeltaTable(spark, t).count() == 401L)
+  }
+
+  test("UPDATE and DELETE, copy-on-write and deletion-vector, keep their job counts") {
+    val t = cdfTable()
+    DeltaWrite.checkpoint(spark, t)
+    val counts = Map(
+      "COW UPDATE" -> jobs(DeltaMerge.updateWhere(spark, t, col("id") < 20,
+        Map("v" -> (col("v") + 1)))),
+      "COW DELETE" -> jobs(DeltaMerge.deleteWhere(spark, t, col("id").between(390, 399))),
+      "DV UPDATE" -> jobs(DeltaMerge.updateWhereDv(spark, t, col("id").between(100, 119),
+        Map("v" -> (col("v") + 1)))),
+      "DV DELETE" -> jobs(DeltaMerge.deleteWhereDv(spark, t, col("id").between(300, 309))))
+    assert(counts == Map("COW UPDATE" -> 4, "COW DELETE" -> 4, "DV UPDATE" -> 5,
+      "DV DELETE" -> 4), counts.toSeq.sortBy(_._1).mkString(", "))
+    assert(DeltaRead.readDeltaTable(spark, t).count() == 381L)
   }
 }
