@@ -5,24 +5,38 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, StructType}
 
-/** Row-level Delta DML — MERGE (upsert) and DELETE — as copy-on-write
-  * commits over [[DeltaWrite]]'s log protocol. This is the reference's
-  * update-in-place shape (labelspark update_metadata.py:25-51 and
-  * client.py:350-474 both re-key exported rows and push changed values
-  * back into the Delta store written at client.py:146), re-expressed as
-  * the public delta.io commit pattern: rewrite ONLY the files holding
-  * matched rows, tombstone them, and add the rewritten files plus any
-  * inserts in ONE atomic commit (readers see pre- or post-merge state,
-  * never between; time travel to pre-merge versions keeps working).
+/** Row-level Delta DML — MERGE (upsert), UPDATE and DELETE — as single
+  * atomic commits over [[DeltaWrite]]'s log protocol. This is the
+  * reference's update-in-place shape (labelspark update_metadata.py:25-51
+  * and client.py:350-474 both re-key exported rows and push changed
+  * values back into the Delta store written at client.py:146),
+  * re-expressed as the public delta.io commit pattern: readers see the
+  * pre- or post-DML state, never between, and time travel to earlier
+  * versions keeps working.
+  *
+  * Each public verb only DESCRIBES itself as a [[Dml]]: (a) how a row
+  * matches — a predicate, or a semi-join on the source keys; (b) what a
+  * matched row becomes — a `SET` projection, the source row, or nothing (a
+  * delete); (c) for MERGE, the unmatched source rows to insert. One
+  * executor per storage mode runs every verb:
+  *   - copy-on-write ([[copyOnWrite]]): rewrite ONLY the files holding
+  *     matched rows through one projection, tombstone them, add the
+  *     rewritten files plus any inserts;
+  *   - deletion vectors ([[withDeletionVectors]]): shadow the matched
+  *     rows' positions in their unchanged files and append the
+  *     replacement rows and inserts as new files — cost O(changed rows).
+  * Change-data-feed rows come from one place ([[changes]]): a matched row
+  * is the pre-image, its replacement the post-image (no replacement: a
+  * delete), an inserted row an insert.
   *
   * Scale shape:
-  *   - Touched-file discovery is one provenance scan semi-joined to the
+  *   - Touched-file discovery is one provenance scan, filtered by the
+  *     predicate (which pushes into the scan, so add.stats min/max skip
+  *     provably-unmatched files before any I/O) or semi-joined to the
   *     source KEYS (AQE broadcasts a small source side); only distinct
   *     file paths reach the driver — O(files), never O(rows).
   *   - The rewrite reads only the touched files through the log-backed
-  *     file index; a merge touching 10 files out of a million rewrites
-  *     10, and for [[deleteWhere]] the predicate pushes into the scan so
-  *     add.stats min/max skip provably-unmatched files before any I/O.
+  *     file index; a merge touching 10 files out of a million rewrites 10.
   *   - Log work is driver-side and O(files touched) (the Delta contract).
   */
 object DeltaMerge {
@@ -54,12 +68,7 @@ object DeltaMerge {
     require(whenMatched == "update" || whenMatched == "delete",
       s"whenMatched must be update or delete, got $whenMatched")
     require(keyCols.nonEmpty, "keyCols must be non-empty")
-    val snap = DeltaRead.snapshot(spark, path)
-    val DeltaRead.Snapshot(_, meta, live, proto, _, _) = snap
-    require(meta != null, s"$path has no metaData action in its _delta_log")
-    DeltaWrite.checkWritable(meta, proto, s"DML on $path", removesData = true,
-      identityOk = true) // minting handled below: assignment + hw bump + exclusive OCC
-    val schema = DataType.fromJson(meta.schemaJson).asInstanceOf[StructType]
+    val (snap, schema) = writable(spark, path)
     keyCols.foreach(k => require(schema.fieldNames.contains(k),
       s"merge key $k is not a column of the table (${schema.fieldNames.mkString(", ")})"))
     keyCols.foreach(k => require(source.columns.contains(k),
@@ -70,17 +79,16 @@ object DeltaMerge {
     // and the bumped mark rides the same commit. A source-supplied
     // identity value would either clobber a matched row's engine-assigned
     // value or mint outside the contract — refused, like GENERATED ALWAYS.
-    val identityFields = DeltaWrite.identityFieldsOf(meta)
-    identityFields.foreach { f =>
-      require(!source.columns.contains(f.name),
-        s"merge into $path supplies identity column ${f.name}, which is " +
+    val identityNames = DeltaWrite.identityFieldsOf(snap.meta).map(_.name).toSet
+    identityNames.foreach { n =>
+      require(!source.columns.contains(n),
+        s"merge into $path supplies identity column $n, which is " +
           "engine-assigned — omit it; matched rows keep their values, " +
           "inserts mint past the high watermark")
-      require(!keyCols.contains(f.name),
-        s"merge into $path keyed on identity column ${f.name} requires the " +
+      require(!keyCols.contains(n),
+        s"merge into $path keyed on identity column $n requires the " +
           "source to supply it — key on a natural column instead")
     }
-    val identityNames = identityFields.map(_.name).toSet
     // the schema the SOURCE must match: the table minus engine-assigned cols
     val sourceSchema = StructType(schema.fields.filterNot(f =>
       identityNames.contains(f.name)))
@@ -90,146 +98,67 @@ object DeltaMerge {
     // matched rows' stored values with the default
     val source0 =
       if (whenMatched == "delete" && insertUnmatched)
-        DeltaWrite.applyDefaults(source, meta)
+        DeltaWrite.applyDefaults(source, snap.meta)
       else source
-    val needFullSource = whenMatched == "update" || insertUnmatched
-    if (needFullSource)
+    if (whenMatched == "update" || insertUnmatched)
       require(DeltaWrite.sameSchema(source0.schema, sourceSchema),
         s"merge source schema ${source0.schema.simpleString} must match table " +
           s"schema ${sourceSchema.simpleString} (UPDATE SET * / INSERT * " +
           "semantics; identity columns omitted)")
 
-    // The source plan is referenced by the cardinality check, srcKeys, the
-    // update join, the insert anti-join, and two CDC branches — up to ~6
-    // re-derivations of what may itself be a join/aggregate (the q97
-    // pathology). Materialize it ONCE; every consumer below reads the
-    // checkpointed blocks.
+    // The source plan is referenced by the cardinality check, the key
+    // semi-joins, the replacement join, the insert anti-join and the CDC
+    // rows — up to ~6 re-derivations of what may itself be a
+    // join/aggregate (the q97 pathology). Materialize it ONCE; every
+    // consumer below reads the checkpointed blocks.
     val source1 = source0.localCheckpoint()
-
     val dup = source1.groupBy(keyCols.map(col): _*).count()
       .filter(col("count") > 1).limit(1).count()
     require(dup == 0L,
       "merge source has more than one row for some key — the update would be " +
         "nondeterministic (Delta MERGE cardinality violation)")
 
-    val srcKeys = source1.select(keyCols.map(col): _*).distinct()
-    if (useDeletionVectors)
-      return mergeDv(spark, path, snap, source1, srcKeys, keyCols,
-        whenMatched, insertUnmatched, txn, schema)
-    val touched = touchedFiles(spark, path, meta, live,
-      prov => prov.join(srcKeys, keyCols, "left_semi"))
-
-    // Matched keys necessarily live in touched files, so both the update
-    // join and the not-matched anti-join run against the TOUCHED subset —
-    // the untouched 99% of the table is never read again.
-    val rt = DeltaWrite.rowTrackingOf(meta)
-    val base = baseWithRowIds(spark, path, meta, touched, rt)
-    val nonKey = schema.fieldNames.filterNot(n =>
-      keyCols.contains(n) || identityNames.contains(n)).toSeq
-    // row tracking: carried rows keep id + original version; UPDATED rows
-    // keep their id but null the version (modified by this commit);
-    // INSERTED rows are fresh on both (defaults apply)
-    val rtUpdated = rt.toSeq.flatMap(r => Seq(col(s"`${r.matId}`"),
-      when(col("__m").isNotNull, lit(null).cast("long"))
-        .otherwise(col(s"`${r.matVer}`")).as(r.matVer)))
-    val rtFresh = rt.toSeq.flatMap(r => Seq(
-      lit(null).cast("long").as(r.matId), lit(null).cast("long").as(r.matVer)))
-    val survivors = whenMatched match {
-      case "delete" =>
-        base.join(srcKeys.withColumn("__m", lit(true)), keyCols, "left_outer")
-          .filter(col("__m").isNull)
-          .select(schema.fieldNames.map(col).toSeq ++ matCols(rt): _*)
-      case "update" =>
-        val marked = source1.select(
-          (keyCols.map(col) ++ nonKey.map(c => col(c).as(s"__s_$c")) :+
-            lit(true).as("__m")): _*)
-        base.join(marked, keyCols, "left_outer")
-          .select(schema.fieldNames.map { n =>
-            // identity columns CARRY the target's stored value — the
-            // source omits them by the gate above
-            if (keyCols.contains(n) || identityNames.contains(n)) col(n)
-            else when(col("__m").isNotNull, col(s"__s_$n")).otherwise(col(n)).as(n)
-          }.toSeq ++ rtUpdated: _*)
-    }
-    // unmatched inserts derive ONCE (newData and the CDC branch both
-    // consume them); on an identity table they get gap-free values
-    // assigned past the stored watermark — hwBumps then forces the
-    // metaData republish and the exclusive conflict guard below
-    val (insertRows, hwBumps): (Option[DataFrame], Map[String, Long]) =
-      if (!insertUnmatched) (None, Map.empty)
-      else {
-        val (withIds, bumps) = DeltaWrite.mintIdentity(source1
-          .join(base.select(keyCols.map(col): _*), keyCols, "left_anti"), identityFields)
-        (Some(withIds), bumps)
-      }
-    val newData = insertRows match {
-      case Some(ins) => survivors.unionByName(
-        ins.select(schema.fieldNames.map(col).toSeq ++ rtFresh: _*))
-      case None => survivors
-    }
-
-    if (touched.isEmpty && !insertUnmatched) return -1L
-    // CDF: matched rows emit pre/post images (or delete), inserts emit
-    // insert rows — derived from the same touched subset and source
-    val cdc =
-      if (!cdfEnabled(meta)) None
-      else {
-        val fieldCols = schema.fieldNames.map(col).toSeq
-        val matchedPre = base.join(srcKeys, keyCols, "left_semi")
-          .select(fieldCols :+ lit(
-            if (whenMatched == "delete") "delete" else "update_preimage")
-            .as("_change_type"): _*)
-        // one post-image PER MATCHED TARGET ROW (duplicate-key targets
-        // update every copy), so join the per-row base keys — a semi-join
-        // on the source would collapse them to one per key. Identity
-        // columns ride from the TARGET side (the source omits them).
-        val matchedPost =
-          if (whenMatched == "update")
-            Some(base.select((keyCols ++ identityNames.toSeq).map(col): _*)
-              .join(source1, keyCols, "inner")
-              .select(fieldCols :+ lit("update_postimage").as("_change_type"): _*))
-          else None
-        val inserts = insertRows.map(
-          _.select(fieldCols :+ lit("insert").as("_change_type"): _*))
-        Some((Seq(matchedPre) ++ matchedPost ++ inserts).reduce(_ unionByName _))
-      }
-    commitDml(spark, path, snap, touched.map(DvPlan(_, None)),
-      deletionVectors = false, Some(newData), "MERGE",
+    // UPDATE SET *: every column but the keys and the identity columns
+    // (which carry the target's stored value) takes the source's
+    val set =
+      if (whenMatched == "delete") None
+      else Some(schema.fieldNames.filterNot(n => keyCols.contains(n) ||
+        identityNames.contains(n)).map(n => n -> col(s"__s_$n")).toMap)
+    val dml = Dml(path, snap, schema, "MERGE",
       Seq("predicate" -> keyCols.mkString(","), "matchedAction" -> whenMatched),
-      cdc, txn, hwBumps)
+      None, keyCols, Some(source1), set, insertUnmatched, txn)
+    if (useDeletionVectors) withDeletionVectors(spark, dml) else copyOnWrite(spark, dml)
   }
 
-  /** Read `touched` with STABLE ROW IDS attached when the table is
-    * row-tracked: logical columns plus the two materialized physical
-    * columns, each row's column values resolved to its stable id
-    * (`coalesce(materialized, baseRowId + position)`) and original
-    * commit version — the inputs a copy-on-write rewrite must carry
-    * forward so DML never moves a row's identity. Plain scan otherwise.
+  /** UPDATE the Delta table at `path` SET `set` WHERE `condition` — the
+    * expression-based UPDATE between [[merge]]'s row-replacement and
+    * [[deleteWhere]]'s removal: each `set` entry maps a column to an
+    * expression over the CURRENT row (so `cents -> col("cents") + 1000`
+    * works), applied only where `condition` holds; every other row in a
+    * touched file carries over verbatim. Copy-on-write like the others —
+    * the condition pushes into the discovery scan (stats/partition
+    * skipping applies), only files holding matches rewrite, one atomic
+    * commit. Set expressions cast to the column's declared type, so the
+    * staged parquet can never drift from the table schema. Updating a
+    * partition column is fine: the rewrite stages with partitionBy over
+    * the NEW values, so moved rows land in (and log partitionValues for)
+    * their new partition directories. Returns the committed version, or
+    * -1 when no row matched.
     */
-  private def baseWithRowIds(spark: SparkSession, path: String,
-      meta: DeltaRead.Meta, touched: Seq[DeltaRead.LiveFile],
-      rt: Option[DeltaWrite.RowTracking]): DataFrame = rt match {
-    case None => DeltaRead.filesDf(spark, path, meta, touched, provenance = false)
-    case Some(r) =>
-      val scanned = DeltaRead.filesDf(spark, path, meta, touched,
-        provenance = false, rowIndex = true,
-        extraPhysCols = DeltaWrite.rowTrackingFields(rt))
-      DeltaWrite.materializeRowIds(spark, path, r, touched, scanned)
-  }
+  def updateWhere(spark: SparkSession, path: String, condition: Column,
+      set: Map[String, Column]): Long =
+    copyOnWrite(spark, predicateDml(spark, path, "UPDATE", condition, Some(set)))
 
-  /** The materialized-column Columns to append to a rewrite's output —
-    * empty when untracked.
+  /** UPDATE ... SET ... WHERE by DELETION VECTOR: the matched rows'
+    * positions are shadowed in their (unchanged) files and the updated
+    * versions append as NEW files — cost O(changed rows), where
+    * [[updateWhere]] rewrites every row of every touched file. Same
+    * trade-offs and protocol upgrade as [[deleteWhereDv]]. Returns the
+    * committed version, or -1 when nothing matched.
     */
-  private def matCols(rt: Option[DeltaWrite.RowTracking]): Seq[Column] =
-    rt.toSeq.flatMap(r => Seq(col(s"`${r.matId}`"), col(s"`${r.matVer}`")))
-
-  /** Whether the table opted into the change data feed
-    * (`delta.enableChangeDataFeed = true` — set at create or via
-    * [[DeltaWrite.setTableProperties]]). DML on a CDF table pays one
-    * extra pass over the touched subset to materialize the change rows.
-    */
-  private def cdfEnabled(meta: DeltaRead.Meta): Boolean =
-    meta.configuration.get("delta.enableChangeDataFeed").contains("true")
+  def updateWhereDv(spark: SparkSession, path: String, condition: Column,
+      set: Map[String, Column]): Long =
+    withDeletionVectors(spark, predicateDml(spark, path, "UPDATE", condition, Some(set)))
 
   /** DELETE FROM the Delta table at `path` WHERE `condition`: rewrite the
     * files holding matching rows without them, tombstone the originals,
@@ -238,32 +167,8 @@ object DeltaMerge {
     * — those are neither read nor rewritten. Returns the committed
     * version, or -1 when no row matched.
     */
-  def deleteWhere(spark: SparkSession, path: String, condition: Column): Long = {
-    val snap = DeltaRead.snapshot(spark, path)
-    val DeltaRead.Snapshot(_, meta, live, proto, _, _) = snap
-    require(meta != null, s"$path has no metaData action in its _delta_log")
-    // deletes only REMOVE rows: identity values carry in survivors
-    // verbatim and the watermark stands (values are never reused)
-    DeltaWrite.checkWritable(meta, proto, s"DML on $path", removesData = true,
-      identityOk = true)
-    val touched = touchedFiles(spark, path, meta, live, _.filter(condition))
-    if (touched.isEmpty) return -1L
-    val schema = DataType.fromJson(meta.schemaJson).asInstanceOf[StructType]
-    val rt = DeltaWrite.rowTrackingOf(meta)
-    val base = baseWithRowIds(spark, path, meta, touched, rt)
-    val hit = coalesce(condition, lit(false))
-    val fieldCols = schema.fieldNames.map(col).toSeq
-    // row tracking: kept rows carry their stable id AND original commit
-    // version (a delete does not modify the rows it keeps)
-    val survivors = base.filter(!hit).select(fieldCols ++ matCols(rt): _*)
-    val cdc =
-      if (cdfEnabled(meta))
-        Some(base.filter(hit).select(fieldCols :+ lit("delete").as("_change_type"): _*))
-      else None
-    commitDml(spark, path, snap, touched.map(DvPlan(_, None)),
-      deletionVectors = false, Some(survivors), "DELETE",
-      Seq("predicate" -> condition.toString), cdc, None, Map.empty)
-  }
+  def deleteWhere(spark: SparkSession, path: String, condition: Column): Long =
+    copyOnWrite(spark, predicateDml(spark, path, "DELETE", condition, None))
 
   /** DELETE FROM the Delta table at `path` WHERE `condition` by DELETION
     * VECTOR — the protocol's O(deleted rows) delete: instead of rewriting
@@ -290,207 +195,251 @@ object DeltaMerge {
     * no row matched.
     */
   def deleteWhereDv(spark: SparkSession, path: String, condition: Column,
-      maxVectorFileBytes: Long = DvWrite.DefaultMaxVectorFileBytes): Long = {
-    val snap = DeltaRead.snapshot(spark, path)
-    val DeltaRead.Snapshot(_, meta, live, proto, _, _) = snap
-    require(meta != null, s"$path has no metaData action in its _delta_log")
-    // deletes only REMOVE rows: identity values carry in survivors
-    // verbatim and the watermark stands (values are never reused)
-    DeltaWrite.checkWritable(meta, proto, s"DML on $path", removesData = true,
-      identityOk = true)
-    val schema = DataType.fromJson(meta.schemaJson).asInstanceOf[StructType]
-    val root = new Path(path)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      maxVectorFileBytes: Long = DvWrite.DefaultMaxVectorFileBytes): Long =
+    withDeletionVectors(spark, predicateDml(spark, path, "DELETE", condition, None),
+      maxVectorFileBytes)
 
-    val scan = DeltaRead.filesDf(spark, path, meta, live, provenance = true,
-      rowIndex = true)
-    val hit = coalesce(condition, lit(false))
-    // without CDF the bitmap build is the hits' only consumer — one scan;
-    // with CDF the pre-images read them again, so materialize the matched
-    // rows (O(deleted rows)) once instead of re-deriving the table scan
-    val hits =
-      if (cdfEnabled(meta)) scan.filter(hit).localCheckpoint()
-      else scan.filter(hit)
-    val planned = buildDvPlans(spark, fs, root, live, hits, maxVectorFileBytes)
-    if (planned.isEmpty) return -1L
-    val cdc =
-      if (!cdfEnabled(meta)) None
-      else Some(hits.select(
-        schema.fieldNames.map(col).toSeq :+ lit("delete").as("_change_type"): _*))
-    commitDml(spark, path, snap, planned,
-      deletionVectors = true, None, "DELETE",
-      Seq("predicate" -> condition.toString), cdc, None, Map.empty)
+  // ------------------------------------------------------- the verb
+
+  /** The table at `path` as every DML verb plans on it: the head
+    * snapshot (its version is the commit's OCC read version) and the
+    * logical schema, after the writability check. DML only removes or
+    * replaces rows, so identity values carry over verbatim and the
+    * watermark stands; MERGE's inserts mint their own values (assignment
+    * + watermark bump + exclusive OCC, in [[Dml.inserts]]).
+    */
+  private def writable(spark: SparkSession, path: String): (DeltaRead.Snapshot, StructType) = {
+    val snap = DeltaRead.snapshot(spark, path)
+    require(snap.meta != null, s"$path has no metaData action in its _delta_log")
+    DeltaWrite.checkWritable(snap.meta, snap.protocol, s"DML on $path", removesData = true,
+      identityOk = true)
+    (snap, DataType.fromJson(snap.meta.schemaJson).asInstanceOf[StructType])
   }
 
-  /** UPDATE ... SET ... WHERE by DELETION VECTOR: the matched rows'
-    * positions are shadowed in their (unchanged) files and the updated
-    * versions append as NEW files — cost O(changed rows), where
-    * [[updateWhere]] rewrites every row of every touched file. Same
-    * trade-offs and protocol upgrade as [[deleteWhereDv]]. Returns the
-    * committed version, or -1 when nothing matched.
+  /** The [[Dml]] of a predicate verb: UPDATE when `set` is given, DELETE
+    * otherwise. SET expressions cast to their column's declared type; a
+    * SET targeting an identity column would mint values outside the
+    * identity contract, so it is refused.
     */
-  def updateWhereDv(spark: SparkSession, path: String, condition: Column,
-      set: Map[String, Column]): Long = {
-    require(set.nonEmpty, "set must map at least one column")
-    val snap = DeltaRead.snapshot(spark, path)
-    val DeltaRead.Snapshot(_, meta, live, proto, _, _) = snap
-    require(meta != null, s"$path has no metaData action in its _delta_log")
-    // UPDATE carries identity values verbatim — but a SET targeting the
-    // identity column itself would mint values outside the contract
-    DeltaWrite.checkWritable(meta, proto, s"DML on $path", removesData = true,
-      identityOk = true)
-    val schema = DataType.fromJson(meta.schemaJson).asInstanceOf[StructType]
-    set.keys.foreach(k => require(schema.fieldNames.contains(k),
-      s"SET column $k is not a column of the table (${schema.fieldNames.mkString(", ")})"))
-    set.keys.foreach(k => require(
-      !schema(k).metadata.contains("delta.identity.start"),
-      s"SET targets identity column $k — identity values are engine-assigned " +
-        "and never updated"))
-    val root = new Path(path)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-    val rt = DeltaWrite.rowTrackingOf(meta)
-    val scan = DeltaRead.filesDf(spark, path, meta, live, provenance = true,
-      rowIndex = true, extraPhysCols = DeltaWrite.rowTrackingFields(rt))
-    val hit = coalesce(condition, lit(false))
-    // the matched rows feed the bitmap build, the staged replacements,
-    // and (under CDF) both images — materialize them once (O(changed
-    // rows), this verb's contract) so the table is scanned exactly once.
-    // Row tracking: each hit resolves its stable id BEFORE shadowing, so
-    // the re-appended updated row can carry it materialized.
-    val hits = rt.fold(scan.filter(hit))(r => DeltaWrite.materializeRowIds(
-        spark, path, r, live, scan.filter(hit), keepHelpers = true))
-      .localCheckpoint()
-    val planned = buildDvPlans(spark, fs, root, live, hits)
-    if (planned.isEmpty) return -1L
-    def updatedCols = schema.fieldNames.map { n =>
-      set.get(n) match {
-        case Some(e) => e.cast(schema(n).dataType).as(n)
-        case None => col(n)
-      }
-    }.toSeq
-    // updated rows KEEP their stable id (materialized) and null the
-    // commit version — this commit modifies them, the fresh default applies
-    val rtKeepId = rt.toSeq.flatMap(r => Seq(col(s"`${r.matId}`"),
-      lit(null).cast("long").as(r.matVer)))
-    val newRows = hits.select(updatedCols ++ rtKeepId: _*)
-    val cdc =
-      if (!cdfEnabled(meta)) None
-      else {
-        val fieldCols = schema.fieldNames.map(col).toSeq
-        Some(hits
-          .select(fieldCols :+ lit("update_preimage").as("_change_type"): _*)
-          .unionByName(newRows
-            .select(fieldCols :+ lit("update_postimage").as("_change_type"): _*)))
-      }
-    commitDml(spark, path, snap, planned,
-      deletionVectors = true, Some(newRows), "UPDATE",
-      Seq("predicate" -> condition.toString), cdc, None, Map.empty)
+  private def predicateDml(spark: SparkSession, path: String, operation: String,
+      condition: Column, set: Option[Map[String, Column]]): Dml = {
+    set.foreach(s => require(s.nonEmpty, "set must map at least one column"))
+    val (snap, schema) = writable(spark, path)
+    val cast = set.map(_.map { case (k, e) =>
+      require(schema.fieldNames.contains(k),
+        s"SET column $k is not a column of the table (${schema.fieldNames.mkString(", ")})")
+      require(!schema(k).metadata.contains("delta.identity.start"),
+        s"SET targets identity column $k — identity values are engine-assigned " +
+          "and never updated")
+      k -> e.cast(schema(k).dataType)
+    })
+    Dml(path, snap, schema, operation, Seq("predicate" -> condition.toString),
+      Some(condition), Nil, None, cast, insert = false, None)
   }
 
-  /** [[merge]] with `useDeletionVectors = true`: matched positions are
-    * discovered on ONE row-index scan semi-joined to the source keys; the
-    * matched rows (bounded by |source| — the merge cardinality guard
-    * caps one match per source key) are materialized once, and every
-    * downstream consumer — the bitmap build, the matched/insert key
-    * split, the CDC pre-images — derives from that small checkpoint. The
-    * table is scanned exactly once, where the copy-on-write path reads
-    * its touched subset three times.
+  /** One DML verb, independent of storage mode:
+    *   - (a) how a row matches: `where` (a predicate over the row) or,
+    *     without it, a semi-join of the row's `keys` to the `source` (at
+    *     most one row per key, materialized);
+    *   - (b) what a matched row becomes: `set` maps columns to their new
+    *     value over the row beside its source row ([[joined]] — a keyed
+    *     verb reads the source's column `c` as `__s_c`); every other
+    *     column keeps its value. None deletes the row;
+    *   - (c) `insert`: MERGE's source rows that matched nothing are
+    *     inserted.
     */
-  private def mergeDv(spark: SparkSession, path: String, snap: DeltaRead.Snapshot,
-      source1: DataFrame, srcKeys: DataFrame, keyCols: Seq[String],
-      whenMatched: String, insertUnmatched: Boolean,
-      txn: Option[(String, Long)], schema: StructType): Long = {
-    val DeltaRead.Snapshot(_, meta, live, _, _, _) = snap
-    val root = new Path(path)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val rt = DeltaWrite.rowTrackingOf(meta)
-    val rowScan = DeltaRead.filesDf(spark, path, meta, live, provenance = true,
-      rowIndex = true, extraPhysCols = DeltaWrite.rowTrackingFields(rt))
-    // checkpoint only what downstream needs: keys + position without CDF
-    // (the scan then prunes every other column), full rows when the CDC
-    // pre-images will read them. Row tracking resolves each matched row's
-    // stable id here, before its position is shadowed.
-    val matchedAll0 = rowScan.join(srcKeys, keyCols, "left_semi")
-    val matchedAll = rt.fold(matchedAll0)(r => DeltaWrite.materializeRowIds(
-      spark, path, r, live, matchedAll0, keepHelpers = true))
-    // identity columns must survive the pruned checkpoint: matched
-    // updates re-append with the TARGET's stored value (source omits it)
-    val identityNames = DeltaWrite.identityFieldsOf(meta).map(_.name)
-      .filterNot(keyCols.contains)
-    val matched =
-      (if (cdfEnabled(meta)) matchedAll
-       else matchedAll.select(
-         (keyCols ++ identityNames).map(col) ++
-           Seq(col("__file"), col("__row_idx")) ++
-           rt.toSeq.map(r => col(s"`${r.matId}`")): _*))
-        .localCheckpoint()
-    val planned = buildDvPlans(spark, fs, root, live, matched)
-    if (planned.isEmpty && !insertUnmatched) return -1L
-    // a source key matched iff it appears among the matched rows — the
-    // key set is tiny (≤ |source|), so both joins below broadcast it
-    val matchedKeys = matched.select(keyCols.map(col): _*).distinct()
-    val fieldCols = schema.fieldNames.map(col).toSeq
-    // UPDATE must re-append one row PER MATCHED TARGET ROW, not per source
-    // key: a duplicate-key target row shadows BOTH positions, and the
-    // copy-on-write path updates both (multiplicity preserved — upstream
-    // Delta MERGE semantics). Joining the per-row matched keys (NOT
-    // distinct) to the source (≤1 row/key by the cardinality guard)
-    // yields exactly one updated row per shadowed position.
-    val rtKeepId = rt.toSeq.flatMap(r => Seq(col(s"`${r.matId}`"),
-      lit(null).cast("long").as(r.matVer)))
-    val rtFresh = rt.toSeq.flatMap(r => Seq(
-      lit(null).cast("long").as(r.matId), lit(null).cast("long").as(r.matVer)))
-    val matchedSrc =
-      if (whenMatched == "update")
-        Some(matched.select((keyCols ++ identityNames).map(col) ++
-            rt.toSeq.map(r => col(s"`${r.matId}`")): _*)
-          .join(source1, keyCols, "inner").select(fieldCols ++ rtKeepId: _*))
-      else None
-    // unmatched inserts: identity values mint past the watermark exactly
-    // as on the COW path — hwBumps then rides commitDvDml's metaData
-    // republish under the exclusive guard
-    val (inserts, hwBumps): (Option[DataFrame], Map[String, Long]) =
-      if (!insertUnmatched) (None, Map.empty)
+  private final case class Dml(path: String, snap: DeltaRead.Snapshot, schema: StructType,
+      operation: String, params: Seq[(String, Any)], where: Option[Column],
+      keys: Seq[String], source: Option[DataFrame], set: Option[Map[String, Column]],
+      insert: Boolean, txn: Option[(String, Long)]) {
+    def meta: DeltaRead.Meta = snap.meta
+    val rt: Option[DeltaWrite.RowTracking] = DeltaWrite.rowTrackingOf(meta)
+    def fieldCols: Seq[Column] = schema.fieldNames.map(col).toSeq
+    /** Whether the table opted into the change data feed
+      * (`delta.enableChangeDataFeed = true` — set at create or via
+      * [[DeltaWrite.setTableProperties]]). DML on a CDF table pays one
+      * extra pass over the matched rows to materialize the change rows.
+      */
+    val cdf: Boolean = meta.configuration.get("delta.enableChangeDataFeed").contains("true")
+    private def srcKeys = source.get.select(keys.map(col): _*).distinct()
+
+    /** (a) The matched rows of `rows`. */
+    def matching(rows: DataFrame): DataFrame =
+      where.fold(rows.join(srcKeys, keys, "left_semi"))(rows.filter)
+
+    /** (a) Whether a row of [[joined]] matched (a NULL predicate is no
+      * match, as in SQL).
+      */
+    def hit: Column = where.fold(col("__m").isNotNull)(c => coalesce(c, lit(false)))
+
+    /** `rows` beside what (b) reads: a keyed verb joins each row to its
+      * source row (`__m` marks the match; `how` = left_outer keeps the
+      * unmatched rows), a predicate verb reads the row alone.
+      */
+    def joined(rows: DataFrame, how: String): DataFrame = source.fold(rows) { s =>
+      val side = set.fold(srcKeys.withColumn("__m", lit(true)))(m => s.select(
+        keys.map(col) ++ schema.fieldNames.filter(m.contains).map(n => col(n).as(s"__s_$n")) :+
+          lit(true).as("__m"): _*))
+      rows.join(side, keys, how)
+    }
+
+    /** (b) As one projection of [[joined]] rows: a matched row takes `set`
+      * and, under row tracking, keeps its stable id but nulls its
+      * materialized commit version (this commit modifies it, so the fresh
+      * default applies). With `onlyIf`, rows where it is false carry over
+      * unchanged — ids AND original versions.
+      */
+    def becomes(onlyIf: Option[Column]): Seq[Column] = {
+      def pick(updated: Column, kept: Column): Column =
+        onlyIf.fold(updated)(h => when(h, updated).otherwise(kept))
+      schema.fieldNames.map(n => set.flatMap(_.get(n)).fold(col(n))(e => pick(e, col(n)).as(n))) ++
+        rt.toSeq.flatMap(r => Seq(col(s"`${r.matId}`"),
+          pick(lit(null).cast("long"), col(s"`${r.matVer}`")).as(r.matVer)))
+    }
+
+    /** (c) The source rows whose key is not among `matchedKeys`, as table
+      * rows: on an identity table they get gap-free values assigned past
+      * the stored watermark — the returned bumps then force the metaData
+      * republish and the exclusive conflict guard in [[commitDml]]. Under
+      * row tracking inserted rows are fresh on both materialized columns.
+      */
+    def inserts(matchedKeys: => DataFrame): (Option[DataFrame], Map[String, Long]) =
+      if (!insert) (None, Map.empty)
       else {
         val (withIds, bumps) = DeltaWrite.mintIdentity(
-          source1.join(matchedKeys, keyCols, "left_anti"), DeltaWrite.identityFieldsOf(meta))
-        (Some(withIds.select(fieldCols ++ rtFresh: _*)), bumps)
+          source.get.join(matchedKeys, keys, "left_anti"), DeltaWrite.identityFieldsOf(meta))
+        (Some(withIds.select(fieldCols ++ rt.toSeq.flatMap(r => Seq(
+          lit(null).cast("long").as(r.matId), lit(null).cast("long").as(r.matVer))): _*)), bumps)
       }
-    val newRows = (matchedSrc.toSeq ++ inserts).reduceOption(_ unionByName _)
-    val cdc =
-      if (!cdfEnabled(meta)) None
-      else {
-        val matchedPre = matched
-          .select(fieldCols :+ lit(
-            if (whenMatched == "delete") "delete" else "update_preimage")
-            .as("_change_type"): _*)
-        val matchedPost = matchedSrc.map(
-          _.select(fieldCols :+ lit("update_postimage").as("_change_type"): _*))
-        val insertRows = inserts.map(
-          _.select(fieldCols :+ lit("insert").as("_change_type"): _*))
-        Some((Seq(matchedPre) ++ matchedPost ++ insertRows).reduce(_ unionByName _))
-      }
-    commitDml(spark, path, snap, planned,
-      deletionVectors = true, newRows, "MERGE",
-      Seq("predicate" -> keyCols.mkString(","), "matchedAction" -> whenMatched),
-      cdc, txn, hwBumps)
   }
 
-  // ------------------------------------------------------- DV DML internals
-
-  /** One touched file's fate in a DML commit: with a `descriptor` (a
-    * vector ALREADY WRITTEN to a vector file, covering the union of its
-    * existing DV with the newly shadowed positions) the file is re-added
-    * under it; with None it is removed outright — every remaining row
-    * shadowed, or rewritten by copy-on-write.
+  /** The change rows of a DML commit on a CDF table, from the three parts
+    * of its verb: each `matched` row is a pre-image, and its `replaced`
+    * row the post-image — or, when the verb replaces nothing, a delete;
+    * each `inserted` row is an insert.
     */
-  private final case class DvPlan(file: DeltaRead.LiveFile,
-      descriptor: Option[DeletionVectors.Descriptor])
+  private def changes(d: Dml, matched: DataFrame, replaced: Option[DataFrame],
+      inserted: Option[DataFrame]): Option[DataFrame] =
+    if (!d.cdf) None
+    else {
+      def tagged(rows: DataFrame, kind: String): DataFrame =
+        rows.select(d.fieldCols :+ lit(kind).as("_change_type"): _*)
+      Some((Seq(tagged(matched, if (replaced.isEmpty) "delete" else "update_preimage")) ++
+        replaced.map(tagged(_, "update_postimage")) ++ inserted.map(tagged(_, "insert")))
+        .reduce(_ unionByName _))
+    }
 
-  /** Attribute a scan's qualified URI to a live file (basename-keyed, as
-    * in touchedFiles; the endsWith re-check only disambiguates the
-    * practically-impossible basename collision).
+  // ------------------------------------------------------- the executors
+
+  /** Run `d` copy-on-write: discover the touched files, rewrite them
+    * through ONE projection ([[Dml.becomes]] over every row, matched rows
+    * dropped by a delete), add the inserts, commit. Matched keys
+    * necessarily live in touched files, so the replacement join and the
+    * insert anti-join run against the TOUCHED subset — the untouched 99%
+    * of the table is never read again.
+    */
+  private def copyOnWrite(spark: SparkSession, d: Dml): Long = {
+    val touched = touchedFiles(spark, d.path, d.meta, d.snap.files, d.matching)
+    if (touched.isEmpty && !d.insert) return -1L
+    val base = baseWithRowIds(spark, d.path, d.meta, touched, d.rt)
+    val rows = d.joined(base, "left_outer")
+    val kept = if (d.set.isEmpty) rows.filter(!d.hit) else rows
+    val (inserted, hwBumps) = d.inserts(base.select(d.keys.map(col): _*))
+    val matched = rows.filter(d.hit)
+    val newData = (kept.select(d.becomes(Some(d.hit)): _*) +: inserted.toSeq)
+      .reduce(_ unionByName _)
+    commitDml(spark, d, touched.map(DvPlan(_, None)), deletionVectors = false,
+      Some(newData), changes(d, matched, d.set.map(_ => matched.select(d.becomes(None): _*)),
+        inserted), hwBumps)
+  }
+
+  /** Run `d` by deletion vector: ONE row-index scan finds the matched
+    * rows, [[buildDvPlans]] shadows their positions, the replacement rows
+    * and inserts append as new files, commit. When the matched rows feed
+    * more than the bitmap build — replacements, the insert split, CDC
+    * pre-images — they are materialized once (O(changed rows), this
+    * mode's contract), so the table is scanned exactly once. Row
+    * tracking resolves each replaced row's stable id here, before its
+    * position is shadowed, so the re-appended row carries it
+    * materialized.
+    */
+  private def withDeletionVectors(spark: SparkSession, d: Dml,
+      maxVectorFileBytes: Long = DvWrite.DefaultMaxVectorFileBytes): Long = {
+    val live = d.snap.files
+    val root = new Path(d.path)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val found = d.matching(DeltaRead.filesDf(spark, d.path, d.meta, live, provenance = true,
+      rowIndex = true, extraPhysCols = DeltaWrite.rowTrackingFields(d.rt)))
+    val resolved = d.rt.filter(_ => d.set.isDefined).fold(found)(r =>
+      DeltaWrite.materializeRowIds(spark, d.path, r, live, found, keepHelpers = true))
+    // without CDF a keyed verb needs only keys, identity values (matched
+    // updates re-append with the TARGET's stored value; the source omits
+    // them) and positions, so the scan prunes every other column
+    val pruned =
+      if (d.cdf || d.where.isDefined) resolved
+      else resolved.select((d.keys ++ DeltaWrite.identityFieldsOf(d.meta).map(_.name)).map(col) ++
+        Seq(col("__file"), col("__row_idx")) ++ d.rt.toSeq.map(r => col(s"`${r.matId}`")): _*)
+    val matched =
+      if (d.cdf || d.set.isDefined || d.insert) pruned.localCheckpoint()
+      else pruned
+    val planned = buildDvPlans(spark, fs, root, live, matched, maxVectorFileBytes)
+    if (planned.isEmpty && !d.insert) return -1L
+    // one replacement PER MATCHED TARGET ROW, not per source key: a
+    // duplicate-key target row shadows BOTH positions, and the
+    // copy-on-write path updates both (multiplicity preserved — upstream
+    // Delta MERGE semantics); the source holds ≤1 row per key
+    val replaced = d.set.map(_ => d.joined(matched, "inner").select(d.becomes(None): _*))
+    // a source key matched iff it appears among the matched rows — the
+    // key set is tiny (≤ |source|), so the anti-join broadcasts it
+    val (inserted, hwBumps) = d.inserts(matched.select(d.keys.map(col): _*).distinct())
+    commitDml(spark, d, planned, deletionVectors = true,
+      (replaced.toSeq ++ inserted).reduceOption(_ unionByName _),
+      changes(d, matched, replaced, inserted), hwBumps)
+  }
+
+  /** Read `touched` with STABLE ROW IDS attached when the table is
+    * row-tracked: logical columns plus the two materialized physical
+    * columns, each row's column values resolved to its stable id
+    * (`coalesce(materialized, baseRowId + position)`) and original
+    * commit version — the inputs a copy-on-write rewrite must carry
+    * forward so DML never moves a row's identity. Plain scan otherwise.
+    */
+  private def baseWithRowIds(spark: SparkSession, path: String,
+      meta: DeltaRead.Meta, touched: Seq[DeltaRead.LiveFile],
+      rt: Option[DeltaWrite.RowTracking]): DataFrame = rt match {
+    case None => DeltaRead.filesDf(spark, path, meta, touched, provenance = false)
+    case Some(r) =>
+      val scanned = DeltaRead.filesDf(spark, path, meta, touched,
+        provenance = false, rowIndex = true,
+        extraPhysCols = DeltaWrite.rowTrackingFields(rt))
+      DeltaWrite.materializeRowIds(spark, path, r, touched, scanned)
+  }
+
+  /** The live files whose rows survive `hit` applied to a provenance scan
+    * — distinct `__file` values only reach the driver (O(files touched),
+    * never O(rows)).
+    */
+  private def touchedFiles(spark: SparkSession, path: String,
+      meta: DeltaRead.Meta, live: Seq[DeltaRead.LiveFile],
+      hit: DataFrame => DataFrame): Seq[DeltaRead.LiveFile] = {
+    val prov = DeltaRead.filesDf(spark, path, meta, live, provenance = true)
+    val byBase = byBasename(live)
+    val hitPaths = hit(prov).select(col("__file")).distinct()
+      .collect().map(r => liveByUri(byBase, r.getString(0)).path).toSet
+    live.filter(f => hitPaths.contains(f.path))
+  }
+
+  /** Live files keyed by basename, for [[liveByUri]]. */
+  private def byBasename(live: Seq[DeltaRead.LiveFile]): Map[String, Seq[DeltaRead.LiveFile]] =
+    live.groupBy(f => f.path.substring(f.path.lastIndexOf('/') + 1))
+
+  /** Attribute a scan's `__file` — the qualified URI — to a live file.
+    * Live paths are log-relative, or ABSOLUTE for clone-referenced files.
+    * Part names embed a UUID, so matching on the BASENAME is exact within
+    * one table; the endsWith re-check only disambiguates the
+    * (practically impossible) basename collision. Keyed lookup keeps
+    * attribution O(|touched| + |live|) — a naive abs×live suffix scan is
+    * 10¹⁰+ compares at a million files.
     */
   private def liveByUri(byBase: Map[String, Seq[DeltaRead.LiveFile]],
       uri: String): DeltaRead.LiveFile = {
@@ -504,6 +453,17 @@ object DeltaMerge {
     require(cands.size == 1, s"cannot attribute scanned file $uri to a live file")
     cands.head
   }
+
+  // ------------------------------------------------------- DV internals
+
+  /** One touched file's fate in a DML commit: with a `descriptor` (a
+    * vector ALREADY WRITTEN to a vector file, covering the union of its
+    * existing DV with the newly shadowed positions) the file is re-added
+    * under it; with None it is removed outright — every remaining row
+    * shadowed, or rewritten by copy-on-write.
+    */
+  private final case class DvPlan(file: DeltaRead.LiveFile,
+      descriptor: Option[DeletionVectors.Descriptor])
 
   /** Build AND WRITE per-file deletion vectors for `hits` (a DataFrame
     * carrying `__file` and `__row_idx`) entirely on executors: partition
@@ -521,10 +481,9 @@ object DeltaMerge {
     */
   private def buildDvPlans(spark: SparkSession, fs: org.apache.hadoop.fs.FileSystem,
       root: Path, live: Seq[DeltaRead.LiveFile], hits: DataFrame,
-      maxVectorFileBytes: Long = DvWrite.DefaultMaxVectorFileBytes): Seq[DvPlan] = {
+      maxVectorFileBytes: Long): Seq[DvPlan] = {
     import spark.implicits._
-    def basename(p: String): String = p.substring(p.lastIndexOf('/') + 1)
-    val byBase = live.groupBy(f => basename(f.path))
+    val byBase = byBasename(live)
     val byBaseBc = spark.sparkContext.broadcast(byBase)
     val confBc = spark.sparkContext.broadcast(
       new org.apache.spark.SerializableWritable(spark.sparkContext.hadoopConfiguration))
@@ -614,6 +573,8 @@ object DeltaMerge {
     }
   }
 
+  // ------------------------------------------------------- the commit
+
   /** Stage `rows` as fresh table data files under the table's physical
     * layout — the staging step of every DML verb that writes new rows.
     * CHECK constraints hold for post-DML rows too, and applyGenerated is
@@ -629,7 +590,7 @@ object DeltaMerge {
     DeltaWrite.stageBatch(rows, root, meta)
   }
 
-  /** Publish a DML commit, atomically: stage `newRows` (partitioned like
+  /** Publish `d`'s commit, atomically: stage `newRows` (partitioned like
     * the table), tombstone every planned file, re-add the partially
     * shadowed ones under their vector, add the staged files, and stage
     * cdc. Copy-on-write plans every touched file as removed outright, so
@@ -638,20 +599,17 @@ object DeltaMerge {
     * vector each file had, and the protocol upgrades on the table's first
     * vector.
     */
-  private def commitDml(spark: SparkSession, path: String, snap: DeltaRead.Snapshot,
-      planned: Seq[DvPlan],
-      deletionVectors: Boolean, newRows: Option[DataFrame], operation: String,
-      params: Seq[(String, Any)], cdcData: Option[DataFrame],
-      txn: Option[(String, Long)], hwBumps: Map[String, Long]): Long = {
-    val DeltaRead.Snapshot(readVersion, meta, _, proto, domains, _) = snap
-    val root = new Path(path)
+  private def commitDml(spark: SparkSession, d: Dml, planned: Seq[DvPlan],
+      deletionVectors: Boolean, newRows: Option[DataFrame], cdcData: Option[DataFrame],
+      hwBumps: Map[String, Long]): Long = {
+    val DeltaRead.Snapshot(readVersion, meta, _, proto, domains, _) = d.snap
+    val root = new Path(d.path)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val where = s"$operation on $path"
+    val where = s"${d.operation} on ${d.path}"
     val adds = newRows.toSeq.flatMap(stageForTable(_, meta, root, where))
     val protocol =
       if (deletionVectors) dvProtocolUpgrade(proto, where) else None
-    val tracked = DeltaWrite.rowTrackingOf(meta).isDefined ||
-      proto.writerFeatures.contains("rowTracking")
+    val tracked = d.rt.isDefined || proto.writerFeatures.contains("rowTracking")
     // change-data files: the changed rows (+ _change_type +
     // _commit_version, so a file stream over _change_data/ needs no log
     // lookup) staged under _change_data/, committed as cdc actions
@@ -671,7 +629,7 @@ object DeltaMerge {
       protocol.foreach(lines += DeltaActions.protocol(_))
       if (hwBumps.nonEmpty)
         lines += DeltaActions.identityMetaData(meta, hwBumps, now)
-      txn.foreach { case (appId, txnVersion) =>
+      d.txn.foreach { case (appId, txnVersion) =>
         lines += DeltaActions.txn(appId, txnVersion, now)
       }
       // only DV tombstones carry the file's vector; readers key a
@@ -681,12 +639,12 @@ object DeltaMerge {
           if (deletionVectors) p.file.dv else None)
       }
       planned.foreach {
-        case DvPlan(f, Some(d)) =>
+        case DvPlan(f, Some(dv)) =>
           lines += DeltaActions.add(f.path, f.partitionValues, f.size, f.modificationTime,
-            dataChange = true, f.stats, Some(d), f.baseRowId, f.defaultRowCommitVersion)
+            dataChange = true, f.stats, Some(dv), f.baseRowId, f.defaultRowCommitVersion)
         case _ =>
       }
-      lines ++= DeltaWrite.renderAdds(spark, path, tracked,
+      lines ++= DeltaWrite.renderAdds(spark, d.path, tracked,
         DeltaRead.rowIdHighWaterMark(domains), readVersion + 1,
         adds, now, dataChange = true)(version)
       cdcStaged.foreach { case (rel, size) => lines += DeltaActions.cdc(rel, size) }
@@ -700,106 +658,9 @@ object DeltaMerge {
     // commit would issue the same values — the loser refuses.
     val removed = planned.map(_.file.path).toSet
     val guard =
-      if (hwBumps.nonEmpty) ConflictGuard.exclusive(removed, txn.map(_._1))
-      else ConflictGuard.disjointRewrite(removed, txn.map(_._1))
-    DeltaWrite.commit(spark, path, readVersion, meta, operation,
-      if (deletionVectors) params :+ ("deletionVectors" -> true) else params, guard)(mkLines)
-  }
-
-  /** UPDATE the Delta table at `path` SET `set` WHERE `condition` — the
-    * expression-based UPDATE between [[merge]]'s row-replacement and
-    * [[deleteWhere]]'s removal: each `set` entry maps a column to an
-    * expression over the CURRENT row (so `cents -> col("cents") + 1000`
-    * works), applied only where `condition` holds; every other row in a
-    * touched file carries over verbatim. Copy-on-write like the others —
-    * the condition pushes into the discovery scan (stats/partition
-    * skipping applies), only files holding matches rewrite, one atomic
-    * commit. Set expressions cast to the column's declared type, so the
-    * staged parquet can never drift from the table schema. Returns the
-    * committed version, or -1 when no row matched.
-    */
-  def updateWhere(spark: SparkSession, path: String, condition: Column,
-      set: Map[String, Column]): Long = {
-    require(set.nonEmpty, "set must map at least one column")
-    val snap = DeltaRead.snapshot(spark, path)
-    val DeltaRead.Snapshot(_, meta, live, proto, _, _) = snap
-    require(meta != null, s"$path has no metaData action in its _delta_log")
-    // UPDATE carries identity values verbatim — but a SET targeting the
-    // identity column itself would mint values outside the contract
-    DeltaWrite.checkWritable(meta, proto, s"DML on $path", removesData = true,
-      identityOk = true)
-    val schema = DataType.fromJson(meta.schemaJson).asInstanceOf[StructType]
-    set.keys.foreach(k => require(schema.fieldNames.contains(k),
-      s"SET column $k is not a column of the table (${schema.fieldNames.mkString(", ")})"))
-    set.keys.foreach(k => require(
-      !schema(k).metadata.contains("delta.identity.start"),
-      s"SET targets identity column $k — identity values are engine-assigned " +
-        "and never updated"))
-    // updating a partition column is fine: the rewrite stages with
-    // partitionBy over the NEW values, so moved rows land in (and log
-    // partitionValues for) their new partition directories
-    val touched = touchedFiles(spark, path, meta, live, _.filter(condition))
-    if (touched.isEmpty) return -1L
-    val hit = coalesce(condition, lit(false)) // NULL predicate = no match (SQL)
-    val rt = DeltaWrite.rowTrackingOf(meta)
-    val base = baseWithRowIds(spark, path, meta, touched, rt)
-    def updatedCols = schema.fieldNames.map { n =>
-      set.get(n) match {
-        case Some(e) => e.cast(schema(n).dataType).as(n)
-        case None => col(n)
-      }
-    }.toSeq
-    // row tracking: every row keeps its stable id; UPDATED rows null out
-    // the materialized commit version (they are modified by THIS commit,
-    // so the fresh default applies), carried rows keep their original
-    val rtCols = rt.toSeq.flatMap(r => Seq(col(s"`${r.matId}`"),
-      when(hit, lit(null).cast("long")).otherwise(col(s"`${r.matVer}`"))
-        .as(r.matVer)))
-    val rewritten = base.select(schema.fieldNames.map { n =>
-      set.get(n) match {
-        case Some(e) => when(hit, e.cast(schema(n).dataType)).otherwise(col(n)).as(n)
-        case None => col(n)
-      }
-    }.toSeq ++ rtCols: _*)
-    val cdc =
-      if (cdfEnabled(meta)) {
-        val fieldCols = schema.fieldNames.map(col).toSeq
-        Some(base.filter(hit)
-          .select(fieldCols :+ lit("update_preimage").as("_change_type"): _*)
-          .unionByName(base.filter(hit).select(updatedCols: _*)
-            .withColumn("_change_type", lit("update_postimage"))))
-      } else None
-    commitDml(spark, path, snap, touched.map(DvPlan(_, None)),
-      deletionVectors = false, Some(rewritten), "UPDATE",
-      Seq("predicate" -> condition.toString), cdc, None, Map.empty)
-  }
-
-  /** The live files whose rows survive `hit` applied to a provenance scan
-    * — distinct `__file` values only reach the driver (O(files touched),
-    * never O(rows)).
-    */
-  private def touchedFiles(spark: SparkSession, path: String,
-      meta: DeltaRead.Meta, live: Seq[DeltaRead.LiveFile],
-      hit: DataFrame => DataFrame): Seq[DeltaRead.LiveFile] = {
-    val prov = DeltaRead.filesDf(spark, path, meta, live, provenance = true)
-    val abs = hit(prov).select(col("__file")).distinct()
-      .collect().map(_.getString(0))
-    // `__file` is the scan's qualified URI; live paths are log-relative —
-    // or ABSOLUTE for clone-referenced files. Part names embed a UUID, so
-    // matching on the BASENAME is exact within one table; the endsWith
-    // re-check below only disambiguates the (practically impossible)
-    // basename collision. Keyed lookup keeps this O(|touched| + |live|) —
-    // a naive abs×live suffix scan is 10¹⁰+ compares at a million files.
-    def basename(p: String): String = p.substring(p.lastIndexOf('/') + 1)
-    val byBase: Map[String, Seq[DeltaRead.LiveFile]] = live.groupBy(f => basename(f.path))
-    val hitPaths: Set[String] = abs.iterator.flatMap { a =>
-      byBase.getOrElse(basename(a), Nil).filter { f =>
-        val needle =
-          if (f.path.startsWith("/") || f.path.contains("://")) f.path
-          else "/" + f.path
-        a.endsWith(needle)
-      }.map(_.path)
-    }.toSet
-    live.filter(f => hitPaths.contains(f.path))
+      if (hwBumps.nonEmpty) ConflictGuard.exclusive(removed, d.txn.map(_._1))
+      else ConflictGuard.disjointRewrite(removed, d.txn.map(_._1))
+    DeltaWrite.commit(spark, d.path, readVersion, meta, d.operation,
+      if (deletionVectors) d.params :+ ("deletionVectors" -> true) else d.params, guard)(mkLines)
   }
 }

@@ -6,6 +6,7 @@ import scala.util.Try
 
 import org.apache.hadoop.fs.{Path, RawLocalFileSystem}
 import org.apache.hadoop.fs.permission.FsPermission
+import org.apache.spark.sql.functions.col
 
 import graft.SparkSpec
 
@@ -58,15 +59,15 @@ object CrashFs {
   }
 }
 
-/** Crash-point matrix for the commit paths: a MERGE (copy-on-write and
-  * deletion-vector) dies at each phase of its commit — after the data
-  * files are staged, after the CDC files are staged, after the temp commit
-  * JSON is written, after the put-if-absent publish, and before the
-  * auto-checkpoint. Readers must then see version N with the pre-merge
-  * rows or N+1 with the post-merge rows and change feed, never a mix, and
-  * the next MERGE must commit cleanly on top. An append, an overwrite and
-  * a compaction run the same phases minus the CDC one (they stage no
-  * change files), each followed by a clean append.
+/** Crash-point matrix for the commit paths: a MERGE, an UPDATE and a
+  * DELETE (each copy-on-write and deletion-vector) die at each phase of
+  * their commit — after the data files are staged, after the CDC files are
+  * staged, after the temp commit JSON is written, after the put-if-absent
+  * publish, and before the auto-checkpoint. Readers must then see version
+  * N with the pre-DML rows or N+1 with the post-DML rows and change feed,
+  * never a mix, and the next MERGE must commit cleanly on top. An append,
+  * an overwrite and a compaction run the same phases minus the CDC one
+  * (they stage no change files), each followed by a clean append.
   */
 class DeltaCrashSpec extends SparkSpec {
   import spark.implicits._
@@ -154,6 +155,36 @@ class DeltaCrashSpec extends SparkSpec {
       // the next merge commits cleanly on top of whatever landed
       val model = if (lands) after1 else before
       val next = upsert(t, 45L, 1000L, dv)
+      assert(next == v + 1)
+      assert(rows(t) == applied(model, 45L, 1000L))
+      assert(lastCheckpoint(t).contains(next), "the next commit auto-checkpoints")
+    }
+
+  // (verb, the commit, its effect on the rows, its change feed)
+  private val predicateDml: Seq[(String, String => Long, Map[Long, Long] => Map[Long, Long],
+      Map[String, Long])] = {
+    val set = Map("v" -> col("id") * 100)
+    val updated = (m: Map[Long, Long]) => m ++ (30L until 40L).map(i => i -> i * 100)
+    val images = Map("update_preimage" -> 10L, "update_postimage" -> 10L)
+    Seq(
+      ("COW update", t => DeltaMerge.updateWhere(spark, t, col("id") >= 30, set), updated, images),
+      ("DV update", t => DeltaMerge.updateWhereDv(spark, t, col("id") >= 30, set), updated, images),
+      ("COW delete", t => DeltaMerge.deleteWhere(spark, t, col("id") >= 30),
+        _ -- (30L until 40L), Map("delete" -> 10L)),
+      ("DV delete", t => DeltaMerge.deleteWhereDv(spark, t, col("id") >= 30),
+        _ -- (30L until 40L), Map("delete" -> 10L)))
+  }
+
+  for ((verb, commit, effect, feed) <- predicateDml; (phase, op, marker, after, lands) <- phases)
+    test(s"$verb crashing $phase leaves version N or N+1, never torn") {
+      val t = table()
+      val before = rows(t)
+      val v = crash(t, phase, op, marker, after, lands, before, effect(before))(commit(t))
+      if (lands) assert(changes(t, v) == feed)
+
+      // the next merge commits cleanly on top of whatever landed
+      val model = if (lands) effect(before) else before
+      val next = upsert(t, 45L, 1000L, dv = verb.startsWith("DV"))
       assert(next == v + 1)
       assert(rows(t) == applied(model, 45L, 1000L))
       assert(lastCheckpoint(t).contains(next), "the next commit auto-checkpoints")

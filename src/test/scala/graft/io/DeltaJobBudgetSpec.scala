@@ -57,7 +57,7 @@ class DeltaJobBudgetSpec extends SparkSpec {
     assert(counts == Map(
       "read cold" -> 2, "read warm" -> 2, "checkpoint" -> 1,
       "read warm after checkpoint" -> 2, "read cold after checkpoint" -> 3,
-      "lastTxnVersion" -> 0, "COW MERGE" -> 17, "DV MERGE" -> 18, "compact" -> 1,
+      "lastTxnVersion" -> 0, "COW MERGE" -> 16, "DV MERGE" -> 18, "compact" -> 1,
       "checkpoint again" -> 1), counts.toSeq.sortBy(_._1).mkString(", "))
     assert(DeltaRead.readDeltaTable(spark, t).count() == 401L)
   }
