@@ -265,10 +265,11 @@ object Dedup {
     *
     * `pairBound`, when given, certifies an upper bound on the rows of
     * `pairs`; at or below `driverThreshold` the pairs are collected and
-    * clustered on the driver in one job. The caller owns the
-    * certificate: [[minhashLshPairsCounted]]' candidate count bounds its
-    * pairs only when doc ids are unique — a bound computed over
-    * duplicated ids understates the collect.
+    * clustered on the driver. [[minhashLshPairsCounted]]' candidate count
+    * bounds its pairs only when doc ids are unique — a bound computed
+    * over duplicated ids understates the collect — so the collect is
+    * capped at `driverThreshold + 1` rows, and a full cap falls back to
+    * the observed path with the same labels.
     */
   def dupClusters(pairs: DataFrame, idA: String, idB: String,
       maxIters: Int = 20, driverThreshold: Long = 100000L,
@@ -313,9 +314,16 @@ object Dedup {
       import spark.implicits._
       rows.toDF("id", "cluster")
     }
-    if (integralIds && pairBound.exists(_ <= driverThreshold))
-      return unionFind(pairs.select(srcCol.as("src"), dstCol.as("dst"))
-        .collect().iterator.map(r => (r.getLong(0), r.getLong(1))))
+    // The certificate is trusted only as far as the cap: at most
+    // driverThreshold + 1 rows reach the driver, and a pair list that
+    // fills the cap (duplicate ids broke the bound) takes the observed
+    // path below instead.
+    if (integralIds && pairBound.exists(_ <= driverThreshold)) {
+      val capped = pairs.select(srcCol.as("src"), dstCol.as("dst"))
+        .limit(math.min(driverThreshold + 1, Int.MaxValue.toLong).toInt).collect()
+      if (capped.length <= driverThreshold)
+        return unionFind(capped.iterator.map(r => (r.getLong(0), r.getLong(1))))
+    }
     // edge count rides the checkpoint materialization via observe() — the
     // strategy decision costs no second job
     val edgeObs = new org.apache.spark.sql.Observation(

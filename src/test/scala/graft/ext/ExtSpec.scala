@@ -219,6 +219,33 @@ class ExtSpec extends SparkSpec {
     assert(kept == Seq(1L, 10L, 99L), kept.toString)
   }
 
+  test("dupClusters: duplicate ids that break the certified pair bound fall back to the observed path") {
+    // ids 1 and 2 each name three copies of one text: LSH counts candidate
+    // pairs of ids, and verification joins each back to every copy of both
+    val text = "the quick brown fox jumps over the lazy dog"
+    val dupDocs = (Seq.fill(3)((1L, text)) ++ Seq.fill(3)((2L, text)) ++
+      Seq((3L, "an entirely different document about something else"))).toDF("doc_id", "text")
+    val (pairs, bound) = Dedup.minhashLshPairsCounted(dupDocs, "doc_id", "text",
+      shingleN = 3, k = 16, bands = 4, threshold = 0.5)
+    val real = pairs.count()
+    assert(real > bound, s"$real pairs against a certified bound of $bound")
+    def labels(df: org.apache.spark.sql.DataFrame): Map[Long, Long] =
+      df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val want = labels(Dedup.dupClusters(pairs, "id_a", "id_b", driverThreshold = -1L))
+    assert(want == Map(1L -> 1L, 2L -> 1L))
+    // the certificate passes the threshold, the real pair list fills the cap
+    assert(labels(Dedup.dupClusters(pairs, "id_a", "id_b", driverThreshold = bound,
+      pairBound = Some(bound))) == want)
+  }
+
+  test("dupClusters: the capped certified collect on the b35 shape keeps its job count") {
+    // the cap costs no job: an uncapped collect runs the same 7
+    val (pairs, bound) = Dedup.minhashLshPairsCounted(graft.Tables.documents(spark, sf),
+      "doc_id", "text", shingleN = 3, k = 16, bands = 4, threshold = 0.5, fast = true)
+    val n = jobs(Dedup.dupClusters(pairs, "id_a", "id_b", pairBound = Some(bound)))
+    assert(n == 7, s"$n jobs")
+  }
+
   test("dupClusters: integer and string id columns both work under the driver threshold") {
     // IntegerType ids exercise the widen-to-long path through the driver
     // fast path (was a ClassCastException before r5)
