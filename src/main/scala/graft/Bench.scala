@@ -43,19 +43,24 @@ object Bench {
     Tables.orders(s, dir).select(col("o_orderkey"), col("o_orderstatus"),
       round(col("o_totalprice") * 100, 0).cast("long").as("cents"))
 
-  // b54's standing table (b56 z-orders it too)
-  private[graft] def dmlTable(s: SparkSession, dir: String): String = once("dml_table") {
-    val path = Harness.tmp("dml_table") + "/orders_delta"
+  /** A fresh Delta table of [[ordersCents]] in a new scratch dir named
+    * after `name`: the standing table an orders DML bench merges into.
+    * Every call builds a new table; Bench memoizes one per entry below,
+    * ScaleRun builds one per SF dir.
+    */
+  private[graft] def ordersDelta(s: SparkSession, dir: String, name: String): String = {
+    val path = Harness.tmp(name) + "/orders_delta"
     graft.io.DeltaWrite.writeDeltaTable(ordersCents(s, dir), path, "append")
     path
   }
+
+  // b54's standing table (b56 z-orders it too)
+  private[graft] def dmlTable(s: SparkSession, dir: String): String =
+    once("dml_table")(ordersDelta(s, dir, "dml_table"))
   // b57's own standing table (not shared with b54 — the two merge paths
   // must not contaminate each other's file accounting across passes)
-  private[graft] def dvTable(s: SparkSession, dir: String): String = once("dv_table") {
-    val path = Harness.tmp("dv_table") + "/orders_delta"
-    graft.io.DeltaWrite.writeDeltaTable(ordersCents(s, dir), path, "append")
-    path
-  }
+  private[graft] def dvTable(s: SparkSession, dir: String): String =
+    once("dv_table")(ordersDelta(s, dir, "dv_table"))
 
   // b59's standing ROW-TRACKED table: created with ids, one DV delete +
   // one COW update during the lazy build, so the timed read pays the real
