@@ -1,13 +1,18 @@
 package graft.io
 
+import scala.collection.Searching.{Found, InsertionPoint}
 import scala.jdk.CollectionConverters._
+import scala.util.Try
+
+import com.fasterxml.jackson.databind.JsonNode
 
 import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{
   And, AttributeReference, BoundReference, EqualTo, Expression, GreaterThan,
-  GreaterThanOrEqual, IsNotNull, LessThan, LessThanOrEqual, Literal, Predicate}
+  GreaterThanOrEqual, In, InSet, IsNotNull, LessThan, LessThanOrEqual, Literal, Or, Predicate,
+  StartsWith}
 import org.apache.spark.sql.execution.datasources.{FileIndex, PartitionDirectory}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -186,9 +191,11 @@ private[io] class DeltaLogFileIndex(
         row => p.eval(row)
       }
 
+    // each filter compiles once per listing, each file's stats parse once
+    val tests = dataFilters.map(mayMatch)
     files
       .filter(f => partPred(partValues(f.partitionValues)))
-      .filter(f => dataFilters.forall(mayMatch(f, _)))
+      .filter(f => tests.isEmpty || f.stats.map(DeltaActions.parse).forall(st => tests.forall(_(st))))
       .filter(f => dataFilters.forall(genMayMatch(partValues(f.partitionValues), _)))
       .groupBy(_.partitionValues)
       .map { case (pv, fs) =>
@@ -263,75 +270,84 @@ private[io] class DeltaLogFileIndex(
     else fs.getFileStatus(p)
   }
 
-  /** Conservative file-level skip test: false ONLY when the file's stats
-    * PROVE no row can match `filter`.
+  /** Conservative file-level skip test over a file's parsed `add.stats`:
+    * false ONLY when the stats PROVE no row can match `filter`. Built once
+    * per listing, so an IN list sorts once and each file costs one binary
+    * search.
     */
-  private def mayMatch(f: DeltaRead.LiveFile, filter: Expression): Boolean = {
-    val stats = f.stats.map(DeltaActions.parse).orNull
-    if (stats == null) return true
-    def stat(kind: String, c: String): Option[String] =
-      Option(stats.get(kind)).flatMap(n => Option(n.get(c))).map(_.asText())
-    def cmp(a: String, b: Any, tpe: DataType): Option[Int] = tpe match {
-      case _: NumericType =>
-        try Some(java.lang.Double.compare(a.toDouble, b.toString.toDouble))
-        catch { case _: NumberFormatException => None }
-      case _: StringType => Some(a.compareTo(b.toString))
-      case _ => None
-    }
-    filter match {
-      case EqualTo(a: AttributeReference, Literal(v, _)) if v != null =>
-        val keep = for {
-          lo <- stat("minValues", a.name); hi <- stat("maxValues", a.name)
-          cl <- cmp(lo, v, a.dataType); ch <- cmp(hi, v, a.dataType)
-        } yield cl <= 0 && ch >= 0
-        keep.getOrElse(true)
-      case EqualTo(l: Literal, a: AttributeReference) =>
-        mayMatch(f, EqualTo(a, l))
-      case LessThan(a: AttributeReference, Literal(v, _)) if v != null =>
-        stat("minValues", a.name).flatMap(cmp(_, v, a.dataType))
-          .forall(_ < 0)
-      case LessThanOrEqual(a: AttributeReference, Literal(v, _)) if v != null =>
-        stat("minValues", a.name).flatMap(cmp(_, v, a.dataType))
-          .forall(_ <= 0)
-      case GreaterThan(a: AttributeReference, Literal(v, _)) if v != null =>
-        stat("maxValues", a.name).flatMap(cmp(_, v, a.dataType))
-          .forall(_ > 0)
-      case GreaterThanOrEqual(a: AttributeReference, Literal(v, _)) if v != null =>
-        stat("maxValues", a.name).flatMap(cmp(_, v, a.dataType))
-          .forall(_ >= 0)
-      case IsNotNull(a: AttributeReference) =>
-        val allNull = for {
-          nc <- stat("nullCount", a.name); n <- Option(stats.get("numRecords"))
-        } yield nc.toLong >= n.asLong() && n.asLong() > 0
-        !allNull.getOrElse(false)
-      case org.apache.spark.sql.catalyst.expressions.In(
-          a: AttributeReference, list) if list.forall(_.isInstanceOf[Literal]) =>
-        // IN-list: skip only when EVERY value falls outside [min, max] —
-        // the file-level form of the repair-scan `isin` filters
-        list.exists {
-          case Literal(v, _) if v != null =>
-            mayMatch(f, EqualTo(a, Literal(v, a.dataType)))
-          case _ => true // a null literal matches nothing but proves nothing
-        }
-      case org.apache.spark.sql.catalyst.expressions.InSet(
-          a: AttributeReference, set) =>
-        set.exists(v => v != null &&
-          mayMatch(f, EqualTo(a, Literal(v, a.dataType))))
-      case org.apache.spark.sql.catalyst.expressions.Or(l, r) =>
-        mayMatch(f, l) || mayMatch(f, r)
-      case org.apache.spark.sql.catalyst.expressions.StartsWith(
-          a: AttributeReference, Literal(v, StringType)) if v != null =>
-        // every p-prefixed string lies in [p, p-with-last-char-incremented):
-        // skip when the file's max < p or its min >= that upper bound
-        val p = v.toString
-        val pIncr = if (p.nonEmpty && p.last != Char.MaxValue)
-          Some(p.init + (p.last + 1).toChar) else None
-        val keep = for {
-          lo <- stat("minValues", a.name); hi <- stat("maxValues", a.name)
-        } yield hi.compareTo(p) >= 0 && pIncr.forall(q => lo.compareTo(q) < 0)
-        keep.getOrElse(true)
-      case And(l, r) => mayMatch(f, l) && mayMatch(f, r)
-      case _ => true
+  private def mayMatch(filter: Expression): JsonNode => Boolean = filter match {
+    case EqualTo(a: AttributeReference, Literal(v, _)) if v != null => anyWithin(a, Seq(v))
+    case EqualTo(l: Literal, a: AttributeReference) => mayMatch(EqualTo(a, l))
+    case LessThan(a: AttributeReference, Literal(v, _)) if v != null =>
+      st => stat(st, "minValues", a.name).flatMap(cmp(_, v, a.dataType)).forall(_ < 0)
+    case LessThanOrEqual(a: AttributeReference, Literal(v, _)) if v != null =>
+      st => stat(st, "minValues", a.name).flatMap(cmp(_, v, a.dataType)).forall(_ <= 0)
+    case GreaterThan(a: AttributeReference, Literal(v, _)) if v != null =>
+      st => stat(st, "maxValues", a.name).flatMap(cmp(_, v, a.dataType)).forall(_ > 0)
+    case GreaterThanOrEqual(a: AttributeReference, Literal(v, _)) if v != null =>
+      st => stat(st, "maxValues", a.name).flatMap(cmp(_, v, a.dataType)).forall(_ >= 0)
+    case IsNotNull(a: AttributeReference) => st =>
+      val allNull = for {
+        nc <- stat(st, "nullCount", a.name); n <- Option(st.get("numRecords"))
+      } yield nc.toLong >= n.asLong() && n.asLong() > 0
+      !allNull.getOrElse(false)
+    // IN-list: skip only when EVERY value falls outside [min, max] — the
+    // file-level form of MERGE's key lists and the repair-scan `isin`
+    // filters; a null literal matches nothing but proves nothing
+    case In(a: AttributeReference, list) if list.forall(_.isInstanceOf[Literal]) =>
+      val values = list.map(_.asInstanceOf[Literal].value)
+      if (values.contains(null)) _ => true else anyWithin(a, values)
+    case InSet(a: AttributeReference, set) => anyWithin(a, set.filter(_ != null).toSeq)
+    case Or(l, r) =>
+      val (ml, mr) = (mayMatch(l), mayMatch(r))
+      st => ml(st) || mr(st)
+    case StartsWith(a: AttributeReference, Literal(v, StringType)) if v != null =>
+      // every p-prefixed string lies in [p, p-with-last-char-incremented):
+      // skip when the file's max < p or its min >= that upper bound
+      val p = v.toString
+      val pIncr = if (p.nonEmpty && p.last != Char.MaxValue)
+        Some(p.init + (p.last + 1).toChar) else None
+      st => (for {
+        lo <- stat(st, "minValues", a.name); hi <- stat(st, "maxValues", a.name)
+      } yield hi.compareTo(p) >= 0 && pIncr.forall(q => lo.compareTo(q) < 0)).getOrElse(true)
+    case And(l, r) =>
+      val (ml, mr) = (mayMatch(l), mayMatch(r))
+      st => ml(st) && mr(st)
+    case _ => _ => true
+  }
+
+  private def stat(stats: JsonNode, kind: String, c: String): Option[String] =
+    Option(stats.get(kind)).flatMap(n => Option(n.get(c))).map(_.asText())
+
+  /** Numbers compare as doubles (-0.0 equal to 0.0, as SQL equality has
+    * it), strings as strings; any other type proves nothing.
+    */
+  private val NumOrder: Ordering[Double] = (x, y) => if (x == y) 0 else java.lang.Double.compare(x, y)
+
+  private def cmp(a: String, b: Any, tpe: DataType): Option[Int] = tpe match {
+    case _: NumericType => Try(NumOrder.compare(a.toDouble, b.toString.toDouble)).toOption
+    case _: StringType => Some(a.compareTo(b.toString))
+    case _ => None
+  }
+
+  /** Whether some of `values` may lie in a file's [min, max] of `a`: the
+    * values sort once, and each file looks up the first one at or above
+    * its min. Unparseable values or stats keep the file.
+    */
+  private def anyWithin(a: AttributeReference, values: Seq[Any]): JsonNode => Boolean = {
+    def within[T](parse: String => T, sorted: IndexedSeq[T])(implicit o: Ordering[T]): JsonNode => Boolean =
+      st => (for {
+        lo <- stat(st, "minValues", a.name).flatMap(s => Try(parse(s)).toOption)
+        hi <- stat(st, "maxValues", a.name).flatMap(s => Try(parse(s)).toOption)
+      } yield sorted.search(lo) match {
+        case Found(_) => true
+        case InsertionPoint(i) => i < sorted.length && o.lteq(sorted(i), hi)
+      }).getOrElse(true)
+    a.dataType match {
+      case _: NumericType => Try(values.map(_.toString.toDouble)).toOption
+        .fold[JsonNode => Boolean](_ => true)(vs => within(_.toDouble, vs.toIndexedSeq.sorted(NumOrder))(NumOrder))
+      case _: StringType => within(identity, values.map(_.toString).toIndexedSeq.sorted)
+      case _ => _ => true
     }
   }
 

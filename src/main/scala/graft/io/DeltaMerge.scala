@@ -1,9 +1,10 @@
 package graft.io
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftSqlShims, Observation, Row, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.{InSet, Literal}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DataType, StructType}
+import org.apache.spark.sql.types._
 
 /** Row-level Delta DML — MERGE (upsert), UPDATE and DELETE — as single
   * atomic commits over [[DeltaWrite]]'s log protocol. This is the
@@ -30,11 +31,25 @@ import org.apache.spark.sql.types.{DataType, StructType}
   * delete), an inserted row an insert.
   *
   * Scale shape:
-  *   - Touched-file discovery is one provenance scan, filtered by the
-  *     predicate (which pushes into the scan, so add.stats min/max skip
-  *     provably-unmatched files before any I/O) or semi-joined to the
-  *     source KEYS (AQE broadcasts a small source side); only distinct
-  *     file paths reach the driver — O(files), never O(rows).
+  *   - MERGE materializes its source once; the same job counts it. A
+  *     source whose rows × default row size fit Spark's
+  *     `spark.sql.autoBroadcastJoinThreshold` is SMALL: its keys reach the
+  *     driver in one shuffle-free job, the cardinality check runs there
+  *     (with `groupBy`'s key equality), and the keys filter the match scan
+  *     as IN lists — the log-backed file index skips every file whose
+  *     add.stats min/max hold none of them before any I/O, and the list of
+  *     key tuples matches exactly, so finding the matched rows needs no
+  *     join. Every join to a small source (the rewrite, the post-images)
+  *     broadcasts it. A LARGER source keeps the aggregate check and a
+  *     semi-join the planner shapes; a threshold of -1 always takes this
+  *     path.
+  *   - Predicate verbs push their condition into the same scan (stats and
+  *     partition skipping).
+  *   - The matched rows are materialized in ONE job that also observes
+  *     the files they sit in and, with a key list, the keys they matched;
+  *     only those distinct values reach the driver — O(files touched +
+  *     source keys), never O(rows) — and the insert split is a filter on
+  *     them.
   *   - The rewrite reads only the touched files through the log-backed
   *     file index; a merge touching 10 files out of a million rewrites 10.
   *   - Log work is driver-side and O(files touched) (the Delta contract).
@@ -50,8 +65,8 @@ object DeltaMerge {
     *
     * The source must have at most one row per key (the Delta MERGE
     * cardinality guard: a key matching two source rows would update
-    * nondeterministically — refused loudly, checked with one aggregate
-    * over the source side only).
+    * nondeterministically — refused loudly, checked on the source side
+    * only: on the driver for a small source, else with one aggregate).
     *
     * With `useDeletionVectors = true` the matched rows' positions are
     * shadowed by deletion vectors instead of rewriting their files:
@@ -106,17 +121,34 @@ object DeltaMerge {
           s"schema ${sourceSchema.simpleString} (UPDATE SET * / INSERT * " +
           "semantics; identity columns omitted)")
 
-    // The source plan is referenced by the cardinality check, the key
-    // semi-joins, the replacement join, the insert anti-join and the CDC
-    // rows — up to ~6 re-derivations of what may itself be a
-    // join/aggregate (the q97 pathology). Materialize it ONCE; every
-    // consumer below reads the checkpointed blocks.
-    val source1 = source0.localCheckpoint()
-    val dup = source1.groupBy(keyCols.map(col): _*).count()
-      .filter(col("count") > 1).limit(1).count()
+    // The source feeds the cardinality check, file discovery, the rewrite
+    // join, the insert split and the CDC rows — materialize it ONCE; the
+    // same job counts it.
+    val sized = new Observation()
+    val source1 = source0.observe(sized, count(lit(1)).as("n")).localCheckpoint()
+    // A source within Spark's broadcast threshold whose keys have the
+    // table's types is small: its keys come to the driver in one
+    // shuffle-free job, the cardinality check runs there, and they filter
+    // the match scan — an IN list per column skips files by add.stats
+    // before any I/O, an IN list of key tuples matches exactly, so finding
+    // the matched rows needs no join; every join to the source broadcasts
+    // it. A larger source keeps the aggregate check and a planner-chosen
+    // join.
+    val small = keyCols.forall(k => source0.schema(k).dataType == schema(k).dataType) &&
+      sized.get("n").asInstanceOf[Long] * (8L + source0.schema.defaultSize) <=
+        spark.sessionState.conf.autoBroadcastJoinThreshold
+    val keyRows = if (small) source1.select(keyCols.map(col): _*).collect().toSeq else Nil
+    val dup = if (small) keyRows.size - keyRows.map(_.toSeq.map(groupKey)).distinct.size
+      else source1.groupBy(keyCols.map(col): _*).count().filter(col("count") > 1).limit(1).count()
     require(dup == 0L,
       "merge source has more than one row for some key — the update would be " +
         "nondeterministic (Delta MERGE cardinality violation)")
+    // a NULL key matches nothing; a compound key also gets a list per
+    // listable column, for the file skipping
+    val tuples = keyRows.filterNot(_.anyNull)
+    val keyList = Option.when(small)((keyCols.filter(k => keyCols.size > 1 && listable(schema(k)))
+      .map(k => inSet(col(k), schema(k).dataType, tuples.map(_.getAs[Any](k)))) :+
+      keyIn(schema, keyCols, tuples)).reduce(_ && _))
 
     // UPDATE SET *: every column but the keys and the identity columns
     // (which carry the target's stored value) takes the source's
@@ -126,7 +158,7 @@ object DeltaMerge {
         identityNames.contains(n)).map(n => n -> col(s"__s_$n")).toMap)
     val dml = Dml(path, snap, schema, "MERGE",
       Seq("predicate" -> keyCols.mkString(","), "matchedAction" -> whenMatched),
-      None, keyCols, Some(source1), set, insertUnmatched, txn)
+      None, keyCols, Some(source1), set, insertUnmatched, txn, keyList)
     if (useDeletionVectors) withDeletionVectors(spark, dml) else copyOnWrite(spark, dml)
   }
 
@@ -240,7 +272,9 @@ object DeltaMerge {
   /** One DML verb, independent of storage mode:
     *   - (a) how a row matches: `where` (a predicate over the row) or,
     *     without it, a semi-join of the row's `keys` to the `source` (at
-    *     most one row per key, materialized);
+    *     most one row per key, materialized) — or, for a small source,
+    *     `keyList`, its keys as IN lists; a small source's side of every
+    *     join broadcasts;
     *   - (b) what a matched row becomes: `set` maps columns to their new
     *     value over the row beside its source row ([[joined]] — a keyed
     *     verb reads the source's column `c` as `__s_c`); every other
@@ -251,7 +285,7 @@ object DeltaMerge {
   private final case class Dml(path: String, snap: DeltaRead.Snapshot, schema: StructType,
       operation: String, params: Seq[(String, Any)], where: Option[Column],
       keys: Seq[String], source: Option[DataFrame], set: Option[Map[String, Column]],
-      insert: Boolean, txn: Option[(String, Long)]) {
+      insert: Boolean, txn: Option[(String, Long)], keyList: Option[Column] = None) {
     def meta: DeltaRead.Meta = snap.meta
     val rt: Option[DeltaWrite.RowTracking] = DeltaWrite.rowTrackingOf(meta)
     def fieldCols: Seq[Column] = schema.fieldNames.map(col).toSeq
@@ -261,11 +295,10 @@ object DeltaMerge {
       * extra pass over the matched rows to materialize the change rows.
       */
     val cdf: Boolean = meta.configuration.get("delta.enableChangeDataFeed").contains("true")
-    private def srcKeys = source.get.select(keys.map(col): _*).distinct()
 
     /** (a) The matched rows of `rows`. */
-    def matching(rows: DataFrame): DataFrame =
-      where.fold(rows.join(srcKeys, keys, "left_semi"))(rows.filter)
+    def matching(rows: DataFrame): DataFrame = where.orElse(keyList)
+      .fold(rows.join(source.get.select(keys.map(col): _*), keys, "left_semi"))(rows.filter)
 
     /** (a) Whether a row of [[joined]] matched (a NULL predicate is no
       * match, as in SQL).
@@ -277,10 +310,9 @@ object DeltaMerge {
       * unmatched rows), a predicate verb reads the row alone.
       */
     def joined(rows: DataFrame, how: String): DataFrame = source.fold(rows) { s =>
-      val side = set.fold(srcKeys.withColumn("__m", lit(true)))(m => s.select(
-        keys.map(col) ++ schema.fieldNames.filter(m.contains).map(n => col(n).as(s"__s_$n")) :+
-          lit(true).as("__m"): _*))
-      rows.join(side, keys, how)
+      val side = s.select(keys.map(col) ++ schema.fieldNames.filter(n => set.exists(_.contains(n)))
+        .map(n => col(n).as(s"__s_$n")) :+ lit(true).as("__m"): _*)
+      rows.join(if (keyList.isDefined) broadcast(side) else side, keys, how)
     }
 
     /** (b) As one projection of [[joined]] rows: a matched row takes `set`
@@ -297,17 +329,20 @@ object DeltaMerge {
           pick(lit(null).cast("long"), col(s"`${r.matVer}`")).as(r.matVer)))
     }
 
-    /** (c) The source rows whose key is not among `matchedKeys`, as table
-      * rows: on an identity table they get gap-free values assigned past
-      * the stored watermark — the returned bumps then force the metaData
-      * republish and the exclusive conflict guard in [[commitDml]]. Under
-      * row tracking inserted rows are fresh on both materialized columns.
+    /** (c) The source rows whose key is not among the keys of `matched`
+      * (rows holding every matched row) — or, once the matched keys were
+      * observed (`seen`), not among them — as table rows: on an identity table they get gap-free values assigned
+      * past the stored watermark — the returned bumps then force the
+      * metaData republish and the exclusive conflict guard in
+      * [[commitDml]]. Under row tracking inserted rows are fresh on both
+      * materialized columns.
       */
-    def inserts(matchedKeys: => DataFrame): (Option[DataFrame], Map[String, Long]) =
+    def inserts(matched: DataFrame, seen: Option[Seq[Row]]): (Option[DataFrame], Map[String, Long]) =
       if (!insert) (None, Map.empty)
       else {
-        val (withIds, bumps) = DeltaWrite.mintIdentity(
-          source.get.join(matchedKeys, keys, "left_anti"), DeltaWrite.identityFieldsOf(meta))
+        val rest = seen.fold(source.get.join(matched.select(keys.map(col): _*), keys, "left_anti"))(
+          t => source.get.filter(!coalesce(keyIn(schema, keys, t), lit(false))))
+        val (withIds, bumps) = DeltaWrite.mintIdentity(rest, DeltaWrite.identityFieldsOf(meta))
         (Some(withIds.select(fieldCols ++ rt.toSeq.flatMap(r => Seq(
           lit(null).cast("long").as(r.matId), lit(null).cast("long").as(r.matVer))): _*)), bumps)
       }
@@ -331,70 +366,86 @@ object DeltaMerge {
 
   // ------------------------------------------------------- the executors
 
-  /** Run `d` copy-on-write: discover the touched files, rewrite them
-    * through ONE projection ([[Dml.becomes]] over every row, matched rows
-    * dropped by a delete), add the inserts, commit. Matched keys
-    * necessarily live in touched files, so the replacement join and the
-    * insert anti-join run against the TOUCHED subset — the untouched 99%
-    * of the table is never read again.
+  /** Run `d` copy-on-write: find the files holding matched rows
+    * ([[observed]], nothing materialized), rewrite those files through ONE
+    * projection ([[Dml.becomes]] over every row, matched rows dropped by a
+    * delete), add the inserts, commit. Matched keys necessarily live in
+    * touched files, so the replacement join and the insert split run
+    * against the TOUCHED subset — the untouched 99% of the table is never
+    * read again. The CDC images read the rewrite's own rows, so the change
+    * files are laid out as the touched files are; a small source's key
+    * list finds the pre-images without a join.
     */
   private def copyOnWrite(spark: SparkSession, d: Dml): Long = {
-    val touched = touchedFiles(spark, d.path, d.meta, d.snap.files, d.matching)
+    val (_, touched, seen) = observed(d, d.matching(DeltaRead.filesDf(spark, d.path, d.meta,
+      d.snap.files, provenance = true)), materialize = false)
     if (touched.isEmpty && !d.insert) return -1L
     val base = baseWithRowIds(spark, d.path, d.meta, touched, d.rt)
     val rows = d.joined(base, "left_outer")
     val kept = if (d.set.isEmpty) rows.filter(!d.hit) else rows
-    val (inserted, hwBumps) = d.inserts(base.select(d.keys.map(col): _*))
+    val (inserted, hwBumps) = d.inserts(base, seen)
     val matched = rows.filter(d.hit)
     val newData = (kept.select(d.becomes(Some(d.hit)): _*) +: inserted.toSeq)
       .reduce(_ unionByName _)
     commitDml(spark, d, touched.map(DvPlan(_, None)), deletionVectors = false,
-      Some(newData), changes(d, matched, d.set.map(_ => matched.select(d.becomes(None): _*)),
-        inserted), hwBumps)
+      Some(newData), changes(d, d.keyList.fold(matched)(base.filter),
+        d.set.map(_ => matched.select(d.becomes(None): _*)), inserted), hwBumps)
   }
 
   /** Run `d` by deletion vector: ONE row-index scan finds the matched
-    * rows, [[buildDvPlans]] shadows their positions, the replacement rows
-    * and inserts append as new files, commit. When the matched rows feed
-    * more than the bitmap build — replacements, the insert split, CDC
-    * pre-images — they are materialized once (O(changed rows), this
-    * mode's contract), so the table is scanned exactly once. Row
-    * tracking resolves each replaced row's stable id here, before its
-    * position is shadowed, so the re-appended row carries it
-    * materialized.
+    * rows, beside their source rows when they are replaced,
+    * [[buildDvPlans]] shadows their positions, the replacement rows and
+    * inserts append as new files, commit. When the matched rows feed more
+    * than the bitmap build — replacements, the insert split, CDC images —
+    * they are materialized once ([[observed]], O(changed rows), this
+    * mode's contract), so the table is scanned exactly once. Row tracking
+    * resolves each replaced row's stable id here, before its position is
+    * shadowed, so the re-appended row carries it materialized.
     */
   private def withDeletionVectors(spark: SparkSession, d: Dml,
       maxVectorFileBytes: Long = DvWrite.DefaultMaxVectorFileBytes): Long = {
     val live = d.snap.files
     val root = new Path(d.path)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val found = d.matching(DeltaRead.filesDf(spark, d.path, d.meta, live, provenance = true,
+    val hits = d.matching(DeltaRead.filesDf(spark, d.path, d.meta, live, provenance = true,
       rowIndex = true, extraPhysCols = DeltaWrite.rowTrackingFields(d.rt)))
+    val found = d.set.fold(hits)(_ => d.joined(hits, "inner"))
     val resolved = d.rt.filter(_ => d.set.isDefined).fold(found)(r =>
       DeltaWrite.materializeRowIds(spark, d.path, r, live, found, keepHelpers = true))
-    // without CDF a keyed verb needs only keys, identity values (matched
-    // updates re-append with the TARGET's stored value; the source omits
-    // them) and positions, so the scan prunes every other column
-    val pruned =
-      if (d.cdf || d.where.isDefined) resolved
-      else resolved.select((d.keys ++ DeltaWrite.identityFieldsOf(d.meta).map(_.name)).map(col) ++
-        Seq(col("__file"), col("__row_idx")) ++ d.rt.toSeq.map(r => col(s"`${r.matId}`")): _*)
-    val matched =
-      if (d.cdf || d.set.isDefined || d.insert) pruned.localCheckpoint()
-      else pruned
+    val (matched, _, seen) =
+      if (d.cdf || d.set.isDefined || d.insert) observed(d, resolved, materialize = true)
+      else (resolved, Nil, None)
     val planned = buildDvPlans(spark, fs, root, live, matched, maxVectorFileBytes)
     if (planned.isEmpty && !d.insert) return -1L
     // one replacement PER MATCHED TARGET ROW, not per source key: a
     // duplicate-key target row shadows BOTH positions, and the
     // copy-on-write path updates both (multiplicity preserved — upstream
     // Delta MERGE semantics); the source holds ≤1 row per key
-    val replaced = d.set.map(_ => d.joined(matched, "inner").select(d.becomes(None): _*))
-    // a source key matched iff it appears among the matched rows — the
-    // key set is tiny (≤ |source|), so the anti-join broadcasts it
-    val (inserted, hwBumps) = d.inserts(matched.select(d.keys.map(col): _*).distinct())
+    val replaced = d.set.map(_ => matched.select(d.becomes(None): _*))
+    val (inserted, hwBumps) = d.inserts(matched, seen)
     commitDml(spark, d, planned, deletionVectors = true,
       (replaced.toSeq ++ inserted).reduceOption(_ unionByName _),
       changes(d, matched, replaced, inserted), hwBumps)
+  }
+
+  /** Run `hits` — the matched rows — in ONE job that observes the live
+    * files they sit in and, with a key list, the keys they matched: only
+    * distinct values reach the driver, O(files touched + source keys),
+    * never O(rows). With `materialize` the same job checkpoints the rows
+    * (O(changed rows)) for the readers after it.
+    */
+  private def observed(d: Dml, hits: DataFrame, materialize: Boolean)
+      : (DataFrame, Seq[DeltaRead.LiveFile], Option[Seq[Row]]) = {
+    val obs = new Observation()
+    val watched = hits.observe(obs, collect_set(col("__file")).as("f"), d.keyList.map(_ =>
+      collect_set(struct(d.keys.map(col): _*)).as("k")).toSeq: _*)
+    val out = if (materialize) watched.localCheckpoint()
+      else { watched.write.format("noop").mode("overwrite").save(); hits }
+    val byBase = byBasename(d.snap.files)
+    val paths = obs.get("f").asInstanceOf[scala.collection.Seq[String]]
+      .map(liveByUri(byBase, _).path).toSet
+    (out, d.snap.files.filter(f => paths.contains(f.path)),
+      d.keyList.map(_ => obs.get("k").asInstanceOf[scala.collection.Seq[Row]].toSeq))
   }
 
   /** Read `touched` with STABLE ROW IDS attached when the table is
@@ -413,20 +464,6 @@ object DeltaMerge {
         provenance = false, rowIndex = true,
         extraPhysCols = DeltaWrite.rowTrackingFields(rt))
       DeltaWrite.materializeRowIds(spark, path, r, touched, scanned)
-  }
-
-  /** The live files whose rows survive `hit` applied to a provenance scan
-    * — distinct `__file` values only reach the driver (O(files touched),
-    * never O(rows)).
-    */
-  private def touchedFiles(spark: SparkSession, path: String,
-      meta: DeltaRead.Meta, live: Seq[DeltaRead.LiveFile],
-      hit: DataFrame => DataFrame): Seq[DeltaRead.LiveFile] = {
-    val prov = DeltaRead.filesDf(spark, path, meta, live, provenance = true)
-    val byBase = byBasename(live)
-    val hitPaths = hit(prov).select(col("__file")).distinct()
-      .collect().map(r => liveByUri(byBase, r.getString(0)).path).toSet
-    live.filter(f => hitPaths.contains(f.path))
   }
 
   /** Live files keyed by basename, for [[liveByUri]]. */
@@ -452,6 +489,45 @@ object DeltaMerge {
     }
     require(cands.size == 1, s"cannot attribute scanned file $uri to a live file")
     cands.head
+  }
+
+  /** Whether a row's `keys` are one of `tuples`, with the join's
+    * equality: one key column whose literals compare as the join does
+    * ([[listable]]) is listed as it is; any other key is listed as a
+    * struct, compared by Spark's ordering (NaN equals NaN, -0.0 equals
+    * 0.0, binary by content). NULL when a listed single key is NULL.
+    */
+  private def keyIn(schema: StructType, keys: Seq[String], tuples: Seq[Row]): Column = keys match {
+    case Seq(k) if listable(schema(k)) => inSet(col(k), schema(k).dataType, tuples.map(_.get(0)))
+    case _ => inSet(struct(keys.map(col): _*), StructType(keys.map(schema(_))), tuples)
+  }
+
+  /** `c` IN `values` (of type `t`) as one InSet: a thousand-key list is
+    * one expression to analyze, not a thousand literals.
+    */
+  private def inSet(c: Column, t: DataType, values: Seq[Any]): Column = GraftSqlShims.column(
+    InSet(GraftSqlShims.expression(c), values.map(Literal.create(_, t).value).toSet))
+
+  /** Key columns whose IN-list literals compare as the join's keys do —
+    * not floats (-0.0 and NaN compare apart), not binary (by reference).
+    */
+  private def listable(f: StructField): Boolean = f.dataType match {
+    case ByteType | ShortType | IntegerType | LongType | StringType | DateType | TimestampType |
+        _: DecimalType => true
+    case _ => false
+  }
+
+  /** A key value under `groupBy`'s equality, for the driver-side
+    * cardinality check: NULL equals NULL, NaN equals NaN (the canonical
+    * bits), -0.0 equals 0.0 (adding 0.0 turns -0.0 into 0.0), binary by
+    * content.
+    */
+  private def groupKey(v: Any): Any = v match {
+    case d: Double => java.lang.Double.doubleToLongBits(d + 0.0)
+    case f: Float => java.lang.Float.floatToIntBits(f + 0.0f)
+    case b: Array[Byte] => b.toSeq
+    case r: Row => r.toSeq.map(groupKey)
+    case o => o
   }
 
   // ------------------------------------------------------- DV internals

@@ -6,7 +6,7 @@ import com.fasterxml.jackson.databind.JsonNode
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DataType, LongType, StructField, StructType}
+import org.apache.spark.sql.types.{ArrayType, DataType, LongType, MapType, StructField, StructType}
 
 /** Delta Lake table state and log I/O, implemented directly against the
   * PUBLIC transaction-log format (delta.io PROTOCOL.md: a `_delta_log/`
@@ -987,9 +987,11 @@ object DeltaRead {
     * only the commit JSONs after it, so an operation's log cost grows with
     * the commits it has not seen, not with the table's history. A cached
     * snapshot is used only while the listing still shows its version's
-    * commit JSON with the same length and modification time, that file's
-    * bytes still match (a table deleted and recreated at the same path is
-    * never served stale), and every commit JSON after it is present —
+    * anchor — the commit JSON or, once metadata cleanup deleted that, the
+    * version's checkpoint file — with the same length and modification
+    * time, that file's bytes still match (a table deleted and recreated
+    * at the same path is never served stale), and every commit JSON after
+    * it is present —
     * otherwise the replay is cold: the last checkpoint (one Spark job),
     * then compacted ranges and commit JSONs. Time travel to exactly the
     * cached version is served from it; older versions replay cold.
@@ -1003,10 +1005,13 @@ object DeltaRead {
     val listing = fs.listStatus(dir).toSeq
     val names = listing.map(_.getPath.getName)
     val commits = listing.flatMap(st => commitVersion(st.getPath.getName).map(_ -> st)).toMap
+    // each version's anchor: its commit JSON, else its first checkpoint file
+    val anchors = listing.sortBy(_.getPath.getName).reverse
+      .flatMap(st => checkpointVersion(st.getPath.getName).map(_ -> st)).toMap ++ commits
     val target = versionAsOf.getOrElse(listedHead(names))
     val key = fs.makeQualified(dir).toString
     val entry = cache.synchronized(Option(cache.get(key)))
-      .filter(c => commits.get(c.snap.version).exists(c.intact(fs, _)))
+      .filter(c => anchors.get(c.snap.version).exists(c.intact(fs, _)))
     val snap = entry.filter(c => c.snap.version <= target &&
         (c.snap.version + 1 to target).forall(commits.contains)) match {
       case Some(c) if c.snap.version == target => c.snap
@@ -1017,14 +1022,14 @@ object DeltaRead {
       case None => replayCold(spark, fs, dir, names, versionAsOf, target)
     }
     if (entry.forall(_.snap.version < snap.version))
-      commits.get(snap.version).foreach { st =>
+      anchors.get(snap.version).foreach { st =>
         val c = Cached(snap, st.getLen, st.getModificationTime, digest(fs, st.getPath))
         cache.synchronized(cache.put(key, c))
       }
     snap
   }
 
-  /** A cached head snapshot and the identity of its version's commit JSON. */
+  /** A cached head snapshot and the identity of its version's anchor file. */
   private final case class Cached(snap: Snapshot, len: Long, mtime: Long, bytes: Seq[Byte]) {
     def intact(fs: FileSystem, st: FileStatus): Boolean =
       st.getLen == len && st.getModificationTime == mtime && digest(fs, st.getPath) == bytes
@@ -1321,11 +1326,12 @@ object DeltaRead {
 
   /** Every action row of checkpoint files — the top file(s) in whichever
     * form they are stored (a V2 top file may be JSON) or v2 sidecars —
-    * in ONE Spark job. The one place checkpoints are read. When a file
-    * stores an action field under another type than [[CheckpointSchema]]
-    * (a DV `offset` as INT32, an untyped empty array), each file is read
-    * under its own inferred schema instead and cast field by field into
-    * the fixed one.
+    * in ONE Spark job. The one place checkpoints are read. When a parquet
+    * file's footer stores an action field under another type than
+    * [[CheckpointSchema]] (a DV `offset` as INT32, an untyped empty
+    * array), which would fail the fixed-schema job, each file is read
+    * under its own footer schema instead and cast field by field into the
+    * fixed one — decided on the driver, before any job runs.
     */
   private[io] def checkpointRows(spark: SparkSession, paths: Seq[String]): Seq[Row] = {
     def load(files: Seq[String], schema: Option[StructType]): DataFrame = {
@@ -1343,16 +1349,26 @@ object DeltaRead {
             .as(f.name)): _*))
       case _ => c.cast(want)
     }
-    try actions(load(paths, Some(CheckpointSchema)))
-    catch {
-      case e: org.apache.spark.SparkException
-          if e.getCondition == "FAILED_READ_FILE.PARQUET_COLUMN_DATA_TYPE_MISMATCH" =>
-        actions(paths.map { p =>
-          val df = load(Seq(p), None)
-          df.select(CheckpointSchema.fields.toSeq.map(f => conform(col(f.name),
-            df.schema.find(_.name == f.name).map(_.dataType), f.dataType).as(f.name)): _*)
-        }.reduce(_ unionByName _))
+    def fits(have: DataType, want: DataType): Boolean = (have, want) match {
+      case (h: StructType, w: StructType) =>
+        w.fields.forall(f => h.find(_.name == f.name).forall(x => fits(x.dataType, f.dataType)))
+      case (ArrayType(h, _), ArrayType(w, _)) => fits(h, w)
+      case (MapType(hk, hv, _), MapType(wk, wv, _)) => fits(hk, wk) && fits(hv, wv)
+      case _ => have == want
     }
+    val conf = spark.sparkContext.hadoopConfiguration
+    val footers = paths.map(p => Option.when(!p.endsWith(".json")) {
+      val meta = org.apache.parquet.hadoop.ParquetFileReader.readFooter(conf, new Path(p),
+        org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS)
+      new org.apache.spark.sql.execution.datasources.parquet.ParquetToSparkSchemaConverter(
+        spark.sessionState.conf).convert(meta.getFileMetaData.getSchema)
+    })
+    if (footers.flatten.forall(fits(_, CheckpointSchema))) actions(load(paths, Some(CheckpointSchema)))
+    else actions(paths.zip(footers).map { case (p, footer) =>
+      val df = load(Seq(p), footer)
+      df.select(CheckpointSchema.fields.toSeq.map(f => conform(col(f.name),
+        df.schema.find(_.name == f.name).map(_.dataType), f.dataType).as(f.name)): _*)
+    }.reduce(_ unionByName _))
   }
 
   /** The version of a commit file `NNN.json`, None for every other log

@@ -57,7 +57,7 @@ class DeltaJobBudgetSpec extends SparkSpec {
     assert(counts == Map(
       "read cold" -> 2, "read warm" -> 2, "checkpoint" -> 1,
       "read warm after checkpoint" -> 2, "read cold after checkpoint" -> 3,
-      "lastTxnVersion" -> 0, "COW MERGE" -> 16, "DV MERGE" -> 18, "compact" -> 1,
+      "lastTxnVersion" -> 0, "COW MERGE" -> 8, "DV MERGE" -> 9, "compact" -> 1,
       "checkpoint again" -> 1), counts.toSeq.sortBy(_._1).mkString(", "))
     assert(DeltaRead.readDeltaTable(spark, t).count() == 401L)
   }
@@ -72,7 +72,7 @@ class DeltaJobBudgetSpec extends SparkSpec {
       "DV UPDATE" -> jobs(DeltaMerge.updateWhereDv(spark, t, col("id").between(100, 119),
         Map("v" -> (col("v") + 1)))),
       "DV DELETE" -> jobs(DeltaMerge.deleteWhereDv(spark, t, col("id").between(300, 309))))
-    assert(counts == Map("COW UPDATE" -> 4, "COW DELETE" -> 4, "DV UPDATE" -> 5,
+    assert(counts == Map("COW UPDATE" -> 3, "COW DELETE" -> 3, "DV UPDATE" -> 5,
       "DV DELETE" -> 4), counts.toSeq.sortBy(_._1).mkString(", "))
     assert(DeltaRead.readDeltaTable(spark, t).count() == 381L)
   }

@@ -290,4 +290,83 @@ class DeltaMergeSpec extends SparkSpec {
     assert(after("k3")._1 == 3L, s"insert must mint rid 3: ${after("k3")}")
     assert(!ids0.values.toSet.contains(after("k3")._3), "insert gets a FRESH row id")
   }
+
+  /** `f` on the small-source path, then again with Spark's broadcast
+    * threshold off, which takes the large-source path.
+    */
+  private def onBothPaths[T](f: => T): Seq[T] = {
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val small = f
+    val was = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try Seq(small, f) finally spark.conf.set(key, was)
+  }
+
+  /** Merges `src` on `keys` into a fresh change-feed table holding `base`,
+    * in both storage modes; returns per mode the sorted table rows and
+    * the merge's sorted change rows.
+    */
+  private def merged(base: org.apache.spark.sql.DataFrame, src: org.apache.spark.sql.DataFrame,
+      keys: Seq[String]): Seq[(Seq[String], Seq[String])] = Seq(false, true).map { dv =>
+    val t = tmp("graft_dm_paths") + "/t"
+    DeltaWrite.writeDeltaTable(base.repartition(2), t, "append")
+    DeltaWrite.setTableProperties(spark, t, Map("delta.enableChangeDataFeed" -> "true"))
+    val v = DeltaMerge.merge(spark, t, src, keys, useDeletionVectors = dv)
+    def sorted(df: org.apache.spark.sql.DataFrame): Seq[String] =
+      df.select(base.columns.map(col) ++ df.columns.filter(_ == "_change_type").map(col): _*)
+        .collect().map(_.toSeq.mkString("|")).toSeq.sorted
+    (sorted(DeltaRead.readDeltaTable(spark, t)), sorted(DeltaRead.changeFeed(spark, t, v - 1, Some(v))))
+  }
+
+  test("merge cardinality check keys as groupBy does, on both source paths") {
+    def refused(src: org.apache.spark.sql.DataFrame, keys: Seq[String]): Boolean = {
+      val t = tmp("graft_dm_card") + "/t"
+      DeltaWrite.writeDeltaTable(src.limit(0), t, "append")
+      scala.util.Try(DeltaMerge.merge(spark, t, src, keys)).failed.toOption
+        .exists(_.getMessage.contains("more than one row"))
+    }
+    val nan = Double.NaN
+    val cases = Seq(
+      Seq((Option(1L), "x"), (Option(1L), "y")).toDF("id", "v") -> true,
+      Seq((Option.empty[Long], "x"), (Option.empty[Long], "y")).toDF("id", "v") -> true,
+      Seq((Option.empty[Long], "x"), (Option(1L), "y")).toDF("id", "v") -> false,
+      Seq((nan, "x"), (nan, "y")).toDF("id", "v") -> true,
+      Seq((-0.0, "x"), (0.0, "y")).toDF("id", "v") -> true,
+      Seq((1.0, "x"), (nan, "y")).toDF("id", "v") -> false)
+    cases.foreach { case (src, dup) =>
+      assert(onBothPaths(refused(src, Seq("id"))) == Seq(dup, dup), src.collect().mkString(", "))
+    }
+    val pairs = Seq((1L, "a", 1L), (1L, "a", 2L)).toDF("k1", "k2", "v")
+    assert(onBothPaths(refused(pairs, Seq("k1", "k2"))) == Seq(true, true))
+    assert(onBothPaths(refused(pairs, Seq("k1", "v"))) == Seq(false, false))
+  }
+
+  test("NULL merge keys match nothing and insert, the same on both source paths") {
+    val base = Seq((Option(1L), "a", 1L), (Option.empty[Long], "n", 2L), (Option(5L), "e", 5L))
+      .toDF("id", "v", "n")
+    val src = Seq((Option.empty[Long], "N", 20L), (Option(1L), "A", 10L), (Option(3L), "c", 3L))
+      .toDF("id", "v", "n")
+    val Seq(small, large) = onBothPaths(merged(base, src, Seq("id")))
+    assert(small == large)
+    small.foreach { case (table, feed) =>
+      assert(table == Seq("1|A|10", "5|e|5", "3|c|3", "null|N|20", "null|n|2").sorted)
+      assert(feed == Seq("1|a|1|update_preimage", "1|A|10|update_postimage", "3|c|3|insert",
+        "null|N|20|insert").sorted)
+    }
+  }
+
+  test("a two-column key merges on the pair, the same on both source paths") {
+    val base = Seq((1L, "a", 10L), (1L, "b", 11L), (2L, "a", 20L), (2L, "b", 21L))
+      .toDF("k1", "k2", "v")
+    // every key column value of the source exists alone in the table, but
+    // only (1, b) exists as a pair
+    val src = Seq((1L, "b", 110L), (2L, "c", 220L), (3L, "a", 330L)).toDF("k1", "k2", "v")
+    val Seq(small, large) = onBothPaths(merged(base, src, Seq("k1", "k2")))
+    assert(small == large)
+    small.foreach { case (table, feed) =>
+      assert(table == Seq("1|a|10", "1|b|110", "2|a|20", "2|b|21", "2|c|220", "3|a|330"))
+      assert(feed == Seq("1|b|11|update_preimage", "1|b|110|update_postimage", "2|c|220|insert",
+        "3|a|330|insert").sorted)
+    }
+  }
 }

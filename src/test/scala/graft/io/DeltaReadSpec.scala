@@ -43,6 +43,25 @@ class DeltaReadSpec extends SparkSpec {
   private def fsize(table: String, name: String): Long =
     Files.size(Paths.get(table, name))
 
+  /** `f`'s result, failing when a Spark job failed while it ran: a
+    * checkpoint whose fields are stored under other types must be read
+    * the right way first, not after a failed job.
+    */
+  private def noFailedJob[T](f: => T): T = {
+    val failed = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobEnd(e: org.apache.spark.scheduler.SparkListenerJobEnd): Unit =
+        if (e.jobResult != org.apache.spark.scheduler.JobSucceeded) failed.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val out = f
+      org.apache.spark.ListenerDrain.drain(spark.sparkContext)
+      assert(failed.get == 0, s"${failed.get} Spark jobs failed")
+      out
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
   test("log replay: adds accumulate, removes tombstone, schema comes from metaData") {
     val table = tmp("graft_delta1")
     val d1 = Seq((1L, "a"), (2L, "b")).toDF("id", "v")
@@ -165,6 +184,17 @@ class DeltaReadSpec extends SparkSpec {
     assert(in.collect().map(_.getLong(0)).sorted.toSeq == Seq(2L, 100L))
     assert(filesRead(DeltaRead.readDeltaTable(spark, table)
       .filter(col("id").isin(2L, 100L))) == 2L)
+    // an isin of more than 10 values plans as InSet; it skips exactly the
+    // files whose [min, max] holds none of its values
+    def inSet(ids: Seq[Long]): org.apache.spark.sql.DataFrame =
+      DeltaRead.readDeltaTable(spark, table).filter(col("id").isin(ids: _*))
+    val wide = (3L to 9L) ++ Seq(15L, 16L, 17L, 18L, 100L)
+    assert(inSet(wide).queryExecution.optimizedPlan.exists(_.expressions.exists(
+      _.exists(_.isInstanceOf[org.apache.spark.sql.catalyst.expressions.InSet]))))
+    assert(inSet(wide).collect().map(_.getLong(0)).toSeq == Seq(100L))
+    assert(filesRead(inSet(wide)) == 2L)
+    assert(filesRead(inSet((3L to 9L) ++ (21L to 30L))) == 0L)
+    assert(filesRead(inSet((30L to 45L) :+ 1L)) == 1L)
     // OR of ranges: union of each side's may-match set
     assert(filesRead(DeltaRead.readDeltaTable(spark, table)
       .filter(col("id") < 3 || col("id") > 50)) == 2L)
@@ -254,8 +284,8 @@ class DeltaReadSpec extends SparkSpec {
       s"""{"remove":{"path":"$f1","dataChange":true}}""",
       s"""{"add":{"path":"$f3","partitionValues":{},"size":${fsize(table, f3)},"dataChange":true}}"""))
 
-    val got = DeltaRead.readDeltaTable(spark, table)
-      .orderBy("id").collect().map(_.getLong(0))
+    val got = noFailedJob(DeltaRead.readDeltaTable(spark, table)
+      .orderBy("id").collect().map(_.getLong(0)))
     assert(got.toSeq == Seq(2L, 3L))
     assert(DeltaRead.latestVersion(spark, table) == 2L)
   }
@@ -306,12 +336,12 @@ class DeltaReadSpec extends SparkSpec {
       s"""{"remove":{"path":"$f1","dataChange":true}}""",
       s"""{"add":{"path":"$f3","partitionValues":{},"size":${fsize(table, f3)},"dataChange":true}}"""))
 
-    val got = DeltaRead.readDeltaTable(spark, table)
-      .orderBy("id").collect().map(_.getLong(0))
+    val got = noFailedJob(DeltaRead.readDeltaTable(spark, table)
+      .orderBy("id").collect().map(_.getLong(0)))
     assert(got.toSeq == Seq(2L, 3L))
     // time travel INTO the checkpoint state sees f1+f2
-    assert(DeltaRead.readDeltaTable(spark, table, versionAsOf = Some(1L))
-      .orderBy("id").collect().map(_.getLong(0)).toSeq == Seq(1L, 2L))
+    assert(noFailedJob(DeltaRead.readDeltaTable(spark, table, versionAsOf = Some(1L))
+      .orderBy("id").collect().map(_.getLong(0)).toSeq) == Seq(1L, 2L))
   }
 
   test("unknown-mode mapping whose metaData lives only in the checkpoint is rejected") {
@@ -430,7 +460,7 @@ class DeltaReadSpec extends SparkSpec {
     Files.move(cpFile, logDir.resolve(f"${1L}%020d.checkpoint.parquet"))
     Files.writeString(logDir.resolve("_last_checkpoint"), """{"version":1,"size":3}""")
     Files.delete(logDir.resolve(f"${0L}%020d.json")) // log cleanup
-    assert(DeltaRead.readDeltaTable(spark, table, versionAsOf = Some(1L)).count() == 2L)
+    assert(noFailedJob(DeltaRead.readDeltaTable(spark, table, versionAsOf = Some(1L)).count()) == 2L)
     val e2 = intercept[IllegalArgumentException] {
       DeltaRead.readDeltaTable(spark, table, versionAsOf = Some(0L))
     }
@@ -470,8 +500,8 @@ class DeltaReadSpec extends SparkSpec {
     Files.writeString(logDir.resolve("_last_checkpoint"), """{"version":1,"size":3,"parts":2}""")
     writeCommit(table, 2, Seq(
       s"""{"add":{"path":"$f3","partitionValues":{},"size":${fsize(table, f3)},"dataChange":true}}"""))
-    val got = DeltaRead.readDeltaTable(spark, table)
-      .orderBy("id").collect().map(_.getLong(0))
+    val got = noFailedJob(DeltaRead.readDeltaTable(spark, table)
+      .orderBy("id").collect().map(_.getLong(0)))
     assert(got.toSeq == Seq(1L, 2L, 3L))
   }
 

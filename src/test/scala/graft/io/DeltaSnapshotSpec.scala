@@ -68,6 +68,9 @@ class DeltaSnapshotSpec extends SparkSpec {
     assert(DeltaWrite.cleanupMetadata(spark, t, retentionMs = 0L)
       .contains(f"${3L}%020d.json"))
     assert(coherent(t).version == 3L)
+    // v3's JSON is gone, so the cache anchors on v3's checkpoint: the
+    // cold lookup above stored it and the next one decodes nothing
+    assert(jobs(assert(DeltaRead.snapshot(spark, t).version == 3L)) == 0)
     append(t, 15L)                                                             // v4
     append(t, 20L)                                                             // v5
     val s5 = coherent(t)
