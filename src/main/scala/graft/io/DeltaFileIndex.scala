@@ -159,7 +159,8 @@ private[io] class DeltaLogFileIndex(
     tablePath: String,
     files: Seq[DeltaRead.LiveFile],
     override val partitionSchema: StructType,
-    genPrune: Map[String, GenPrune] = Map.empty) extends FileIndex {
+    genPrune: Map[String, GenPrune] = Map.empty,
+    dataSkipping: Boolean = true) extends FileIndex {
 
   override def rootPaths: Seq[Path] = Seq(new Path(tablePath))
 
@@ -192,11 +193,12 @@ private[io] class DeltaLogFileIndex(
       }
 
     // each filter compiles once per listing, each file's stats parse once
-    val tests = dataFilters.map(mayMatch)
+    val skipping = if (dataSkipping) dataFilters else Nil
+    val tests = skipping.map(mayMatch)
     files
       .filter(f => partPred(partValues(f.partitionValues)))
       .filter(f => tests.isEmpty || f.stats.map(DeltaActions.parse).forall(st => tests.forall(_(st))))
-      .filter(f => dataFilters.forall(genMayMatch(partValues(f.partitionValues), _)))
+      .filter(f => skipping.forall(genMayMatch(partValues(f.partitionValues), _)))
       .groupBy(_.partitionValues)
       .map { case (pv, fs) =>
         PartitionDirectory(partValues(pv), fs.map(fileStatus).toArray)

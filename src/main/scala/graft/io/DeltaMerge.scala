@@ -31,27 +31,28 @@ import org.apache.spark.sql.types._
   * delete), an inserted row an insert.
   *
   * Scale shape:
-  *   - MERGE materializes its source once; the same job counts it. A
-  *     source whose rows × default row size fit Spark's
+  *   - MERGE materializes its source once; the same job counts its rows
+  *     and the bytes its values hold. A source within Spark's
   *     `spark.sql.autoBroadcastJoinThreshold` is SMALL: its keys reach the
   *     driver in one shuffle-free job, the cardinality check runs there
   *     (with `groupBy`'s key equality), and the keys filter the match scan
-  *     as IN lists — the log-backed file index skips every file whose
-  *     add.stats min/max hold none of them before any I/O, and the list of
-  *     key tuples matches exactly, so finding the matched rows needs no
-  *     join. Every join to a small source (the rewrite, the post-images)
-  *     broadcasts it. A LARGER source keeps the aggregate check and a
-  *     semi-join the planner shapes; a threshold of -1 always takes this
-  *     path.
+  *     as one IN list, so finding the matched rows needs no join: for a
+  *     single integral, string, date, timestamp or decimal key the
+  *     log-backed file index skips every file whose add.stats min/max hold
+  *     none of them before any I/O; any other key is listed as key tuples,
+  *     which match exactly and skip no file. A LARGER source keeps the aggregate check and a semi-join; a
+  *     threshold of -1 always takes this path. Where the cutover sits for
+  *     real traffic is unmeasured: no benchmark merges a large source.
   *   - Predicate verbs push their condition into the same scan (stats and
   *     partition skipping).
-  *   - The matched rows are materialized in ONE job that also observes
-  *     the files they sit in and, with a key list, the keys they matched;
-  *     only those distinct values reach the driver — O(files touched +
-  *     source keys), never O(rows) — and the insert split is a filter on
-  *     them.
+  *   - The matched rows run in ONE job that also observes the files they
+  *     sit in and, with a key list, the keys they matched; only those
+  *     distinct values reach the driver — O(files touched + source keys),
+  *     never O(rows) — and the insert split is a filter on them.
   *   - The rewrite reads only the touched files through the log-backed
   *     file index; a merge touching 10 files out of a million rewrites 10.
+  *     Its joins to the source are the planner's, so the staged files are
+  *     laid out the same on both source paths.
   *   - Log work is driver-side and O(files touched) (the Delta contract).
   */
 object DeltaMerge {
@@ -123,32 +124,26 @@ object DeltaMerge {
 
     // The source feeds the cardinality check, file discovery, the rewrite
     // join, the insert split and the CDC rows — materialize it ONCE; the
-    // same job counts it.
+    // same job measures it: 8 bytes a row plus the bytes its values hold.
     val sized = new Observation()
-    val source1 = source0.observe(sized, count(lit(1)).as("n")).localCheckpoint()
+    val source1 = source0.observe(sized, (count(lit(1)) * 8L + coalesce(sum(source0.schema.fields
+      .map(f => bytesOf(col(s"`${f.name}`"), f.dataType)).reduce(_ + _)), lit(0L))).as("b"))
+      .localCheckpoint()
     // A source within Spark's broadcast threshold whose keys have the
     // table's types is small: its keys come to the driver in one
     // shuffle-free job, the cardinality check runs there, and they filter
-    // the match scan — an IN list per column skips files by add.stats
-    // before any I/O, an IN list of key tuples matches exactly, so finding
-    // the matched rows needs no join; every join to the source broadcasts
-    // it. A larger source keeps the aggregate check and a planner-chosen
-    // join.
+    // the match scan as an IN list — a single key's skips files by
+    // add.stats before any I/O — so finding the matched rows needs no
+    // join. A larger source keeps the aggregate check and a semi-join.
     val small = keyCols.forall(k => source0.schema(k).dataType == schema(k).dataType) &&
-      sized.get("n").asInstanceOf[Long] * (8L + source0.schema.defaultSize) <=
-        spark.sessionState.conf.autoBroadcastJoinThreshold
+      sized.get("b").asInstanceOf[Long] <= spark.sessionState.conf.autoBroadcastJoinThreshold
     val keyRows = if (small) source1.select(keyCols.map(col): _*).collect().toSeq else Nil
     val dup = if (small) keyRows.size - keyRows.map(_.toSeq.map(groupKey)).distinct.size
       else source1.groupBy(keyCols.map(col): _*).count().filter(col("count") > 1).limit(1).count()
-    require(dup == 0L,
-      "merge source has more than one row for some key — the update would be " +
-        "nondeterministic (Delta MERGE cardinality violation)")
-    // a NULL key matches nothing; a compound key also gets a list per
-    // listable column, for the file skipping
-    val tuples = keyRows.filterNot(_.anyNull)
-    val keyList = Option.when(small)((keyCols.filter(k => keyCols.size > 1 && listable(schema(k)))
-      .map(k => inSet(col(k), schema(k).dataType, tuples.map(_.getAs[Any](k)))) :+
-      keyIn(schema, keyCols, tuples)).reduce(_ && _))
+    require(dup == 0L, "merge source has more than one row for some key — the update would be " +
+      "nondeterministic (Delta MERGE cardinality violation)")
+    // a NULL key matches nothing
+    val keyList = Option.when(small)(keyIn(schema, keyCols, keyRows.filterNot(_.anyNull)))
 
     // UPDATE SET *: every column but the keys and the identity columns
     // (which carry the target's stored value) takes the source's
@@ -273,8 +268,7 @@ object DeltaMerge {
     *   - (a) how a row matches: `where` (a predicate over the row) or,
     *     without it, a semi-join of the row's `keys` to the `source` (at
     *     most one row per key, materialized) — or, for a small source,
-    *     `keyList`, its keys as IN lists; a small source's side of every
-    *     join broadcasts;
+    *     `keyList`, its keys as an IN list;
     *   - (b) what a matched row becomes: `set` maps columns to their new
     *     value over the row beside its source row ([[joined]] — a keyed
     *     verb reads the source's column `c` as `__s_c`); every other
@@ -309,11 +303,9 @@ object DeltaMerge {
       * source row (`__m` marks the match; `how` = left_outer keeps the
       * unmatched rows), a predicate verb reads the row alone.
       */
-    def joined(rows: DataFrame, how: String): DataFrame = source.fold(rows) { s =>
-      val side = s.select(keys.map(col) ++ schema.fieldNames.filter(n => set.exists(_.contains(n)))
-        .map(n => col(n).as(s"__s_$n")) :+ lit(true).as("__m"): _*)
-      rows.join(if (keyList.isDefined) broadcast(side) else side, keys, how)
-    }
+    def joined(rows: DataFrame, how: String): DataFrame = source.fold(rows)(s =>
+      rows.join(s.select(keys.map(col) ++ schema.fieldNames.filter(n => set.exists(_.contains(n)))
+        .map(n => col(n).as(s"__s_$n")) :+ lit(true).as("__m"): _*), keys, how))
 
     /** (b) As one projection of [[joined]] rows: a matched row takes `set`
       * and, under row tracking, keeps its stable id but nulls its
@@ -329,18 +321,18 @@ object DeltaMerge {
           pick(lit(null).cast("long"), col(s"`${r.matVer}`")).as(r.matVer)))
     }
 
-    /** (c) The source rows whose key is not among the keys of `matched`
-      * (rows holding every matched row) — or, once the matched keys were
-      * observed (`seen`), not among them — as table rows: on an identity table they get gap-free values assigned
-      * past the stored watermark — the returned bumps then force the
-      * metaData republish and the exclusive conflict guard in
-      * [[commitDml]]. Under row tracking inserted rows are fresh on both
-      * materialized columns.
+    /** (c) The source rows whose key is not among the keys of `rows`
+      * (holding every matched row) — or, once the matched keys were
+      * observed (`seen`), not among them — as table rows: on an identity
+      * table they get gap-free values assigned past the stored watermark
+      * — the returned bumps then force the metaData republish and the
+      * exclusive conflict guard in [[commitDml]]. Under row tracking
+      * inserted rows are fresh on both materialized columns.
       */
-    def inserts(matched: DataFrame, seen: Option[Seq[Row]]): (Option[DataFrame], Map[String, Long]) =
+    def inserts(rows: DataFrame, seen: Option[Seq[Row]]): (Option[DataFrame], Map[String, Long]) =
       if (!insert) (None, Map.empty)
       else {
-        val rest = seen.fold(source.get.join(matched.select(keys.map(col): _*), keys, "left_anti"))(
+        val rest = seen.fold(source.get.join(rows.select(keys.map(col): _*), keys, "left_anti"))(
           t => source.get.filter(!coalesce(keyIn(schema, keys, t), lit(false))))
         val (withIds, bumps) = DeltaWrite.mintIdentity(rest, DeltaWrite.identityFieldsOf(meta))
         (Some(withIds.select(fieldCols ++ rt.toSeq.flatMap(r => Seq(
@@ -372,9 +364,9 @@ object DeltaMerge {
     * delete), add the inserts, commit. Matched keys necessarily live in
     * touched files, so the replacement join and the insert split run
     * against the TOUCHED subset — the untouched 99% of the table is never
-    * read again. The CDC images read the rewrite's own rows, so the change
-    * files are laid out as the touched files are; a small source's key
-    * list finds the pre-images without a join.
+    * read again. The rewrite and the post-images join the source as the
+    * planner chooses on both source paths, so a key list lays out no data
+    * file differently; it only finds the pre-images without a join.
     */
   private def copyOnWrite(spark: SparkSession, d: Dml): Long = {
     val (_, touched, seen) = observed(d, d.matching(DeltaRead.filesDf(spark, d.path, d.meta,
@@ -398,9 +390,12 @@ object DeltaMerge {
     * inserts append as new files, commit. When the matched rows feed more
     * than the bitmap build — replacements, the insert split, CDC images —
     * they are materialized once ([[observed]], O(changed rows), this
-    * mode's contract), so the table is scanned exactly once. Row tracking
-    * resolves each replaced row's stable id here, before its position is
-    * shadowed, so the re-appended row carries it materialized.
+    * mode's contract), so the table is scanned exactly once. A keyed
+    * verb's scan lists every live file even with a key list (parquet
+    * still skips row groups): the replacement and change files follow its
+    * partitions, which are then the semi-join's. Row tracking resolves
+    * each replaced row's stable id here, before its position is shadowed,
+    * so the re-appended row carries it materialized.
     */
   private def withDeletionVectors(spark: SparkSession, d: Dml,
       maxVectorFileBytes: Long = DvWrite.DefaultMaxVectorFileBytes): Long = {
@@ -408,13 +403,21 @@ object DeltaMerge {
     val root = new Path(d.path)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val hits = d.matching(DeltaRead.filesDf(spark, d.path, d.meta, live, provenance = true,
-      rowIndex = true, extraPhysCols = DeltaWrite.rowTrackingFields(d.rt)))
+      rowIndex = true, extraPhysCols = DeltaWrite.rowTrackingFields(d.rt),
+      dataSkipping = d.where.isDefined))
     val found = d.set.fold(hits)(_ => d.joined(hits, "inner"))
     val resolved = d.rt.filter(_ => d.set.isDefined).fold(found)(r =>
       DeltaWrite.materializeRowIds(spark, d.path, r, live, found, keepHelpers = true))
+    // without CDF a keyed verb drops every table column but the keys and
+    // the identity columns (a matched row re-appends with the TARGET's
+    // values): the bitmaps, replacements and insert split read only
+    // those, the positions, stable ids and source values
+    val pruned = if (d.cdf || d.where.isDefined) resolved
+      else resolved.drop(d.schema.fieldNames.filterNot((d.keys ++
+        DeltaWrite.identityFieldsOf(d.meta).map(_.name)).contains): _*)
     val (matched, _, seen) =
-      if (d.cdf || d.set.isDefined || d.insert) observed(d, resolved, materialize = true)
-      else (resolved, Nil, None)
+      if (d.cdf || d.set.isDefined || d.insert) observed(d, pruned, materialize = true)
+      else (pruned, Nil, None)
     val planned = buildDvPlans(spark, fs, root, live, matched, maxVectorFileBytes)
     if (planned.isEmpty && !d.insert) return -1L
     // one replacement PER MATCHED TARGET ROW, not per source key: a
@@ -441,10 +444,9 @@ object DeltaMerge {
       collect_set(struct(d.keys.map(col): _*)).as("k")).toSeq: _*)
     val out = if (materialize) watched.localCheckpoint()
       else { watched.write.format("noop").mode("overwrite").save(); hits }
-    val byBase = byBasename(d.snap.files)
-    val paths = obs.get("f").asInstanceOf[scala.collection.Seq[String]]
-      .map(liveByUri(byBase, _).path).toSet
-    (out, d.snap.files.filter(f => paths.contains(f.path)),
+    val live = byBasename(d.snap.files)
+    val hit = obs.get("f").asInstanceOf[scala.collection.Seq[String]].map(liveByUri(live, _)).toSet
+    (out, d.snap.files.filter(hit),
       d.keyList.map(_ => obs.get("k").asInstanceOf[scala.collection.Seq[Row]].toSeq))
   }
 
@@ -511,10 +513,18 @@ object DeltaMerge {
   /** Key columns whose IN-list literals compare as the join's keys do —
     * not floats (-0.0 and NaN compare apart), not binary (by reference).
     */
-  private def listable(f: StructField): Boolean = f.dataType match {
-    case ByteType | ShortType | IntegerType | LongType | StringType | DateType | TimestampType |
-        _: DecimalType => true
-    case _ => false
+  private def listable(f: StructField): Boolean = f.dataType.isInstanceOf[DecimalType] ||
+    Seq(ByteType, ShortType, IntegerType, LongType, StringType, DateType, TimestampType)
+      .contains(f.dataType)
+
+  /** The bytes a value of type `t` holds: fixed widths as Spark sizes
+    * them, strings and binaries by their length, a nested value by the
+    * length of its JSON text (a number's digits count, so it errs large).
+    */
+  private def bytesOf(c: Column, t: DataType): Column = t match {
+    case _: StringType | BinaryType => coalesce(octet_length(c).cast("long"), lit(0L))
+    case _: ArrayType | _: MapType | _: StructType => bytesOf(to_json(c), StringType)
+    case _ => lit(t.defaultSize.toLong)
   }
 
   /** A key value under `groupBy`'s equality, for the driver-side

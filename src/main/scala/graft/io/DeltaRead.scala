@@ -393,11 +393,16 @@ object DeltaRead {
     * deleted positions never appear, since the DV branch filters them) —
     * the seam [[DeltaMerge.deleteWhereDv]] uses to build new deletion
     * bitmaps without rewriting data.
+    *
+    * With `dataSkipping = false` filters on data columns skip no file
+    * (parquet still skips row groups): every file is listed, so the scan's
+    * partitions are the full scan's whatever the filter.
     */
   private[io] def filesDf(spark: SparkSession, path: String, meta: Meta,
       files: Seq[LiveFile], provenance: Boolean,
       rowIndex: Boolean = false,
-      extraPhysCols: Seq[StructField] = Nil): DataFrame = {
+      extraPhysCols: Seq[StructField] = Nil,
+      dataSkipping: Boolean = true): DataFrame = {
     val schema = DataType.fromJson(meta.schemaJson).asInstanceOf[StructType]
     if (files.isEmpty) {
       var out = StructType(schema.fields ++ extraPhysCols)
@@ -453,7 +458,7 @@ object DeltaRead {
         else GeneratedPruning.forPartitionCols(schema, meta.partitionCols,
           meta.configuration.get(GeneratedPruning.TimeZoneProp))
       val index = new DeltaLogFileIndex(spark, path, subset, partitionSchema,
-        genPrune)
+        genPrune, dataSkipping)
       val relation = org.apache.spark.sql.execution.datasources.HadoopFsRelation(
         index, partitionSchema, dataSchema, None,
         new org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat,
@@ -988,10 +993,10 @@ object DeltaRead {
     * the commits it has not seen, not with the table's history. A cached
     * snapshot is used only while the listing still shows its version's
     * anchor — the commit JSON or, once metadata cleanup deleted that, the
-    * version's checkpoint file — with the same length and modification
-    * time, that file's bytes still match (a table deleted and recreated
-    * at the same path is never served stale), and every commit JSON after
-    * it is present —
+    * version's checkpoint file — with the same name, length and
+    * modification time, a commit JSON's bytes still match (a table
+    * deleted and recreated at the same path is never served stale), and
+    * every commit JSON after it is present —
     * otherwise the replay is cold: the last checkpoint (one Spark job),
     * then compacted ranges and commit JSONs. Time travel to exactly the
     * cached version is served from it; older versions replay cold.
@@ -1023,22 +1028,35 @@ object DeltaRead {
     }
     if (entry.forall(_.snap.version < snap.version))
       anchors.get(snap.version).foreach { st =>
-        val c = Cached(snap, st.getLen, st.getModificationTime, digest(fs, st.getPath))
+        val name = st.getPath.getName
+        val c = Cached(snap, name, st.getLen, st.getModificationTime,
+          commitVersion(name).map(_ => digest(fs, st.getPath)))
         cache.synchronized(cache.put(key, c))
       }
     snap
   }
 
-  /** A cached head snapshot and the identity of its version's anchor file. */
-  private final case class Cached(snap: Snapshot, len: Long, mtime: Long, bytes: Seq[Byte]) {
+  /** A cached head snapshot and the identity of its version's anchor
+    * file: name, length and modification time, plus the bytes' digest of
+    * a commit JSON. A checkpoint anchor is never hashed — it is written
+    * once and may be hundreds of MB, so reading it on every lookup would
+    * cost what the cache saves.
+    */
+  private final case class Cached(snap: Snapshot, name: String, len: Long, mtime: Long,
+      bytes: Option[Seq[Byte]]) {
     def intact(fs: FileSystem, st: FileStatus): Boolean =
-      st.getLen == len && st.getModificationTime == mtime && digest(fs, st.getPath) == bytes
+      st.getPath.getName == name && st.getLen == len && st.getModificationTime == mtime &&
+        bytes.forall(_ == digest(fs, st.getPath))
   }
 
   private def digest(fs: FileSystem, file: Path): Seq[Byte] = {
+    val md = java.security.MessageDigest.getInstance("SHA-256")
     val in = fs.open(file)
-    try java.security.MessageDigest.getInstance("SHA-256").digest(in.readAllBytes()).toSeq
-    finally in.close()
+    try {
+      val buf = new Array[Byte](1 << 16)
+      Iterator.continually(in.read(buf)).takeWhile(_ >= 0).foreach(md.update(buf, 0, _))
+    } finally in.close()
+    md.digest().toSeq
   }
 
   /** The tables whose head snapshot is kept, least recently used first —

@@ -369,4 +369,37 @@ class DeltaMergeSpec extends SparkSpec {
         "3|a|330|insert").sorted)
     }
   }
+
+  test("a source over the broadcast threshold in real bytes takes the large-source path") {
+    // 40 source rows whose 2,000-character strings hold ~80 KB, where the
+    // row count times Spark's default row size (a string counts 20 bytes)
+    // would say ~1.4 KB
+    def semiJoined(pad: Int): Boolean = {
+      val t = tmp("graft_dm_wide") + "/t"
+      DeltaWrite.writeDeltaTable((0L until 100L).map(i => (i, "v")).toDF("id", "s").repartition(2),
+        t, "append")
+      val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+      val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+        def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution, ns: Long): Unit =
+          plans.add(qe.optimizedPlan.toString)
+        def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+            e: Exception): Unit = ()
+      }
+      spark.listenerManager.register(listener)
+      try {
+        DeltaMerge.merge(spark, t, (90L until 130L).map(i => (i, "w" * pad)).toDF("id", "s"), Seq("id"))
+        org.apache.spark.ListenerDrain.drain(spark.sparkContext)
+      } finally spark.listenerManager.unregister(listener)
+      val after = DeltaRead.readDeltaTable(spark, t).as[(Long, String)].collect().toMap
+      assert(after.size == 130 && after(0L) == "v" && (90L until 130L).forall(after(_) == "w" * pad))
+      plans.toArray.exists(_.toString.contains("LeftSemi"))
+    }
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val was = spark.conf.get(key)
+    spark.conf.set(key, "20000")
+    try {
+      assert(!semiJoined(1), "a narrow source is small: its keys filter the match scan")
+      assert(semiJoined(2000), "~80 KB of strings is over the threshold: the semi-join path")
+    } finally spark.conf.set(key, was)
+  }
 }

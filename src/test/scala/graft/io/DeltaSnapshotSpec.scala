@@ -69,8 +69,16 @@ class DeltaSnapshotSpec extends SparkSpec {
       .contains(f"${3L}%020d.json"))
     assert(coherent(t).version == 3L)
     // v3's JSON is gone, so the cache anchors on v3's checkpoint: the
-    // cold lookup above stored it and the next one decodes nothing
+    // cold lookup above stored it, and the next one decodes nothing and
+    // reads none of the checkpoint's bytes (its name, length and mtime
+    // identify it)
+    val stats = org.apache.hadoop.fs.FileSystem.getGlobalStorageStatistics.get("file")
+    val checkpointLen = fsOf(t).listStatus(new Path(t, "_delta_log"))
+      .filter(_.getPath.getName.startsWith(f"${3L}%020d.checkpoint")).map(_.getLen).sum
+    val readBefore = stats.getLong("bytesRead").longValue
     assert(jobs(assert(DeltaRead.snapshot(spark, t).version == 3L)) == 0)
+    val readDuring = stats.getLong("bytesRead").longValue - readBefore
+    assert(checkpointLen > 0 && readDuring < checkpointLen, s"read $readDuring bytes")
     append(t, 15L)                                                             // v4
     append(t, 20L)                                                             // v5
     val s5 = coherent(t)

@@ -99,14 +99,12 @@ class LogShapeSpec extends SparkSpec {
       s"$Cdc x2")
     val src2 = spark.range(60, 70, 1, 1).select(col("id"),
       (col("id") % 2).cast("string").as("p"), (col("id") * 1000).as("v"), (col("id") % 7).as("w"))
-    // the change rows split into files as the key-skipped scan packs the
-    // two touched files: one file each, not both in one
     check(t, DeltaMerge.merge(spark, t, src2, Seq("id"), useDeletionVectors = true),
       s"$CI{predicate,matchedAction,deletionVectors},engineInfo}",
       "protocol{minReaderVersion,minWriterVersion,readerFeatures,writerFeatures}",
       s"$Remove x2",
       s"$AddPart} x4",
-      s"$Cdc x5")
+      s"$Cdc x4")
     check(t, DeltaMerge.deleteWhereDv(spark, t, col("id") === 20),
       s"$CI{predicate,deletionVectors},engineInfo}",
       s"$Remove",
