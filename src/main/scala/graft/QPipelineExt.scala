@@ -472,8 +472,9 @@ object QPipelineExt {
     * bound=0.2 at k=128: per-pair std ≤ 1/(2√128)≈0.044, and the max over
     * 190 pairs reaches ~3σ by order statistics alone (k=32 measured 0.30 —
     * too loose to pin anything). Measured max deviation at k=128 across
-    * all three SFs: 0.131 (sf0.01) / 0.122 / 0.019 — tools/SketchDeviation
-    * reproduces these. 0.2 is ~4.5σ: never trips on sampling noise, trips
+    * all three SFs: 0.131 (sf0.01) / 0.122 / 0.019, the largest
+    * `abs(est - exact_jac)` over this query's pairs (the term `in_bound`
+    * tests). 0.2 is ~4.5σ: never trips on sampling noise, trips
     * immediately on a systematic sketch bug.
     */
   def q32SourceSketch(s: SparkSession, d: String): DataFrame = {

@@ -123,27 +123,20 @@ object DeltaMerge {
           "semantics; identity columns omitted)")
 
     // The source feeds the cardinality check, file discovery, the rewrite
-    // join, the insert split and the CDC rows — materialize it ONCE; the
-    // same job measures it: 8 bytes a row plus the bytes its values hold.
-    val sized = new Observation()
-    val source1 = source0.observe(sized, (count(lit(1)) * 8L + coalesce(sum(source0.schema.fields
-      .map(f => bytesOf(col(s"`${f.name}`"), f.dataType)).reduce(_ + _)), lit(0L))).as("b"))
-      .localCheckpoint()
-    // A source within Spark's broadcast threshold whose keys have the
-    // table's types is small: its keys come to the driver in one
-    // shuffle-free job, the cardinality check runs there, and they filter
-    // the match scan as an IN list — a single key's skips files by
-    // add.stats before any I/O — so finding the matched rows needs no
-    // join. A larger source keeps the aggregate check and a semi-join.
-    val small = keyCols.forall(k => source0.schema(k).dataType == schema(k).dataType) &&
-      sized.get("b").asInstanceOf[Long] <= spark.sessionState.conf.autoBroadcastJoinThreshold
-    val keyRows = if (small) source1.select(keyCols.map(col): _*).collect().toSeq else Nil
-    val dup = if (small) keyRows.size - keyRows.map(_.toSeq.map(groupKey)).distinct.size
-      else source1.groupBy(keyCols.map(col): _*).count().filter(col("count") > 1).limit(1).count()
+    // join, the insert split and the CDC rows — materialize it ONCE, sized.
+    // A small source's keys reach the driver ([[keyList]]): the
+    // cardinality check runs there and they filter the match scan, so
+    // finding the matched rows needs no join. A larger source keeps the
+    // aggregate check and a semi-join.
+    val (source1, bytes) = sized(source0)
+    val keys = keyList(source1, bytes, schema, keyCols)
+    val dup = keys match {
+      case Some((rows, _)) => rows.size - rows.map(_.toSeq.map(groupKey)).distinct.size
+      case None => source1.groupBy(keyCols.map(col): _*).count().filter(col("count") > 1)
+        .limit(1).count()
+    }
     require(dup == 0L, "merge source has more than one row for some key — the update would be " +
       "nondeterministic (Delta MERGE cardinality violation)")
-    // a NULL key matches nothing
-    val keyList = Option.when(small)(keyIn(schema, keyCols, keyRows.filterNot(_.anyNull)))
 
     // UPDATE SET *: every column but the keys and the identity columns
     // (which carry the target's stored value) takes the source's
@@ -153,7 +146,7 @@ object DeltaMerge {
         identityNames.contains(n)).map(n => n -> col(s"__s_$n")).toMap)
     val dml = Dml(path, snap, schema, "MERGE",
       Seq("predicate" -> keyCols.mkString(","), "matchedAction" -> whenMatched),
-      None, keyCols, Some(source1), set, insertUnmatched, txn, keyList)
+      None, keyCols, Some(source1), set, insertUnmatched, txn, keys.map(_._2))
     if (useDeletionVectors) withDeletionVectors(spark, dml) else copyOnWrite(spark, dml)
   }
 
@@ -492,6 +485,35 @@ object DeltaMerge {
     require(cands.size == 1, s"cannot attribute scanned file $uri to a live file")
     cands.head
   }
+
+  /** `df` materialized once; the same job measures the bytes its values
+    * hold: 8 a row plus each value's [[bytesOf]].
+    */
+  private[graft] def sized(df: DataFrame): (DataFrame, Long) = {
+    val obs = new Observation()
+    val out = df.observe(obs, (count(lit(1)) * 8L + coalesce(sum(df.schema.fields
+      .map(f => bytesOf(col(s"`${f.name}`"), f.dataType)).reduce(_ + _)), lit(0L))).as("b"))
+      .localCheckpoint()
+    (out, obs.get("b").asInstanceOf[Long])
+  }
+
+  /** The key-list rule of every keyed read of a Delta table (MERGE's match
+    * scan, [[graft.streaming.ChangeViewSink]]'s view read and repair):
+    * `rows`, materialized and holding `bytes` as [[sized]] measured them,
+    * is SMALL when those bytes are within Spark's
+    * `spark.sql.autoBroadcastJoinThreshold` and its `keyCols` have the
+    * table `schema`'s types. Its keys then reach the driver in one
+    * shuffle-free job and come back with [[keyIn]] over the non-NULL ones
+    * (a NULL key matches nothing), which the file index skips files by.
+    * None for a large frame: the caller joins it on the cluster.
+    */
+  private[graft] def keyList(rows: DataFrame, bytes: Long, schema: StructType,
+      keyCols: Seq[String]): Option[(Seq[Row], Column)] =
+    Option.when(keyCols.forall(k => rows.schema(k).dataType == schema(k).dataType) &&
+        bytes <= rows.sparkSession.sessionState.conf.autoBroadcastJoinThreshold) {
+      val keys = rows.select(keyCols.map(col): _*).collect().toSeq
+      (keys, keyIn(schema, keyCols, keys.filterNot(_.anyNull)))
+    }
 
   /** Whether a row's `keys` are one of `tuples`, with the join's
     * equality: one key column whose literals compare as the join does

@@ -1,10 +1,11 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
 
+import graft.ext.Incremental
 import graft.io.{DeltaMerge, DeltaRead, DeltaWrite}
 
 /** Streaming MATERIALIZED VIEW maintenance: keep a per-key aggregate Delta
@@ -14,25 +15,29 @@ import graft.io.{DeltaMerge, DeltaRead, DeltaWrite}
   * (DML on the source → change tail → incremental apply → exactly-once
   * view commit) as one call.
   *
-  * The view's columns are `keyCols..., n, sum, mn, mx`
-  * ([[graft.ext.Incremental]]'s state layout): count and sum form a group
-  * under insert/delete signs, so they stay EXACT under arbitrary source
-  * DML (DV deletes, copy-on-write updates, merges). min/max are
-  * non-invertible, so each epoch runs a REPAIR pass for exactness: a key
-  * whose DELETED value reached its stored bound (`deleted <= mn` or
-  * `>= mx`) gets its min/max recomputed from the source snapshot AS OF
-  * the epoch's last change version — one extra source scan per epoch,
-  * only when bound-hitting deletes occurred, filtered to exactly the
-  * repair keys (literal `isin` for a small single-column key set, so file
-  * stats skipping applies; a distributed semi-join otherwise — the key
-  * set itself never visits the driver, so a bootstrap epoch that touches
-  * every key in a 100 TB view repairs without driver memory entering the
-  * picture). The whole view
-  * is therefore exact under arbitrary DML, not count/sum-only. Epoch cost
-  * stays O(|batch| + touched keys): one aggregate over the change rows,
-  * one left-outer join against the view's touched keys, one MERGE whose
-  * copy-on-write scope is the touched keys' files — the view's history
-  * is never rescanned.
+  * The view is [[graft.ext.Incremental]]'s state kept as a Delta table:
+  * its layout (`keyCols..., n, sum, mn, mx`), the signed per-key delta of
+  * an epoch and the fold are `Incremental.delta` and `Incremental.combine`.
+  * Count and sum form a group under insert/delete signs, so they stay
+  * EXACT under arbitrary source DML (DV deletes, copy-on-write updates,
+  * merges). min/max are non-invertible, so each epoch runs a REPAIR pass
+  * for exactness: a key whose DELETED value reached its folded bound
+  * (`deleted <= mn` or `>= mx`) gets its min/max recomputed from the
+  * source snapshot AS OF the epoch's last change version — one extra
+  * source scan per epoch, only when bound-hitting deletes occurred,
+  * filtered to exactly the repair keys. The whole view is therefore exact
+  * under arbitrary DML, not count/sum-only.
+  *
+  * Epoch cost stays O(|batch| + touched keys): one aggregate over the
+  * change rows, one outer join against the view's rows of the touched
+  * keys, one MERGE whose copy-on-write scope is the touched keys' files —
+  * the view's history is never rescanned. Every keyed read of the epoch
+  * (the view read, the repair's source read, MERGE's match scan) takes
+  * MERGE's key-list rule ([[DeltaMerge.keyList]]): a key set within
+  * Spark's broadcast threshold becomes an IN list, so file stats skip
+  * every file that cannot hold a touched key; a larger one — a bootstrap
+  * epoch that touches every key of a 100 TB view — joins on the cluster
+  * and never visits the driver.
   *
   * Exactly-once across crashes, without a view-side log of applied
   * batches beyond Delta's own `txn` markers:
@@ -47,10 +52,10 @@ import graft.io.{DeltaMerge, DeltaRead, DeltaWrite}
   *      two commits heals on replay (step 1 skips, step 2 re-deletes).
   *
   * Readers between the two commits may see a tombstone row; [[readView]]
-  * filters them and derives `avg`, matching `Incremental.readView`.
+  * filters them, then derives `avg` through `Incremental.readView`.
   *
   * NULL group keys are UNSUPPORTED and refused loudly per epoch: every
-  * key-matching leg downstream (the fold's left-outer join, MERGE's
+  * key-matching leg downstream (the fold's outer join, MERGE's
   * semi/anti joins, the repair filter) is equality-keyed, and
   * `NULL = NULL` is not true in SQL — a null-key group would silently
   * fork its state row instead of folding. Rather than paying null-safe
@@ -92,7 +97,7 @@ object ChangeViewSink {
     * `viewPath` before its first commit (pre-Delta state is refused, see
     * [[DeltaStreamSink.tableVersion]]).
     */
-  private[streaming] def createView(spark: SparkSession, viewPath: String,
+  private[graft] def createView(spark: SparkSession, viewPath: String,
       keyFields: Seq[StructField]): Unit =
     if (DeltaStreamSink.tableVersion(spark, viewPath) < 0)
       DeltaWrite.writeDeltaTable(
@@ -104,142 +109,89 @@ object ChangeViewSink {
         viewPath, "append")
 
   /** Fold one change batch into the view — also the poll-driven batch
-    * surface (pair with [[graft.io.DeltaRead.changeDiff]]). Returns true
-    * when the epoch committed, false on a recognized replay. With
+    * surface (pair with [[graft.io.DeltaRead.changeDiff]]); a batch
+    * without `_change_type` folds as inserts. Returns true when the epoch
+    * committed, false on a recognized replay or an empty batch. With
     * `sourcePath` the min/max repair pass runs (exact view); without it
     * min/max degrade to bounds once an extremum is deleted — the legacy
     * contract for callers that cannot hand the source back.
     */
   def applyBatch(changes: DataFrame, viewPath: String, keyCols: Seq[String],
       valueCol: String, appId: String, batchId: Long,
-      sourcePath: Option[String] = None,
-      isinFastPathMax: Int = IsinFastPathMax): Boolean = {
+      sourcePath: Option[String] = None): Boolean = {
     val spark = changes.sparkSession
     if (batchId <= DeltaWrite.lastTxnVersion(spark, viewPath, appId)) {
       DeltaMerge.deleteWhere(spark, viewPath, col("n") <= 0) // heal step 2
       return false
     }
-    val v = col(valueCol).cast("double")
-    val sign = when(
-      col("_change_type").isin("insert", "update_postimage"), 1L)
-      .otherwise(lit(-1L))
-    // touched-keys-sized; checkpointed once — the repair detection and the
-    // fold both read it, and it pins the epoch's last change version
-    val delta = changes
-      .groupBy(keyCols.map(col): _*)
-      .agg(
-        sum(when(v.isNotNull, sign).otherwise(lit(0L))).as("d_n"),
-        sum(coalesce(v, lit(0.0)) * sign).as("d_sum"),
-        min(when(sign > 0, v)).as("d_mn"),
-        max(when(sign > 0, v)).as("d_mx"),
-        min(when(sign < 0, v)).as("d_del_mn"),
-        max(when(sign < 0, v)).as("d_del_mx"),
-        max(col("_commit_version")).as("d_ver"))
-      .localCheckpoint()
-    if (delta.isEmpty) return false
+    // touched-keys-sized; materialized once — the null check, the view
+    // read and the fold all read it, and it pins the epoch's last version
+    val (delta, bytes) = DeltaMerge.sized(Incremental.delta(changes, keyCols, valueCol))
+    if (bytes == 0L) return false
+    // the view rows of the TOUCHED keys only (MERGE's key-list rule): a
+    // small key set filters the scan, so the view's file index reads only
+    // the files that can hold those keys; a large one joins on the cluster
+    val view = DeltaRead.readDeltaTable(spark, viewPath)
+    val keys = DeltaMerge.keyList(delta, bytes, view.schema, keyCols)
     // null group keys are unsupported (see class doc) — refuse before any
-    // state mutates; the check reads the checkpointed touched-keys frame.
-    if (!delta.filter(keyCols.map(col(_).isNull).reduce(_ || _)).isEmpty)
+    // state mutates
+    if (keys.fold(!delta.filter(keyCols.map(col(_).isNull).reduce(_ || _)).isEmpty)(
+        _._1.exists(_.anyNull)))
       throw new IllegalArgumentException(
         s"ChangeViewSink: change batch contains NULL in group key(s) " +
           s"${keyCols.mkString(", ")}; null group keys are unsupported — " +
           "filter or coalesce them in the source before maintaining a view")
-    // new state of the TOUCHED keys only (left outer: new keys have no
-    // state row) — materialized BEFORE the merge mutates what it reads.
-    // A surviving key whose DELETED values reach the POST-FOLD bound needs
-    // repair: the fold can only widen bounds, never shrink them back — and
-    // the comparison must be against the folded (not stored) bound, since
-    // a single epoch can both insert and delete the extremum (a bootstrap
-    // batch carries the whole history).
-    val view = DeltaRead.readDeltaTable(spark, viewPath)
-    val newMn = least(col("mn"), col("d_mn"))
-    val newMx = greatest(col("mx"), col("d_mx"))
-    val needsRepair = (coalesce(col("n"), lit(0L)) + col("d_n") > 0) && (
-      (col("d_del_mn").isNotNull && newMn.isNotNull &&
-        col("d_del_mn") <= newMn) ||
-      (col("d_del_mx").isNotNull && newMx.isNotNull &&
-        col("d_del_mx") >= newMx))
-    val folded0 = delta.join(view, keyCols, "left_outer")
-      .select(keyCols.map(col) ++ Seq(
-        (coalesce(col("n"), lit(0L)) + col("d_n")).as("n"),
-        (coalesce(col("sum"), lit(0.0)) + col("d_sum")).as("sum"),
-        newMn.as("mn"), newMx.as("mx"),
-        needsRepair.as("__repair"), col("d_ver").as("__ver")): _*)
-      .localCheckpoint()
-    val folded = sourcePath match {
-      case Some(src) if !folded0.filter(col("__repair")).isEmpty =>
-        repairBounds(spark, src, folded0, keyCols, valueCol, isinFastPathMax)
-      case _ => folded0.drop("__repair", "__ver")
+    // new state of the touched keys (new keys have no view row) —
+    // materialized BEFORE the merge mutates what it reads. A surviving key
+    // whose DELETED values reach the POST-FOLD bound needs repair: the fold
+    // can only widen bounds, never shrink them back — and the comparison
+    // must be against the folded (not stored) bound, since a single epoch
+    // can both insert and delete the extremum (a bootstrap batch carries
+    // the whole history).
+    val needsRepair = col("n") > 0 && (
+      (col("d_del_mn").isNotNull && col("mn").isNotNull && col("d_del_mn") <= col("mn")) ||
+      (col("d_del_mx").isNotNull && col("mx").isNotNull && col("d_del_mx") >= col("mx")))
+    val (folded, foldedBytes) = DeltaMerge.sized(Incremental.combine(
+        keys.fold(view)(k => view.filter(k._2)), delta, keyCols, "right_outer")
+      .withColumn("__repair", needsRepair).drop("d_del_mn", "d_del_mx"))
+    // the epoch's last change version among the repair keys; null: none
+    val repairAt = sourcePath.flatMap(_ =>
+      Option(folded.filter(col("__repair")).agg(max(col("d_ver"))).head().get(0)))
+    val exact = (sourcePath, repairAt) match {
+      case (Some(src), Some(ver: Long)) =>
+        repairBounds(spark, src, ver, folded, foldedBytes, keyCols, valueCol)
+      case _ => folded
     }
-    DeltaMerge.merge(spark, viewPath, folded, keyCols,
+    DeltaMerge.merge(spark, viewPath, exact.drop("__repair", "d_ver"), keyCols,
       txn = Some(appId -> batchId))
     DeltaMerge.deleteWhere(spark, viewPath, col("n") <= 0)
     true
   }
 
-  /** A repair-key set at most this large takes the driver fast path:
-    * single-column sets become a literal `isin` filter (the log-backed
-    * file index then skips files by stats), and the repaired bounds
-    * broadcast back. Sets past the cap — a bootstrap or recovery epoch
-    * can touch EVERY key in the view — stay entirely on the cluster.
-    */
-  private val IsinFastPathMax = 10000
-
   /** Recompute min/max for the epoch's repair keys from the source AS OF
-    * the epoch's last change version (time travel — exact even when later
-    * commits already landed). Only SCALARS ever cross to the driver (the
-    * epoch version and a limit-bounded key count): a small single-column
-    * key set becomes a literal `isin` filter so the log-backed index
-    * skips files by stats, anything larger repairs via a distributed
-    * semi-join against the (localCheckpoint'd) repair frame — a
-    * bootstrap epoch whose repair set is the whole view's key space
-    * never materializes it on the driver.
+    * `ver`, the epoch's last change version (time travel — exact even when
+    * later commits already landed). The repair keys take MERGE's key-list
+    * rule ([[DeltaMerge.keyList]], `bytes` the folded frame's): a small set
+    * filters the source scan, so its file stats skip files; a large one —
+    * a bootstrap epoch whose repair set is the whole view's key space —
+    * semi-joins on the cluster and never reaches the driver.
     */
-  private def repairBounds(spark: SparkSession, sourcePath: String,
-      folded0: DataFrame, keyCols: Seq[String], valueCol: String,
-      isinFastPathMax: Int): DataFrame = {
-    val repairKeys = folded0.filter(col("__repair"))
-    val ver = repairKeys.agg(max(col("__ver"))).head().getLong(0)
-    // bounded count: the limit caps both the work and the number returned
-    val bounded = repairKeys.limit(isinFastPathMax + 1).count()
-    val small = bounded <= isinFastPathMax
+  private def repairBounds(spark: SparkSession, sourcePath: String, ver: Long,
+      folded: DataFrame, bytes: Long, keyCols: Seq[String], valueCol: String): DataFrame = {
+    val repairKeys = folded.filter(col("__repair")).select(keyCols.map(col): _*)
     val src = DeltaRead.readDeltaTable(spark, sourcePath, Some(ver))
-    val filtered =
-      if (keyCols.size == 1 && small) {
-        // ≤ IsinFastPathMax values by the count check above
-        val keys = repairKeys.select(col(keyCols.head)).collect().map(_.get(0))
-        src.filter(col(keyCols.head).isin(keys.toSeq: _*))
-      } else {
-        val keyDf0 = repairKeys.select(keyCols.map(col): _*)
-        src.join(if (small) broadcast(keyDf0) else keyDf0, keyCols, "left_semi")
-      }
-    val exact = filtered
-      .groupBy(keyCols.map(col): _*)
-      .agg(min(col(valueCol).cast("double")).as("__r_mn"),
-        max(col(valueCol).cast("double")).as("__r_mx"))
-    folded0.join(if (small) broadcast(exact) else exact, keyCols, "left_outer")
-      .select(keyCols.map(col) ++ Seq(col("n"), col("sum"),
-        when(col("__repair") && col("__r_mn").isNotNull, col("__r_mn"))
-          .otherwise(col("mn")).as("mn"),
-        when(col("__repair") && col("__r_mx").isNotNull, col("__r_mx"))
-          .otherwise(col("mx")).as("mx")): _*)
+    val rows = DeltaMerge.keyList(repairKeys, bytes, src.schema, keyCols)
+      .fold(src.join(repairKeys, keyCols, "left_semi"))(k => src.filter(k._2))
+    val bounds = Incremental.partialAgg(rows, keyCols, valueCol)
+      .select(keyCols.map(col) :+ col("mn").as("__r_mn") :+ col("mx").as("__r_mx"): _*)
+    // every repair key holds a value at `ver` (its folded n > 0)
+    folded.join(bounds, keyCols, "left_outer")
+      .withColumn("mn", coalesce(col("__r_mn"), col("mn")))
+      .withColumn("mx", coalesce(col("__r_mx"), col("mx")))
+      .drop("__r_mn", "__r_mx")
   }
 
   /** The consumer-facing view: tombstones filtered, `avg` derived. */
   def readView(spark: SparkSession, viewPath: String): DataFrame =
-    DeltaRead.readDeltaTable(spark, viewPath)
-      .filter(col("n") > 0)
-      .withColumn("avg", col("sum") / col("n"))
-
-  /** Convenience for specs/pipelines: the exact aggregate the view must
-    * equal, computed from the source's CURRENT snapshot.
-    */
-  def expectedView(spark: SparkSession, sourcePath: String,
-      keyCols: Seq[String], valueCol: String): DataFrame = {
-    val v: Column = col(valueCol).cast("double")
-    DeltaRead.readDeltaTable(spark, sourcePath)
-      .groupBy(keyCols.map(col): _*)
-      .agg(count(v).as("n"), sum(v).as("sum"),
-        min(v).as("mn"), max(v).as("mx"))
-  }
+    Incremental.readView(DeltaRead.readDeltaTable(spark, viewPath).filter(col("n") > 0))
 }

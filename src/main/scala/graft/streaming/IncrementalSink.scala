@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 /** Streaming → running-aggregate-table maintenance: the append-only case
@@ -36,10 +35,7 @@ object IncrementalSink {
       .option("checkpointLocation", checkpoint)
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        ChangeViewSink.applyBatch(
-          batch.withColumn("_change_type", lit("insert"))
-            .withColumn("_commit_version", lit(batchId)),
-          stateDir, keyCols, valueCol, AppId, batchId): Unit
+        ChangeViewSink.applyBatch(batch, stateDir, keyCols, valueCol, AppId, batchId): Unit
       }
       .start()
   }

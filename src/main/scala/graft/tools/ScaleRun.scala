@@ -230,21 +230,8 @@ object ScaleRun {
         graft.io.DeltaRead.changeDiff(spark, cdcDir, 0L).count())
       out += timed("b60_view_epoch")(() => {
         val v = Harness.tmp("cview") + "/view"
-        val viewSchema = org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("grp",
-            org.apache.spark.sql.types.StringType),
-          org.apache.spark.sql.types.StructField("n",
-            org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("sum",
-            org.apache.spark.sql.types.DoubleType),
-          org.apache.spark.sql.types.StructField("mn",
-            org.apache.spark.sql.types.DoubleType),
-          org.apache.spark.sql.types.StructField("mx",
-            org.apache.spark.sql.types.DoubleType)))
-        graft.io.DeltaWrite.writeDeltaTable(
-          spark.createDataFrame(
-            spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], viewSchema),
-          v, "append")
+        graft.streaming.ChangeViewSink.createView(spark, v,
+          Seq(graft.io.DeltaRead.readDeltaTable(spark, cdcDir).schema("grp")))
         graft.streaming.ChangeViewSink.applyBatch(
           graft.io.DeltaRead.changeDiff(spark, cdcDir, -1L),
           v, Seq("grp"), "cents", appId = "b60", batchId = 0L,

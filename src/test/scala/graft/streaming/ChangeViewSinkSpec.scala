@@ -1,8 +1,13 @@
 package graft.streaming
 
+import java.util.concurrent.atomic.AtomicLong
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField}
 
 import graft.SparkSpec
+import graft.ext.Incremental
 import graft.io.{DeltaMerge, DeltaRead, DeltaWrite}
 
 /** Streaming materialized-view maintenance ([[ChangeViewSink]]): the view
@@ -19,7 +24,7 @@ class ChangeViewSinkSpec extends SparkSpec {
     val got = ChangeViewSink.readView(spark, viewPath)
       .select(col("grp"), col("n"), col("sum"), col("mn"), col("mx"))
       .as[(String, Long, Double, Double, Double)].collect().toSet
-    val want = ChangeViewSink.expectedView(spark, srcPath, Seq("grp"), "cents")
+    val want = Incremental.partialAgg(DeltaRead.readDeltaTable(spark, srcPath), Seq("grp"), "cents")
       .select(col("grp"), col("n"), col("sum"), col("mn"), col("mx"))
       .as[(String, Long, Double, Double, Double)].collect().toSet
     assert(got == want, s"view $got != source aggregate $want")
@@ -92,39 +97,90 @@ class ChangeViewSinkSpec extends SparkSpec {
     viewEqualsSource(view, src)
   }
 
-  test("a repair set past the isin cap repairs through the distributed path") {
+  /** `f` under a broadcast threshold of -1: every key set is large, so
+    * the key-list rule sends the epoch's keyed reads to the cluster.
+    */
+  private def distributed[T](f: => T): T = {
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val was = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try f finally spark.conf.set(key, was)
+  }
+
+  test("a large repair set repairs through the distributed path") {
     val src = tmp("graft_cvs_src_") + "/t"
     val view = tmp("graft_cvs_view_") + "/v"
     // many groups, every one losing its stored MAX in one epoch — the
     // bootstrap/recovery shape where the repair-key set is the whole key
-    // space. isinFastPathMax = 0 forces the cluster-side semi-join leg
-    // (the 100 TB path): keys must never need the driver for exactness.
+    // space. A threshold of -1 makes every key set large, forcing the
+    // cluster-side semi-join leg (the 100 TB path): keys must never need
+    // the driver for exactness.
     val df = (1L to 400L)
       .map(i => (i, s"g${i % 100}", i * 10L))
       .toDF("id", "grp", "cents").repartition(4)
     DeltaWrite.writeDeltaTable(df, src, "append") // v0
     // delete each group's max (ids 301..400 hold the per-group maxima)
     DeltaMerge.deleteWhereDv(spark, src, col("id") > 300L) // v1
-    DeltaWrite.writeDeltaTable(
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("grp",
-            org.apache.spark.sql.types.StringType),
-          org.apache.spark.sql.types.StructField("n",
-            org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("sum",
-            org.apache.spark.sql.types.DoubleType),
-          org.apache.spark.sql.types.StructField("mn",
-            org.apache.spark.sql.types.DoubleType),
-          org.apache.spark.sql.types.StructField("mx",
-            org.apache.spark.sql.types.DoubleType)))),
-      view, "append")
+    ChangeViewSink.createView(spark, view, Seq(df.schema("grp")))
     val batch = DeltaRead.changeDiff(spark, src, -1L)
-    val applied = ChangeViewSink.applyBatch(batch, view, Seq("grp"), "cents",
-      appId = "cvs-large", batchId = 0L, sourcePath = Some(src),
-      isinFastPathMax = 0)
+    val applied = distributed(ChangeViewSink.applyBatch(batch, view, Seq("grp"), "cents",
+      appId = "cvs-large", batchId = 0L, sourcePath = Some(src)))
     assert(applied, "epoch must commit")
     viewEqualsSource(view, src) // all 100 groups repaired, bounds exact
+  }
+
+  test("a two-column key repairs min/max exactly on both key-set paths") {
+    for (large <- Seq(false, true)) {
+      val src = tmp("graft_cvs_src_") + "/t"
+      val view = tmp("graft_cvs_view_") + "/v"
+      val df = (1L to 60L)
+        .map(i => (i, s"r${i % 3}", i % 2, i * 10L))
+        .toDF("id", "region", "tier", "cents").repartition(2)
+      DeltaWrite.writeDeltaTable(df, src, "append") // v0
+      // every (region, tier) group loses its max; one loses its min too
+      DeltaMerge.deleteWhereDv(spark, src, col("id") > 54L || col("id") === 1L) // v1
+      val keys = Seq("region", "tier")
+      ChangeViewSink.createView(spark, view, keys.map(df.schema(_)))
+      def epoch(): Boolean = ChangeViewSink.applyBatch(DeltaRead.changeDiff(spark, src, -1L),
+        view, keys, "cents", appId = "cvs-two-keys", batchId = 0L, sourcePath = Some(src))
+      assert(if (large) distributed(epoch()) else epoch(), "epoch must commit")
+      val cols = (keys ++ Seq("n", "sum", "mn", "mx")).map(col)
+      val got = ChangeViewSink.readView(spark, view).select(cols: _*).collect().toSet
+      val want = Incremental.partialAgg(DeltaRead.readDeltaTable(spark, src), keys, "cents")
+        .select(cols: _*).collect().toSet
+      assert(got.size == 6 && got == want, s"large=$large: view $got != source aggregate $want")
+    }
+  }
+
+  test("a warm 1-key epoch reads the files holding its key, not the whole view") {
+    val view = tmp("graft_cvs_view_") + "/v"
+    ChangeViewSink.createView(spark, view, Seq(StructField("k", LongType)))
+    // 16,000 keys laid out by key range over 8 files, so each file's
+    // add.stats hold a disjoint key range
+    DeltaWrite.writeDeltaTable(spark.range(0, 16000).select(col("id").as("k"), lit(1L).as("n"),
+        col("id").cast("double").as("sum"), col("id").cast("double").as("mn"),
+        col("id").cast("double").as("mx")).repartitionByRange(8, col("k")), view, "append")
+    def files(): Long = DeltaRead.readDeltaTable(spark, view).select(input_file_name()).distinct().count()
+    assert(files() >= 8)
+    def epoch(batchId: Long): Boolean = ChangeViewSink.applyBatch(
+      Seq((4242L, 7L, "insert", batchId)).toDF("k", "cents", "_change_type", "_commit_version"),
+      view, Seq("k"), "cents", appId = "cvs-warm", batchId = batchId)
+    assert(epoch(0L)) // warms the snapshot cache
+    val records = new AtomicLong
+    val listener = new SparkListener {
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        Option(e.taskMetrics).foreach(m => records.addAndGet(m.inputMetrics.recordsRead))
+    }
+    spark.sparkContext.addSparkListener(listener)
+    val n = try jobs(assert(epoch(1L))) finally spark.sparkContext.removeSparkListener(listener)
+    assert(records.get < 16000L, s"a 1-key epoch read ${records.get} input records of a 16,000-row view")
+    // delta aggregate and checkpoint 2, key list 1, fold 2, MERGE 5,
+    // tombstone sweep 1 — the fold's whole-view join also ran 11
+    assert(n == 11, s"a warm 1-key epoch ran $n Spark jobs")
+    assert(files() >= 8)
+    assert(ChangeViewSink.readView(spark, view).filter(col("k") === 4242L)
+      .select("n", "sum", "mn", "mx").as[(Long, Double, Double, Double)].collect().toSeq ==
+      Seq((3L, 4256.0, 7.0, 4242.0)))
   }
 
   test("null group keys are refused loudly before any state mutates") {
