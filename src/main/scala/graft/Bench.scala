@@ -468,11 +468,14 @@ object Bench {
     // hot bucket in every band). Without the candidatePairs maxBucket
     // chain guard this is ~50M candidate pairs out of one task; with it,
     // pair volume stays linear and the run completes in b31-like time.
+    // The copies' ids start at 9·10⁸, clear of the doc ids of every
+    // ScaleData copy (copy c shifts them by c·10⁷), so ScaleRun runs this
+    // entry at a derived SF too.
     "b40_minhash_skew" -> ((s, dir) => {
       val docs = Tables.documents(s, dir)
       val template = docs.orderBy("doc_id").limit(1)
         .select(col("text")).crossJoin(
-          s.range(10000).select((col("id") + 10000000L).as("doc_id")))
+          s.range(10000).select((col("id") + 900000000L).as("doc_id")))
         .select(col("doc_id"), col("text"))
       val skewed = docs.select(col("doc_id"), col("text")).unionByName(template)
         .repartition(col("doc_id"))

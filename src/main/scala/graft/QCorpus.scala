@@ -910,7 +910,8 @@ object QCorpus {
     * The loop-invariant edge list and degree table are localCheckpoint'd
     * ONCE before the loop (the Dedup.dupClusters pattern): without the
     * lineage cut, every iteration's plan re-reads events and re-aggregates
-    * the graph — PlanAudit measured 18 scans / 36 exchanges for 2
+    * the graph — PlanAudit (retired: COVERAGE, *Retired dev profilers*;
+    * ExplainOne prints its counts) measured 18 scans / 36 exchanges for 2
     * iterations; at 100× the fact table is re-scanned ~9× for nothing.
     */
   def q85PageRank(s: SparkSession, d: String): DataFrame = {

@@ -41,7 +41,8 @@ import org.apache.spark.sql.types.{ArrayType, DataType, FloatType, IntegerType}
   * the sqrt can never prune a tied-or-better member cell; equality with
   * the flat scan over adversarial inputs is spec-pinned (IvfKernelSpec).
   *
-  * Measured (tools/ProfileIvf, 32k×64-dim rows, local[32], 2026-08-15):
+  * Measured (ProfileIvf, since retired — COVERAGE, *Retired dev
+  * profilers*; 32k×64-dim rows, local[32], 2026-08-15):
   * composed form 6.3s @ 64 cells, 24.0s @ 256 (the generated method grows
   * past the JIT's compilable size and runs in the BYTECODE INTERPRETER),
   * then erratically 1.6s @ 1024 (codegen gives up entirely and the

@@ -1,8 +1,5 @@
 package graft.tools
 
-import java.util.concurrent.atomic.AtomicLong
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.functions._
 
 import graft.{Bench, Harness, Tables}
@@ -28,26 +25,12 @@ import graft.{Bench, Harness, Tables}
   * carries (CLAUDE.md), and a superlinear pair count is exactly how the
   * guarded paths (b40's maxBucket chain cap) would fail first at 100 TB.
   *
-  * Usage: `ScaleRun <smallDir> <bigDir> [factor]` — bigDir from
-  * [[ScaleData]]. Runs each op 3× per SF, takes min wall; byte metrics
-  * come from a task-metrics listener drained after the last run.
+  * Usage: `ScaleRun <smallDir> <bigDir> [factor] [op prefix...]` — bigDir
+  * from [[ScaleData]]. Runs each op 3× per SF, takes min wall; rows and
+  * byte metrics are the last run's, byte metrics from [[Harness.meter]].
   */
 object ScaleRun {
-  private final class Meter extends SparkListener {
-    val input = new AtomicLong(0L)
-    val shuffleWrite = new AtomicLong(0L)
-    override def onTaskEnd(e: SparkListenerTaskEnd): Unit = {
-      val m = e.taskMetrics
-      if (m != null) {
-        input.addAndGet(m.inputMetrics.bytesRead)
-        shuffleWrite.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-      }
-    }
-    def reset(): Unit = { input.set(0L); shuffleWrite.set(0L) }
-  }
-
-  final case class Obs(name: String, secs: Double, rows: Long,
-      inputBytes: Long, shuffleBytes: Long)
+  final case class Obs(name: String, secs: Double, rows: Long, cost: Harness.Cost)
 
   def main(args: Array[String]): Unit = {
     val small = args(0)
@@ -55,61 +38,40 @@ object ScaleRun {
     val factor = if (args.length > 2) args(2).toInt else 10
     val only: Set[String] = args.drop(3).toSet
     val spark = Harness.session(Harness.cpus)
-    val meter = new Meter
-    spark.sparkContext.addSparkListener(meter)
 
-    def timed(name: String, runs: Int = 3)(act: () => Long): Obs = {
-      if (only.nonEmpty && !only.exists(name.startsWith)) return Obs(name, -1, -1, -1, -1)
-      var best = Double.MaxValue
-      var rows = 0L
-      var i = 0
-      while (i < runs) {
-        val last = i == runs - 1
-        if (last) { Thread.sleep(300); meter.reset() }
-        val t0 = System.nanoTime()
-        rows = act()
-        val secs = (System.nanoTime() - t0) / 1e9
-        if (secs < best) best = secs
-        i += 1
+    def timed(name: String, runs: Int = 3)(act: () => Long): Option[Obs] =
+      Option.when(only.isEmpty || only.exists(name.startsWith)) {
+        val passes = (1 to runs).map { _ =>
+          val ((rows, secs), cost) = Harness.meter(spark) {
+            val t0 = System.nanoTime()
+            val rows = act()
+            (rows, (System.nanoTime() - t0) / 1e9)
+          }
+          Obs(name, secs, rows, cost)
+        }
+        passes.last.copy(secs = passes.map(_.secs).min)
       }
-      Thread.sleep(500) // listener bus drain
-      Obs(name, best, rows, meter.input.get(), meter.shuffleWrite.get())
-    }
 
     def fleet(dir: String, mult: Int): Seq[Obs] = {
-      import graft.ext.{AnnIndex, Dedup, SubstringDedup}
+      import graft.ext.AnnIndex
       val nCells = 16 * mult
       val docs = Tables.documents(spark, dir)
       val emb = Tables.embeddings(spark, dir)
       val out = Seq.newBuilder[Obs]
 
-      out += timed("b31_minhash_lsh")(() =>
-        Dedup.minhashLshPairs(docs, "doc_id", "text",
-          shingleN = 3, k = 16, bands = 4, threshold = 0.5, fast = true).count())
+      def bench(op: String, entry: String): Option[Obs] =
+        timed(op)(() => Bench.fastVariants(entry)(spark, dir).count())
+      out ++= bench("b31_minhash_lsh", "b31_minhash_lsh_fast")
+      out ++= bench("b40_minhash_skew", "b40_minhash_skew")
+      out ++= bench("b47_substring_dedup", "b47_substring_dedup_fast")
 
-      out += timed("b40_minhash_skew")(() => {
-        val template = docs.orderBy("doc_id").limit(1)
-          .select(col("text")).crossJoin(
-            spark.range(10000).select((col("id") + 900000000L).as("doc_id")))
-          .select(col("doc_id"), col("text"))
-        val skewed = docs.select(col("doc_id"), col("text")).unionByName(template)
-          .repartition(col("doc_id"))
-        Dedup.minhashLshPairs(skewed, "doc_id", "text",
-          shingleN = 3, k = 16, bands = 4, threshold = 0.5, fast = true,
-          maxBucket = 1024).count()
-      })
-
-      out += timed("b47_substring_dedup")(() =>
-        SubstringDedup.dupStats(docs, "doc_id", "text",
-          gramLen = 40, hashed = true).count())
-
-      out += timed("b61_dsir")(() =>
+      out ++= timed("b61_dsir")(() =>
         graft.ext.Selection.dsirWeights(
           docs.filter(col("source") =!= "src0"),
           docs.filter(col("source") === "src0"),
           "doc_id", "text", buckets = 4096, fast = true).count())
 
-      out += timed("b62_classifier")(() => {
+      out ++= timed("b62_classifier")(() => {
         val model = graft.ext.Classifier.train(
           docs.filter(col("source") === "src0"),
           docs.filter(col("source") =!= "src0"),
@@ -122,7 +84,7 @@ object ScaleRun {
       // ANN: production sizing — nCells grows with the corpus so per-cell
       // mass stays constant; build once per (dir, run)
       var annPath: String = null
-      out += timed("b50_ann_build")(() => {
+      out ++= timed("b50_ann_build")(() => {
         annPath = Harness.tmp("ann")
         AnnIndex.build(emb, "vec_id", "embedding", annPath,
           nCells = nCells, extraCols = Seq("label"))
@@ -138,9 +100,9 @@ object ScaleRun {
       if (wantsAnn) {
         val q = emb.orderBy("vec_id").select(col("embedding"))
           .head().getSeq[Float](0).map(_.toDouble).toArray
-        out += timed("b50_ann_query", runs = 5)(() =>
+        out ++= timed("b50_ann_query", runs = 5)(() =>
           AnnIndex.query(spark, annPath, q, nProbe = 2, k = 10).count())
-        out += timed("b53_hard_negatives")(() =>
+        out ++= timed("b53_hard_negatives")(() =>
           AnnIndex.hardNegatives(spark, annPath, emb, "vec_id", "embedding",
             "label", nProbe = 2, k = 10).count())
       }
@@ -149,7 +111,7 @@ object ScaleRun {
       // (always the small dir's slice — an eval suite does not grow with
       // the training corpus), so work = |candidates|·|eval| dot products
       // must grow linearly with the corpus, never ×N²
-      out += timed("b65_embed_decontam")(() =>
+      out ++= timed("b65_embed_decontam")(() =>
         graft.ext.Similarity.decontaminate(
           emb.filter(col("vec_id") % 10 =!= 0),
           Tables.embeddings(spark, small).filter(col("vec_id") % 10 === 0),
@@ -157,7 +119,7 @@ object ScaleRun {
 
       // identity-column table creation: the gap-free assignment is one
       // localCheckpoint + count + zipWithIndex map — must be linear
-      out += timed("b66_identity_create")(() => {
+      out ++= timed("b66_identity_create")(() => {
         val p = Harness.tmp("ident") + "/t"
         graft.io.DeltaWrite.writeDeltaTableIdentity(
           Tables.orders(spark, dir).select(col("o_orderstatus"),
@@ -178,7 +140,7 @@ object ScaleRun {
         maintPath = Harness.tmp("annm")
         AnnIndex.build(emb, "vec_id", "embedding", maintPath, nCells = nCells)
       }
-      out += timed("b67_ann_maintain_epoch")(() => {
+      out ++= timed("b67_ann_maintain_epoch")(() => {
         val batch = Tables.embeddings(spark, small).limit(500)
           .select((col("vec_id") + lit(2000000000L) +
             lit(maintEpoch * 1000000L)).as("vec_id"), col("embedding"))
@@ -193,7 +155,7 @@ object ScaleRun {
       // standing DV-merge table, built in the first run (which best-of-3
       // discards): the merges are the timed verb
       lazy val dml = Bench.ordersDelta(spark, dir, "dv")
-      out += timed("b57_merge_upsert_dv")(() => {
+      out ++= timed("b57_merge_upsert_dv")(() => {
         val src = Bench.ordersCents(spark, dir).filter(col("o_orderkey") % 100 === 0)
           .withColumn("cents", col("cents") + 1)
         graft.io.DeltaMerge.merge(spark, dml, src, Seq("o_orderkey"),
@@ -221,14 +183,14 @@ object ScaleRun {
       // bounded-state heavy hitters: buffers hold <= capacity counters,
       // so shuffle bytes must stay ~CONSTANT under 10x corpus growth
       // (the exact explode->groupBy form's shuffle grows with tokens)
-      out += timed("b63_heavy_hitters")(() =>
+      out ++= timed("b63_heavy_hitters")(() =>
         Tables.documents(spark, dir)
           .agg(graft.ext.TextAnalysis.heavyHitters(col("text"), 64).as("hh"))
           .select(explode(col("hh"))).count())
 
-      out += timed("b60_change_diff")(() =>
+      out ++= timed("b60_change_diff")(() =>
         graft.io.DeltaRead.changeDiff(spark, cdcDir, 0L).count())
-      out += timed("b60_view_epoch")(() => {
+      out ++= timed("b60_view_epoch")(() => {
         val v = Harness.tmp("cview") + "/view"
         graft.streaming.ChangeViewSink.createView(spark, v,
           Seq(graft.io.DeltaRead.readDeltaTable(spark, cdcDir).schema("grp")))
@@ -251,7 +213,7 @@ object ScaleRun {
         graft.ext.AnnIndex.build(emb, "vec_id", "embedding", cdcAnnPath,
           nCells = nCells)
       }
-      out += timed("b73_ann_cdc_epoch")(() => {
+      out ++= timed("b73_ann_cdc_epoch")(() => {
         val batch = Tables.embeddings(spark, small).limit(500)
           .select((col("vec_id") + lit(3000000000L) +
             lit(cdcAnnEpoch * 1000000L)).as("vec_id"), col("embedding"),
@@ -277,7 +239,7 @@ object ScaleRun {
           .select(col("id"), (col("id") % 7).cast("string").as("s"))
           .repartition(nFiles).write.parquet(convDir)
       }
-      out += timed("b69_convert_footers", runs = 2)(() => {
+      out ++= timed("b69_convert_footers", runs = 2)(() => {
         val lg = new org.apache.hadoop.fs.Path(convDir, "_delta_log")
         val fs = lg.getFileSystem(spark.sparkContext.hadoopConfiguration)
         fs.delete(lg, true)
@@ -297,13 +259,15 @@ object ScaleRun {
       math.log(bb / a) / math.log(factor.toDouble)
     val lnF = "%.2f"
     println(f"${"op"}%-22s ${"t_sm"}%7s ${"t_big"}%7s ${"a_wall"}%6s ${"rows_sm"}%9s ${"rows_big"}%9s ${"a_rows"}%6s ${"a_in"}%5s ${"a_shuf"}%6s")
-    val rows = s.zip(b).filter(_._1.secs >= 0).map { case (o1, o2) =>
+    val rows = s.zip(b).map { case (o1, o2) =>
       val aWall = alpha(o1.secs, o2.secs)
       val aRows = if (o1.rows > 0) alpha(o1.rows.toDouble, o2.rows.toDouble) else 0.0
-      val aIn = if (o1.inputBytes > 0) alpha(o1.inputBytes.toDouble, o2.inputBytes.toDouble) else 0.0
-      val aSh = if (o1.shuffleBytes > 0) alpha(o1.shuffleBytes.toDouble, o2.shuffleBytes.toDouble) else 0.0
+      val (in1, in2) = (o1.cost.inputBytes, o2.cost.inputBytes)
+      val (sh1, sh2) = (o1.cost.shuffleBytes, o2.cost.shuffleBytes)
+      val aIn = if (in1 > 0) alpha(in1.toDouble, in2.toDouble) else 0.0
+      val aSh = if (sh1 > 0) alpha(sh1.toDouble, sh2.toDouble) else 0.0
       println(f"${o1.name}%-22s ${o1.secs}%7.2f ${o2.secs}%7.2f ${lnF.format(aWall)}%6s ${o1.rows}%9d ${o2.rows}%9d ${lnF.format(aRows)}%6s ${lnF.format(aIn)}%5s ${lnF.format(aSh)}%6s")
-      s"""{"op":"${o1.name}","t_small":${o1.secs},"t_big":${o2.secs},"a_wall":${lnF.format(aWall)},"rows_small":${o1.rows},"rows_big":${o2.rows},"a_rows":${lnF.format(aRows)},"in_small":${o1.inputBytes},"in_big":${o2.inputBytes},"a_input":${lnF.format(aIn)},"sh_small":${o1.shuffleBytes},"sh_big":${o2.shuffleBytes},"a_shuffle":${lnF.format(aSh)}}"""
+      s"""{"op":"${o1.name}","t_small":${o1.secs},"t_big":${o2.secs},"a_wall":${lnF.format(aWall)},"rows_small":${o1.rows},"rows_big":${o2.rows},"a_rows":${lnF.format(aRows)},"in_small":$in1,"in_big":$in2,"a_input":${lnF.format(aIn)},"sh_small":$sh1,"sh_big":$sh2,"a_shuffle":${lnF.format(aSh)}}"""
     }
     println("[" + rows.mkString(",\n ") + "]")
     spark.stop()

@@ -1,9 +1,5 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicInteger
-
-import org.apache.spark.ListenerDrain
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -17,25 +13,13 @@ trait SparkSpec extends AnyFunSuite {
   /** A fresh scratch directory, removed when the JVM exits ([[Harness.tmp]]). */
   def tmp(prefix: String): String = Harness.tmp(prefix)
 
+  /** `f`'s result and the Spark work it starts from this thread ([[Harness.meter]]). */
+  def meter[T](f: => T): (T, Harness.Cost) = Harness.meter(spark)(f)
+
   /** The Spark jobs `f` starts from this thread. */
-  def jobs(f: => Any): Int = {
-    val sc = spark.sparkContext
-    val id = s"graft-job-budget-${SparkSpec.group.incrementAndGet()}"
-    val n = new AtomicInteger(0)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == id))
-          n.incrementAndGet()
-    }
-    sc.addSparkListener(listener)
-    sc.setJobGroup(id, "job budget")
-    try { f; ListenerDrain.drain(sc) }
-    finally { sc.clearJobGroup(); sc.removeSparkListener(listener) }
-    n.get
-  }
+  def jobs(f: => Any): Int = meter(f)._2.jobs
 }
 
 object SparkSpec {
-  private val group = new AtomicInteger(0)
   lazy val session: SparkSession = Harness.session(4)
 }

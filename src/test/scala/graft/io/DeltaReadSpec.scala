@@ -48,18 +48,9 @@ class DeltaReadSpec extends SparkSpec {
     * the right way first, not after a failed job.
     */
   private def noFailedJob[T](f: => T): T = {
-    val failed = new java.util.concurrent.atomic.AtomicInteger()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobEnd(e: org.apache.spark.scheduler.SparkListenerJobEnd): Unit =
-        if (e.jobResult != org.apache.spark.scheduler.JobSucceeded) failed.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      val out = f
-      org.apache.spark.ListenerDrain.drain(spark.sparkContext)
-      assert(failed.get == 0, s"${failed.get} Spark jobs failed")
-      out
-    } finally spark.sparkContext.removeSparkListener(listener)
+    val (out, cost) = meter(f)
+    assert(cost.failedJobs == 0, s"${cost.failedJobs} Spark jobs failed")
+    out
   }
 
   test("log replay: adds accumulate, removes tombstone, schema comes from metaData") {

@@ -1262,18 +1262,9 @@ class DeltaWriteSpec extends SparkSpec {
     // must run as a Spark job (mapPartitions over the file list), never a
     // serial driver loop — at the op's design point (10^6-file adoption)
     // that loop is hours of driver I/O
-    val tasks = new java.util.concurrent.atomic.AtomicLong(0L)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(
-          e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-        tasks.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      assert(DeltaWrite.convertToDelta(spark, dir) == 0L)
-      Thread.sleep(500) // listener bus drain
-    } finally spark.sparkContext.removeSparkListener(listener)
-    assert(tasks.get() > 1L, s"footer pass ran ${tasks.get()} tasks — not distributed")
+    val (version, cost) = meter(DeltaWrite.convertToDelta(spark, dir))
+    assert(version == 0L)
+    assert(cost.tasks > 1L, s"footer pass ran ${cost.tasks} tasks — not distributed")
 
     val log = scala.io.Source.fromFile(
       s"$dir/_delta_log/00000000000000000000.json").getLines().toSeq

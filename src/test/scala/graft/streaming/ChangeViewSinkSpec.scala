@@ -1,8 +1,5 @@
 package graft.streaming
 
-import java.util.concurrent.atomic.AtomicLong
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField}
 
@@ -166,17 +163,13 @@ class ChangeViewSinkSpec extends SparkSpec {
       Seq((4242L, 7L, "insert", batchId)).toDF("k", "cents", "_change_type", "_commit_version"),
       view, Seq("k"), "cents", appId = "cvs-warm", batchId = batchId)
     assert(epoch(0L)) // warms the snapshot cache
-    val records = new AtomicLong
-    val listener = new SparkListener {
-      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
-        Option(e.taskMetrics).foreach(m => records.addAndGet(m.inputMetrics.recordsRead))
-    }
-    spark.sparkContext.addSparkListener(listener)
-    val n = try jobs(assert(epoch(1L))) finally spark.sparkContext.removeSparkListener(listener)
-    assert(records.get < 16000L, s"a 1-key epoch read ${records.get} input records of a 16,000-row view")
+    val (applied, cost) = meter(epoch(1L))
+    assert(applied)
+    assert(cost.inputRecords < 16000L,
+      s"a 1-key epoch read ${cost.inputRecords} input records of a 16,000-row view")
     // delta aggregate and checkpoint 2, key list 1, fold 2, MERGE 5,
     // tombstone sweep 1 — the fold's whole-view join also ran 11
-    assert(n == 11, s"a warm 1-key epoch ran $n Spark jobs")
+    assert(cost.jobs == 11, s"a warm 1-key epoch ran ${cost.jobs} Spark jobs")
     assert(files() >= 8)
     assert(ChangeViewSink.readView(spark, view).filter(col("k") === 4242L)
       .select("n", "sum", "mn", "mx").as[(Long, Double, Double, Double)].collect().toSeq ==

@@ -35,7 +35,7 @@ class RecallEvalSpec extends SparkSpec {
     assert(exhaustive == 1.0, s"exhaustive IVF must equal brute force, got $exhaustive")
     // approximate regime: floors sit ~0.1 under the measured recall on
     // this (near-random, hence ANN-hostile) synthetic table — measured
-    // 0.81-0.83 and 0.75-0.77 across SFs (tools/RecallProbe reproduces)
+    // 0.81-0.83 and 0.75-0.77 across SFs (COVERAGE, *Retired dev profilers*)
     val p8 = recall(Similarity.ivfKnnProbed(
       emb, "vec_id", "embedding", nCells = 16, k = k, nProbe = 8))
     assert(p8 >= 0.7, s"ivf nCells=16 nProbe=8 recall@3 regressed below 0.7: $p8")
