@@ -1,25 +1,35 @@
 package graft.ext
 
+import scala.collection.mutable
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, StructType}
+
+import graft.io.{DeltaMerge, DeltaRead, DeltaWrite}
 
 /** Persisted IVF(-PQ) index — the OPERATIONAL half of the ANN stack: the
   * train-and-query-in-one-job forms ([[Similarity.ivfKnn]],
   * [[PQ.ivfPqTopK]]) re-train per call, which is right for exploratory
   * queries and wrong for a serving corpus. Here the index is BUILT once
-  * (train + assign + encode), WRITTEN as an ordinary parquet table
-  * partitioned by the IVF cell (plus a small JSON sidecar for the trained
-  * state), and every later query LOADS the metadata (driver-side, a few
-  * KB) and scans only the probed cells — Spark's partition pruning over
-  * `cell=` directories does the cell selection, so a 1-probe query on a
-  * 1024-cell index touches ~0.1% of the files.
+  * (train + assign + encode) and kept as an ordinary Delta table
+  * partitioned by the IVF cell, whose trained state lives in its own log
+  * (one `graft.ann` domainMetadata action). Every later query LOADS that
+  * state from the log snapshot (driver-side, a few KB) and scans only the
+  * probed cells — partition pruning over the log's `cell` values does the
+  * cell selection, so a 1-probe query on a 1024-cell index touches ~0.1%
+  * of the files.
   *
-  * The layout is engine-agnostic on purpose (parquet + JSON, no pickled
-  * state): any Spark job — or any other reader — can load it.
+  * Every verb lands as ONE commit of [[graft.io.DeltaWrite]]'s core, the
+  * protocol of every other table here: rows and trained state change
+  * together or not at all, so a crash at any point leaves version N or
+  * N+1 — never codes that disagree with the codebooks the domain records
+  * — and re-running the verb is the recovery. One maintainer per index:
+  * an append racing a maintenance verb is not detected.
   */
 object AnnIndex {
 
-  /** Sidecar state. PQ codebooks are VERSIONED: `codebooks` is version 0
+  /** Trained state. PQ codebooks are VERSIONED: `codebooks` is version 0
     * (the build-time set), `codebookVersions` holds refresh generations
     * 1..n ([[refreshCodebooks]]), and `cellVersions` records which
     * generation each cell's stored codes were encoded under (absent = 0).
@@ -41,15 +51,18 @@ object AnnIndex {
     private[ext] def versionOfCell(cell: Int): Int = cellVersions.getOrElse(cell, 0)
   }
 
+  /** The domain of the index's log that holds its [[Meta]]. */
+  private val Domain = "graft.ann"
+
   /** Build and persist: trains IVF centroids (sample-bounded) and, when
-    * `m > 0`, PQ codebooks; writes `(id, cell, vec, nrm, pq_code?)`
-    * partitioned by cell, and the trained state to `_ann_meta.json`.
-    * Returns the meta. The L2 norm is materialized at build time so probe
-    * queries pay only the dot product per pair, never the norm.
-    * `extraCols` carries payload columns (labels, source tags) into the
-    * index verbatim — the metadata-filtered-search shape
-    * ([[hardNegatives]]) needs the filter column co-located with the
-    * vectors it prunes.
+    * `m > 0`, PQ codebooks; writes `(id, vec, cell, pq_code?, nrm)`
+    * partitioned by cell with the trained state in the creating commit
+    * (a Delta table already at `path` is replaced whole). Returns the
+    * meta. The L2 norm is materialized at build time so probe queries pay
+    * only the dot product per pair, never the norm. `extraCols` carries
+    * payload columns (labels, source tags) into the index verbatim — the
+    * metadata-filtered-search shape ([[hardNegatives]]) needs the filter
+    * column co-located with the vectors it prunes.
     */
   def build(df: DataFrame, idCol: String, vecCol: String, path: String,
       nCells: Int, m: Int = 0, nCodes: Int = 16, iters: Int = 2,
@@ -72,39 +85,48 @@ object AnnIndex {
           .toDF("id", "vec", "cell", "pq_code")
       case None => base
     }).withColumn("nrm", Similarity.l2Norm(col("vec")))
-    // cluster by cell before the partitioned write: without it every write
-    // task emits one file into EVERY cell dir it holds rows for (tasks ×
-    // cells tiny files — 512 creates at bench scale, and a probe query
-    // then opens `files/cells` footers per probed cell). One exchange on
-    // the cell key lands each cell as one task's contiguous write. (At
-    // production bytes, repartition on (cell, salt) to keep multiple
-    // ~128 MB files per cell; the guide-§6 file-sizing shape.)
-    indexed.repartition(col("cell"))
-      .write.mode("overwrite").partitionBy("cell").parquet(path)
     val meta = Meta(dim, nCells, m, nCodes, centroids,
       cb.map(_.centers.map(_.map(_.toSeq).toSeq).toSeq))
-    writeMeta(spark, path, meta)
+    // cluster by cell before the partitioned write: without it every write
+    // task emits one file into EVERY cell it holds rows for (tasks × cells
+    // tiny files — 512 creates at bench scale, and a probe query then
+    // opens `files/cells` footers per probed cell). One exchange on the
+    // cell key lands each cell as one task's contiguous write. (At
+    // production bytes, repartition on (cell, salt) to keep multiple
+    // ~128 MB files per cell; the guide-§6 file-sizing shape.) The fixed
+    // checkpoint interval is delta-spark's default.
+    DeltaWrite.commitFiles(spark, path, "CREATE ANN INDEX",
+      Option.when(DeltaRead.latestVersion(spark, path) >= 0)(DeltaRead.snapshot(spark, path)),
+      rows = Some(indexed.repartition(col("cell"))), domain = Some(Domain -> toJson(meta)),
+      create = Some(Seq("cell") -> Map("delta.checkpointInterval" -> "10")))
     meta
   }
 
   /** Incrementally add vectors to a persisted index WITHOUT retraining:
-    * each new vector assigns to its nearest EXISTING centroid and appends
-    * cell-partitioned parquet — untouched cells gain no files, the trained
-    * sidecar is untouched, and probe queries see the new vectors on their
-    * next scan. This is the serving-corpus ingest shape: cost scales with
-    * the batch, never the corpus. The trade is centroid staleness —
-    * appended mass does not move the centroids (the IVF serving
-    * convention), so rebuild when drift degrades recall. A PQ index
-    * (m > 0) encodes the batch with its STORED codebooks — codes stay
-    * comparable to the built corpus by construction, with the same
+    * each new vector assigns to its nearest EXISTING centroid and the
+    * batch lands as one blind-append commit — untouched cells gain no
+    * files, the trained state is untouched, and probe queries see the new
+    * vectors on their next scan. This is the serving-corpus ingest shape:
+    * cost scales with the batch, never the corpus. The trade is centroid
+    * staleness — appended mass does not move the centroids (the IVF
+    * serving convention), so rebuild when drift degrades recall. A PQ
+    * index (m > 0) encodes the batch with its STORED codebooks — codes
+    * stay comparable to the built corpus by construction, with the same
     * staleness trade as the centroids (codebooks never retrain on
     * appended mass). A batch whose columns don't match the index layout
-    * refuses (a silent parquet schema union would corrupt reads).
+    * refuses.
     */
   def append(df: DataFrame, idCol: String, vecCol: String, path: String,
-      extraCols: Seq[String] = Nil): Unit = {
+      extraCols: Seq[String] = Nil): Unit =
+    append(df, idCol, vecCol, path, extraCols, None)
+
+  /** [[append]] whose commit carries `txn` — the streaming sinks'
+    * exactly-once token.
+    */
+  private[graft] def append(df: DataFrame, idCol: String, vecCol: String, path: String,
+      extraCols: Seq[String], txn: Option[(String, Long)]): Unit = {
     val spark = df.sparkSession
-    val meta = readMeta(spark, path)
+    val (snap, meta) = state(spark, path)
     require(meta.m == 0 || extraCols.isEmpty,
       "extraCols are only supported for non-PQ indexes (m = 0)")
     val base = df.select(col(idCol).cast("long").as("id") +: col(vecCol).as("vec") +:
@@ -124,90 +146,36 @@ object AnnIndex {
           .toDF("id", "vec", "cell", "pq_code")
       case None => base
     }).withColumn("nrm", Similarity.l2Norm(col("vec")))
-    // layout guard from ONE data file plus the directory-encoded cell key
-    // — resolving the whole table (`spark.read.parquet(path)`) lists every
-    // file just to compare a schema all files share by this guard's own
-    // invariant, and that listing alone gave the fixed-batch streaming
-    // epoch α_wall ≈ 0.5 under 10× corpus growth (ScaleRun b67). Full
-    // FIELD comparison (name + type, nullability-insensitive, order-free):
-    // a same-named column with a different type would append cleanly and
-    // then corrupt every read with a silent parquet schema conflict.
-    sampleDataFile(spark, path).foreach { f =>
-      val existing = org.apache.spark.sql.types.StructType(
-        spark.read.parquet(f).schema.fields :+
-          org.apache.spark.sql.types.StructField("cell",
-            org.apache.spark.sql.types.IntegerType))
-      def norm(st: org.apache.spark.sql.types.StructType): Seq[(String, String)] =
-        st.fields.map(f => (f.name, f.dataType.sql)).sortBy(_._1).toSeq
-      require(norm(batch.schema) == norm(existing),
-        s"append batch layout ${norm(batch.schema).map { case (n, t) => s"$n:$t" }.mkString(", ")} " +
-          s"does not match the index layout ${norm(existing).map { case (n, t) => s"$n:$t" }.mkString(", ")} — " +
-          "pass the same extraCols (same types) the index was built with")
-    }
-    batch.write.mode("append").partitionBy("cell").parquet(path)
+    // layout guard against the schema in the log — no data file is read.
+    // Full FIELD comparison (name + type, nullability-insensitive,
+    // order-free): a same-named column with a different type would append
+    // cleanly and then corrupt every read of the index.
+    def norm(st: StructType): Seq[(String, String)] =
+      st.fields.map(f => (f.name, f.dataType.sql)).sortBy(_._1).toSeq
+    val existing = DataType.fromJson(snap.meta.schemaJson).asInstanceOf[StructType]
+    require(norm(batch.schema) == norm(existing),
+      s"append batch layout ${norm(batch.schema).map { case (n, t) => s"$n:$t" }.mkString(", ")} " +
+        s"does not match the index layout ${norm(existing).map { case (n, t) => s"$n:$t" }.mkString(", ")} — " +
+        "pass the same extraCols (same types) the index was built with")
+    DeltaWrite.commitFiles(spark, path, "WRITE", Some(snap), rows = Some(batch), txn = txn)
   }
 
   /** Delete vectors by id WITHOUT rebuilding — the index lifecycle's
-    * takedown verb: ONE id-pushed scan discovers the files holding any of
-    * `ids` (the IN predicate reaches the parquet reader, so untouched
-    * files skip on row-group stats/dictionaries), ONLY those files rewrite
-    * without the ids, and the replacements move in per cell. Untouched
-    * cells — and untouched files inside touched cells — stay
-    * byte-identical; cost ∝ touched files, never the corpus. PQ codes ride
-    * the surviving rows unchanged, so ADC probes stay valid; a cell
-    * deleted empty simply stops matching probes (run [[rebalance]] with
-    * `minBalance` to fold starved cells after heavy deletes). Ids are a
-    * bounded in-list (the takedown-batch shape). Returns rows deleted.
-    *
-    * SWAP CONTRACT (single writer, like every maintenance op here): each
-    * cell's replaced files are dropped IMMEDIATELY after that cell's
-    * replacements rename in, so a concurrent reader or a crash can see
-    * duplicated survivors / resurrected ids in AT MOST ONE cell, never
-    * index-wide. There is no log to replay: after a crash mid-swap,
-    * rebuild the index (re-running delete would re-discover the old file
-    * and duplicate its survivors — don't).
+    * takedown verb: one copy-on-write DELETE commit
+    * ([[DeltaMerge.deleteWhere]] on `id IN ids`), whose file stats skip
+    * every file holding none of the ids, so ONLY files holding them
+    * rewrite; untouched files stay live as they are and cost ∝ touched
+    * files, never the corpus. PQ codes ride the surviving rows unchanged,
+    * so ADC probes stay valid; a cell deleted empty simply stops matching
+    * probes (run [[rebalance]] with `minBalance` to fold starved cells
+    * after heavy deletes). Ids are a bounded in-list (the takedown-batch
+    * shape). Returns rows deleted.
     */
   def delete(spark: SparkSession, path: String, ids: Seq[Long]): Long = {
     require(ids.nonEmpty, "ids must be non-empty")
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val hit = col("id").isInCollection(ids)
-    val touched = spark.read.parquet(path).filter(hit)
-      .select(col("_metadata.file_path")).distinct()
-      .collect().map(_.getString(0))
-    if (touched.isEmpty) return 0L
-    val df = spark.read.option("basePath", path)
-      .parquet(touched.toIndexedSeq: _*)
-    val nDel = df.filter(hit).count()
-    val staging = new org.apache.hadoop.fs.Path(path,
-      s".del-staging-${java.util.UUID.randomUUID()}")
-    df.filter(!hit).write.partitionBy("cell").parquet(staging.toString)
-    // move replacements into their cell dirs (staged names are
-    // uuid-unique) and drop each cell's replaced files the moment its
-    // replacements land — the duplicate-visibility window is one cell,
-    // never the whole touched set (see the swap contract above)
-    val remaining = scala.collection.mutable.LinkedHashSet(touched.toSeq: _*)
-    fs.listStatus(staging).filter(_.isDirectory).foreach { d =>
-      val cellName = d.getPath.getName
-      val dest = new org.apache.hadoop.fs.Path(root, cellName)
-      fs.mkdirs(dest)
-      fs.listStatus(d.getPath).filter(_.getPath.getName.endsWith(".parquet"))
-        .foreach { f =>
-          require(fs.rename(f.getPath,
-            new org.apache.hadoop.fs.Path(dest, f.getPath.getName)),
-            s"failed to move ${f.getPath} into $dest")
-        }
-      remaining.filter(t =>
-        new org.apache.hadoop.fs.Path(t).getParent.getName == cellName)
-        .foreach { t =>
-          fs.delete(new org.apache.hadoop.fs.Path(t), false)
-          remaining -= t
-        }
-    }
-    // files whose every row was deleted stage no replacement dir
-    remaining.foreach(t => fs.delete(new org.apache.hadoop.fs.Path(t), false))
-    fs.delete(staging, true)
-    nDel
+    val (snap, _) = state(spark, path)
+    val v = DeltaMerge.deleteWhere(spark, path, col("id").isInCollection(ids))
+    if (v < 0) 0L else rowCount(snap) - rowCount(DeltaRead.snapshot(spark, path, Some(v)))
   }
 
   /** Retrain PQ codebooks on the CURRENT corpus and re-encode ONLY the
@@ -217,21 +185,20 @@ object AnnIndex {
     * bound and ADC recall decays). One bounded-sample train
     * ([[PQ.train]], the build-time trainer), one corpus pass computing
     * per-cell squared reconstruction error under the cell's CURRENT
-    * generation vs the candidate, then a staged rewrite of exactly the
-    * cells where `curErr > errorFactor × newErr` — untouched cells stay
-    * byte-identical and keep their generation. The sidecar appends the
-    * new generation to `codebookVersions` and flips only the re-encoded
-    * cells' `cellVersions`; probes and appends key every decode/encode by
-    * the cell's generation, so mixed-generation indexes stay exact.
-    * Returns the number of re-encoded cells (0 = candidate discarded, no
-    * generation recorded).
+    * generation vs the candidate, then ONE commit rewriting exactly the
+    * cells where `curErr > errorFactor × newErr` and recording the new
+    * generation in `codebookVersions` and the re-encoded cells'
+    * `cellVersions` — untouched cells keep their files and generation.
+    * Probes and appends key every decode/encode by the cell's generation,
+    * so mixed-generation indexes stay exact. Returns the number of
+    * re-encoded cells (0 = candidate discarded, no generation recorded).
     */
   def refreshCodebooks(spark: SparkSession, path: String,
       errorFactor: Double = 1.05, iters: Int = 2, seed: Long = 42L): Int = {
     require(errorFactor >= 1.0, s"errorFactor must be >= 1, got $errorFactor")
-    val meta = readMeta(spark, path)
+    val (snap, meta) = state(spark, path)
     require(meta.m > 0, s"$path was built without PQ codes (m=0)")
-    val df = spark.read.parquet(path)
+    val df = rows(spark, path, snap)
     val newCb = PQ.train(df, "id", "vec", meta.m, meta.nCodes, iters, seed)
     val byVersion = (0 to meta.codebookVersions.size)
       .map(v => v -> meta.codebooksAt(v)).toMap
@@ -255,72 +222,36 @@ object AnnIndex {
     val toRecode = errs.filter(r => r.getDouble(1) > errorFactor * r.getDouble(2))
       .map(_.getInt(0)).toSeq.sorted
     if (toRecode.isEmpty) return 0
-    val newVersion = meta.codebookVersions.size + 1
-
-    // staged rewrite of exactly the drifted cells (the delete() swap:
-    // whole-directory replacement per cell, one cell's window at a time)
-    val rows = df.filter(col("cell").isInCollection(toRecode))
+    val recoded = df.filter(col("cell").isInCollection(toRecode))
       .select(col("id"), col("vec"), col("cell"), col("nrm"))
       .as[(Long, Array[Float], Int, Double)]
       .mapPartitions(_.map { case (id, v, cell, nrm) =>
         (id, v, cell, newCb.encodeVec(v), nrm) })
       .toDF("id", "vec", "cell", "pq_code", "nrm")
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val staging = new org.apache.hadoop.fs.Path(path,
-      s".refresh-staging-${java.util.UUID.randomUUID()}")
-    rows.write.partitionBy("cell").parquet(staging.toString)
-    toRecode.foreach { c =>
-      val src = new org.apache.hadoop.fs.Path(staging, s"cell=$c")
-      val dst = new org.apache.hadoop.fs.Path(root, s"cell=$c")
-      if (fs.exists(src)) {
-        fs.delete(dst, true)
-        require(fs.rename(src, dst), s"failed to move $src to $dst")
-      }
-    }
-    fs.delete(staging, true)
-    writeMeta(spark, path, meta.copy(
-      codebookVersions = meta.codebookVersions :+
-        newCb.centers.map(_.map(_.toSeq).toSeq).toSeq,
-      cellVersions = meta.cellVersions ++ toRecode.map(_ -> newVersion)))
+    val newVersion = meta.codebookVersions.size + 1
+    DeltaWrite.commitFiles(spark, path, "REFRESH CODEBOOKS", Some(snap),
+      rows = Some(recoded), removes = filesOf(snap, toRecode.toSet),
+      domain = Some(Domain -> toJson(meta.copy(
+        codebookVersions = meta.codebookVersions :+
+          newCb.centers.map(_.map(_.toSeq).toSeq).toSeq,
+        cellVersions = meta.cellVersions ++ toRecode.map(_ -> newVersion)))))
     toRecode.size
   }
 
-  /** Remove crash-orphaned staging directories (`.refresh-staging-*`,
-    * `.rebal-staging-*`): the maintenance ops stage rewrites under
-    * dot-prefixed UUID dirs that no reader ever lists, and a crash
-    * between staging and the per-cell swap leaves them behind — dead
-    * bytes, never wrong answers. Single-maintainer contract like every
-    * verb here: only run it while no maintenance op is in flight (a
-    * LIVE staging dir is indistinguishable from an orphaned one).
-    * Returns the number of directories removed.
-    */
-  def cleanupStaging(spark: SparkSession, path: String): Int = {
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val stale = fs.listStatus(root).filter { st =>
-      val n = st.getPath.getName
-      st.isDirectory &&
-        (n.startsWith(".refresh-staging-") || n.startsWith(".rebal-staging-"))
-    }
-    stale.foreach(st => fs.delete(st.getPath, true))
-    stale.length
-  }
-
-  /** Exact top-k over the probed cells: load the sidecar, rank the query
-    * against the centroids driver-side, scan ONLY the `nProbe` nearest
-    * cells (a partition-pruning IN filter — untouched cells are never
-    * listed, read, or decoded), exact cosine within them.
+  /** Exact top-k over the probed cells: load the trained state, rank the
+    * query against the centroids driver-side, scan ONLY the `nProbe`
+    * nearest cells (a partition-pruning IN filter — untouched cells are
+    * never listed, read, or decoded), exact cosine within them.
     */
   def query(spark: SparkSession, path: String, query: Array[Double],
       nProbe: Int, k: Int): DataFrame = {
-    val meta = readMeta(spark, path)
+    val (snap, meta) = state(spark, path)
     require(nProbe > 0 && nProbe <= meta.nCells, s"nProbe must be in [1, ${meta.nCells}]")
     require(query.length == meta.dim, s"query dim ${query.length} != index dim ${meta.dim}")
     val probed = nearestCells(meta, query, nProbe)
     val qNorm = math.sqrt(query.map(x => x * x).sum)
     val qCol = typedlit(query.toSeq)
-    spark.read.parquet(path)
+    rows(spark, path, snap)
       .filter(col("cell").isin(probed.map(Integer.valueOf): _*))
       .select(col("id"),
         round(Similarity.dot(transform(col("vec"), _.cast("double")), qCol) /
@@ -339,14 +270,14 @@ object AnnIndex {
     */
   def knnJoin(spark: SparkSession, path: String, queries: DataFrame,
       idCol: String, vecCol: String, nProbe: Int, k: Int): DataFrame = {
-    val meta = readMeta(spark, path)
+    val (snap, meta) = state(spark, path)
     require(nProbe > 0 && nProbe <= meta.nCells, s"nProbe must be in [1, ${meta.nCells}]")
     val q = queries.select(
       col(idCol).as("query_id"), col(vecCol).as("q_vec"),
       Similarity.l2Norm(col(vecCol)).as("q_nrm"),
       explode(Similarity.assignCells(col(vecCol), meta.centroids, nProbe)).as("cell"))
     val probed = q.select(col("cell")).distinct().collect().map(_.getInt(0)).toSeq
-    val corpus = spark.read.parquet(path)
+    val corpus = rows(spark, path, snap)
       .filter(col("cell").isInCollection(probed))
       .select(col("cell"), col("id").as("neighbor_id"),
         col("vec").as("n_vec"), col("nrm").as("n_nrm"))
@@ -362,49 +293,50 @@ object AnnIndex {
   /** Per-cell population of the persisted index — the drift monitor that
     * pairs with [[append]]: appended mass never moves centroids, so a
     * cell whose share balloons past `1/nCells` by a large factor is the
-    * rebuild signal (probe cost on that cell grows with it). One
-    * footer-cheap aggregate over the cell partition column.
+    * rebuild signal (probe cost on that cell grows with it). Summed from
+    * the `numRecords` the log records per file — no Spark job; the frame
+    * is local, ordered by cell.
     */
   def cellStats(spark: SparkSession, path: String): DataFrame = {
-    val meta = readMeta(spark, path)
-    spark.read.parquet(path)
-      .groupBy(col("cell"))
-      .agg(count(lit(1)).as("n_vectors"))
-      .withColumn("share", col("n_vectors") /
-        sum(col("n_vectors")).over(org.apache.spark.sql.expressions.Window.partitionBy()))
-      .withColumn("balance", col("share") * meta.nCells)
-      .orderBy(col("cell"))
+    val (snap, meta) = state(spark, path)
+    val counts = cellCounts(snap).toSeq.sorted
+    val total = counts.map(_._2).sum.toDouble
+    import spark.implicits._
+    counts.map { case (c, n) => (c, n, n / total, n / total * meta.nCells) }
+      .toDF("cell", "n_vectors", "share", "balance")
   }
 
-  /** Split oversized cells IN PLACE — the remediation op [[cellStats]]'s
-    * drift signal calls for (appends never move centroids, so a hot cell's
-    * probe cost balloons): every cell whose balance (share × nCells)
-    * exceeds `maxBalance` re-trains k=2 sub-centroids ON THAT CELL ONLY
-    * (sample-bounded, exactly like [[build]]'s trainer) and rewrites ONLY
-    * its partition directory — one sub-cell keeps the old id, the other
-    * appends as a fresh cell — so the cost is proportional to the
-    * oversized mass, never the corpus, and untouched cells' files stay
-    * byte-identical. Splits repeat worst-cell-first until the bound holds,
-    * a cell stops separating (near-identical vectors), or `maxSplits`.
+  /** Split oversized cells and fold starved ones — the remediation op
+    * [[cellStats]]'s drift signal calls for (appends never move centroids,
+    * so a hot cell's probe cost balloons): every cell whose balance
+    * (share × nCells) exceeds `maxBalance` re-trains k=2 sub-centroids ON
+    * THAT CELL ONLY (sample-bounded, exactly like [[build]]'s trainer) and
+    * rewrites ONLY its rows — one sub-cell keeps the old id, the other
+    * becomes a fresh cell — so the cost is proportional to the oversized
+    * mass, never the corpus, and untouched cells keep their files. Every
+    * cell over the bound splits in one batched ROUND (one pooled sampling
+    * job, driver-side training, one sizing job, one rewrite), one commit
+    * per round carrying the new centroids; rounds repeat until the bound
+    * holds, a cell stops separating (near-identical vectors), or
+    * `maxSplits`.
     *
-    * With `minBalance > 0` a MERGE pass follows: cells whose balance
-    * falls below it (post-delete / post-append drift accumulating dead or
-    * starved cells — each one a probe that reads almost nothing yet still
-    * costs a centroid compare and a directory listing) fold into their
-    * nearest-centroid neighbor, smallest first. A merge MOVES the starved
-    * cell's parquet files into the neighbor's directory (the cell id
-    * lives in the directory name, not the file bytes — zero data rewrite)
-    * and replaces the two centroids with their mass-weighted mean; a
-    * merge that would push the absorbing cell past `maxBalance` is
-    * skipped. Surviving cells renumber contiguously (metadata-only
-    * directory renames), so `nCells` genuinely shrinks.
+    * With `minBalance > 0` a MERGE pass follows, as one commit: cells
+    * whose balance falls below it (post-delete / post-append drift
+    * accumulating dead or starved cells — each one a probe that reads
+    * almost nothing yet still costs a centroid compare) fold into their
+    * nearest-centroid neighbor, smallest first, the two centroids
+    * replaced by their mass-weighted mean; a merge that would push the
+    * absorbing cell past `maxBalance` is skipped. Surviving cells
+    * renumber contiguously, so `nCells` genuinely shrinks. The cell lives
+    * in each file's log partition value, not in its bytes, so a folded or
+    * renumbered cell's files are re-added under their new cell — zero
+    * data rewrite.
     *
-    * The sidecar's centroids/nCells update in the same pass; every
-    * query/join/append path reads them unchanged. Exactness at
-    * `nProbe = nCells` is preserved by construction (all cells scanned);
-    * sub-linear probes see strictly SMALLER hot cells. Works for PQ
-    * indexes too (codes ride the moved/rewritten rows unchanged).
-    * Returns the number of splits + merges performed.
+    * Exactness at `nProbe = nCells` is preserved by construction (all
+    * cells scanned); sub-linear probes see strictly SMALLER hot cells.
+    * Works for PQ indexes too: codes ride the rows unchanged, a split's
+    * new cell inherits its source generation, and a merge across
+    * generations is refused. Returns the number of splits + merges.
     */
   def rebalance(spark: SparkSession, path: String, maxBalance: Double = 4.0,
       iters: Int = 2, seed: Long = 42L, maxSplits: Int = 32,
@@ -413,43 +345,37 @@ object AnnIndex {
       s"maxBalance must exceed 1 (the perfectly even share), got $maxBalance")
     require(minBalance >= 0.0 && minBalance < 1.0,
       s"minBalance must be in [0, 1), got $minBalance")
-    val meta = readMeta(spark, path)
-    val centroids = scala.collection.mutable.ArrayBuffer(meta.centroids: _*)
-    // PQ generation per cell rides every structural change: a split's new
-    // cell inherits its source generation (codes moved verbatim), a merge
-    // across generations is refused (mixed codes would corrupt ADC), and
-    // renumbering remaps the keys
-    val cellVers = scala.collection.mutable.Map(meta.cellVersions.toSeq: _*)
-    val counts = scala.collection.mutable.Map[Int, Long]()
-    spark.read.parquet(path).groupBy(col("cell")).count()
-      .collect().foreach(r => counts(r.getInt(0)) = r.getLong(1))
+    var (snap, meta) = state(spark, path)
+    val counts = mutable.Map(cellCounts(snap).toSeq: _*)
     val total = counts.values.sum.toDouble
     if (total == 0) return 0
-    val unsplittable = scala.collection.mutable.Set[Int]()
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val centroids = mutable.ArrayBuffer(meta.centroids: _*)
+    val cellVers = mutable.Map(meta.cellVersions.toSeq: _*)
+    // one commit: the rows, removes and moves of a pass with the trained
+    // state as it now stands
+    def commit(operation: String, rewritten: Option[DataFrame],
+        removes: Seq[DeltaRead.LiveFile],
+        moves: Seq[(DeltaRead.LiveFile, Map[String, String])]): Unit = {
+      meta = meta.copy(nCells = centroids.size, centroids = centroids.toSeq,
+        cellVersions = cellVers.toMap)
+      DeltaWrite.commitFiles(spark, path, operation, Some(snap), rows = rewritten,
+        removes = removes, moves = moves, domain = Some(Domain -> toJson(meta)))
+      snap = DeltaRead.snapshot(spark, path)
+    }
+
+    val unsplittable = mutable.Set[Int]()
     var splits = 0
-    // BATCHED split rounds: every cell over the bound splits in ONE pass —
-    // one pooled sampling job (per-cell hash-ordered top-N, the
-    // sampleVectors order), driver-side k=2 training per cell, one staged
-    // write reassigning all of them via a per-cell when-chain, one staged
-    // count. The previous worst-first loop issued three Spark jobs PER
-    // split (up to 3×maxSplits); a round is three jobs total, and most
-    // rebalances converge in one round.
     def breaching: Seq[Int] = counts.filterNot(c => unsplittable(c._1))
       .filter(_._2 * centroids.size / total > maxBalance)
       .toSeq.sortBy(-_._2).map(_._1)
     var round = breaching
     while (splits < maxSplits && round.nonEmpty) {
       val cells = round.take(maxSplits - splits)
+      val hot = rows(spark, path, snap).filter(col("cell").isInCollection(cells))
       // pooled sample: one job, |cells| × 4096 rows collected
-      val sampleSize = 4096
       val pooled = graft.plans.TopKPerKey.topKPerKey(
-          spark.read.parquet(path)
-            .filter(col("cell").isInCollection(cells))
-            .select(col("cell"), col("vec"),
-              xxhash64(col("id"), lit(seed)).as("__h")),
-          Seq("cell"), Seq(col("__h")), sampleSize)
+          hot.select(col("cell"), col("vec"), xxhash64(col("id"), lit(seed)).as("__h")),
+          Seq("cell"), Seq(col("__h")), 4096)
         .select(col("cell"), col("vec")).collect()
         .groupBy(_.getInt(0))
         .map { case (c, rs) =>
@@ -457,60 +383,45 @@ object AnnIndex {
       val subsOf: Map[Int, Seq[Seq[Double]]] = cells.map { c =>
         c -> Similarity.lloydOnSample(pooled(c), 2, iters).map(_.toSeq).toSeq
       }.toMap
-      val newIdOf: Map[Int, Int] =
-        cells.zipWithIndex.map { case (c, i) => c -> (centroids.size + i) }.toMap
-      // one staged write: each row routes through ITS cell's sub-centroids
-      val reassigned = spark.read.parquet(path)
-        .filter(col("cell").isInCollection(cells))
-        .withColumn("cell", cells.foldLeft(lit(null).cast("int")) { (acc, c) =>
-          when(col("cell") === c,
-            when(Similarity.assignCell(col("vec"), subsOf(c)) === 0, lit(c))
-              .otherwise(lit(newIdOf(c)))).otherwise(acc)
-        })
-      val staging = new org.apache.hadoop.fs.Path(path,
-        s".rebal-staging-${java.util.UUID.randomUUID()}")
-      reassigned.write.mode("overwrite").partitionBy("cell").parquet(staging.toString)
-      val stagedCounts = spark.read.parquet(staging.toString)
-        .groupBy(col("cell")).count().collect()
-        .map(r => r.getInt(0) -> r.getLong(1)).toMap
-      // separating cells swap in; non-separating cells keep their original
-      // directory untouched and never retry. New ids assigned to cells
-      // that end up NOT splitting leave holes — compacted by appending
-      // split cells in order, so re-derive each split's final id.
-      val separated = cells.filter(c =>
-        stagedCounts.contains(c) && stagedCounts.contains(newIdOf(c)))
-      cells.filterNot(separated.contains).foreach(unsplittable += _)
-      separated.foreach { c =>
-        val finalNew = centroids.size
-        val oldDir = new org.apache.hadoop.fs.Path(path, s"cell=$c")
-        fs.delete(oldDir, true)
-        Seq(c -> c, newIdOf(c) -> finalNew).foreach { case (stagedId, dstId) =>
-          val src = new org.apache.hadoop.fs.Path(staging, s"cell=$stagedId")
-          val dst = new org.apache.hadoop.fs.Path(path, s"cell=$dstId")
-          require(fs.rename(src, dst), s"failed to move $src to $dst")
-        }
-        centroids(c) = subsOf(c)(0)
-        centroids += subsOf(c)(1)
-        cellVers.get(c).foreach(v => cellVers(finalNew) = v)
-        counts(c) = stagedCounts(c)
-        counts(finalNew) = stagedCounts(newIdOf(c))
-        splits += 1
+      // each hot row's sub-cell under ITS cell's sub-centroids
+      val side = cells.foldLeft(lit(null).cast("int")) { (acc, c) =>
+        when(col("cell") === c, Similarity.assignCell(col("vec"), subsOf(c))).otherwise(acc)
       }
-      fs.delete(staging, true)
+      val sizes = hot.groupBy(col("cell"), side.as("__side")).count().collect()
+        .map(r => (r.getInt(0), r.getInt(1)) -> r.getLong(2)).toMap
+      // cells whose sample does not separate keep their files and never retry
+      val separated = cells.filter(c => sizes.contains((c, 0)) && sizes.contains((c, 1)))
+      cells.filterNot(separated.contains).foreach(unsplittable += _)
+      if (separated.nonEmpty) {
+        val newIdOf = separated.zipWithIndex.map { case (c, i) => c -> (centroids.size + i) }.toMap
+        separated.foreach { c =>
+          centroids(c) = subsOf(c)(0)
+          centroids += subsOf(c)(1)
+          cellVers.get(c).foreach(v => cellVers(newIdOf(c)) = v)
+          counts(c) = sizes((c, 0))
+          counts(newIdOf(c)) = sizes((c, 1))
+        }
+        val reassigned = hot.filter(col("cell").isInCollection(separated))
+          .withColumn("cell", separated.foldLeft(col("cell")) { (acc, c) =>
+            when(col("cell") === c && side === 1, lit(newIdOf(c))).otherwise(acc)
+          })
+        commit("REBALANCE SPLIT", Some(reassigned), filesOf(snap, separated.toSet), Nil)
+        splits += separated.size
+      }
       round = breaching
     }
 
     // ---- merge pass: fold starved cells into their nearest neighbor ----
     var merges = 0
-    val removed = scala.collection.mutable.Set[Int]()
     if (minBalance > 0.0) {
       def countOf(c: Int): Long = counts.getOrElse(c, 0L)
       def dist2(a: Seq[Double], b: Seq[Double]): Double =
         a.zip(b).map { case (x, y) => (x - y) * (x - y) }.sum
-      val unmergeable = scala.collection.mutable.Set[Int]()
+      val unmergeable = mutable.Set[Int]()
+      val into = mutable.Map[Int, Int]() // folded cell -> the cell that absorbed it
       var go = true
       while (go) {
-        val live = centroids.indices.filterNot(removed)
+        val live = centroids.indices.filterNot(into.contains)
         val cand = live.filterNot(unmergeable)
           .map(c => (countOf(c), c)).minOption
         go = live.size > 1 && cand.exists { case (n, _) =>
@@ -521,26 +432,12 @@ object AnnIndex {
             .minBy(o => dist2(centroids(o), centroids(src)))
           // absorbing must not recreate the hot-cell problem; and a PQ
           // merge across codebook generations would mix incomparable
-          // codes in one directory — refuse the pair
+          // codes in one cell — refuse the pair
           if ((countOf(tgt) + countOf(src)) * (live.size - 1) / total > maxBalance ||
               (meta.m > 0 &&
                 cellVers.getOrElse(src, 0) != cellVers.getOrElse(tgt, 0)))
             unmergeable += src
           else {
-            val srcDir = new org.apache.hadoop.fs.Path(path, s"cell=$src")
-            if (fs.exists(srcDir)) {
-              val tgtDir = new org.apache.hadoop.fs.Path(path, s"cell=$tgt")
-              fs.mkdirs(tgtDir)
-              fs.listStatus(srcDir).filter(_.getPath.getName.endsWith(".parquet"))
-                .foreach { st =>
-                  // fresh name: part names from different writes could collide
-                  val dst = new org.apache.hadoop.fs.Path(tgtDir,
-                    s"part-merge-${java.util.UUID.randomUUID()}.snappy.parquet")
-                  require(fs.rename(st.getPath, dst),
-                    s"failed to move ${st.getPath} to $dst")
-                }
-              fs.delete(srcDir, true)
-            }
             val (ns, nt) = (countOf(src), countOf(tgt))
             if (ns + nt > 0)
               centroids(tgt) = centroids(tgt).zip(centroids(src)).map {
@@ -548,39 +445,30 @@ object AnnIndex {
             counts(tgt) = nt + ns
             counts.remove(src)
             cellVers.remove(src)
-            removed += src
+            into(src) = tgt
             merges += 1
           }
         }
       }
-      // renumber survivors contiguously (ascending order vacates every
-      // target slot before it is reused — new ids never exceed old ones)
-      if (removed.nonEmpty) {
-        val survivors = centroids.indices.filterNot(removed).toSeq
-        survivors.zipWithIndex.foreach { case (old, nw) =>
-          if (old != nw) {
-            val srcDir = new org.apache.hadoop.fs.Path(path, s"cell=$old")
-            if (fs.exists(srcDir)) {
-              val dstDir = new org.apache.hadoop.fs.Path(path, s"cell=$nw")
-              require(!fs.exists(dstDir), s"renumber target $dstDir occupied")
-              require(fs.rename(srcDir, dstDir), s"failed to rename $srcDir")
-            }
-          }
+      if (merges > 0) {
+        // survivors renumber contiguously; a folded cell's files follow
+        // the cell that absorbed it
+        val survivors = centroids.indices.filterNot(into.contains)
+        val renumbered = survivors.zipWithIndex.toMap
+        def home(c: Int): Int = into.get(c).fold(renumbered(c))(home)
+        val moves = snap.files.flatMap { f =>
+          val to = home(cellOf(f))
+          Option.when(to != cellOf(f))(f -> Map("cell" -> to.toString))
         }
-        val renumbered = survivors.map(centroids)
-        val renumberedVers = survivors.zipWithIndex.flatMap { case (old, nw) =>
-          cellVers.get(old).map(nw -> _) }
+        val kept = survivors.map(centroids)
+        val vers = survivors.flatMap(c => cellVers.get(c).map(renumbered(c) -> _))
         centroids.clear()
-        centroids ++= renumbered
+        centroids ++= kept
         cellVers.clear()
-        cellVers ++= renumberedVers
+        cellVers ++= vers
+        commit("REBALANCE MERGE", None, Nil, moves)
       }
     }
-
-    if (splits > 0 || merges > 0)
-      writeMeta(spark, path,
-        meta.copy(nCells = centroids.size, centroids = centroids.toSeq,
-          cellVersions = cellVers.toMap))
     splits + merges
   }
 
@@ -606,14 +494,14 @@ object AnnIndex {
   def hardNegatives(spark: SparkSession, path: String, queries: DataFrame,
       idCol: String, vecCol: String, labelCol: String, nProbe: Int,
       k: Int): DataFrame = {
-    val meta = readMeta(spark, path)
+    val (snap, meta) = state(spark, path)
     require(nProbe > 0 && nProbe <= meta.nCells, s"nProbe must be in [1, ${meta.nCells}]")
     val q = queries.select(
       col(idCol).as("query_id"), col(labelCol).as("q_label"),
       col(vecCol).as("q_vec"), Similarity.l2Norm(col(vecCol)).as("q_nrm"),
       explode(Similarity.assignCells(col(vecCol), meta.centroids, nProbe)).as("cell"))
     val probed = q.select(col("cell")).distinct().collect().map(_.getInt(0)).toSeq
-    val corpus = spark.read.parquet(path)
+    val corpus = rows(spark, path, snap)
       .filter(col("cell").isInCollection(probed))
       .select(col("cell"), col("id").as("neg_id"), col(labelCol).as("n_label"),
         col("vec").as("n_vec"), col("nrm").as("n_nrm"))
@@ -632,7 +520,7 @@ object AnnIndex {
     */
   def queryPq(spark: SparkSession, path: String, query: Array[Double],
       nProbe: Int, k: Int): DataFrame = {
-    val meta = readMeta(spark, path)
+    val (snap, meta) = state(spark, path)
     require(meta.codebooks.isDefined,
       s"$path was built without PQ codes (m=0)")
     val probed = nearestCells(meta, query, nProbe)
@@ -643,7 +531,7 @@ object AnnIndex {
     val groups = probed.groupBy(meta.versionOfCell)
     val parts = groups.toSeq.sortBy(_._1).map { case (v, cells) =>
       PQ.adcTopK(
-        spark.read.parquet(path)
+        rows(spark, path, snap)
           .filter(col("cell").isin(cells.map(Integer.valueOf): _*))
           .select(col("id"), col("pq_code")),
         "id", query, meta.codebooksAt(v), k)
@@ -668,13 +556,13 @@ object AnnIndex {
   def queryPqRefined(spark: SparkSession, path: String, query: Array[Double],
       nProbe: Int, k: Int, refine: Int = 4): DataFrame = {
     require(refine >= 1, s"refine must be >= 1, got $refine")
-    val meta = readMeta(spark, path)
+    val (snap, meta) = state(spark, path)
     val probed = nearestCells(meta, query, nProbe)
     val ids = queryPq(spark, path, query, nProbe, k * refine)
       .select(col("id")).collect().map(_.getLong(0)).toSeq
     val qNorm = math.sqrt(query.map(x => x * x).sum)
     val qCol = typedlit(query.toSeq)
-    spark.read.parquet(path)
+    rows(spark, path, snap)
       .filter(col("cell").isin(probed.map(Integer.valueOf): _*) &&
         col("id").isInCollection(if (ids.isEmpty) Seq(-1L) else ids))
       .select(col("id"),
@@ -684,6 +572,12 @@ object AnnIndex {
       .limit(k)
   }
 
+  /** The trained state (driver-side, a few KB) — the public introspection
+    * point maintenance callers key decisions on (PQ-ness, cell count)
+    * without re-deriving it from the data files.
+    */
+  def meta(spark: SparkSession, path: String): Meta = state(spark, path)._2
+
   private def nearestCells(meta: Meta, query: Array[Double], nProbe: Int): Seq[Int] =
     meta.centroids.zipWithIndex
       .map { case (c, j) =>
@@ -691,69 +585,58 @@ object AnnIndex {
       }
       .sorted.take(nProbe).map(_._2)
 
-  private def writeMeta(spark: SparkSession, path: String, meta: Meta): Unit = {
+  /** The index at its head: the log snapshot and the state its domain holds. */
+  private def state(spark: SparkSession, path: String): (DeltaRead.Snapshot, Meta) = {
+    val snap = DeltaRead.snapshot(spark, path)
+    (snap, snap.domains.get(Domain).map(fromJson).getOrElse(throw new IllegalArgumentException(
+      s"$path is not an ANN index (no $Domain domain in its Delta log)")))
+  }
+
+  /** The index rows as of `snap` (partition pruning comes from the log). */
+  private def rows(spark: SparkSession, path: String, snap: DeltaRead.Snapshot): DataFrame =
+    DeltaRead.readDeltaTable(spark, path, Some(snap.version))
+
+  private def cellOf(f: DeltaRead.LiveFile): Int = f.partitionValues("cell").toInt
+
+  private def filesOf(snap: DeltaRead.Snapshot, cells: Set[Int]): Seq[DeltaRead.LiveFile] =
+    snap.files.filter(f => cells(cellOf(f)))
+
+  private def numRecords(f: DeltaRead.LiveFile): Long = DeltaWrite.numRecordsOf(f.stats, f.path)
+
+  private def rowCount(snap: DeltaRead.Snapshot): Long = snap.files.map(numRecords).sum
+
+  /** Vectors per non-empty cell, from the log's per-file `numRecords`. */
+  private def cellCounts(snap: DeltaRead.Snapshot): Map[Int, Long] =
+    snap.files.groupMapReduce(cellOf)(numRecords)(_ + _).filter(_._2 > 0)
+
+  /** [[Meta]] as the domain's JSON configuration. */
+  private def toJson(meta: Meta): String = {
     val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
     val root = mapper.createObjectNode()
     root.put("dim", meta.dim); root.put("nCells", meta.nCells)
     root.put("m", meta.m); root.put("nCodes", meta.nCodes)
+    def books(into: com.fasterxml.jackson.databind.node.ArrayNode,
+        bs: Seq[Seq[Seq[Double]]]): Unit = bs.foreach { book =>
+      val b = into.addArray()
+      book.foreach { c => val a = b.addArray(); c.foreach(a.add) }
+    }
     val cs = root.putArray("centroids")
     meta.centroids.foreach { c => val a = cs.addArray(); c.foreach(a.add) }
-    meta.codebooks.foreach { books =>
-      val bs = root.putArray("codebooks")
-      books.foreach { book =>
-        val b = bs.addArray()
-        book.foreach { c => val a = b.addArray(); c.foreach(a.add) }
-      }
-    }
+    meta.codebooks.foreach(books(root.putArray("codebooks"), _))
     if (meta.codebookVersions.nonEmpty) {
       val vs = root.putArray("codebookVersions")
-      meta.codebookVersions.foreach { books =>
-        val bs = vs.addArray()
-        books.foreach { book =>
-          val b = bs.addArray()
-          book.foreach { c => val a = b.addArray(); c.foreach(a.add) }
-        }
-      }
+      meta.codebookVersions.foreach(books(vs.addArray(), _))
     }
     if (meta.cellVersions.nonEmpty) {
       val cv = root.putObject("cellVersions")
       meta.cellVersions.toSeq.sortBy(_._1).foreach { case (c, v) =>
         cv.put(c.toString, v) }
     }
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(new org.apache.hadoop.fs.Path(path, "_ann_meta.json"), true)
-    try out.write(mapper.writeValueAsBytes(root)) finally out.close()
+    mapper.writeValueAsString(root)
   }
 
-  /** The persisted sidecar state (driver-side, a few KB) — the public
-    * introspection point maintenance callers key decisions on (PQ-ness,
-    * cell count) without re-deriving it from the data files.
-    */
-  def meta(spark: SparkSession, path: String): Meta = readMeta(spark, path)
-
-  /** One data file of the index, found by walking at most the cell
-    * directories (O(nCells) listing, never O(files)); None on an index
-    * with no data yet.
-    */
-  private def sampleDataFile(spark: SparkSession, path: String): Option[String] = {
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.listStatus(root).iterator
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("cell="))
-      .flatMap(d => fs.listStatus(d.getPath).iterator
-        .filter(_.getPath.getName.endsWith(".parquet")).take(1))
-      .take(1).map(_.getPath.toString).toSeq.headOption
-  }
-
-  private[ext] def readMeta(spark: SparkSession, path: String): Meta = {
-    val p = new org.apache.hadoop.fs.Path(path, "_ann_meta.json")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(fs.exists(p), s"$path is not an ANN index (no _ann_meta.json)")
-    val in = fs.open(p)
-    val content = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-    val node = new com.fasterxml.jackson.databind.ObjectMapper().readTree(content)
+  private def fromJson(json: String): Meta = {
+    val node = new com.fasterxml.jackson.databind.ObjectMapper().readTree(json)
     import scala.jdk.CollectionConverters._
     def arr2(n: com.fasterxml.jackson.databind.JsonNode): Seq[Seq[Double]] =
       n.elements().asScala.map(_.elements().asScala.map(_.asDouble()).toSeq).toSeq

@@ -80,7 +80,18 @@ object DeltaMerge {
       keyCols: Seq[String], whenMatched: String = "update",
       insertUnmatched: Boolean = true,
       txn: Option[(String, Long)] = None,
-      useDeletionVectors: Boolean = false): Long = {
+      useDeletionVectors: Boolean = false): Long =
+    merge(spark, path, source, keyCols, whenMatched, insertUnmatched, txn,
+      useDeletionVectors, None)
+
+  /** [[merge]] given the source's key tuples when the caller already
+    * collected them under [[keyList]]'s rule ([[graft.streaming.ChangeViewSink]]
+    * does, for its view read): they stand in for MERGE's own key collect.
+    */
+  private[graft] def merge(spark: SparkSession, path: String, source: DataFrame,
+      keyCols: Seq[String], whenMatched: String, insertUnmatched: Boolean,
+      txn: Option[(String, Long)], useDeletionVectors: Boolean,
+      sourceKeys: Option[Seq[Row]]): Long = {
     require(whenMatched == "update" || whenMatched == "delete",
       s"whenMatched must be update or delete, got $whenMatched")
     require(keyCols.nonEmpty, "keyCols must be non-empty")
@@ -129,7 +140,8 @@ object DeltaMerge {
     // finding the matched rows needs no join. A larger source keeps the
     // aggregate check and a semi-join.
     val (source1, bytes) = sized(source0)
-    val keys = keyList(source1, bytes, schema, keyCols)
+    val keys = sourceKeys.map(k => (k, keyIn(schema, keyCols, k.filterNot(_.anyNull))))
+      .orElse(keyList(source1, bytes, schema, keyCols))
     val dup = keys match {
       case Some((rows, _)) => rows.size - rows.map(_.toSeq.map(groupKey)).distinct.size
       case None => source1.groupBy(keyCols.map(col): _*).count().filter(col("count") > 1)

@@ -49,7 +49,7 @@ object DeltaRead {
     * metadata — watermark bumps, schema evolution, property changes —
     * must carry it verbatim; only table creation and clone mint.
     */
-  private[io] final case class Meta(schemaJson: String, partitionCols: Seq[String],
+  private[graft] final case class Meta(schemaJson: String, partitionCols: Seq[String],
       configuration: Map[String, String] = Map.empty, id: String = "") {
     def mappingMode: String =
       configuration.getOrElse("delta.columnMapping.mode", "none")
@@ -174,7 +174,7 @@ object DeltaRead {
     * per-file size/mtime/stats the log carries (stats = the min/max JSON
     * Delta writers embed — fuel for file-level data skipping).
     */
-  private[io] final case class LiveFile(path: String,
+  private[graft] final case class LiveFile(path: String,
       partitionValues: Map[String, String], size: Long = 0L,
       modificationTime: Long = 0L, stats: Option[String] = None,
       dv: Option[DeletionVectors.Descriptor] = None,
@@ -982,7 +982,7 @@ object DeltaRead {
     * metaData action yet. A writer takes its OCC read version from the
     * snapshot its actions are planned on, so the two can never disagree.
     */
-  private[io] final case class Snapshot(version: Long, meta: Meta, files: Seq[LiveFile],
+  private[graft] final case class Snapshot(version: Long, meta: Meta, files: Seq[LiveFile],
       protocol: Protocol, domains: Domains, txns: Map[String, (Long, Long)])
 
   /** The table at `versionAsOf` (default: the head), from ONE listing of
@@ -1001,7 +1001,7 @@ object DeltaRead {
     * then compacted ranges and commit JSONs. Time travel to exactly the
     * cached version is served from it; older versions replay cold.
     */
-  private[io] def snapshot(spark: SparkSession, path: String,
+  private[graft] def snapshot(spark: SparkSession, path: String,
       versionAsOf: Option[Long] = None): Snapshot = {
     val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
     val dir = new Path(path, "_delta_log")

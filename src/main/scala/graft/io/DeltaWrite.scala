@@ -525,7 +525,7 @@ object DeltaWrite {
     * baseRowId range assignment on row-tracked tables (this writer's
     * [[footerStats]] always records it).
     */
-  private[io] def numRecordsOf(stats: Option[String], where: String): Long =
+  private[graft] def numRecordsOf(stats: Option[String], where: String): Long =
     stats.flatMap(DeltaActions.numRecords).getOrElse(throw new IllegalStateException(
       s"$where: row tracking needs numRecords stats to assign baseRowIds"))
 
@@ -674,6 +674,51 @@ object DeltaWrite {
     committed
   }
 
+  /** The commit of a writer that keeps its own state in a domain of the
+    * table ([[graft.ext.AnnIndex]] keeps its trained state in one): on
+    * top of `snap`, stage `rows` as data files partitioned like the
+    * table, tombstone `removes`, re-add each `moves` file unchanged under
+    * new partition values (readers take them from the log), and record
+    * `domain` and `txn` — one atomic commit. With `create` (partition
+    * columns and configuration) the commit makes the table `rows`
+    * describe, declaring `domainMetadata`; a table `snap` holds is
+    * replaced whole. Returns the committed version.
+    */
+  private[graft] def commitFiles(spark: SparkSession, path: String, operation: String,
+      snap: Option[DeltaRead.Snapshot], rows: Option[DataFrame] = None,
+      removes: Seq[DeltaRead.LiveFile] = Nil,
+      moves: Seq[(DeltaRead.LiveFile, Map[String, String])] = Nil,
+      domain: Option[(String, String)] = None, txn: Option[(String, Long)] = None,
+      create: Option[(Seq[String], Map[String, String])] = None): Long = {
+    import org.apache.spark.sql.functions.col
+    val meta = create.fold(snap.get.meta) { case (partitionBy, conf) =>
+      DeltaRead.Meta(rows.get.schema.json, partitionBy, conf,
+        snap.fold(UUID.randomUUID().toString)(s => carriedId(s.meta)))
+    }
+    val gone = (if (create.isDefined) snap.toSeq.flatMap(_.files) else removes) ++ moves.map(_._1)
+    snap.foreach(s => checkWritable(s.meta, s.protocol, s"$operation on $path",
+      removesData = gone.nonEmpty))
+    val schema = DataType.fromJson(meta.schemaJson).asInstanceOf[StructType]
+    val adds = rows.toSeq.flatMap(r =>
+      stageBatch(r.select(schema.fieldNames.map(c => col(s"`$c`")).toSeq: _*), new Path(path), meta))
+    val now = System.currentTimeMillis()
+    val lines = create.toSeq.flatMap(_ => Seq(
+        DeltaActions.protocol(DeltaRead.Protocol(1, 7, Nil, Seq("domainMetadata"))),
+        DeltaActions.metaData(meta.id, meta.schemaJson, meta.partitionCols,
+          meta.configuration, now))) ++
+      txn.map { case (appId, v) => DeltaActions.txn(appId, v, now) } ++
+      gone.map(f => DeltaActions.remove(f.path, now, dataChange = true, f.dv)) ++
+      moves.map { case (f, pv) => DeltaActions.add(f.path, pv, f.size, f.modificationTime,
+        dataChange = true, f.stats, f.dv, f.baseRowId, f.defaultRowCommitVersion) } ++
+      adds.map(f => DeltaActions.add(f.path, f.partitionValues, f.size, now,
+        dataChange = true, f.stats, None, None, None)) ++
+      domain.map { case (name, config) => DeltaActions.domainMetadata(name, config) }
+    val guard =
+      if (create.isDefined) ConflictGuard.exclusive(gone.map(_.path).toSet, txn.map(_._1))
+      else ConflictGuard.disjointRewrite(gone.map(_.path).toSet, txn.map(_._1))
+    commit(spark, path, snap.fold(-1L)(_.version), meta, operation, Nil, guard)(_ => lines)
+  }
+
   /** Honor `delta.checkpointInterval` (the standard writer-side table
     * property): after a successful commit, write a classic checkpoint
     * when at least `interval` versions landed since the last checkpoint
@@ -727,8 +772,7 @@ object DeltaWrite {
     *    DV-re-add-then-COW remove, and dropping the latter resurrects
     *    pre-range state (LogCompactionSpec's DV+COW history pins this).
     *
-    * Single-maintainer contract (same as [[graft.ext.AnnIndex]].delete):
-    * compactLog lists then re-reads commit JSONs non-atomically, so a
+    * Single-maintainer contract: compactLog lists then re-reads commit JSONs non-atomically, so a
     * CONCURRENT [[cleanupMetadata]] that deletes a listed JSON makes this
     * call fail loudly (exception, no output published) — run maintenance
     * verbs from one coordinator.

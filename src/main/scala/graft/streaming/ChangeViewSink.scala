@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
@@ -47,9 +47,11 @@ import graft.io.{DeltaMerge, DeltaRead, DeltaWrite}
   *      `txn = (appId, batchId)` — a replayed epoch is recognized by the
   *      marker and skipped whole, so the fold is applied exactly once
   *      even though `n += d_n` is not idempotent;
-  *   2. tombstone rows then DELETE by predicate (`n <= 0`) — idempotent
-  *      by construction, so it needs no marker, and a crash between the
-  *      two commits heals on replay (step 1 skips, step 2 re-deletes).
+  *   2. tombstone rows then DELETE by predicate (`n <= 0`), in an epoch
+  *      whose fold produced one (the fold's sizing job observes it) —
+  *      idempotent by construction, so it needs no marker, and a crash
+  *      between the two commits heals on replay (step 1 skips, step 2
+  *      re-deletes unconditionally).
   *
   * Readers between the two commits may see a tombstone row; [[readView]]
   * filters them, then derives `avg` through `Incremental.readView`.
@@ -151,9 +153,12 @@ object ChangeViewSink {
     val needsRepair = col("n") > 0 && (
       (col("d_del_mn").isNotNull && col("mn").isNotNull && col("d_del_mn") <= col("mn")) ||
       (col("d_del_mx").isNotNull && col("mx").isNotNull && col("d_del_mx") >= col("mx")))
+    // the same job observes whether any key folded to a tombstone (n <= 0)
+    val tombstones = new Observation()
     val (folded, foldedBytes) = DeltaMerge.sized(Incremental.combine(
         keys.fold(view)(k => view.filter(k._2)), delta, keyCols, "right_outer")
-      .withColumn("__repair", needsRepair).drop("d_del_mn", "d_del_mx"))
+      .withColumn("__repair", needsRepair).drop("d_del_mn", "d_del_mx")
+      .observe(tombstones, max(col("n") <= 0).as("t")))
     // the epoch's last change version among the repair keys; null: none
     val repairAt = sourcePath.flatMap(_ =>
       Option(folded.filter(col("__repair")).agg(max(col("d_ver"))).head().get(0)))
@@ -162,9 +167,12 @@ object ChangeViewSink {
         repairBounds(spark, src, ver, folded, foldedBytes, keyCols, valueCol)
       case _ => folded
     }
+    // the folded frame holds exactly the delta's keys: a collected key
+    // list stands in for MERGE's own
     DeltaMerge.merge(spark, viewPath, exact.drop("__repair", "d_ver"), keyCols,
-      txn = Some(appId -> batchId))
-    DeltaMerge.deleteWhere(spark, viewPath, col("n") <= 0)
+      "update", insertUnmatched = true, Some(appId -> batchId), useDeletionVectors = false,
+      keys.map(_._1))
+    if (tombstones.get("t") == true) DeltaMerge.deleteWhere(spark, viewPath, col("n") <= 0)
     true
   }
 

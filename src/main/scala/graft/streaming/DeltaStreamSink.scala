@@ -25,9 +25,10 @@ import graft.io.{DeltaRead, DeltaWrite}
   * stages: writer commits are atomic, readers tail `changesSince`.
   *
   * Every file-state sink of this package keeps its stores as Delta tables
-  * and commits its epochs through [[writeBatch]] (the ingest sinks) or a
+  * and commits its epochs through [[writeBatch]] (the ingest sinks), a
   * `txn`-carrying MERGE ([[DeltaMergeSink]], [[ChangeViewSink]],
-  * [[IncrementalSink]]); only the ANN sinks keep their own markers.
+  * [[IncrementalSink]]) or a `txn`-carrying index append
+  * ([[AnnMaintainSink]], [[AnnCdcSink]]).
   */
 object DeltaStreamSink {
 

@@ -204,7 +204,7 @@ object ScaleRun {
       // batch through AnnCdcSink.processBatch against a corpus-sized
       // index — the steady-state CDC workload must track the BATCH (pure
       // append path; the delete pass only runs on epochs with deletes,
-      // where an id-pushed pruned scan is the documented takedown cost)
+      // where a stats-skipped copy-on-write DELETE is the takedown cost)
       val wantsCdcAnn = only.isEmpty || only.exists("b73_ann_cdc_epoch".startsWith)
       var cdcAnnPath: String = null
       var cdcAnnEpoch = 0L

@@ -1,6 +1,7 @@
 package graft.ext
 
 import graft.SparkSpec
+import graft.io.DeltaRead
 import org.apache.spark.sql.functions._
 
 class AnnIndexSpec extends SparkSpec {
@@ -23,7 +24,7 @@ class AnnIndexSpec extends SparkSpec {
   test("build + exact query: full probe equals brute force; meta round-trips") {
     val path = tmp("graft_ann")
     val meta = AnnIndex.build(vecs, "vec_id", "embedding", path, nCells = 3)
-    assert(AnnIndex.readMeta(spark, path) == meta)
+    assert(AnnIndex.meta(spark, path) == meta)
 
     val raw = vecs.collect().map(r => r.getLong(0) -> r.getSeq[Float](1).toArray).toMap
     val query = raw(100L).map(_.toDouble)
@@ -64,20 +65,6 @@ class AnnIndexSpec extends SparkSpec {
     val e = intercept[IllegalArgumentException](
       AnnIndex.queryPq(spark, noPq, query, nProbe = 1, k = 3))
     assert(e.getMessage.contains("without PQ"), e.getMessage)
-  }
-
-  test("cleanupStaging removes crash-orphaned staging dirs, touches nothing live") {
-    val path = tmp("graft_ann_clean")
-    AnnIndex.build(vecs, "vec_id", "embedding", path, nCells = 3)
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.mkdirs(new org.apache.hadoop.fs.Path(path, ".rebal-staging-dead1/cell=0"))
-    fs.mkdirs(new org.apache.hadoop.fs.Path(path, ".refresh-staging-dead2"))
-    val before = spark.read.parquet(path).count()
-    assert(AnnIndex.cleanupStaging(spark, path) == 2)
-    assert(AnnIndex.cleanupStaging(spark, path) == 0) // idempotent
-    assert(spark.read.parquet(path).count() == before)
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(path, ".rebal-staging-dead1")))
   }
 
   test("queryPqRefined: exact rerank of the ADC shortlist converges on the exact probe") {
@@ -135,7 +122,7 @@ class AnnIndexSpec extends SparkSpec {
     val path = tmp("graft_ann_hn")
     AnnIndex.build(labeled, "vec_id", "embedding", path, nCells = 3,
       extraCols = Seq("label"))
-    val totalFiles = spark.read.parquet(path).inputFiles.length
+    val totalFiles = DeltaRead.readDeltaTable(spark, path).inputFiles.length
     // the join forces AQE, whose executed plan nests scans inside
     // query-stage leaves — descend through the adaptive wrappers
     def scans(p: org.apache.spark.sql.execution.SparkPlan)
@@ -173,7 +160,7 @@ class AnnIndexSpec extends SparkSpec {
     }.toDF("vec_id", "embedding")
     AnnIndex.append(extra, "vec_id", "embedding", path)
     // the trained sidecar is untouched
-    assert(AnnIndex.readMeta(spark, path) == metaBefore)
+    assert(AnnIndex.meta(spark, path) == metaBefore)
     // a 1-probe query in that cluster now surfaces the appended ids
     val raw = vecs.collect().map(r => r.getLong(0) -> r.getSeq[Float](1).toArray).toMap
     val hits = AnnIndex.query(spark, path, raw(0L).map(_.toDouble), nProbe = 1, k = 14)
@@ -189,7 +176,7 @@ class AnnIndexSpec extends SparkSpec {
     val pqPath = tmp("graft_ann_app_pq")
     AnnIndex.build(vecs, "vec_id", "embedding", pqPath, nCells = 3, m = 4, nCodes = 8)
     AnnIndex.append(extra, "vec_id", "embedding", pqPath)
-    assert(AnnIndex.readMeta(spark, pqPath).m == 4) // sidecar untouched
+    assert(AnnIndex.meta(spark, pqPath).m == 4) // sidecar untouched
     val pqHits = AnnIndex.queryPq(spark, pqPath, raw(0L).map(_.toDouble),
       nProbe = 1, k = 14).collect().map(_.getLong(0)).toSet
     assert(pqHits.contains(900L) && pqHits.contains(901L), pqHits.toString)
@@ -217,12 +204,11 @@ class AnnIndexSpec extends SparkSpec {
     val before = exhaustive(3)
     val ops = AnnIndex.rebalance(spark, path, maxBalance = 4.0, minBalance = 0.3)
     assert(ops == 1, s"expected exactly one merge, got $ops")
-    val meta = AnnIndex.readMeta(spark, path)
+    val meta = AnnIndex.meta(spark, path)
     assert(meta.nCells == 2 && meta.centroids.size == 2, meta.nCells.toString)
-    // contiguous renumbering: only cell=0 / cell=1 directories remain
-    val dirs = new java.io.File(path).listFiles().filter(_.isDirectory)
-      .map(_.getName).filter(_.startsWith("cell=")).sorted
-    assert(dirs.toSeq == Seq("cell=0", "cell=1"), dirs.mkString(", "))
+    // contiguous renumbering: only cells 0 and 1 hold live files
+    val cells = DeltaRead.snapshot(spark, path).files.map(_.partitionValues("cell")).distinct.sorted
+    assert(cells == Seq("0", "1"), cells.mkString(", "))
     // nothing lost: full probe returns identical neighbor sets
     assert(exhaustive(2) == before)
     val stats = AnnIndex.cellStats(spark, path).collect()
@@ -287,26 +273,22 @@ class AnnIndexSpec extends SparkSpec {
         nProbe = nCells, k = 5).collect()
         .groupBy(_.getLong(0)).view.mapValues(_.map(_.getLong(1)).toSet).toMap
     val before = exhaustive(3)
-    def cellBytes(cell: Int): Map[String, Seq[Byte]] = {
-      val dir = new java.io.File(path, s"cell=$cell")
-      dir.listFiles().filter(_.getName.endsWith(".parquet"))
-        .map(f => f.getName -> java.nio.file.Files.readAllBytes(f.toPath).toSeq)
-        .toMap
-    }
+    def cellBytes(cell: Int): Map[String, Long] = DeltaRead.snapshot(spark, path).files
+      .filter(_.partitionValues("cell") == cell.toString).map(f => f.path -> f.size).toMap
     val coldCells = Seq(0, 1, 2).filterNot(_ == hotCell)
     val coldBefore = coldCells.map(c => c -> cellBytes(c)).toMap
 
     val splits = AnnIndex.rebalance(spark, path, maxBalance = 1.3)
     assert(splits >= 1 && splits <= 3, s"expected a small number of splits, got $splits")
-    val metaAfter = AnnIndex.readMeta(spark, path)
+    val metaAfter = AnnIndex.meta(spark, path)
     assert(metaAfter.nCells == 3 + splits && metaAfter.centroids.size == 3 + splits)
     // the bound holds everywhere
     val statsAfter = AnnIndex.cellStats(spark, path).collect()
       .map(r => (r.getInt(0), r.getLong(1), r.getDouble(3)))
     assert(statsAfter.forall(_._3 <= 1.3), statsAfter.mkString(", "))
     assert(statsAfter.map(_._2).sum == 60L, statsAfter.mkString(", "))
-    // untouched cells' files are byte-identical — the rewrite touched only
-    // the hot cell's directory
+    // untouched cells keep the same live files (paths and sizes) — the
+    // rewrite touched only the hot cell's rows
     coldCells.foreach { c =>
       assert(cellBytes(c) == coldBefore(c), s"cell $c files changed")
     }
@@ -345,7 +327,7 @@ class AnnIndexSpec extends SparkSpec {
 
     val splits = AnnIndex.rebalance(spark, path, maxBalance = 1.3)
     assert(splits >= 2, s"both breaching cells must split, got $splits")
-    val metaAfter = AnnIndex.readMeta(spark, path)
+    val metaAfter = AnnIndex.meta(spark, path)
     assert(metaAfter.nCells == 3 + splits)
     val statsAfter = AnnIndex.cellStats(spark, path).collect()
       .map(r => (r.getInt(0), r.getLong(1), r.getDouble(3)))
@@ -358,27 +340,21 @@ class AnnIndexSpec extends SparkSpec {
     val e = intercept[IllegalArgumentException](
       AnnIndex.query(spark, tmp("not_ann"),
         Array.fill(8)(0.0), 1, 3))
-    assert(e.getMessage.contains("_ann_meta.json"), e.getMessage)
+    assert(e.getMessage.contains("_delta_log"), e.getMessage)
   }
 
   test("delete removes ids from touched files only; untouched files byte-identical") {
     val path = tmp("graft_ann_del")
     AnnIndex.build(vecs, "vec_id", "embedding", path, nCells = 3)
-    def listing(): Map[String, (Long, Long)] = {
-      val fs = new org.apache.hadoop.fs.Path(path)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      fs.listStatus(new org.apache.hadoop.fs.Path(path))
-        .filter(_.isDirectory).filter(_.getPath.getName.startsWith("cell="))
-        .flatMap(d => fs.listStatus(d.getPath))
-        .map(f => f.getPath.toString -> (f.getLen, f.getModificationTime)).toMap
-    }
+    def listing(): Map[String, Long] =
+      DeltaRead.snapshot(spark, path).files.map(f => f.path -> f.size).toMap
     val before = listing()
     // axis-2 cluster lives alone in its cell (nProbe=1 pruning test above);
     // delete two of its members
     val n = AnnIndex.delete(spark, path, Seq(205L, 207L))
     assert(n == 2L)
     val after = listing()
-    val ids = spark.read.parquet(path).select("id").collect().map(_.getLong(0)).toSet
+    val ids = DeltaRead.readDeltaTable(spark, path).select("id").collect().map(_.getLong(0)).toSet
     assert(!ids.contains(205L) && !ids.contains(207L) && ids.size == 34)
     // files not holding the deleted ids carried over UNTOUCHED
     val untouched = before.keySet.intersect(after.keySet)
@@ -420,24 +396,18 @@ class AnnIndexSpec extends SparkSpec {
     val before = AnnIndex.queryPq(spark, path, q, nProbe = 3, k = 12)
       .collect().map(_.getLong(0)).count(_ >= 900L)
 
-    // snapshot every file's (path, length, mtime) per cell pre-refresh
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def filesOf(cell: Int): Seq[(String, Long, Long)] = {
-      val d = new org.apache.hadoop.fs.Path(path, s"cell=$cell")
-      if (!fs.exists(d)) Nil
-      else fs.listStatus(d).map(s =>
-        (s.getPath.getName, s.getLen, s.getModificationTime)).toSeq.sorted
-    }
+    // snapshot every live file's (path, size) per cell pre-refresh
+    def filesOf(cell: Int): Seq[(String, Long)] = DeltaRead.snapshot(spark, path).files
+      .filter(_.partitionValues("cell") == cell.toString).map(f => (f.path, f.size)).sorted
     val pre = (0 until 3).map(c => c -> filesOf(c)).toMap
 
     val recoded = AnnIndex.refreshCodebooks(spark, path, errorFactor = 1.05)
     assert(recoded >= 1, "the drifted cell must re-encode")
-    val meta = AnnIndex.readMeta(spark, path)
+    val meta = AnnIndex.meta(spark, path)
     assert(meta.codebookVersions.size == 1)
     assert(meta.cellVersions.values.toSet == Set(1))
     assert(meta.cellVersions.size == recoded)
-    // untouched cells: files byte-identical (same names, sizes, mtimes)
+    // untouched cells: the same live files (paths and sizes)
     (0 until 3).filterNot(meta.cellVersions.contains).foreach { c =>
       assert(filesOf(c) == pre(c), s"untouched cell $c was rewritten")
     }

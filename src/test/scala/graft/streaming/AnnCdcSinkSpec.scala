@@ -36,7 +36,7 @@ class AnnCdcSinkSpec extends SparkSpec {
     val startVer = AnnCdcSink.bootstrap(spark, table, "vec_id", "embedding",
       index, nCells = 2)
     assert(startVer == 0L)
-    assert(spark.read.parquet(index).count() == 10L)
+    assert(DeltaRead.readDeltaTable(spark, index).count() == 10L)
 
     def runOnce(): Unit = {
       val q = AnnCdcSink.run(spark, table, "vec_id", "embedding", index,
@@ -50,12 +50,12 @@ class AnnCdcSinkSpec extends SparkSpec {
         .toDF("vec_id", "embedding"), table, "append")
     runOnce()
     assert(probeIds(index, axisVec(0, 30), 1) == Seq(1000L))
-    assert(spark.read.parquet(index).count() == 12L)
+    assert(DeltaRead.readDeltaTable(spark, index).count() == 12L)
 
     // v2: a DV delete — the vector must stop serving as a neighbor
     DeltaMerge.deleteWhereDv(spark, table, col("vec_id") === 1000L)
     runOnce()
-    assert(spark.read.parquet(index).count() == 11L)
+    assert(DeltaRead.readDeltaTable(spark, index).count() == 11L)
     assert(!probeIds(index, axisVec(0, 30), 12).contains(1000L),
       "a DV-deleted source row kept serving from the index")
     assert(probeIds(index, axisVec(1, 30), 1) == Seq(1001L)) // others intact
@@ -64,28 +64,22 @@ class AnnCdcSinkSpec extends SparkSpec {
     DeltaMerge.merge(spark, table,
       Seq((1001L, axisVec(0, 40))).toDF("vec_id", "embedding"), Seq("vec_id"))
     runOnce()
-    assert(spark.read.parquet(index).count() == 11L, "update duplicated the id")
+    assert(DeltaRead.readDeltaTable(spark, index).count() == 11L, "update duplicated the id")
     assert(probeIds(index, axisVec(0, 40), 1) == Seq(1001L))
 
     // restart with NOTHING new: no-op
     runOnce()
-    assert(spark.read.parquet(index).count() == 11L)
+    assert(DeltaRead.readDeltaTable(spark, index).count() == 11L)
 
     // restart with a WIPED checkpoint: the whole history replays, every
-    // epoch finds its done marker (or the floor) — nothing reapplies
+    // epoch sits at or below the index log's txn mark — nothing reapplies
     val fs = new org.apache.hadoop.fs.Path(base)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     assert(fs.delete(new org.apache.hadoop.fs.Path(s"$base/ckpt"), true))
     runOnce()
-    assert(spark.read.parquet(index).count() == 11L,
+    assert(DeltaRead.readDeltaTable(spark, index).count() == 11L,
       "checkpoint-wiped replay reapplied committed epochs")
     assert(!probeIds(index, axisVec(0, 30), 12).contains(1000L))
-
-    // marker compaction preserves the replay skip
-    assert(AnnCdcSink.compactMarkers(spark, index) >= 0L)
-    assert(fs.delete(new org.apache.hadoop.fs.Path(s"$base/ckpt"), true))
-    runOnce()
-    assert(spark.read.parquet(index).count() == 11L)
   }
 
   test("crash mid-apply reconciles: half-landed appends never duplicate") {
@@ -105,24 +99,22 @@ class AnnCdcSinkSpec extends SparkSpec {
     DeltaMerge.deleteWhereDv(spark, table, col("vec_id") === 0L)
     val changes = DeltaRead.changeDiff(spark, table, 0L).localCheckpoint()
 
-    // simulate the crash: one upsert half-landed, inflight marker present,
-    // done never written
-    AnnIndex.append(Seq((2000L, axisVec(0, 50))).toDF("vec_id", "embedding"),
-      "vec_id", "embedding", index)
-    val fs = new org.apache.hadoop.fs.Path(index)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.mkdirs(new org.apache.hadoop.fs.Path(index, "_cdc"))
-    fs.create(new org.apache.hadoop.fs.Path(index, "_cdc/b0.inflight"), true).close()
+    // simulate the crash: the epoch's delete committed, its append (the
+    // commit carrying the txn) never did
+    assert(AnnIndex.delete(spark, index, Seq(0L)) == 1L)
 
+    val v = DeltaRead.latestVersion(spark, index)
     AnnCdcSink.processBatch(changes, 0L, "vec_id", "embedding", index)
-    val idx = spark.read.parquet(index)
+    // the replayed delete finds nothing left: only the append commits
+    assert(DeltaRead.latestVersion(spark, index) == v + 1)
+    val idx = DeltaRead.readDeltaTable(spark, index)
     assert(idx.count() == 11L, s"expected 10 seed - 1 delete + 2 inserts, got ${idx.count()}")
     assert(idx.select("id").distinct().count() == 11L, "reconcile duplicated an id")
     assert(!probeIds(index, axisVec(0, 0), 11).contains(0L))
     assert(probeIds(index, axisVec(0, 50), 1) == Seq(2000L))
-    assert(fs.exists(new org.apache.hadoop.fs.Path(index, "_cdc/b0.done")))
     // a replay after the commit is a no-op
     AnnCdcSink.processBatch(changes, 0L, "vec_id", "embedding", index)
-    assert(spark.read.parquet(index).count() == 11L)
+    assert(DeltaRead.readDeltaTable(spark, index).count() == 11L)
+    assert(DeltaRead.latestVersion(spark, index) == v + 1)
   }
 }

@@ -4,8 +4,8 @@ import java.nio.file.{Files, Paths}
 
 import graft.SparkSpec
 import graft.ext.AnnIndex
+import graft.io.{CrashFs, DeltaRead}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.{ArrayType, FloatType, LongType, StructField, StructType}
 
 class AnnMaintainSinkSpec extends SparkSpec {
@@ -87,7 +87,7 @@ class AnnMaintainSinkSpec extends SparkSpec {
     stage(srcDir, base, "b0", b0)
     runOnce()
     val after0 = AnnIndex.meta(spark, path)
-    assert(spark.read.parquet(path).count() == 48L)
+    assert(DeltaRead.readDeltaTable(spark, path).count() == 48L)
 
     // batch 1: 60 vectors piled on one cell → balance breaches 2.0 → split
     val b1 = for (lobe <- 0 until 2; i <- 0 until 30)
@@ -95,7 +95,7 @@ class AnnMaintainSinkSpec extends SparkSpec {
     stage(srcDir, base, "b1", b1)
     runOnce()
     val after1 = AnnIndex.meta(spark, path)
-    val idx = spark.read.parquet(path)
+    val idx = DeltaRead.readDeltaTable(spark, path)
     assert(idx.count() == 108L)
     assert(idx.select("id").distinct().count() == 108L)
     assert(after1.nCells > after0.nCells,
@@ -109,107 +109,51 @@ class AnnMaintainSinkSpec extends SparkSpec {
     exactSelfHit(path, 1021L, axisVec(2, 22))   // batch 0
     exactSelfHit(path, 2115L, lobeVec(1, 15))   // batch 1, post-split mass
 
-    // the incremental drift cache matches a real recount (post-rebalance
-    // it was re-derived; a divergence here means some path forgot to fold)
-    val cached = AnnMaintainSink.readCounts(spark, path).get
+    // the drift monitor's log-derived counts match a real recount
+    val logged = AnnIndex.cellStats(spark, path).collect()
+      .map(r => r.getInt(0) -> r.getLong(1)).toMap
     val actual = idx.groupBy(col("cell")).count()
       .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-    assert(cached.counts == actual, s"cache $cached vs actual $actual")
+    assert(logged == actual, s"logged $logged vs actual $actual")
   }
 
   test("crash between append and commit marker replays exactly-once") {
+    spark.sparkContext.hadoopConfiguration.set("fs.crash.impl", classOf[CrashFs].getName)
     val base = tmp("graft_annsink_crash")
     val srcDir = s"$base/src"
-    val path = s"$base/index"
+    val path = s"crash://$base/index"
     Files.createDirectories(Paths.get(srcDir))
 
     val built = for (axis <- 0 until 2; i <- 0 until 5)
       yield (axis * 100L + i, axisVec(axis, i))
     AnnIndex.build(built.toDF("vec_id", "embedding"), "vec_id", "embedding",
       path, nCells = 2)
+    val v0 = DeltaRead.latestVersion(spark, path)
 
     stage(srcDir, base, "b0", Seq.tabulate(5)(i => (1000L + i, axisVec(0, 30 + i))))
 
-    val boom = new java.util.concurrent.atomic.AtomicBoolean(true)
-    def runOnce(): Unit = {
-      val stream = spark.readStream.schema(schema).parquet(srcDir)
-      val q = stream.writeStream
-        .outputMode("append")
-        .option("checkpointLocation", s"$base/ckpt")
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (batch: org.apache.spark.sql.DataFrame, batchId: Long) =>
-          AnnMaintainSink.processBatch(batch, batchId, "vec_id", "embedding",
-            path, maxBalance = 4.0, minBalance = 0.0,
-            refreshEvery = 0, errorFactor = 1.05, extraCols = Nil,
-            afterAppend = () =>
-              if (boom.getAndSet(false)) sys.error("crash after append"))
-        }
-        .start()
-      q.awaitTermination(120000)
-    }
+    def runOnce(): Unit = AnnMaintainSink.run(spark.readStream.schema(schema).parquet(srcDir),
+      "vec_id", "embedding", path, s"$base/ckpt").awaitTermination(120000)
 
-    // first attempt crashes AFTER the files landed, BEFORE the commit
+    // first attempt crashes AFTER the batch's files are staged, at the
+    // rename that publishes the epoch's commit (its txn is the marker)
+    CrashFs.arm("rename", "_delta_log/.tmp-", after = false)
     intercept[org.apache.spark.sql.streaming.StreamingQueryException](runOnce())
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    assert(fs.exists(new org.apache.hadoop.fs.Path(path, "_stream/b0.inflight")))
-    assert(spark.read.parquet(path).count() == 15L) // partial state visible
+    assert(CrashFs.disarm(), "the epoch's commit never reached its rename")
+    assert(DeltaRead.latestVersion(spark, path) == v0)
+    assert(DeltaRead.readDeltaTable(spark, path).count() == 10L) // staged files unseen
 
-    // restart: the replayed batch reconciles (delete + re-append), commits
+    // restart: the replayed batch commits once
     runOnce()
-    val idx = spark.read.parquet(path)
+    val idx = DeltaRead.readDeltaTable(spark, path)
     assert(idx.count() == 15L, "replay duplicated the batch")
     assert(idx.select("id").distinct().count() == 15L)
-    assert(fs.exists(new org.apache.hadoop.fs.Path(path, "_stream/b0.done")))
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(path, "_stream/b0.inflight")))
+    assert(DeltaRead.latestVersion(spark, path) == v0 + 1)
 
     // a second restart with nothing new is a clean no-op
     runOnce()
-    assert(spark.read.parquet(path).count() == 15L)
-  }
-
-  test("compactMarkers folds done markers into the floor; pre-floor replays still skip") {
-    val base = tmp("graft_annsink_floor")
-    val path = s"$base/index"
-    val built = for (axis <- 0 until 2; i <- 0 until 5)
-      yield (axis * 100L + i, axisVec(axis, i))
-    AnnIndex.build(built.toDF("vec_id", "embedding"), "vec_id", "embedding",
-      path, nCells = 2)
-
-    def batchDf(b: Int) =
-      Seq.tabulate(3)(i => (2000L + b * 10 + i, axisVec(b % 2, 40 + b * 3 + i)))
-        .toDF("vec_id", "embedding")
-    def process(b: Long, df: org.apache.spark.sql.DataFrame = null): Unit =
-      AnnMaintainSink.processBatch(
-        if (df == null) batchDf(b.toInt) else df, b, "vec_id", "embedding",
-        path, maxBalance = 1e9, minBalance = 0.0,
-        refreshEvery = 0, errorFactor = 1.05, extraCols = Nil)
-
-    (0L until 5L).foreach(b => process(b))
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def markerCount = fs.listStatus(new org.apache.hadoop.fs.Path(path, "_stream"))
-      .count(_.getPath.getName.endsWith(".done"))
-    assert(markerCount == 5)
-    assert(spark.read.parquet(path).count() == 25L)
-
-    assert(AnnMaintainSink.compactMarkers(spark, path) == 4L)
-    assert(markerCount == 0, "done markers must fold into the floor")
-
-    // a replayed pre-floor batch must STILL read as committed — appending
-    // again would duplicate its vectors in the index
-    process(2L)
-    assert(spark.read.parquet(path).count() == 25L,
-      "pre-floor replay re-appended after marker compaction")
-    // and a genuinely new batch processes normally
-    process(5L)
-    assert(spark.read.parquet(path).count() == 28L)
-    assert(markerCount == 1)
-    // folding again advances the floor and stays idempotent
-    assert(AnnMaintainSink.compactMarkers(spark, path) == 5L)
-    assert(AnnMaintainSink.compactMarkers(spark, path) == -1L)
-    process(5L)
-    assert(spark.read.parquet(path).count() == 28L)
+    assert(DeltaRead.readDeltaTable(spark, path).count() == 15L)
+    assert(DeltaRead.latestVersion(spark, path) == v0 + 1)
   }
 
   test("extraCols ride the stream into the index; a batch missing them refuses") {
@@ -243,7 +187,7 @@ class AnnMaintainSinkSpec extends SparkSpec {
       "vec_id", "embedding", path, s"$base/ckpt",
       maxBalance = 100.0, extraCols = Seq("label"))
     q.awaitTermination(120000)
-    val idx = spark.read.parquet(path)
+    val idx = DeltaRead.readDeltaTable(spark, path)
     assert(idx.count() == 9L)
     assert(idx.filter(col("id") === 1000L).select("label")
       .collect().map(_.getInt(0)).toSeq == Seq(7))
@@ -254,7 +198,7 @@ class AnnMaintainSinkSpec extends SparkSpec {
       "vec_id", "embedding", path, maxBalance = 100.0, minBalance = 0.0,
       refreshEvery = 0, errorFactor = 1.05, extraCols = Nil))
     assert(e.getMessage.contains("layout"), e.getMessage)
-    assert(spark.read.parquet(path).count() == 9L, "refused batch leaked rows")
+    assert(DeltaRead.readDeltaTable(spark, path).count() == 9L, "refused batch leaked rows")
   }
 
   test("PQ index: refreshEvery offers a retrain without breaking probes") {
@@ -278,7 +222,7 @@ class AnnMaintainSinkSpec extends SparkSpec {
 
     val meta = AnnIndex.meta(spark, path)
     assert(meta.codebookVersions.size <= 1) // candidate adopted or discarded
-    assert(spark.read.parquet(path).count() == 32L)
+    assert(DeltaRead.readDeltaTable(spark, path).count() == 32L)
     // ADC probes stay generation-keyed and sane: a built vector's cluster
     val top = AnnIndex.queryPq(spark, path, axisVec(0, 0).map(_.toDouble).toArray,
       nProbe = meta.nCells, k = 8).collect().map(_.getLong(0))

@@ -11,6 +11,7 @@ import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.{ArrayType, FloatType, LongType, StringType, StructField, StructType}
 
 import graft.SparkSpec
+import graft.ext.AnnIndex
 import graft.io.{CrashFs, DeltaMerge, DeltaRead, DeltaWrite}
 
 /** Crash recovery of every Delta-backed streaming sink. Each sink runs two
@@ -73,6 +74,11 @@ class SinkCrashSpec extends SparkSpec {
     Seq((1L, vec(0, 0f)), (2L, vec(0, 0.05f)), (3L, vec(3, 0f))),
     Seq((10L, vec(0, 0.03f)), (11L, vec(5, 0f)), (12L, vec(6, 0f))))
 
+  private val vecSchema = StructType(Seq(StructField("vec_id", LongType),
+    StructField("embedding", ArrayType(FloatType))))
+  // the vectors an ANN index is built from, before the epochs
+  private val annSeed = Seq.tabulate(8)(i => (100L + i, vec(i % 4, 0.1f * (i / 4))))
+
   private val kvSchema = StructType(Seq(
     StructField("k", StringType), StructField("v", LongType)))
   // epoch 1's "z" has only a null value: an IncrementalSink tombstone
@@ -125,11 +131,31 @@ class SinkCrashSpec extends SparkSpec {
     Sink("EmbedIngestDedupSink", 3,
       b => Seq("accepted", "vecs", "bands").map(s => store(b, s"state/$s")),
       (b, e) => land(b, e, vecs(e).toDF("vec_id", "embedding")),
-      b => EmbedIngestDedupSink.run(
-        spark.readStream.schema(StructType(Seq(StructField("vec_id", LongType),
-          StructField("embedding", ArrayType(FloatType))))).parquet(s"$b/src"),
+      b => EmbedIngestDedupSink.run(spark.readStream.schema(vecSchema).parquet(s"$b/src"),
         "vec_id", "embedding", store(b, "state"), s"$b/ckpt",
-        threshold = 0.9, dim = 8)))
+        threshold = 0.9, dim = 8)),
+    // an epoch's append (no drift remediation under this bound)
+    Sink("AnnMaintainSink", 1, b => Seq(store(b, "index")),
+      { (b, e) =>
+        if (e == 0) AnnIndex.build(annSeed.toDF("vec_id", "embedding"), "vec_id", "embedding",
+          store(b, "index"), nCells = 2)
+        land(b, e, vecs(e).toDF("vec_id", "embedding"))
+      },
+      b => AnnMaintainSink.run(spark.readStream.schema(vecSchema).parquet(s"$b/src"),
+        "vec_id", "embedding", store(b, "index"), s"$b/ckpt", maxBalance = 1e9)),
+    // epoch 0 inserts (an append); epoch 1 also deletes a row, so its
+    // delete commits before the append
+    Sink("AnnCdcSink", 2, b => Seq(store(b, "index")),
+      { (b, e) =>
+        val src = s"$b/src"
+        if (e == 0) {
+          DeltaWrite.writeDeltaTable(annSeed.toDF("vec_id", "embedding"), src, "append")
+          AnnCdcSink.bootstrap(spark, src, "vec_id", "embedding", store(b, "index"), nCells = 2)
+        } else DeltaMerge.deleteWhere(spark, src, col("vec_id") === 101L)
+        DeltaWrite.writeDeltaTable(vecs(e).toDF("vec_id", "embedding"), src, "append")
+      },
+      b => AnnCdcSink.run(spark, s"$b/src", "vec_id", "embedding", store(b, "index"),
+        s"$b/ckpt", startingVersion = "0")))
 
   private def drain(sink: Sink, base: String): Unit =
     assert(sink.run(base).awaitTermination(240000), s"${sink.name} did not finish")
