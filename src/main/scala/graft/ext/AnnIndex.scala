@@ -35,12 +35,15 @@ object AnnIndex {
     * generation each cell's stored codes were encoded under (absent = 0).
     * Codes are only comparable within one generation, so every encode
     * (append), decode (ADC probe), and file-moving maintenance op keys by
-    * the cell's generation.
+    * the cell's generation. `buildId` names the [[build]] that wrote the
+    * index: every build mints a fresh one, so progress recorded against
+    * an earlier build at the same path ([[txnAppId]]) never applies to
+    * this one.
     */
   final case class Meta(dim: Int, nCells: Int, m: Int, nCodes: Int,
       centroids: Seq[Seq[Double]], codebooks: Option[Seq[Seq[Seq[Double]]]],
       codebookVersions: Seq[Seq[Seq[Seq[Double]]]] = Nil,
-      cellVersions: Map[Int, Int] = Map.empty) {
+      cellVersions: Map[Int, Int] = Map.empty, buildId: String = "") {
     /** Codebooks of generation `v` as the packed runtime form. */
     private[ext] def codebooksAt(v: Int): PQ.Codebooks = {
       val centers = if (v == 0) codebooks.getOrElse(
@@ -86,7 +89,8 @@ object AnnIndex {
       case None => base
     }).withColumn("nrm", Similarity.l2Norm(col("vec")))
     val meta = Meta(dim, nCells, m, nCodes, centroids,
-      cb.map(_.centers.map(_.map(_.toSeq).toSeq).toSeq))
+      cb.map(_.centers.map(_.map(_.toSeq).toSeq).toSeq),
+      buildId = java.util.UUID.randomUUID().toString)
     // cluster by cell before the partitioned write: without it every write
     // task emits one file into EVERY cell it holds rows for (tasks × cells
     // tiny files — 512 creates at bench scale, and a probe query then
@@ -578,6 +582,15 @@ object AnnIndex {
     */
   def meta(spark: SparkSession, path: String): Meta = state(spark, path)._2
 
+  /** The txn appId under which `sink` records its progress on the index
+    * at `path`: keyed by the build, because a rebuild at the same path
+    * keeps the log's txns — a stream restarted against the new build
+    * with a fresh checkpoint (batch ids from 0 again) must not skip its
+    * epochs at the old build's high-water mark.
+    */
+  private[graft] def txnAppId(spark: SparkSession, path: String, sink: String): String =
+    s"$sink/${meta(spark, path).buildId}"
+
   private def nearestCells(meta: Meta, query: Array[Double], nProbe: Int): Seq[Int] =
     meta.centroids.zipWithIndex
       .map { case (c, j) =>
@@ -615,6 +628,7 @@ object AnnIndex {
     val root = mapper.createObjectNode()
     root.put("dim", meta.dim); root.put("nCells", meta.nCells)
     root.put("m", meta.m); root.put("nCodes", meta.nCodes)
+    root.put("buildId", meta.buildId)
     def books(into: com.fasterxml.jackson.databind.node.ArrayNode,
         bs: Seq[Seq[Seq[Double]]]): Unit = bs.foreach { book =>
       val b = into.addArray()
@@ -651,6 +665,7 @@ object AnnIndex {
         .getOrElse(Nil),
       Option(node.get("cellVersions")).map { cv =>
         cv.fieldNames().asScala.map(k => k.toInt -> cv.get(k).asInt()).toMap
-      }.getOrElse(Map.empty))
+      }.getOrElse(Map.empty),
+      node.get("buildId").asText())
   }
 }

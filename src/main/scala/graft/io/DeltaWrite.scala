@@ -695,9 +695,12 @@ object DeltaWrite {
       DeltaRead.Meta(rows.get.schema.json, partitionBy, conf,
         snap.fold(UUID.randomUUID().toString)(s => carriedId(s.meta)))
     }
-    val gone = (if (create.isDefined) snap.toSeq.flatMap(_.files) else removes) ++ moves.map(_._1)
+    val gone = if (create.isDefined) snap.toSeq.flatMap(_.files) else removes
+    // a moved file is re-added alone: an add of a live path replaces its
+    // entry, and the conflict check still covers it as rewritten
+    val rewritten = (gone ++ moves.map(_._1)).map(_.path).toSet
     snap.foreach(s => checkWritable(s.meta, s.protocol, s"$operation on $path",
-      removesData = gone.nonEmpty))
+      removesData = rewritten.nonEmpty))
     val schema = DataType.fromJson(meta.schemaJson).asInstanceOf[StructType]
     val adds = rows.toSeq.flatMap(r =>
       stageBatch(r.select(schema.fieldNames.map(c => col(s"`$c`")).toSeq: _*), new Path(path), meta))
@@ -714,8 +717,8 @@ object DeltaWrite {
         dataChange = true, f.stats, None, None, None)) ++
       domain.map { case (name, config) => DeltaActions.domainMetadata(name, config) }
     val guard =
-      if (create.isDefined) ConflictGuard.exclusive(gone.map(_.path).toSet, txn.map(_._1))
-      else ConflictGuard.disjointRewrite(gone.map(_.path).toSet, txn.map(_._1))
+      if (create.isDefined) ConflictGuard.exclusive(rewritten, txn.map(_._1))
+      else ConflictGuard.disjointRewrite(rewritten, txn.map(_._1))
     commit(spark, path, snap.fold(-1L)(_.version), meta, operation, Nil, guard)(_ => lines)
   }
 
@@ -2474,9 +2477,11 @@ object DeltaWrite {
   private[io] def stageDataFiles(df: DataFrame, root: Path,
       partitionBy: Seq[String]): Seq[StagedFile] = {
     val conf = df.sparkSession.sparkContext.hadoopConfiguration
-    stageAndMove(df, root, ".staging-", partitionBy) { rel =>
+    val moved = stageAndMove(df, root, ".staging-", partitionBy) { rel =>
       (rel.split('/').dropRight(1) :+ s"part-${UUID.randomUUID()}.snappy.parquet").mkString("/")
-    }.map { case (fresh, st) =>
+    }
+    val stats = perFile(moved)(m => footerStats(conf, m._2.getPath))
+    moved.zip(stats).map { case ((fresh, st), stat) =>
       // partition dir names are percent-ESCAPED by Spark's writer; the
       // log's partitionValues record the TRUE value (storing the escaped
       // string would mis-serve every read of the column), and the log's
@@ -2487,7 +2492,7 @@ object DeltaWrite {
         k -> org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
           .unescapePathName(v)
       }.toMap
-      StagedFile(encodeFilePath(fresh), pv, st.getLen, footerStats(conf, st.getPath))
+      StagedFile(encodeFilePath(fresh), pv, st.getLen, stat)
     }
   }
 
@@ -2505,16 +2510,35 @@ object DeltaWrite {
     val writer = stagedWriter(df)
     if (partitionBy.nonEmpty) writer.partitionBy(partitionBy: _*)
     writer.save(staging.toString)
-    val out = listParquet(fs, staging).map { p =>
-      val fresh = name(relativize(staging, p))
+    val moves = listParquet(fs, staging).map(p => (p, name(relativize(staging, p))))
+    perFile(moves.map(m => new Path(root, m._2).getParent).distinct)(fs.mkdirs)
+    val out = perFile(moves) { case (p, fresh) =>
       val dest = new Path(root, fresh)
-      fs.mkdirs(dest.getParent)
       require(fs.rename(p, dest), s"failed to move $p to $dest")
       (fresh, fs.getFileStatus(dest))
     }
     fs.delete(staging, true)
     out
   }
+
+  /** `f` over `files` on 8 driver threads, results in input order:
+    * per-file filesystem calls (renames, statuses, footer reads) cost
+    * latency, not CPU, and a partitioned write publishes a file per
+    * partition — one at a time they dominate a many-cell commit. A write
+    * of at most 8 files (every unpartitioned write at local[8] and
+    * below) stays on the calling thread: no pool to start.
+    */
+  private def perFile[A, B](files: Seq[A])(f: A => B): Seq[B] =
+    if (files.size <= 8) files.map(f)
+    else {
+      val pool = java.util.concurrent.Executors.newFixedThreadPool(8)
+      try files.map(x => pool.submit(new java.util.concurrent.Callable[B] {
+          def call(): B = f(x) })).map { task =>
+        try task.get()
+        catch { case e: java.util.concurrent.ExecutionException => throw e.getCause }
+      }
+      finally pool.shutdownNow()
+    }
 
   /** The LOG form of an on-disk relative path. The protocol's reader rule
     * ([[DeltaRead.resolveFilePath]]) percent-decodes any stored path

@@ -36,7 +36,9 @@ import graft.io.DeltaWrite
   * nothing left to delete), and the append that follows commits
   * `txn = (appId, batchId)` with its rows — so a crash after the delete
   * replays as no further delete and one append, and a replay after the
-  * append skips at the log's high-water mark.
+  * append skips at the log's high-water mark. The appId names the
+  * index's build ([[AnnIndex.txnAppId]]), so a [[bootstrap]] that rebuilds
+  * the index starts the sink's progress over.
   *
   * The index must start consistent with the stream's start point: pair a
   * bootstrap `startingVersion = "earliest"` with an EMPTY built index
@@ -46,8 +48,8 @@ import graft.io.DeltaWrite
   */
 object AnnCdcSink {
 
-  /** The txn appId of this sink's epochs. */
-  private val AppId = "graft.ann.cdc"
+  /** The sink's name in its txn appId ([[AnnIndex.txnAppId]]). */
+  private val Sink = "graft.ann.cdc"
 
   /** Bootstrap the index/stream PAIRING in one call: build the index from
     * the table's CURRENT snapshot and return the snapshot version — pass
@@ -77,7 +79,8 @@ object AnnCdcSink {
       idCol: String, vecCol: String, indexPath: String,
       extraCols: Seq[String] = Nil): Unit = {
     val spark = batch.sparkSession
-    if (batchId <= DeltaWrite.lastTxnVersion(spark, indexPath, AppId)) return
+    val appId = AnnIndex.txnAppId(spark, indexPath, Sink)
+    if (batchId <= DeltaWrite.lastTxnVersion(spark, indexPath, appId)) return
     val isUpsert = col("__ct").isin("insert", "update_postimage")
     val typed = batch.select(
       col(idCol).cast("long").as("__id") +: col(vecCol).as("__vec") +:
@@ -100,7 +103,7 @@ object AnnCdcSink {
       .filter(col("__fin").isNotNull)
     AnnIndex.append(upserts.select(col("__id").as(idCol) +: col("__fin.v").as(vecCol) +:
         extraCols.map(c => col(s"__fin.$c").as(c)): _*),
-      idCol, vecCol, indexPath, extraCols, Some(AppId -> batchId))
+      idCol, vecCol, indexPath, extraCols, Some(appId -> batchId))
   }
 
   /** Wire a Delta table's change stream into a persisted index. The

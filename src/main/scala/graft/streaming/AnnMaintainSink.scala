@@ -26,7 +26,9 @@ import graft.io.DeltaWrite
   * epoch's append commits `txn = (appId, batchId)` with its files, and a
   * replayed epoch at or below the log's high-water mark skips. The index
   * is a Delta table, so the txn rides the same atomic commit as the
-  * rows: a crash before it leaves only unreferenced staged files.
+  * rows: a crash before it leaves only unreferenced staged files. The
+  * appId names the index's build ([[AnnIndex.txnAppId]]), so a rebuild
+  * at the same path starts the sink's progress over.
   * Maintenance runs AFTER the commit and is deliberately outside it: a
   * crash mid-rebalance replays as a committed batch (skip), and the NEXT
   * batch's counts re-derive the same drift signal and re-trigger
@@ -36,8 +38,8 @@ import graft.io.DeltaWrite
   */
 object AnnMaintainSink {
 
-  /** The txn appId of this sink's epochs. */
-  private val AppId = "graft.ann.maintain"
+  /** The sink's name in its txn appId ([[AnnIndex.txnAppId]]). */
+  private val Sink = "graft.ann.maintain"
 
   /** One micro-batch through the append + drift-remediation loop. */
   private[graft] def processBatch(batch: DataFrame, batchId: Long,
@@ -46,8 +48,9 @@ object AnnMaintainSink {
       refreshEvery: Int, errorFactor: Double,
       extraCols: Seq[String]): Unit = {
     val spark = batch.sparkSession
-    if (batchId <= DeltaWrite.lastTxnVersion(spark, indexPath, AppId)) return
-    AnnIndex.append(batch, idCol, vecCol, indexPath, extraCols, Some(AppId -> batchId))
+    val appId = AnnIndex.txnAppId(spark, indexPath, Sink)
+    if (batchId <= DeltaWrite.lastTxnVersion(spark, indexPath, appId)) return
+    AnnIndex.append(batch, idCol, vecCol, indexPath, extraCols, Some(appId -> batchId))
     val maxBal = AnnIndex.cellStats(spark, indexPath).collect()
       .map(_.getAs[Double]("balance")).maxOption.getOrElse(0.0)
     if (maxBal > maxBalance)

@@ -202,8 +202,16 @@ class AnnIndexSpec extends SparkSpec {
         nProbe = nCells, k = 5).collect()
         .groupBy(_.getLong(0)).view.mapValues(_.map(_.getLong(1)).toSet).toMap
     val before = exhaustive(3)
+    val v0 = DeltaRead.latestVersion(spark, path)
     val ops = AnnIndex.rebalance(spark, path, maxBalance = 4.0, minBalance = 0.3)
     assert(ops == 1, s"expected exactly one merge, got $ops")
+    // one commit that re-adds the moved files under their new cell: an
+    // add of a live path replaces its entry, so no remove rides along
+    assert(DeltaRead.latestVersion(spark, path) == v0 + 1)
+    val src = scala.io.Source.fromFile(f"$path/_delta_log/${v0 + 1}%020d.json")
+    val actions = try src.getLines().toList finally src.close()
+    assert(actions.exists(_.startsWith("{\"add\"")) && !actions.exists(_.startsWith("{\"remove\"")),
+      actions.mkString("\n"))
     val meta = AnnIndex.meta(spark, path)
     assert(meta.nCells == 2 && meta.centroids.size == 2, meta.nCells.toString)
     // contiguous renumbering: only cells 0 and 1 hold live files

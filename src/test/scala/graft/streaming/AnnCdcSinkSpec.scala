@@ -117,4 +117,37 @@ class AnnCdcSinkSpec extends SparkSpec {
     assert(DeltaRead.readDeltaTable(spark, index).count() == 11L)
     assert(DeltaRead.latestVersion(spark, index) == v + 1)
   }
+
+  test("bootstrap again rebuilds the index and a fresh stream's epoch 0 applies") {
+    val base = tmp("graft_anncdc_rebuild")
+    val table = s"$base/vectors"
+    val index = s"$base/index"
+    val seed = for (axis <- 0 until 2; i <- 0 until 5)
+      yield (axis * 100L + i, axisVec(axis, i))
+    DeltaWrite.writeDeltaTable(seed.toDF("vec_id", "embedding"), table, "append")
+    val v0 = AnnCdcSink.bootstrap(spark, table, "vec_id", "embedding", index, nCells = 2)
+
+    // two epochs (batch ids 0 and 1) against the first build
+    DeltaWrite.writeDeltaTable(Seq((1000L, axisVec(0, 20))).toDF("vec_id", "embedding"),
+      table, "append")
+    AnnCdcSink.processBatch(DeltaRead.changeDiff(spark, table, v0),
+      0L, "vec_id", "embedding", index)
+    DeltaWrite.writeDeltaTable(Seq((1001L, axisVec(1, 20))).toDF("vec_id", "embedding"),
+      table, "append")
+    AnnCdcSink.processBatch(DeltaRead.changeDiff(spark, table, v0 + 1),
+      1L, "vec_id", "embedding", index)
+    assert(DeltaRead.readDeltaTable(spark, index).count() == 12L)
+
+    // re-bootstrap (the rebuild-on-drift path), then a fresh checkpoint's
+    // epoch 0 carries a delete and an insert: both must reach the index
+    val v1 = AnnCdcSink.bootstrap(spark, table, "vec_id", "embedding", index, nCells = 2)
+    DeltaWrite.writeDeltaTable(Seq((2000L, axisVec(0, 30))).toDF("vec_id", "embedding"),
+      table, "append")
+    DeltaMerge.deleteWhereDv(spark, table, col("vec_id") === 1000L)
+    AnnCdcSink.processBatch(DeltaRead.changeDiff(spark, table, v1),
+      0L, "vec_id", "embedding", index)
+    val ids = DeltaRead.readDeltaTable(spark, index).select("id").collect().map(_.getLong(0))
+    assert(ids.sorted.toSeq == (seed.map(_._1) ++ Seq(1001L, 2000L)).sorted,
+      s"epoch 0 after the rebuild was skipped or misapplied: ${ids.sorted.toSeq}")
+  }
 }

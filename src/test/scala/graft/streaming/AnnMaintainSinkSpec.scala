@@ -156,6 +156,38 @@ class AnnMaintainSinkSpec extends SparkSpec {
     assert(DeltaRead.latestVersion(spark, path) == v0 + 1)
   }
 
+  test("a rebuild at the same path starts the sink's progress over") {
+    val base = tmp("graft_annsink_rebuild")
+    val path = s"$base/index"
+    val built = for (axis <- 0 until 2; i <- 0 until 5)
+      yield (axis * 100L + i, axisVec(axis, i))
+    def build(): Unit = AnnIndex.build(built.toDF("vec_id", "embedding"),
+      "vec_id", "embedding", path, nCells = 2)
+    def runOnce(srcDir: String, ckpt: String): Unit = AnnMaintainSink.run(
+      spark.readStream.schema(schema).parquet(srcDir), "vec_id", "embedding",
+      path, ckpt, maxBalance = 100.0).awaitTermination(120000)
+
+    // two epochs (batch ids 0 and 1) against the first build
+    build()
+    val src1 = s"$base/src1"
+    Files.createDirectories(Paths.get(src1))
+    stage(src1, base, "a0", Seq((1000L, axisVec(0, 20))))
+    runOnce(src1, s"$base/ckpt1")
+    stage(src1, base, "a1", Seq((1001L, axisVec(1, 20))))
+    runOnce(src1, s"$base/ckpt1")
+    assert(DeltaRead.readDeltaTable(spark, path).count() == 12L)
+
+    // rebuild in place, then a fresh stream: its epoch 0 must land
+    build()
+    val src2 = s"$base/src2"
+    Files.createDirectories(Paths.get(src2))
+    stage(src2, base, "b0", Seq((2000L, axisVec(0, 30)), (2001L, axisVec(1, 30))))
+    runOnce(src2, s"$base/ckpt2")
+    val ids = DeltaRead.readDeltaTable(spark, path).select("id").collect().map(_.getLong(0))
+    assert(ids.sorted.toSeq == (built.map(_._1) ++ Seq(2000L, 2001L)).sorted,
+      s"epoch 0 after the rebuild was skipped or misapplied: ${ids.sorted.toSeq}")
+  }
+
   test("extraCols ride the stream into the index; a batch missing them refuses") {
     val base = tmp("graft_annsink_extra")
     val srcDir = s"$base/src"
